@@ -84,18 +84,12 @@ object Glossary {
     val tmp = path + ".tmp"
     merged.write.mode(SaveMode.Overwrite).parquet(tmp)
     val target = new java.io.File(path)
-    deleteRecursively(target)
+    graft.util.Staging.deleteRecursively(target)
     if (!new java.io.File(tmp).renameTo(target))
       throw new java.io.IOException(s"atomic swap failed: $tmp -> $path")
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
-  }
-
   /** Test hook: remove a glossary path entirely. */
   def deleteForTest(path: String): Unit =
-    deleteRecursively(new java.io.File(path))
+    graft.util.Staging.deleteRecursively(new java.io.File(path))
 }

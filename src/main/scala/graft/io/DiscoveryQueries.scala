@@ -61,13 +61,7 @@ object DiscoveryQueries extends QueryPack {
             .matches("graft_[a-z]+_\\d+\\.(csv|json|xml|xlsx|xls|orc|avro)") &&
             !f.getName.contains(s"_$pid.") && f.lastModified() < cutoff
         }
-        .foreach { dead =>
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-            f.delete(): Unit
-          }
-          rm(dead)
-        }
+        .foreach(graft.util.Staging.deleteRecursively)
     } catch { case _: Exception => () } // cleanup is best-effort
   }
 

@@ -102,16 +102,9 @@ object PipelineQueries extends QueryPack {
               col("user_id"), col("event_type"), col("value"),
               col("props"))
             .orderBy("event_id"))
-      } finally deleteDir(new java.io.File(tmp))
+      } finally graft.util.Staging.deleteRecursively(new java.io.File(tmp))
     },
     Some(mergeOracleSql))
-
-  private def deleteDir(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).foreach(_.foreach(deleteDir))
-    f.delete()
-    ()
-  }
 
   /** Backward as-of join ([[AsofJoin]]): each purchase event paired with
     * the same user's latest click at-or-before it. DuckDB's native

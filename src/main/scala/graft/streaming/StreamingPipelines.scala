@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -108,35 +108,24 @@ object StreamingPipelines {
       keys: Seq[String], orderCol: String, tieBreakers: Seq[String] = Nil,
       checkpoint: String, trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
+    eachBatch(source, checkpoint, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val target = existingTarget(spark, targetPath, batch)
+      val merged = Scd1.merge(target, batch, keys, orderCol, tieBreakers)
+      swapInto(spark, merged, targetPath, s"${targetPath}__tmp_$batchId")
+    }
+
+  /** Run `f` on every micro-batch of `source` (append mode) under
+    * `checkpoint`; returns the started query.
+    */
+  private def eachBatch(source: DataFrame, checkpoint: String,
+      trigger: Trigger)(f: (DataFrame, Long) => Unit): StreamingQuery =
     source.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val target = existingTarget(spark, targetPath, batch)
-        val merged =
-          Scd1.merge(target, batch, keys, orderCol, tieBreakers)
-        swapInto(spark, merged, targetPath, s"${targetPath}__tmp_$batchId")
-      }
+      .foreachBatch(f)
       .start()
-
-  /** Recursive local-FS delete (sink re-staging in tests/queries). */
-  private[streaming] def deleteDir(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).foreach(_.foreach(deleteDir))
-    f.delete()
-    ()
-  }
-
-  /** The Hadoop `FileSystem` for `path` under the session's Hadoop
-    * conf — EVERY state-path operation in this object resolves through
-    * it (r12 verdict: `java.io.File` on state paths silently reports
-    * nothing-exists for any non-local scheme, which emptied the
-    * near-dup probe index anywhere but a local sandbox).
-    */
-  private def fsOf(s: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(s.sparkContext.hadoopConfiguration)
 
   /** Restore scan parallelism for a micro-batch before heavy fused
     * map work (tokenize/shingle/fingerprint/extract chains): a
@@ -164,11 +153,9 @@ object StreamingPipelines {
     * repartition is a pure tax (r16 A/B: +0.2-0.5s per lane at gate
     * scale), while past the gate the pre-exchange single-task segment
     * (tokenize/shingle/gram explode) dominates the batch (r17 A/B at
-    * 10× the gate corpus, below). Conf-keyed with the measured-local
-    * default; a cluster tunes it per deployment.
+    * 10× the gate corpus, below).
     */
-  private val SpreadMinBytes = "spark.graft.stream.spreadMinBytes"
-  private val SpreadMinBytesDefault = 1L * 1024 * 1024
+  private val SpreadMinBytes = 1L * 1024 * 1024
 
   /** [[spread]] gated on the micro-batch's INPUT SIZE rather than its
     * partition count (the r16 verdict's re-A/B directive): a
@@ -179,11 +166,8 @@ object StreamingPipelines {
     * file splits and this stays a no-op, like [[spread]] itself.
     */
   private def spreadByBytes(batch: DataFrame): DataFrame = {
-    val minBytes = batch.sparkSession.conf
-      .getOption(SpreadMinBytes).map(_.toLong)
-      .getOrElse(SpreadMinBytesDefault)
     val bytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes < minBytes) batch else spread(batch)
+    if (bytes < SpreadMinBytes) batch else spread(batch)
   }
 
   /** Write-temp-then-swap through the Hadoop FS: the merged plan READS
@@ -196,7 +180,7 @@ object StreamingPipelines {
   private def swapInto(spark: SparkSession, merged: DataFrame,
       targetPath: String, tmpPath: String): Unit = {
     merged.write.mode("overwrite").parquet(tmpPath)
-    val fs = fsOf(spark, targetPath)
+    val fs = BatchState.fsOf(spark, targetPath)
     fs.delete(new Path(targetPath), true)
     if (!fs.rename(new Path(tmpPath), new Path(targetPath)))
       throw new IllegalStateException(
@@ -206,7 +190,7 @@ object StreamingPipelines {
 
   private def existingTarget(spark: SparkSession, path: String,
       batch: DataFrame): DataFrame = {
-    val fs = fsOf(spark, path)
+    val fs = BatchState.fsOf(spark, path)
     val p = new Path(path)
     val hasData = fs.exists(p) &&
       fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
@@ -227,19 +211,13 @@ object StreamingPipelines {
       checkpoint: String, trigger: Trigger = Trigger.AvailableNow(),
       now: org.apache.spark.sql.Column = current_timestamp())
       : StreamingQuery =
-    source.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // NOT spread: A/B'd flat (2.09 vs 2.10) — the profile pass is
-        // not the batch's bottleneck at gate scale
-        graft.profile.Profiler.profile(batch, now = now)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(resultsPath)
-        ()
-      }
-      .start()
+    eachBatch(source, checkpoint, trigger) { (batch, batchId) =>
+      // NOT spread: A/B'd flat (2.09 vs 2.10) — the profile pass is
+      // not the batch's bottleneck at gate scale
+      graft.profile.Profiler.profile(batch, now = now)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(resultsPath)
+    }
 
   /** Streaming rolling-actives maintenance ([[graft.pipeline.Actives]]
     * incrementally): per micro-batch, the batch's `(user, day)` pairs
@@ -257,138 +235,18 @@ object StreamingPipelines {
       window: Int, statePath: String, reportPath: String,
       checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    source.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        // NOT spread: A/B'd +0.16s — the pairs map is light and the
-        // distinct-union exchange already fans out
-        val newPairs = graft.pipeline.Actives.pairs(batch, userCol, tsCol)
-        val merged = existingTarget(s, statePath, newPairs)
-          .unionByName(newPairs).distinct()
-        swapInto(s, merged, statePath, s"${statePath}__tmp_$batchId")
-        graft.pipeline.Actives
-          .rollingFromPairs(s.read.parquet(statePath), window)
-          .write.mode("overwrite").parquet(reportPath)
-        ()
-      }
-      .start()
-
-  /** The compaction marker under a [[nearDupStream]] state path: holds
-    * the batch id `upto` such that the state of every batch in
-    * `[0, upto)` is folded into `compacted_g<upto>/{sets,bands}` and
-    * the per-batch subdirs cover `[upto, current)`. Absent → 0 (no
-    * compaction yet).
-    */
-  private[streaming] def markerPath(statePath: String): Path =
-    new Path(s"$statePath/_compacted_upto")
-
-  private def markerTmpPath(statePath: String): Path =
-    new Path(s"$statePath/_compacted_upto.tmp")
-
-  /** Full contents of a (small) state file — `InputStream.read` may
-    * legally return a short read on non-local FS implementations, so
-    * loop to EOF; None when the file does not exist.
-    */
-  private def readSmallFile(fs: FileSystem, p: Path): Option[String] =
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val acc = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](256)
-        var n = in.read(buf)
-        while (n >= 0) { acc.write(buf, 0, n); n = in.read(buf) }
-        Some(new String(acc.toByteArray,
-          java.nio.charset.StandardCharsets.UTF_8).trim)
-      } finally in.close()
+    eachBatch(source, checkpoint, trigger) { (batch, batchId) =>
+      val s = batch.sparkSession
+      // NOT spread: A/B'd +0.16s — the pairs map is light and the
+      // distinct-union exchange already fans out
+      val newPairs = graft.pipeline.Actives.pairs(batch, userCol, tsCol)
+      val merged = existingTarget(s, statePath, newPairs)
+        .unionByName(newPairs).distinct()
+      swapInto(s, merged, statePath, s"${statePath}__tmp_$batchId")
+      graft.pipeline.Actives
+        .rollingFromPairs(s.read.parquet(statePath), window)
+        .write.mode("overwrite").parquet(reportPath)
     }
-
-  private def parseMarker(c: String): Option[Long] =
-    if (c.nonEmpty && c.length <= 18 && c.forall(_.isDigit))
-      Some(c.toLong)
-    else None
-
-  /** Crash-safe marker read. The update protocol is
-    * temp-then-swap ([[writeMarker]]), so every crash window recovers:
-    * crash before the swap leaves the old marker intact (the stale tmp
-    * is overwritten by the next update); crash BETWEEN delete and
-    * rename leaves the new value in the tmp file, and the read
-    * completes the swap. One crash window the protocol itself creates
-    * must also recover: a crash AFTER a compaction lands its
-    * `compacted_g` dir but BEFORE [[writeMarker]] creates the tmp
-    * leaves generations with no marker and no tmp — cleanup only runs
-    * after the marker swap succeeds, so the `b0..` partial chain is
-    * still complete and resuming at `upto = 0` is safe (the orphan
-    * generation is swept as stale by the next compaction). So: an
-    * ABSENT marker (no tmp either) + generations + `b0` present → 0;
-    * a GARBLED (unreadable) marker always fails loud at the parse —
-    * it never reaches the `b0` recovery branch (MarkerSpec pins the
-    * throw: garbled means state was mutated outside the protocol,
-    * which no automatic horizon guess can repair). The absent case
-    * WITHOUT `b0` means partials were cleaned under a now-lost marker,
-    * i.e. state was mutated outside the protocol — fail loud rather
-    * than probe the wrong horizon. An absent marker with NO
-    * generations is simply "no compaction yet".
-    */
-  private[streaming] def readMarker(fs: FileSystem,
-      statePath: String): Long = {
-    val m = markerPath(statePath)
-    val tmp = markerTmpPath(statePath)
-    readSmallFile(fs, m).map(c => parseMarker(c).getOrElse(
-      throw new IllegalStateException(
-        s"compaction marker $m is unreadable ('$c') — state was " +
-          "mutated outside the marker protocol; restore " +
-          "_compacted_upto to the current generation id"))
-    ).orElse {
-      // marker absent: a crash between the swap's delete and rename
-      // leaves the NEW value in the tmp file — finish the swap
-      readSmallFile(fs, tmp).flatMap(parseMarker).map { v =>
-        if (!fs.rename(tmp, m))
-          throw new IllegalStateException(
-            s"marker recovery rename failed: $tmp -> $m")
-        v
-      }
-    }.getOrElse {
-      val sp = new Path(statePath)
-      val hasGen = fs.exists(sp) && fs.listStatus(sp)
-        .exists(_.getPath.getName.startsWith("compacted_g"))
-      if (hasGen && !fs.exists(new Path(s"$statePath/b0")))
-        throw new IllegalStateException(
-          s"compaction marker under $statePath is missing, generation " +
-            "dirs exist, and the b0 partial is gone (partials were " +
-            "cleaned under a now-lost marker) — state was mutated " +
-            "outside the marker protocol; restore _compacted_upto to " +
-            "the current generation id")
-      // gens + intact b0.. chain = the crash window between a landed
-      // compaction and its marker tmp: resume from the partials
-      0L
-    }
-  }
-
-  /** Temp-file-then-swap marker update: the value lands durably in the
-    * tmp file BEFORE the old marker is touched, so no crash window can
-    * leave an empty/truncated marker (the r13 in-place
-    * create-then-write did: a crash between create(overwrite) and
-    * write left "" and every later batch died on `"".toLong`).
-    */
-  private[streaming] def writeMarker(fs: FileSystem, statePath: String,
-      upto: Long): Unit = {
-    val m = markerPath(statePath)
-    val tmp = markerTmpPath(statePath)
-    val out = fs.create(tmp, true)
-    try out.write(upto.toString
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(m) && !fs.delete(m, false))
-      throw new IllegalStateException(s"marker swap delete failed: $m")
-    if (!fs.rename(tmp, m))
-      throw new IllegalStateException(
-        s"marker swap rename failed: $tmp -> $m")
-    ()
-  }
 
   /** Read the matches sink [[nearDupStream]] maintains — one
     * overwrite-idempotent subdir per micro-batch, so a checkpoint-
@@ -409,16 +267,8 @@ object StreamingPipelines {
     * overwrites `reportPath`. Integer sums commute, so the report is
     * independent of the micro-batch cut and equals the batch operator
     * on the same corpus — the [[MaintainedAgg]] equality story the
-    * gate lane's oracle pins.
-    *
-    * State layer follows [[nearDupStream]]'s r13 contract: Hadoop-FS
-    * resolution, fail-loud on a missing batch dir the marker implies,
-    * and generation compaction every `compactEvery` batches — here the
-    * fold may INCLUDE the current batch (partials are idempotent
-    * per-batch frames, so a replay after the marker moved reads its
-    * own contribution from the generation and the empty tail — same
-    * totals), keeping the per-batch listing bounded even though each
-    * partial is only `|groups|` rows.
+    * gate lane's oracle pins. State layout, compaction and crash
+    * recovery: [[BatchState]] (fold-inclusive).
     */
   def qualityStream(source: DataFrame, idCol: String, textCol: String,
       groupCol: String, weights: Array[Long], bias: Long,
@@ -431,78 +281,31 @@ object StreamingPipelines {
         sum(col("n_docs")).as("n_docs"),
         sum(col("n_keep")).as("n_keep"),
         sum(col("margin_sum")).as("margin_sum"))
-    source.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val fs = fsOf(s, statePath)
-        graft.text.QualityModel
-          .scorePinned(spread(batch), idCol, textCol, weights, bias,
-            keepCols = Seq(groupCol))
-          .groupBy(col(groupCol)).agg(
-            count(lit(1)).as("n_docs"),
-            sum(when(col("keep"), 1L).otherwise(0L)).as("n_keep"),
-            sum(col("margin")).as("margin_sum"))
-          .write.mode("overwrite").parquet(s"$statePath/b$batchId")
-        val upto = readMarker(fs, statePath)
-        // upto may be batchId + 1 on a replayed already-compacted
-        // batch: the generation then carries this batch's partial and
-        // the tail range below is empty — totals identical
-        if (upto > batchId + 1)
-          throw new IllegalStateException(
-            s"compaction marker $upto is ahead of batch $batchId " +
-              s"under $statePath — state belongs to a different stream")
-        val gen =
-          if (upto > 0) {
-            val g = s"$statePath/compacted_g$upto"
-            if (!fs.exists(new Path(g)))
-              throw new IllegalStateException(
-                s"marker says batches [0, $upto) are folded at $g but " +
-                  "the generation dir is missing — refusing to report " +
-                  "from partial state")
-            Seq(g)
-          } else Nil
-        val tail = (upto to batchId).map { i =>
-          val p = s"$statePath/b$i"
-          if (!fs.exists(new Path(p)))
-            throw new IllegalStateException(
-              s"state for batch $i (implied by batch counter $batchId " +
-                s"and marker $upto) is missing under $statePath")
-          p
-        }
-        val parts = gen ++ tail
-        // the checkpoint pays off only when the frame feeds BOTH the
-        // report and a compaction fold; on ordinary batches the report
-        // is the single consumer — write it straight
-        val willCompact = batchId + 1 - upto >= compactEvery
-        val stateRaw = total(s.read.parquet(parts: _*))
-        val state =
-          if (willCompact) stateRaw.localCheckpoint(true) else stateRaw
-        state
-          .select(col(groupCol), col("n_docs"), col("n_keep"),
-            col("margin_sum"),
-            (col("n_keep").cast("double") /
-              greatest(col("n_docs"), lit(1L))).as("keep_rate"))
-          .write.mode("overwrite").parquet(reportPath)
-        if (willCompact) {
-          val g = s"$statePath/compacted_g${batchId + 1}"
-          state.write.mode("overwrite").parquet(g)
-          writeMarker(fs, statePath, batchId + 1)
-          fs.listStatus(new Path(statePath)).foreach { st =>
-            val n = st.getPath.getName
-            val stale =
-              (n.startsWith("b") && n.drop(1).forall(_.isDigit) &&
-                n.drop(1).toLong <= batchId) ||
-                (n.startsWith("compacted_g") &&
-                  n != s"compacted_g${batchId + 1}")
-            if (stale) { fs.delete(st.getPath, true); () }
-          }
-        }
-        ()
-      }
-      .start()
+    eachBatch(source, checkpoint, trigger) { (batch, batchId) =>
+      val s = batch.sparkSession
+      graft.text.QualityModel
+        .scorePinned(spread(batch), idCol, textCol, weights, bias,
+          keepCols = Seq(groupCol))
+        .groupBy(col(groupCol)).agg(
+          count(lit(1)).as("n_docs"),
+          sum(when(col("keep"), 1L).otherwise(0L)).as("n_keep"),
+          sum(col("margin")).as("margin_sum"))
+        .write.mode("overwrite")
+        .parquet(BatchState.partial(statePath, batchId))
+      val st = BatchState.open(s, statePath, batchId + 1, compactEvery)
+      // the checkpoint pays off only when the frame feeds BOTH the
+      // report and a compaction fold; on ordinary batches the report
+      // is the single consumer — write it straight
+      val stateRaw = total(s.read.parquet(st.parts: _*))
+      val state = if (st.due) stateRaw.localCheckpoint(true) else stateRaw
+      state
+        .select(col(groupCol), col("n_docs"), col("n_keep"),
+          col("margin_sum"),
+          (col("n_keep").cast("double") /
+            greatest(col("n_docs"), lit(1L))).as("keep_rate"))
+        .write.mode("overwrite").parquet(reportPath)
+      st.compact(g => state.write.mode("overwrite").parquet(g))
+    }
   }
 
   /** The STREAMING curation loop — the complete modern curation
@@ -526,14 +329,10 @@ object StreamingPipelines {
     * [[MaintainedAgg]] story; both halves are the literally-shared
     * [[graft.text.Curation]] code, so the engines cannot drift).
     *
-    * State layer follows the r13 contract ([[qualityStream]]'s
-    * shape): Hadoop-FS resolution, fail-loud on a batch dir the
-    * marker implies, generation compaction every `compactEvery`
-    * batches (the fold may include the current batch — partials are
-    * idempotent batch-owned frames). Per-doc metadata is ~32 bytes ×
-    * corpus docs — columnar-compressed id/count rows, the same
-    * footprint contract as the near-dup index state, bounded-listing
-    * by compaction.
+    * State layout, compaction and crash recovery: [[BatchState]]
+    * (fold-inclusive). Per-doc metadata is ~32 bytes × corpus docs —
+    * columnar-compressed id/count rows, the same footprint contract as
+    * the near-dup index state.
     */
   def curateStream(source: DataFrame, idCol: String, htmlCol: String,
       sourceCol: String, weights: Array[Long], bias: Long,
@@ -545,66 +344,25 @@ object StreamingPipelines {
       minScore: Long = graft.text.QualityThresholdPinned.MinScore)
       : StreamingQuery = {
     require(compactEvery >= 2, "compactEvery must be at least 2")
-    source.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val fs = fsOf(s, statePath)
-        graft.text.Curation
-          .scoreDocs(spread(batch), idCol, htmlCol, sourceCol, weights,
-            bias, minScore)
-          .write.mode("overwrite").parquet(s"$statePath/b$batchId")
-        val upto = readMarker(fs, statePath)
-        if (upto > batchId + 1)
-          throw new IllegalStateException(
-            s"compaction marker $upto is ahead of batch $batchId " +
-              s"under $statePath — state belongs to a different stream")
-        val gen =
-          if (upto > 0) {
-            val g = s"$statePath/compacted_g$upto"
-            if (!fs.exists(new Path(g)))
-              throw new IllegalStateException(
-                s"marker says batches [0, $upto) are folded at $g but " +
-                  "the generation dir is missing — refusing to report " +
-                  "from partial state")
-            Seq(g)
-          } else Nil
-        val tail = (upto to batchId).map { i =>
-          val p = s"$statePath/b$i"
-          if (!fs.exists(new Path(p)))
-            throw new IllegalStateException(
-              s"scored partial for batch $i (implied by batch counter " +
-                s"$batchId and marker $upto) is missing under $statePath")
-          p
-        }
-        // NO checkpoint on the state read: the partials are already
-        // materialized parquet, so the funnel's three consumers each
-        // re-scan metadata-sized files — cheaper than the extra
-        // materialization job a localCheckpoint costs per batch
-        val scored = s.read.parquet((gen ++ tail): _*)
-        graft.text.Curation
-          .funnel(scored, idCol, sourceCol, embeddings, embIdCol,
-            embCol, centroids, tau, budget)
-          .write.mode("overwrite").parquet(reportPath)
-        if (batchId + 1 - upto >= compactEvery) {
-          val g = s"$statePath/compacted_g${batchId + 1}"
-          scored.write.mode("overwrite").parquet(g)
-          writeMarker(fs, statePath, batchId + 1)
-          fs.listStatus(new Path(statePath)).foreach { st =>
-            val n = st.getPath.getName
-            val stale =
-              (n.startsWith("b") && n.drop(1).forall(_.isDigit) &&
-                n.drop(1).toLong <= batchId) ||
-                (n.startsWith("compacted_g") &&
-                  n != s"compacted_g${batchId + 1}")
-            if (stale) { fs.delete(st.getPath, true); () }
-          }
-        }
-        ()
-      }
-      .start()
+    eachBatch(source, checkpoint, trigger) { (batch, batchId) =>
+      val s = batch.sparkSession
+      graft.text.Curation
+        .scoreDocs(spread(batch), idCol, htmlCol, sourceCol, weights,
+          bias, minScore)
+        .write.mode("overwrite")
+        .parquet(BatchState.partial(statePath, batchId))
+      val st = BatchState.open(s, statePath, batchId + 1, compactEvery)
+      // NO checkpoint on the state read: the partials are already
+      // materialized parquet, so the funnel's three consumers each
+      // re-scan metadata-sized files — cheaper than the extra
+      // materialization job a localCheckpoint costs per batch
+      val scored = s.read.parquet(st.parts: _*)
+      graft.text.Curation
+        .funnel(scored, idCol, sourceCol, embeddings, embIdCol,
+          embCol, centroids, tau, budget)
+        .write.mode("overwrite").parquet(reportPath)
+      st.compact(g => scored.write.mode("overwrite").parquet(g))
+    }
   }
 
   /** Streaming benchmark decontamination
@@ -620,9 +378,7 @@ object StreamingPipelines {
     * overwrite-idempotent subdir of `reportPath`
     * ([[nearDupMatches]]-style sink — read it with [[decontamReports]]),
     * and a one-row-per-batch corpus LEDGER (docs seen, contaminated,
-    * gram totals) maintains under the r13 state contract (Hadoop FS,
-    * fail-loud implied-state checks, generation compaction; partials
-    * are idempotent so the fold may include the current batch).
+    * gram totals) maintains under [[BatchState]] (fold-inclusive).
     *
     * A document's contamination depends only on (document, eval set) —
     * no cross-batch state — so the report sink equals the BATCH
@@ -643,92 +399,49 @@ object StreamingPipelines {
     val evalCached = evalArrays.persist()
     graft.util.DeferredCleanup.enqueue(
       () => { evalCached.unpersist(blocking = false); () })
-    source.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val fs = fsOf(s, statePath)
-        val grams = graft.text.Decontam
-          .docGramArrays(spreadByBytes(batch), idCol, textCol, n)
-          .persist()
-        try {
-          val report = graft.text.Decontam
-            .overlapReportFromArrays(grams, evalCached, idCol)
-            .localCheckpoint(true) // read by the sink AND the partial
-          report.write.mode("overwrite")
-            .parquet(s"$reportPath/b$batchId")
-          // one-row batch partial for the maintained corpus ledger
-          // coalesce: sum over an all-empty micro-batch is NULL (the
-          // hits side already coalesces matched_grams the same way)
-          val totals = grams.agg(
-            count(lit(1)).as("n_docs"),
-            coalesce(sum(size(col("__grams")).cast("long")), lit(0L))
-              .as("total_grams"))
-          val hits = report.agg(
-            count(lit(1)).as("contaminated_docs"),
-            coalesce(sum(col("matched_grams")), lit(0L))
-              .as("matched_grams"))
-          totals.crossJoin(hits)
-            .write.mode("overwrite").parquet(s"$statePath/b$batchId")
-        } finally { grams.unpersist(blocking = false); () }
-        val upto = readMarker(fs, statePath)
-        if (upto > batchId + 1)
-          throw new IllegalStateException(
-            s"compaction marker $upto is ahead of batch $batchId " +
-              s"under $statePath — state belongs to a different stream")
-        val gen =
-          if (upto > 0) {
-            val g = s"$statePath/compacted_g$upto"
-            if (!fs.exists(new Path(g)))
-              throw new IllegalStateException(
-                s"marker says batches [0, $upto) are folded at $g but " +
-                  "the generation dir is missing")
-            Seq(g)
-          } else Nil
-        val tail = (upto to batchId).map { i =>
-          val p = s"$statePath/b$i"
-          if (!fs.exists(new Path(p)))
-            throw new IllegalStateException(
-              s"ledger partial for batch $i (implied by batch counter " +
-                s"$batchId and marker $upto) is missing under $statePath")
-          p
-        }
-        // checkpoint only when a compaction fold will read the frame
-        // too; otherwise the ledger write is the single consumer
-        val willCompact = batchId + 1 - upto >= compactEvery
-        val stateRaw = s.read.parquet((gen ++ tail): _*)
-          .agg(sum(col("n_docs")).as("n_docs"),
-            sum(col("total_grams")).as("total_grams"),
-            sum(col("contaminated_docs")).as("contaminated_docs"),
-            sum(col("matched_grams")).as("matched_grams"))
-        val state =
-          if (willCompact) stateRaw.localCheckpoint(true) else stateRaw
-        state
-          .select(col("n_docs"), col("contaminated_docs"),
-            col("total_grams"), col("matched_grams"),
-            (col("contaminated_docs").cast("double") /
-              greatest(col("n_docs"), lit(1L)))
-              .as("contaminated_frac"))
-          .write.mode("overwrite").parquet(ledgerPath)
-        if (willCompact) {
-          val g = s"$statePath/compacted_g${batchId + 1}"
-          state.write.mode("overwrite").parquet(g)
-          writeMarker(fs, statePath, batchId + 1)
-          fs.listStatus(new Path(statePath)).foreach { st =>
-            val nm = st.getPath.getName
-            val stale =
-              (nm.startsWith("b") && nm.drop(1).forall(_.isDigit) &&
-                nm.drop(1).toLong <= batchId) ||
-                (nm.startsWith("compacted_g") &&
-                  nm != s"compacted_g${batchId + 1}")
-            if (stale) { fs.delete(st.getPath, true); () }
-          }
-        }
-        ()
-      }
-      .start()
+    eachBatch(source, checkpoint, trigger) { (batch, batchId) =>
+      val s = batch.sparkSession
+      val grams = graft.text.Decontam
+        .docGramArrays(spreadByBytes(batch), idCol, textCol, n)
+        .persist()
+      try {
+        val report = graft.text.Decontam
+          .overlapReportFromArrays(grams, evalCached, idCol)
+          .localCheckpoint(true) // read by the sink AND the partial
+        report.write.mode("overwrite")
+          .parquet(s"$reportPath/b$batchId")
+        // one-row batch partial for the maintained corpus ledger
+        // coalesce: sum over an all-empty micro-batch is NULL (the
+        // hits side already coalesces matched_grams the same way)
+        val totals = grams.agg(
+          count(lit(1)).as("n_docs"),
+          coalesce(sum(size(col("__grams")).cast("long")), lit(0L))
+            .as("total_grams"))
+        val hits = report.agg(
+          count(lit(1)).as("contaminated_docs"),
+          coalesce(sum(col("matched_grams")), lit(0L))
+            .as("matched_grams"))
+        totals.crossJoin(hits).write.mode("overwrite")
+          .parquet(BatchState.partial(statePath, batchId))
+      } finally { grams.unpersist(blocking = false); () }
+      val st = BatchState.open(s, statePath, batchId + 1, compactEvery)
+      // checkpoint only when a compaction fold will read the frame
+      // too; otherwise the ledger write is the single consumer
+      val stateRaw = s.read.parquet(st.parts: _*)
+        .agg(sum(col("n_docs")).as("n_docs"),
+          sum(col("total_grams")).as("total_grams"),
+          sum(col("contaminated_docs")).as("contaminated_docs"),
+          sum(col("matched_grams")).as("matched_grams"))
+      val state = if (st.due) stateRaw.localCheckpoint(true) else stateRaw
+      state
+        .select(col("n_docs"), col("contaminated_docs"),
+          col("total_grams"), col("matched_grams"),
+          (col("contaminated_docs").cast("double") /
+            greatest(col("n_docs"), lit(1L)))
+            .as("contaminated_frac"))
+        .write.mode("overwrite").parquet(ledgerPath)
+      st.compact(g => state.write.mode("overwrite").parquet(g))
+    }
   }
 
   /** Read the per-doc contamination sink [[decontamStream]] maintains
@@ -739,7 +452,7 @@ object StreamingPipelines {
 
   /** STREAMING SimHash near-dup — the bounded fingerprint-group
     * report ([[graft.dedup.SimHash.nearDupFromGroups]]) MAINTAINED
-    * through the state contract: each micro-batch fingerprints its
+    * through [[BatchState]]: each micro-batch fingerprints its
     * documents map-side (`fingerprintOf` — one projection, no
     * shuffle) and lands its per-fingerprint group partial
     * `(fp, min id, count)` in a batch-owned state dir; the partials
@@ -751,7 +464,7 @@ object StreamingPipelines {
     * VERBATIM). State is FINGERPRINT-grain (one row per distinct
     * fingerprint — boilerplate pileups collapse in the partials
     * themselves, so a million identical docs cost ONE state row),
-    * marker-compacted every `compactEvery` batches.
+    * kept under [[BatchState]] (fold-inclusive).
     */
   def simhashStream(source: DataFrame, idCol: String, textCol: String,
       fingerprintOf: org.apache.spark.sql.Column =>
@@ -761,85 +474,44 @@ object StreamingPipelines {
       compactEvery: Int = 16,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     require(compactEvery >= 2, "compactEvery must be at least 2")
-    source.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val fs = fsOf(s, statePath)
-        spread(batch)
-          .select(col(idCol), fingerprintOf(col(textCol)).as("fp"))
+    eachBatch(source, checkpoint, trigger) { (batch, batchId) =>
+      val s = batch.sparkSession
+      spread(batch)
+        .select(col(idCol), fingerprintOf(col(textCol)).as("fp"))
+        .groupBy("fp")
+        .agg(min(col(idCol)).as(idCol), count(lit(1)).as("__n"))
+        .write.mode("overwrite")
+        .parquet(BatchState.partial(statePath, batchId))
+      val st = BatchState.open(s, statePath, batchId + 1, compactEvery)
+      val parts = st.parts
+      // a single state part (batch 0, or a replay right after a
+      // compaction) IS the fold — each partial is already grouped
+      // by fingerprint, so skip the re-aggregate and its barrier.
+      // Multi-part folds checkpoint only when the compaction write
+      // adds a third consumer: the report tail reads the fold from
+      // exactly TWO subtrees (the chunk/window side is checkpointed
+      // inside nearDupFromGroups, the diagonal re-aggregates), and
+      // re-running the fingerprint-grain aggregate over materialized
+      // state parquet twice is cheaper than the eager checkpoint
+      // job it replaces (A/B'd on the gate lane this round)
+      val foldedRaw =
+        if (parts.size == 1) s.read.parquet(parts.head)
+        else s.read.parquet(parts: _*)
           .groupBy("fp")
-          .agg(min(col(idCol)).as(idCol), count(lit(1)).as("__n"))
-          .write.mode("overwrite").parquet(s"$statePath/b$batchId")
-        val upto = readMarker(fs, statePath)
-        if (upto > batchId + 1)
-          throw new IllegalStateException(
-            s"compaction marker $upto is ahead of batch $batchId " +
-              s"under $statePath — state belongs to a different stream")
-        val gen =
-          if (upto > 0) {
-            val g = s"$statePath/compacted_g$upto"
-            if (!fs.exists(new Path(g)))
-              throw new IllegalStateException(
-                s"marker says batches [0, $upto) are folded at $g but " +
-                  "the generation dir is missing")
-            Seq(g)
-          } else Nil
-        val parts = gen ++ (upto to batchId).map { i =>
-          val p = s"$statePath/b$i"
-          if (!fs.exists(new Path(p)))
-            throw new IllegalStateException(
-              s"state for batch $i (implied by batch counter $batchId " +
-                s"and marker $upto) is missing under $statePath")
-          p
-        }
-        val willCompact = batchId + 1 - upto >= compactEvery
-        // a single state part (batch 0, or a replay right after a
-        // compaction) IS the fold — each partial is already grouped
-        // by fingerprint, so skip the re-aggregate and its barrier.
-        // Multi-part folds checkpoint only when the compaction write
-        // adds a third consumer: the report tail reads the fold from
-        // exactly TWO subtrees (the chunk/window side is checkpointed
-        // inside nearDupFromGroups, the diagonal re-aggregates), and
-        // re-running the fingerprint-grain aggregate over materialized
-        // state parquet twice is cheaper than the eager checkpoint
-        // job it replaces (A/B'd on the gate lane this round)
-        val foldedRaw =
-          if (parts.size == 1) s.read.parquet(parts.head)
-          else s.read.parquet(parts: _*)
-            .groupBy("fp")
-            .agg(min(col(idCol)).as(idCol), sum(col("__n")).as("__n"))
-        val folded =
-          if (willCompact && parts.size > 1)
-            foldedRaw.localCheckpoint(true)
-          else foldedRaw
-        graft.dedup.SimHash
-          .nearDupFromGroups(folded, idCol, "fp", chunkBits, nChunks,
-            maxHamming, maxBucket, persistIntermediates = false)
-          .write.mode("overwrite").parquet(reportPath)
-        if (willCompact) {
-          val g = s"$statePath/compacted_g${batchId + 1}"
-          folded.write.mode("overwrite").parquet(g)
-          writeMarker(fs, statePath, batchId + 1)
-          fs.listStatus(new Path(statePath)).foreach { st =>
-            val nm = st.getPath.getName
-            val stale =
-              (nm.startsWith("b") && nm.drop(1).forall(_.isDigit) &&
-                nm.drop(1).toLong <= batchId) ||
-                (nm.startsWith("compacted_g") &&
-                  nm != s"compacted_g${batchId + 1}")
-            if (stale) { fs.delete(st.getPath, true); () }
-          }
-        }
-        ()
-      }
-      .start()
+          .agg(min(col(idCol)).as(idCol), sum(col("__n")).as("__n"))
+      val folded =
+        if (st.due && parts.size > 1) foldedRaw.localCheckpoint(true)
+        else foldedRaw
+      graft.dedup.SimHash
+        .nearDupFromGroups(folded, idCol, "fp", chunkBits, nChunks,
+          maxHamming, maxBucket, persistIntermediates = false)
+        .write.mode("overwrite").parquet(reportPath)
+      st.compact(g => folded.write.mode("overwrite").parquet(g))
+    }
   }
 
   /** STREAMING repeated-substring self-scrub —
-    * [[graft.dedup.SubstringDedup]] through the r13 state contract
+    * [[graft.dedup.SubstringDedup]] through [[BatchState]]
     * (the ingest-time form a production corpus build runs): each
     * micro-batch lands TWO batch-owned state partials —
     * `b<i>/grams`, the per-gram `(gh, __n, __minkey)` aggregate
@@ -858,12 +530,8 @@ object StreamingPipelines {
     * minimal key — no strictly-earlier cutoff, unlike the near-dup
     * match sink whose arrival order is the semantics).
     *
-    * State layer: marker-tracked generations exactly as every other
-    * maintained lane — every `compactEvery` batches both sublayers
-    * fold into `compacted_g<n>/{grams,docs}` (grams re-aggregate,
-    * docs concatenate), the marker moves AFTER the generation lands,
-    * stale partials are swept, and per-batch listing stays bounded on
-    * an arbitrarily long stream. The per-batch report recompute is
+    * State: [[BatchState]] (fold-inclusive); a compaction re-aggregates
+    * `grams` and concatenates `docs`. The per-batch report recompute is
     * the maintained-report contract (the [[curateStream]] ruling);
     * a 100 TB deployment runs the report on a cadence instead by
     * raising `compactEvery` and reading the same state.
@@ -873,76 +541,36 @@ object StreamingPipelines {
       statePath: String, checkpoint: String, compactEvery: Int = 16,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     require(compactEvery >= 2, "compactEvery must be at least 2")
-    source.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val fs = fsOf(s, statePath)
-        // the gramArrays persist contract: the frame is read by the
-        // docs-layer write AND the partial aggregate
-        val arrays = graft.dedup.SubstringDedup
-          .gramArrays(spreadByBytes(batch), idCol, textCol, minLen)
-          .persist()
-        try {
-          arrays.write.mode("overwrite")
-            .parquet(s"$statePath/b$batchId/docs")
-          graft.dedup.SubstringDedup.gramPartials(arrays, idCol)
-            .write.mode("overwrite")
-            .parquet(s"$statePath/b$batchId/grams")
-        } finally { arrays.unpersist(blocking = false); () }
-        val upto = readMarker(fs, statePath)
-        if (upto > batchId + 1)
-          throw new IllegalStateException(
-            s"compaction marker $upto is ahead of batch $batchId " +
-              s"under $statePath — state belongs to a different stream")
-        val gen =
-          if (upto > 0) {
-            val g = s"$statePath/compacted_g$upto"
-            if (!fs.exists(new Path(g)))
-              throw new IllegalStateException(
-                s"marker says batches [0, $upto) are folded at $g but " +
-                  "the generation dir is missing")
-            Seq(g)
-          } else Nil
-        val parts = gen ++ (upto to batchId).map { i =>
-          val p = s"$statePath/b$i"
-          if (!fs.exists(new Path(p)))
-            throw new IllegalStateException(
-              s"state for batch $i (implied by batch counter $batchId " +
-                s"and marker $upto) is missing under $statePath")
-          p
-        }
-        val willCompact = batchId + 1 - upto >= compactEvery
-        val docsState = s.read.parquet(parts.map(_ + "/docs"): _*)
-        val foldedRaw = graft.dedup.SubstringDedup.foldGramPartials(
-          s.read.parquet(parts.map(_ + "/grams"): _*))
-        // checkpoint only when the compaction fold reads it too
-        val folded =
-          if (willCompact) foldedRaw.localCheckpoint(true) else foldedRaw
-        graft.dedup.SubstringDedup
-          .scrubAgainstFirsts(docsState,
-            graft.dedup.SubstringDedup.firstsOf(folded), idCol, minLen)
-          .write.mode("overwrite").parquet(reportPath)
-        if (willCompact) {
-          val g = s"$statePath/compacted_g${batchId + 1}"
-          folded.write.mode("overwrite").parquet(s"$g/grams")
-          docsState.write.mode("overwrite").parquet(s"$g/docs")
-          writeMarker(fs, statePath, batchId + 1)
-          fs.listStatus(new Path(statePath)).foreach { st =>
-            val nm = st.getPath.getName
-            val stale =
-              (nm.startsWith("b") && nm.drop(1).forall(_.isDigit) &&
-                nm.drop(1).toLong <= batchId) ||
-                (nm.startsWith("compacted_g") &&
-                  nm != s"compacted_g${batchId + 1}")
-            if (stale) { fs.delete(st.getPath, true); () }
-          }
-        }
-        ()
+    eachBatch(source, checkpoint, trigger) { (batch, batchId) =>
+      val s = batch.sparkSession
+      val own = BatchState.partial(statePath, batchId)
+      // the gramArrays persist contract: the frame is read by the
+      // docs-layer write AND the partial aggregate
+      val arrays = graft.dedup.SubstringDedup
+        .gramArrays(spreadByBytes(batch), idCol, textCol, minLen)
+        .persist()
+      try {
+        arrays.write.mode("overwrite").parquet(s"$own/docs")
+        graft.dedup.SubstringDedup.gramPartials(arrays, idCol)
+          .write.mode("overwrite").parquet(s"$own/grams")
+      } finally { arrays.unpersist(blocking = false); () }
+      val st = BatchState.open(s, statePath, batchId + 1, compactEvery,
+        "docs", "grams")
+      val docsState = s.read.parquet(st.layer("docs"): _*)
+      val foldedRaw = graft.dedup.SubstringDedup.foldGramPartials(
+        s.read.parquet(st.layer("grams"): _*))
+      // checkpoint only when the compaction fold reads it too
+      val folded =
+        if (st.due) foldedRaw.localCheckpoint(true) else foldedRaw
+      graft.dedup.SubstringDedup
+        .scrubAgainstFirsts(docsState,
+          graft.dedup.SubstringDedup.firstsOf(folded), idCol, minLen)
+        .write.mode("overwrite").parquet(reportPath)
+      st.compact { g =>
+        folded.write.mode("overwrite").parquet(s"$g/grams")
+        docsState.write.mode("overwrite").parquet(s"$g/docs")
       }
-      .start()
+    }
   }
 
   /** Streaming incremental NEAR-dup dedup — [[graft.dedup.IncrementalNearDup]]
@@ -959,144 +587,64 @@ object StreamingPipelines {
     * pairs are out of scope, identical to the batch operator's
     * contract.
     *
-    * State layer (the r12 verdict directive):
-    *  - every path operation goes through the Hadoop [[FileSystem]] of
-    *    `statePath`'s scheme — an `hdfs://`/`s3a://` state path works
-    *    identically to a local one, and a state dir the batch counter
-    *    says must exist FAILS LOUD when missing instead of silently
-    *    probing an emptier index;
-    *  - every state and matches write is `mode(overwrite)` into a
-    *    batch-owned subdir, so checkpoint-replayed batches are
-    *    idempotent;
-    *  - every `compactEvery` batches the strictly-earlier state (the
-    *    probe index just read — per-batch subdirs plus the previous
-    *    generation) is folded into one `compacted_g<batchId>` dir in
-    *    the persisted [[graft.dedup.IncrementalNearDup.Index]] layout
-    *    and the folded subdirs are dropped, so per-batch listing and
-    *    small-file planning stay bounded by `compactEvery + 1` index
-    *    dirs on an arbitrarily long stream (r12 What's-wrong #2: the
-    *    un-compacted form pays O(batches) listing per batch). The
-    *    marker write is ordered AFTER the new generation lands and
-    *    cleanup is re-run opportunistically, so every crash window
-    *    replays to the same state ([[NearDupStreamStateSpec]] pins the
-    *    bound and the fold).
+    * State: [[BatchState]] with horizon `batchId` (the index holds
+    * strictly earlier batches), sublayers `sets` and `bands` in the
+    * persisted [[graft.dedup.IncrementalNearDup.Index]] layout.
     */
   def nearDupStream(source: DataFrame, idCol: String, textCol: String,
       statePath: String, matchesPath: String, checkpoint: String,
       threshold: Double = 0.8, compactEvery: Int = 16,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     require(compactEvery >= 2, "compactEvery must be at least 2")
-    source.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val fs = fsOf(s, statePath)
-        // each micro-batch owns a state SUBDIR: writing the batch's
-        // sets/bands there materializes them exactly ONCE (the write is
-        // the checkpoint — no separate localCheckpoint jobs), and the
-        // probe index is the union of the compacted generation and the
-        // per-batch dirs of EARLIER batches, so probe-before-merge
-        // needs no ordering tricks at all
-        val setsDir = s"$statePath/sets/b$batchId"
-        val bandsDir = s"$statePath/bands/b$batchId"
-        graft.dedup.Dedup.shingleSets(spreadByBytes(batch), idCol,
-            textCol, 3)
-          .write.mode("overwrite").parquet(setsDir)
-        val sets = s.read.parquet(setsDir)
-        graft.dedup.Dedup.bandedBuckets(
-            sets.select(col(idCol),
-              graft.dedup.Dedup.minHashSignatureFromBases(
-                graft.dedup.Dedup.md5Bases(col("__set")), 128)
-                .as("__sig")),
-            idCol, "__sig", 32, x => md5(x.cast("binary")))
-          .write.mode("overwrite").parquet(bandsDir)
-        val bands = s.read.parquet(bandsDir)
-        val upto = readMarker(fs, statePath)
-        if (upto > batchId)
-          throw new IllegalStateException(
-            s"compaction marker $upto is AHEAD of batch $batchId under " +
-              s"$statePath — state belongs to a different stream or a " +
-              "corrupted checkpoint; refusing to probe an index that " +
-              "would include this batch's own documents")
-        val gen: Seq[(String, String)] =
-          if (upto > 0) {
-            val g = s"$statePath/compacted_g$upto"
-            if (!fs.exists(new Path(s"$g/sets")) ||
-                !fs.exists(new Path(s"$g/bands")))
-              throw new IllegalStateException(
-                s"marker says batches [0, $upto) are folded at $g but " +
-                  "the generation dir is missing — refusing to " +
-                  "silently probe an empty index")
-            Seq((s"$g/sets", s"$g/bands"))
-          } else Nil
-        val perBatch = (upto until batchId).map { i =>
-          val p = (s"$statePath/sets/b$i", s"$statePath/bands/b$i")
-          if (!fs.exists(new Path(p._1)) || !fs.exists(new Path(p._2)))
-            throw new IllegalStateException(
-              s"state for batch $i (implied by batch counter $batchId " +
-                s"and marker $upto) is missing under $statePath — " +
-                "refusing to silently probe an incomplete index")
-          p
+    eachBatch(source, checkpoint, trigger) { (batch, batchId) =>
+      val s = batch.sparkSession
+      // writing the batch's sets/bands to its own partial materializes
+      // them exactly ONCE (the write is the checkpoint — no separate
+      // localCheckpoint jobs), and the probe index is the state of
+      // EARLIER batches, so probe-before-merge needs no ordering tricks
+      val own = BatchState.partial(statePath, batchId)
+      graft.dedup.Dedup.shingleSets(spreadByBytes(batch), idCol,
+          textCol, 3)
+        .write.mode("overwrite").parquet(s"$own/sets")
+      val sets = s.read.parquet(s"$own/sets")
+      graft.dedup.Dedup.bandedBuckets(
+          sets.select(col(idCol),
+            graft.dedup.Dedup.minHashSignatureFromBases(
+              graft.dedup.Dedup.md5Bases(col("__set")), 128)
+              .as("__sig")),
+          idCol, "__sig", 32, x => md5(x.cast("binary")))
+        .write.mode("overwrite").parquet(s"$own/bands")
+      val bands = s.read.parquet(s"$own/bands")
+      // horizon batchId: the index is strictly-earlier batches only
+      val st = BatchState.open(s, statePath, batchId, compactEvery,
+        "sets", "bands")
+      val out =
+        if (st.parts.nonEmpty) {
+          val idx = graft.dedup.IncrementalNearDup.Index(
+            s.read.parquet(st.layer("bands"): _*),
+            s.read.parquet(st.layer("sets"): _*))
+          graft.dedup.IncrementalNearDup.matches(idx, sets, bands,
+            idCol, threshold)
+        } else {
+          // first batch probes an EMPTY index: write a typed empty
+          // frame so the matches sink always has a readable schema
+          val schema = new org.apache.spark.sql.types.StructType()
+            .add("batch_id", sets.schema(idCol).dataType)
+            .add("dup_of", sets.schema(idCol).dataType)
+            .add("jaccard", org.apache.spark.sql.types.DoubleType)
+          s.createDataFrame(
+            s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
         }
-        val earlier = gen ++ perBatch
-        val out =
-          if (earlier.nonEmpty) {
-            val idx = graft.dedup.IncrementalNearDup.Index(
-              s.read.parquet(earlier.map(_._2): _*),
-              s.read.parquet(earlier.map(_._1): _*))
-            graft.dedup.IncrementalNearDup.matches(idx, sets, bands,
-              idCol, threshold)
-          } else {
-            // first batch probes an EMPTY index: write a typed empty
-            // frame so the matches sink always has a readable schema
-            val schema = new org.apache.spark.sql.types.StructType()
-              .add("batch_id", sets.schema(idCol).dataType)
-              .add("dup_of", sets.schema(idCol).dataType)
-              .add("jaccard",
-                org.apache.spark.sql.types.DoubleType)
-            s.createDataFrame(
-              s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-          }
-        out.write.mode("overwrite").parquet(s"$matchesPath/b$batchId")
-        // COMPACTION: once the uncompacted tail reaches compactEvery
-        // dirs, fold the strictly-earlier state — exactly the probe
-        // index read above, never this batch's own dirs, so a replay
-        // that lands after the marker write still probes precisely the
-        // earlier-batch corpus — into one new generation. Write the
-        // generation first, move the marker second, clean up third;
-        // the cleanup sweep below also collects leftovers of any
-        // earlier crash window, so the layout is self-healing.
-        if (batchId - upto >= compactEvery) {
-          val g = s"$statePath/compacted_g$batchId"
-          s.read.parquet(earlier.map(_._1): _*)
-            .write.mode("overwrite").parquet(s"$g/sets")
-          s.read.parquet(earlier.map(_._2): _*)
-            .write.mode("overwrite").parquet(s"$g/bands")
-          writeMarker(fs, statePath, batchId)
-          Seq("sets", "bands").foreach { kind =>
-            val dir = new Path(s"$statePath/$kind")
-            if (fs.exists(dir))
-              fs.listStatus(dir).foreach { st =>
-                val n = st.getPath.getName
-                if (n.startsWith("b") &&
-                    n.drop(1).forall(_.isDigit) &&
-                    n.drop(1).toLong < batchId) {
-                  fs.delete(st.getPath, true); ()
-                }
-              }
-          }
-          fs.listStatus(new Path(statePath)).foreach { st =>
-            val n = st.getPath.getName
-            if (n.startsWith("compacted_g") &&
-                n != s"compacted_g$batchId") {
-              fs.delete(st.getPath, true); ()
-            }
-          }
+      out.write.mode("overwrite").parquet(s"$matchesPath/b$batchId")
+      // the generation folds exactly the probe index read above, never
+      // this batch's own partial, so a replay that lands after the
+      // marker moved still probes precisely the earlier-batch corpus
+      st.compact { g =>
+        Seq("sets", "bands").foreach { l =>
+          s.read.parquet(st.layer(l): _*)
+            .write.mode("overwrite").parquet(s"$g/$l")
         }
-        ()
       }
-      .start()
+    }
   }
 }

@@ -28,7 +28,7 @@ object StreamingQueries extends QueryPack {
       .map(p => java.nio.file.Files.createTempDirectory(p).toString)
     try f(dirs)
     finally dirs.foreach(d =>
-      StreamingPipelines.deleteDir(new java.io.File(d)))
+      graft.util.Staging.deleteRecursively(new java.io.File(d)))
   }
 
   /** Run `build` against a DEDICATED session (same SparkContext, shared

@@ -66,8 +66,9 @@ object Staging {
   def warehouseDir(s: SparkSession): java.io.File =
     new java.io.File(new java.net.URI(s.conf.get("spark.sql.warehouse.dir")))
 
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
+  /** Best-effort recursive delete of a local file or directory. */
+  def deleteRecursively(f: java.io.File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
     f.delete(): Unit
   }
 
@@ -98,7 +99,7 @@ object Staging {
               (!alive && f.lastModified() < cutoff) ||
                 f.lastModified() < hardCutoff
             if (pid != keepPid && reapable) {
-              rm(f); onDelete(f)
+              deleteRecursively(f); onDelete(f)
             }
           case _ => ()
         }

@@ -11,7 +11,7 @@ import graft.text.Decontam
   * the batch operator under any micro-batch cut (contamination is a
   * pure function of (doc, eval set)), the maintained ledger carries
   * exact corpus totals, and its per-batch partials compact under the
-  * r13 state contract.
+  * [[BatchState]] protocol.
   */
 class DecontamStreamSpec extends SparkSpec {
   import spark.implicits._

@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.Path
 import graft.SparkSpec
 
 /** Pins the crash-safety contract of the compaction-marker I/O
-  * ([[StreamingPipelines.writeMarker]]/readMarker — the r13 ADVICE
+  * ([[BatchState.writeMarker]]/readMarker — the r13 ADVICE
   * item): the update is temp-file-then-swap, reads drain the stream to
   * EOF, and every crash window either recovers to a definite horizon
   * or fails LOUD — never a bare `"".toLong` NumberFormatException,
@@ -29,17 +29,17 @@ class MarkerSpec extends SparkSpec {
 
   test("write-then-read round-trips and consumes the tmp file") {
     val (fs, dir) = fixture()
-    StreamingPipelines.writeMarker(fs, dir, 12L)
-    assert(StreamingPipelines.readMarker(fs, dir) === 12L)
+    BatchState.writeMarker(fs, dir, 12L)
+    assert(BatchState.readMarker(fs, dir) === 12L)
     assert(!fs.exists(new Path(s"$dir/_compacted_upto.tmp")))
-    StreamingPipelines.writeMarker(fs, dir, 16L) // overwrite path
-    assert(StreamingPipelines.readMarker(fs, dir) === 16L)
+    BatchState.writeMarker(fs, dir, 16L) // overwrite path
+    assert(BatchState.readMarker(fs, dir) === 16L)
   }
 
   test("absent marker with no generation dirs reads as 0 " +
       "(no compaction yet)") {
     val (fs, dir) = fixture()
-    assert(StreamingPipelines.readMarker(fs, dir) === 0L)
+    assert(BatchState.readMarker(fs, dir) === 0L)
   }
 
   test("crash between swap delete and rename self-heals from the tmp " +
@@ -48,19 +48,19 @@ class MarkerSpec extends SparkSpec {
     // simulate: tmp holds the new value, the old marker is deleted
     put(fs, new Path(s"$dir/_compacted_upto.tmp"), "8")
     fs.mkdirs(new Path(s"$dir/compacted_g8"))
-    assert(StreamingPipelines.readMarker(fs, dir) === 8L)
+    assert(BatchState.readMarker(fs, dir) === 8L)
     // the recovery finished the rename: marker durable, tmp gone
-    assert(fs.exists(StreamingPipelines.markerPath(dir)))
+    assert(fs.exists(BatchState.markerPath(dir)))
     assert(!fs.exists(new Path(s"$dir/_compacted_upto.tmp")))
-    assert(StreamingPipelines.readMarker(fs, dir) === 8L)
+    assert(BatchState.readMarker(fs, dir) === 8L)
   }
 
   test("an EMPTY marker file fails loud (the r13 in-place write's " +
       "crash artifact), never NumberFormatException") {
     val (fs, dir) = fixture()
-    put(fs, StreamingPipelines.markerPath(dir), "")
+    put(fs, BatchState.markerPath(dir), "")
     val e = intercept[IllegalStateException] {
-      StreamingPipelines.readMarker(fs, dir)
+      BatchState.readMarker(fs, dir)
     }
     assert(e.getMessage.contains("unreadable"))
   }
@@ -68,9 +68,9 @@ class MarkerSpec extends SparkSpec {
   test("a garbled marker fails loud; absent marker WITH generation " +
       "dirs and a BROKEN partial chain fails loud") {
     val (fs, dir) = fixture()
-    put(fs, StreamingPipelines.markerPath(dir), "12x")
+    put(fs, BatchState.markerPath(dir), "12x")
     intercept[IllegalStateException] {
-      StreamingPipelines.readMarker(fs, dir)
+      BatchState.readMarker(fs, dir)
     }
     // gens present, b0 gone: partials were cleaned under a now-lost
     // marker — no safe horizon exists
@@ -78,7 +78,7 @@ class MarkerSpec extends SparkSpec {
     fs2.mkdirs(new Path(s"$dir2/compacted_g4"))
     fs2.mkdirs(new Path(s"$dir2/b4"))
     val e = intercept[IllegalStateException] {
-      StreamingPipelines.readMarker(fs2, dir2)
+      BatchState.readMarker(fs2, dir2)
     }
     assert(e.getMessage.contains("b0 partial is gone"))
   }
@@ -91,17 +91,17 @@ class MarkerSpec extends SparkSpec {
     val (fs, dir) = fixture()
     fs.mkdirs(new Path(s"$dir/compacted_g4"))
     (0 to 3).foreach(i => fs.mkdirs(new Path(s"$dir/b$i")))
-    assert(StreamingPipelines.readMarker(fs, dir) === 0L)
+    assert(BatchState.readMarker(fs, dir) === 0L)
   }
 
   test("a stale tmp from a crash BEFORE the swap is ignored while the " +
       "real marker exists, and overwritten by the next update") {
     val (fs, dir) = fixture()
-    StreamingPipelines.writeMarker(fs, dir, 4L)
+    BatchState.writeMarker(fs, dir, 4L)
     put(fs, new Path(s"$dir/_compacted_upto.tmp"), "99")
-    assert(StreamingPipelines.readMarker(fs, dir) === 4L)
-    StreamingPipelines.writeMarker(fs, dir, 8L)
-    assert(StreamingPipelines.readMarker(fs, dir) === 8L)
+    assert(BatchState.readMarker(fs, dir) === 4L)
+    BatchState.writeMarker(fs, dir, 8L)
+    assert(BatchState.readMarker(fs, dir) === 8L)
     assert(!fs.exists(new Path(s"$dir/_compacted_upto.tmp")))
   }
 }

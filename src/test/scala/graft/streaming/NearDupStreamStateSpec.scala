@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.SparkSession
+
 import graft.SparkSpec
 
 /** Pins the r12-directed state layer of
@@ -71,45 +73,45 @@ class NearDupStreamStateSpec extends SparkSpec {
     assert(got === Set((3L, 1L), (5L, 4L), (6L, 2L)),
       s"non-local scheme must probe the full index: $got")
     // the state physically landed under the local dir via TestFs
-    assert(new java.io.File(s"$localState/sets").isDirectory,
+    assert(new java.io.File(s"$localState/b0/sets").isDirectory,
       "testfs: state must resolve to the backing local directory")
   }
 
   test("state and checkpoint survive a QUERY RESTART: a two-phase " +
       "drain (6 waves, stop, 6 more waves, new query, same " +
       "checkpoint/state) equals the single drain") {
-    def waveFor(i: Long): Seq[(Long, String)] = Seq(i -> doc(1))
-    val (src, state, out, ckpt) = (tmpDir("ndrs_src"),
-      tmpDir("ndrs_state"), tmpDir("ndrs_out"), tmpDir("ndrs_ckpt"))
-    def write(waves: Seq[Long]): Unit = waves.foreach { i =>
-      waveFor(i).toDF("doc_id", "text").coalesce(1)
-        .write.mode("append").parquet(src)
-      Thread.sleep(30)
-    }
-    def drainOnce(): Unit = {
-      val schema = spark.read.parquet(src).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      StreamingPipelines.nearDupStream(stream, "doc_id", "text",
-          state, out, ckpt, compactEvery = 4)
-        .awaitTermination()
-    }
-    write(0L until 6L)
-    drainOnce() // phase 1: checkpoint commits batches 0..5
-    write(6L until 12L)
-    drainOnce() // RESTART: a new query resumes from the checkpoint
-    val got = StreamingPipelines.nearDupMatches(spark, out)
-      .select("batch_id", "dup_of").as[(Long, Long)].collect().toSet
-    val want = (for (a <- 0L until 12L; b <- 0L until a)
-      yield (a, b)).toSet
-    assert(got === want,
+    val run = new NearDupRun(spark, "ndrs", compactEvery = 4)
+    run.write(0L until 6L)
+    run.drain() // phase 1: checkpoint commits batches 0..5
+    run.write(6L until 12L)
+    run.drain() // RESTART: a new query resumes from the checkpoint
+    assert(run.matches === NearDupRun.allPairs(12),
       "a restarted query must see the full pre-restart index and " +
         "emit exactly the single-drain matches")
     // the restart continued batch numbering, so compaction kept its
     // schedule: upto 8, tail b8..b11
-    val marker = new String(Files.readAllBytes(
-      java.nio.file.Paths.get(s"$state/_compacted_upto"))).trim
-    assert(marker === "8", s"marker must read 8, got $marker")
+    assert(run.marker === Some("8"))
+  }
+
+  test("a crash after a compaction generation lands but BEFORE its " +
+      "marker is written resumes to the single-drain matches") {
+    val run = new NearDupRun(spark, "ndcw", compactEvery = 4)
+    run.write(0L until 4L)
+    run.drain() // batches 0..3: the tail is not yet compactEvery long
+    // the crash window inside batch 4: compacted_g4 (the union of
+    // batches 0..3) landed, writeMarker never started — no marker, no
+    // tmp, every partial still in place
+    Seq("sets", "bands").foreach { l =>
+      spark.read.parquet((0 until 4).map(i => s"${run.state}/b$i/$l"): _*)
+        .write.parquet(s"${run.state}/compacted_g4/$l")
+    }
+    assert(run.marker.isEmpty &&
+      !new java.io.File(s"${run.state}/_compacted_upto.tmp").exists())
+    run.write(4L until 8L)
+    run.drain() // RESTART on the same checkpoint and state
+    assert(run.matches === NearDupRun.allPairs(8),
+      "the restart must resume from the intact partial chain")
+    assert(run.marker === Some("4"))
   }
 
   test("compaction bounds the state listing and preserves every " +
@@ -132,17 +134,63 @@ class NearDupStreamStateSpec extends SparkSpec {
     def subdirs(p: String): Set[String] =
       Option(new java.io.File(p).listFiles()).getOrElse(Array.empty)
         .filter(_.isDirectory).map(_.getName).toSet
-    assert(subdirs(s"$state/sets") === Set("b8", "b9", "b10", "b11"),
-      "folded per-batch set dirs must be dropped")
-    assert(subdirs(s"$state/bands") === Set("b8", "b9", "b10", "b11"),
-      "folded per-batch band dirs must be dropped")
+    val tail = Set("b8", "b9", "b10", "b11")
+    assert(subdirs(state).filter(_.matches("b\\d+")) === tail,
+      "folded per-batch dirs must be dropped")
+    tail.foreach(b => assert(subdirs(s"$state/$b") === Set("sets", "bands"),
+      s"$b must keep both its set and band layers"))
     assert(subdirs(state).filter(_.startsWith("compacted_g")) ===
       Set("compacted_g8"), "exactly one live generation")
     // the generation holds the folded batches' full index
     assert(spark.read.parquet(s"$state/compacted_g8/sets")
       .select("doc_id").as[Long].collect().toSet ===
       (0L until 8L).toSet)
-    assert(spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$state/sets").count() === 4L)
+    assert(spark.read.parquet(tail.toSeq.map(b => s"$state/$b/sets"): _*)
+      .count() === 4L)
   }
+}
+
+/** One near-dup stream whose source, state, sink and checkpoint
+  * outlive its queries: [[write]] appends one-doc single-file waves
+  * (doc id = wave, every doc identical), [[drain]] runs a NEW query over
+  * whatever is unread — a restart on the same checkpoint and state.
+  */
+private[streaming] final class NearDupRun(spark: SparkSession,
+    prefix: String, compactEvery: Int) {
+  import spark.implicits._
+  private def tmpDir(suffix: String): String =
+    Files.createTempDirectory(s"${prefix}_$suffix").toString
+  val (src, state, out, ckpt) =
+    (tmpDir("src"), tmpDir("state"), tmpDir("out"), tmpDir("ckpt"))
+
+  def write(waves: Seq[Long]): Unit = waves.foreach { i =>
+    Seq(i -> (0 until 40).map(j => s"w1_$j").mkString(" "))
+      .toDF("doc_id", "text").coalesce(1)
+      .write.mode("append").parquet(src)
+    Thread.sleep(30)
+  }
+
+  def drain(): Unit = {
+    val stream = spark.readStream.schema(spark.read.parquet(src).schema)
+      .option("maxFilesPerTrigger", 1).parquet(src)
+    StreamingPipelines.nearDupStream(stream, "doc_id", "text", state,
+        out, ckpt, compactEvery = compactEvery)
+      .awaitTermination()
+  }
+
+  def matches: Set[(Long, Long)] =
+    StreamingPipelines.nearDupMatches(spark, out)
+      .select("batch_id", "dup_of").as[(Long, Long)].collect().toSet
+
+  def marker: Option[String] = {
+    val m = java.nio.file.Paths.get(s"$state/_compacted_upto")
+    if (Files.exists(m)) Some(new String(Files.readAllBytes(m)).trim)
+    else None
+  }
+}
+
+object NearDupRun {
+  /** Every (later, earlier) pair of `n` identical one-doc waves. */
+  def allPairs(n: Long): Set[(Long, Long)] =
+    (for (a <- 0L until n; b <- 0L until a) yield (a, b)).toSet
 }

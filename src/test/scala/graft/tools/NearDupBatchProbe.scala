@@ -47,8 +47,8 @@ object NearDupBatchProbe {
         val sec = (System.nanoTime() - t0) / 1e9
         val matches = graft.streaming.StreamingPipelines
           .nearDupMatches(spark, out).count()
-        val stateDirs = Option(new java.io.File(s"$state/sets")
-          .listFiles()).map(_.count(_.isDirectory)).getOrElse(0)
+        val stateDirs = Option(new java.io.File(state).listFiles())
+          .map(_.count(_.getName.matches("b\\d+"))).getOrElse(0)
         println(f"""NEARDUP_BATCH {"batches":$batches,""" +
           f""""compactEvery":$compactEvery,"sec":$sec%.3f,""" +
           f""""matches":$matches,"tail_dirs":$stateDirs}""")
