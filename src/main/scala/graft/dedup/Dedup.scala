@@ -55,39 +55,30 @@ object Dedup {
   def wordShingles(c: Column, k: Int): Column =
     wordShinglesFromTokens(tokensOf(c), k)
 
-  /** MinHash signature (array of `numHashes` longs) over a shingle array.
-    * Universal-hash family h_i(x) = (a_i·x + b_i) mod P (P = 2³¹−1, so the
-    * products never overflow a long) over the base xxhash64 of each
-    * shingle, reduced mod P first. Empty shingle sets get signature
-    * [P, P, …] (sentinel that only collides with other empties).
-    *
-    * Native codegen'd loop (`org.apache.spark.sql.graft.MinHashSig`): one
-    * xxhash per shingle, updating all `numHashes` running minima in a
-    * primitive inner loop. Two prior HOF formulations measured 50× (nested
-    * re-hash) and ~8× (single-pass fold, interpreted closures) slower.
+  /** MinHash signature (array of `numHashes` longs) over a shingle array
+    * in the xxhash production family: universal-hash minima h_i(x) =
+    * (a_i·x + b_i) mod P (P = 2³¹−1, so the products never overflow a
+    * long) over the seed-42 xxhash64 of each shingle, reduced mod P
+    * first. Empty shingle sets get signature [P, P, …] (sentinel that
+    * only collides with other empties). Two native loops: one xxhash per
+    * shingle (`BaseHashes`), then all `numHashes` running minima in a
+    * primitive inner loop (`MinHashSigFromBases`). Two prior HOF
+    * formulations measured 50× (nested re-hash) and ~8× (single-pass
+    * fold, interpreted closures) slower.
     */
   def minHashSignature(shingles: Column, numHashes: Int): Column =
-    org.apache.spark.sql.graft.ColumnShim.column(
-      org.apache.spark.sql.graft.MinHashSig(
-        org.apache.spark.sql.graft.ColumnShim.expression(shingles),
-        numHashes))
+    minHashSignatureFromBases(HashFamily.Xxhash.bases(shingles), numHashes)
 
-  /** ORACLE-REPLAYABLE MinHash signature: the same universal-hash family
-    * as [[minHashSignature]] (aᵢ = 2i+1, bᵢ = 40503i+12345 mod P — the
-    * closed-form constants any engine can restate as literals) over an
-    * md5-derived base hash — the top 60 bits of md5(shingle) — instead
-    * of xxhash64. Every step is a built-in codegen'd expression
-    * (md5/substring/conv) plus the native min loop
-    * (`MinHashSigFromBases`), and every step has an exact ANSI-SQL
-    * restatement, so the WHOLE sig→bands→buckets→verify pipeline
-    * hash-oracles in DuckDB (see [[DedupQueries]]). Production traffic
-    * keeps the xxhash form (one 64-bit mix vs an md5 per shingle); the
-    * LSH physics — banding, bucket bounds, recall — are hash-agnostic,
-    * so the oracled lane certifies the shared pipeline.
-    *
-    * `bases` is `array<long>` (see [[md5Base]]); values reduce mod P
-    * inside the expression exactly as [[minHashSignature]] reduces raw
-    * xxhash values. Empty arrays yield the all-P sentinel.
+  /** MinHash signature over PRE-COMPUTED base hashes (`array<long>`):
+    * the universal-hash family of [[minHashSignature]] (aᵢ = 2i+1, bᵢ =
+    * 40503i+12345 mod P — closed-form constants any engine can restate
+    * as literals), each base reduced mod P inside the native min loop
+    * (`MinHashSigFromBases`). Empty arrays yield the all-P sentinel.
+    * Over [[md5Bases]] every step has an exact ANSI-SQL restatement, so
+    * the WHOLE sig→bands→buckets→verify pipeline hash-oracles in DuckDB
+    * (see [[DedupQueries]]); the LSH physics — banding, bucket bounds —
+    * are hash-agnostic, so the oracled lanes certify the shared
+    * pipeline.
     */
   def minHashSignatureFromBases(bases: Column, numHashes: Int): Column =
     org.apache.spark.sql.graft.ColumnShim.column(
@@ -103,42 +94,40 @@ object Dedup {
     conv(substring(md5(c.cast("binary")), 1, 15), 16, 10).cast("long")
 
   /** [[md5Base]] over every element of an `array<string>` column in ONE
-    * codegen'd loop (`Md5Bases` — thread-cached digest per element).
-    * This is how the oracle lanes hash shingle ARRAYS: the md5 built-in
-    * is per-row and a `transform` lambda runs interpreted, so the r8
-    * first cut exploded + regrouped (`collect_list`) just to hash — a
-    * whole extra shuffle of every shingle, measured +0.5s on the
-    * simhash gate at sf0.1. One native loop removes it.
+    * codegen'd loop (`BaseHashes` — thread-cached digest per element):
+    * the base hash of the md5 family ([[HashFamily.Md5]]).
     */
-  def md5Bases(arr: Column): Column =
-    org.apache.spark.sql.graft.ColumnShim.column(
-      org.apache.spark.sql.graft.Md5Bases(
-        org.apache.spark.sql.graft.ColumnShim.expression(arr)))
+  def md5Bases(arr: Column): Column = baseHashes(arr, md5 = true)
 
-  /** (id, band_idx, band_hash) — one row per band per doc. `bands` must
-    * divide the signature length; each band hashes `sigLen/bands`
-    * consecutive signature entries. `bandHash` maps the band's joined
-    * "v1-v2-…" string to the bucket key — xxhash64 in production,
-    * md5 in the oracled lane (equality semantics only, so any
-    * collision-resistant keying works).
+  /** Per-element base hashes of an `array<string>` column (`BaseHashes`):
+    * seed-42 xxhash64, or the md5-derived 60-bit base.
     */
-  def bandedBuckets(df: DataFrame, idCol: String, sigCol: String,
-      bands: Int, bandHash: Column => Column = xxhash64(_)): DataFrame = {
-    val sigLen = size(col(sigCol))
-    val rows = sigLen / bands
-    df.select(col(idCol),
+  private[dedup] def baseHashes(arr: Column, md5: Boolean): Column =
+    org.apache.spark.sql.graft.ColumnShim.column(
+      org.apache.spark.sql.graft.BaseHashes(
+        org.apache.spark.sql.graft.ColumnShim.expression(arr), md5))
+
+  /** (id, band_idx, band_hash) from an (id, __set) frame under `family`:
+    * THE signature→bands step of every MinHash pipeline — the batch
+    * lanes, the incremental index and its probe, and the near-dup
+    * stream's persisted `bands`. The family's base hashes feed a
+    * `numHashes`-long MinHash signature; band b keys the joined
+    * "v1-v2-…" string of its `numHashes/bands` consecutive minima with
+    * the family's band hash (equality semantics only, so any
+    * collision-resistant keying works). `bands` must divide `numHashes`.
+    */
+  private[graft] def minHashBands(family: HashFamily, sets: DataFrame,
+      idCol: String, numHashes: Int, bands: Int): DataFrame = {
+    val rows = numHashes / bands
+    sets.select(col(idCol),
+        minHashSignatureFromBases(family.bases(col("__set")), numHashes)
+          .as("__sig"))
+      .select(col(idCol),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => bandHash(concat_ws("-", slice(col(sigCol), b * rows + 1,
-            rows))))).as(Seq("band_idx", "band_hash")))
+          b => family.bandKey(concat_ws("-", slice(col("__sig"),
+            b * rows + 1, lit(rows)))))).as(Seq("band_idx", "band_hash")))
   }
 
-  /** Candidate near-dup pairs (id_a < id_b) from banded LSH.
-    *
-    * @param maxBucket buckets larger than this are dropped (a bucket of m
-    *                  docs yields m·(m−1)/2 pairs — a degenerate hash
-    *                  bucket must not explode the join). Dropped bucket
-    *                  count is reported via `droppedBuckets` if needed.
-    */
   /** Distinct k-shingle sets per id — the shared working set of the
     * near-dup pipeline (signatures AND exact Jaccard both derive from it;
     * MinHash minima are identical over a set and its multiset).
@@ -155,33 +144,14 @@ object Dedup {
         array_distinct(wordShinglesFromTokens(col("__toks"), shingleK))
           .as("__set"))
 
-  def lshCandidates(df: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 3, numHashes: Int = 128, bands: Int = 32,
-      maxBucket: Int = 64): DataFrame =
-    lshCandidatesFromSets(shingleSets(df, idCol, textCol, shingleK),
-      idCol, numHashes, bands, maxBucket)
-
-  /** Candidate pairs from a precomputed (id, __set) frame. The banded
-    * bucket index is persisted: it is the LSH index proper, read by the
-    * window bound and BOTH sides of the self-join — without the persist
-    * CollapseProject re-derives the MinHash per band and per side. ~1
-    * KB/row; at cluster scale this is the standard materialized sketch
-    * table (write to storage for multi-job reuse).
-    */
-  def lshCandidatesFromSets(sets: DataFrame, idCol: String,
-      numHashes: Int = 128, bands: Int = 32,
-      maxBucket: Int = 64): DataFrame = {
-    val sigs = sets.select(col(idCol),
-      minHashSignature(col("__set"), numHashes).as("__sig"))
-    pairsFromBands(bandedBuckets(sigs, idCol, "__sig", bands), idCol,
-      maxBucket)
-  }
-
-  /** Candidate pairs from a (id, band_idx, band_hash) frame: buckets
-    * bounded to [2, maxBucket] (a degenerate bucket must not explode the
-    * self-join quadratically), then the banded self-join with id_a <
-    * id_b, distinct. The bounded index persists for the join's two
-    * sides — it is the LSH index proper (see [[lshCandidatesFromSets]]).
+  /** Candidate pairs (id_a < id_b) from a (id, band_idx, band_hash)
+    * frame: buckets bounded to [2, maxBucket] (a bucket of m docs yields
+    * m·(m−1)/2 pairs — a degenerate bucket must not explode the
+    * self-join quadratically), then the banded self-join, distinct. The
+    * bounded index is persisted: it is the LSH index proper, read by
+    * both sides of the self-join — without the persist CollapseProject
+    * re-derives the MinHash per band and per side. ~1 KB/row; at
+    * cluster scale this is the standard materialized sketch table.
     */
   private[dedup] def pairsFromBands(buckets: DataFrame, idCol: String,
       maxBucket: Int): DataFrame = {
@@ -229,40 +199,37 @@ object Dedup {
             lit(1))).as("jaccard"))
   }
 
-  /** Full near-dup pipeline: LSH candidates → exact Jaccard ≥ threshold.
-    * The corpus is shingled ONCE: the persisted (id, set) frame feeds both
-    * the MinHash index and the exact verification joins.
+  /** Full near-dup pipeline in the xxhash production family: banded
+    * LSH candidates → exact Jaccard ≥ threshold.
     */
   def nearDuplicates(df: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, numHashes: Int = 128, bands: Int = 32,
-      threshold: Double = 0.8, maxBucket: Int = 64): DataFrame = {
-    val sets = shingleSets(df, idCol, textCol, shingleK).persist()
-    val pairs =
-      lshCandidatesFromSets(sets, idCol, numHashes, bands, maxBucket)
-    jaccardOnPairsFromSets(pairs, sets, idCol)
-      .filter(col("jaccard") >= threshold)
-  }
+      threshold: Double = 0.8, maxBucket: Int = 64): DataFrame =
+    nearDuplicatesWith(HashFamily.Xxhash, df, idCol, textCol, shingleK,
+      numHashes, bands, threshold, maxBucket)
 
-  /** [[nearDuplicates]] with the md5-derived oracle-replayable hash
-    * family ([[minHashSignatureFromBases]]) — identical pipeline shape:
-    * one shingling pass, banded buckets (md5 band keys), the [2,
-    * maxBucket] bound, the banded self-join, exact Jaccard ≥ threshold
-    * on surviving pairs. Base hashes come from the [[md5Bases]] native
-    * loop directly over the shingle array — one projection, no
-    * explode/regroup shuffle; empty shingle sets yield empty base
-    * arrays and thus the all-P sentinel signature.
+  /** [[nearDuplicates]] in the md5-derived oracle-replayable family
+    * ([[HashFamily.Md5]]): the same pipeline, replayed end to end by the
+    * `dedup_minhash_documents` oracle.
     */
   def nearDuplicatesOracled(df: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, numHashes: Int = 128, bands: Int = 32,
-      threshold: Double = 0.8, maxBucket: Int = 64): DataFrame = {
+      threshold: Double = 0.8, maxBucket: Int = 64): DataFrame =
+    nearDuplicatesWith(HashFamily.Md5, df, idCol, textCol, shingleK,
+      numHashes, bands, threshold, maxBucket)
+
+  /** The corpus is shingled ONCE: the persisted (id, set) frame feeds
+    * both the MinHash band index ([[minHashBands]], bounded by
+    * [[pairsFromBands]]) and the exact verification joins. Empty
+    * shingle sets yield empty base arrays and thus the all-P sentinel
+    * signature.
+    */
+  private def nearDuplicatesWith(family: HashFamily, df: DataFrame,
+      idCol: String, textCol: String, shingleK: Int, numHashes: Int,
+      bands: Int, threshold: Double, maxBucket: Int): DataFrame = {
     val sets = shingleSets(df, idCol, textCol, shingleK).persist()
-    val sigs = sets.select(col(idCol),
-      minHashSignatureFromBases(md5Bases(col("__set")), numHashes)
-        .as("__sig"))
     val pairs = pairsFromBands(
-      bandedBuckets(sigs, idCol, "__sig", bands,
-        s => md5(s.cast("binary"))),
-      idCol, maxBucket)
+      minHashBands(family, sets, idCol, numHashes, bands), idCol, maxBucket)
     jaccardOnPairsFromSets(pairs, sets, idCol)
       .filter(col("jaccard") >= threshold)
   }
@@ -472,4 +439,29 @@ object Dedup {
       finally { labels.unpersist(blocking = false); () }
     }
   }
+}
+
+/** A near-dup hash family — the one choice that separates the production
+  * MinHash/SimHash pipelines from their DuckDB-replayable twins. Every
+  * such pipeline in [[graft.dedup]] takes the family as a value and
+  * shares every stage after the base hash.
+  *
+  * @param bases       per-element 64-bit base hash of a shingle array
+  * @param bandKey     bucket key of a MinHash band's "v1-v2-…" string
+  * @param simhashBits SimHash width: the low bits of each base that vote
+  */
+private[graft] sealed abstract class HashFamily(
+    val bases: Column => Column, val bandKey: Column => Column,
+    val simhashBits: Int)
+
+private[graft] object HashFamily {
+  /** Production: seed-42 xxhash64 bases and band keys, 64-bit SimHash. */
+  case object Xxhash extends HashFamily(
+    Dedup.baseHashes(_, md5 = false), xxhash64(_), 64)
+
+  /** Oracle-replayable: md5-derived 60-bit bases ([[Dedup.md5Base]]),
+    * md5 band keys, 60-bit SimHash — every step restates in DuckDB.
+    */
+  case object Md5 extends HashFamily(
+    Dedup.baseHashes(_, md5 = true), s => md5(s.cast("binary")), 60)
 }

@@ -393,8 +393,9 @@ object DedupQueries extends QueryPack {
     * of BOTH registered MinHash lanes: literally for the md5 lane, and
     * as an EQUIVALENCE oracle for the xxhash production lane (see
     * [[minhashProdQuery]] — survivors and their exact-Jaccard values
-    * are hash-family-independent once recall is total, which
-    * `EquivalenceProbe` verifies on the gate corpus).
+    * agree whenever both families propose every true pair, which holds
+    * on the gate corpus empirically: `EquivalenceProbe` and the floor
+    * tests check it).
     */
   private def minhashOracleSql: String = {
       val perm = s"((2*k+1) * (h % 2147483647) + (40503*k+12345)) " +
@@ -458,11 +459,8 @@ object DedupQueries extends QueryPack {
     "dedup_simhash_documents",
     (s, dir) => {
       val docs = Tables.load(s, dir, "documents", parallelize = true)
-      // the whole doc→fingerprint path is ONE projection: tokens land
-      // as a column, the md5 base hashes come from the Md5Bases native
-      // loop over the shingle array (no explode/regroup — see
-      // Dedup.md5Bases), the fingerprint from SimHashFromBases; empty
-      // docs yield empty base arrays and fp = 0.
+      // the md5 family through the shared fingerprint builder (empty
+      // docs yield empty base arrays and fp = 0).
       // persist: the fingerprint frame is exploded into 4 chunks and
       // self-joined — without it the whole base pipeline re-evaluates
       // per chunk element and per join side (the r4 SimHash lesson).
@@ -471,9 +469,8 @@ object DedupQueries extends QueryPack {
       // groups/bounded persists (nearDupFromFingerprints's documented
       // lifecycle) stay cached after return and are released by the
       // gate/bench-boundary clearCache.
-      val fps = docs
-        .select(col("doc_id"), simhashOracledFpOf(col("text")).as("fp"))
-        .persist()
+      val fps = SimHash.fingerprints(docs, "doc_id", "text",
+        HashFamily.Md5).persist()
       try {
         graft.util.Frames.localized(
           SimHash.nearDupFromFingerprints(fps, "doc_id", "fp",
@@ -521,18 +518,6 @@ object DedupQueries extends QueryPack {
     * and its oracle SQL so the two can never drift.
     */
   private[graft] val SimhashMaxBucket = 64
-
-  /** The gate lanes' oracled fingerprint family as a column builder —
-    * md5-derived 60-bit bases → per-bit majority ([[SimHash
-    * .simhashFromBases]]); shared by the batch lane above and the
-    * streaming twin so both engines (and both lanes) run ONE
-    * fingerprint definition.
-    */
-  private[graft] def simhashOracledFpOf(text: org.apache.spark.sql
-      .Column): org.apache.spark.sql.Column =
-    SimHash.simhashFromBases(
-      Dedup.md5Bases(
-        Dedup.wordShinglesFromTokens(Dedup.tokensOf(text), 3)), 60)
 
   /** Embedding-cosine near-dup, label-blocked exact variant: pairs within
     * the same `label` block with cosine ≥ 0.3 (≈ the 99th percentile of
@@ -741,8 +726,8 @@ object DedupQueries extends QueryPack {
     * so DuckDB replays the full split→sig→bands→bounded-probe→verify
     * pipeline; the xxhash production twin is pinned survivor-equal in
     * IncrementalNearDupSpec (the X2 equivalence argument: survivors
-    * are exact-verified, hence hash-family-independent at total
-    * banding recall).
+    * are exact-verified, so the families agree wherever both propose
+    * every true pair — empirically so on the gate corpus).
     */
   private def incrementalMinhashQuery = QueryDef(
     "dedup_incremental_minhash_documents",
@@ -834,14 +819,16 @@ object DedupQueries extends QueryPack {
     * sound: LSH banding only decides which CANDIDATE pairs reach the
     * verify step; survivors are the pairs whose EXACT Jaccard over the
     * shared shingle sets clears the threshold, and the emitted jaccard
-    * is that hash-family-independent exact value. At the production
-    * parameters (128 hashes / 32 bands, r = 4) a true s ≥ 0.8 pair
-    * escapes banding with probability (1−s⁴)³² < 10⁻⁷ for EITHER
-    * family, so both achieve total recall on the gate corpus —
+    * is that hash-family-independent exact value. So the two families
+    * agree wherever both propose every true pair — an EMPIRICAL fact
+    * of the gate corpus, not a bound: the textbook (1−s⁴)³² miss rate
+    * assumes independent hash functions, and this family's aᵢ = 2i+1
+    * functions are strongly correlated (a Jaccard-0.924 pair measured
+    * sharing 0 of 32 bands; "Near-dup recall" in perfbench/README.md).
     * `EquivalenceProbe` (r10) verified xxhash ≡ md5 survivor rows
-    * bit-for-bit, jaccard included. The family's own recall physics
-    * stay pinned in DedupSpec; scaling in the ScaleProbe
-    * `dedup_minhash` row (e≈0.36 x1→x10).
+    * bit-for-bit, jaccard included, and the floor tests (DedupSpec,
+    * IncrementalNearDupSpec) keep checking it; scaling lives in the
+    * ScaleProbe `dedup_minhash` row (e≈0.36 x1→x10).
     */
   private def minhashProdQuery = QueryDef(
     "dedup_minhash_xxhash_documents",

@@ -35,9 +35,13 @@ import org.apache.spark.sql.functions._
   *
   * Recall physics are X2's, unchanged: banding only selects CANDIDATES;
   * survivors clear the exact Jaccard threshold, so the md5 and xxhash
-  * families agree on survivors whenever banding recall is total
-  * ((1−s⁴)³² < 10⁻⁷ at s ≥ 0.8 with 128/32) — the same equivalence
-  * argument that oracles the batch lanes.
+  * families agree on survivors whenever both propose every true pair.
+  * That is an empirical fact of the gate corpus, checked by the floor
+  * tests (IncrementalNearDupSpec, DedupSpec) — not a bound: the
+  * textbook (1−s⁴)³² miss rate assumes independent hash functions, and
+  * this family's aᵢ = 2i+1 functions are strongly correlated (a pair
+  * at Jaccard 0.924 measured sharing 0 of 32 bands — see "Near-dup
+  * recall" in perfbench/README.md).
   */
 object IncrementalNearDup {
 
@@ -49,29 +53,30 @@ object IncrementalNearDup {
   final case class Index(bands: DataFrame, sets: DataFrame)
 
   /** Corpus index with the md5-derived oracle-replayable hash family
-    * ([[Dedup.nearDuplicatesOracled]]'s) — the gate twin.
+    * ([[Dedup.nearDuplicatesOracled]]'s) — the gate twin, and the
+    * layout [[graft.streaming.StreamingPipelines.nearDupStream]]
+    * persists per batch.
     */
   def buildOracled(corpus: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, numHashes: Int = 128,
-      bands: Int = 32): Index = {
-    val sets = Dedup.shingleSets(corpus, idCol, textCol, shingleK)
-    val sigs = sets.select(col(idCol),
-      Dedup.minHashSignatureFromBases(Dedup.md5Bases(col("__set")),
-        numHashes).as("__sig"))
-    Index(Dedup.bandedBuckets(sigs, idCol, "__sig", bands,
-      s => md5(s.cast("binary"))), sets)
-  }
+      bands: Int = 32): Index =
+    buildWith(HashFamily.Md5, corpus, idCol, textCol, shingleK,
+      numHashes, bands)
 
   /** Corpus index with the xxhash production family
     * ([[Dedup.nearDuplicates]]'s) — the API default.
     */
   def build(corpus: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, numHashes: Int = 128,
-      bands: Int = 32): Index = {
+      bands: Int = 32): Index =
+    buildWith(HashFamily.Xxhash, corpus, idCol, textCol, shingleK,
+      numHashes, bands)
+
+  private def buildWith(family: HashFamily, corpus: DataFrame,
+      idCol: String, textCol: String, shingleK: Int, numHashes: Int,
+      bands: Int): Index = {
     val sets = Dedup.shingleSets(corpus, idCol, textCol, shingleK)
-    val sigs = sets.select(col(idCol),
-      Dedup.minHashSignature(col("__set"), numHashes).as("__sig"))
-    Index(Dedup.bandedBuckets(sigs, idCol, "__sig", bands), sets)
+    Index(Dedup.minHashBands(family, sets, idCol, numHashes, bands), sets)
   }
 
   /** `(batch_id, dup_of, jaccard)` — every batch document's verified
@@ -150,35 +155,30 @@ object IncrementalNearDup {
   def probeOracled(corpus: DataFrame, batch: DataFrame, idCol: String,
       textCol: String, shingleK: Int = 3, numHashes: Int = 128,
       bands: Int = 32, threshold: Double = 0.8,
-      maxBucket: Int = 64): DataFrame = {
-    val idx = buildOracled(corpus, idCol, textCol, shingleK, numHashes,
-      bands)
-    val bSets = Dedup.shingleSets(batch, idCol, textCol, shingleK)
-      .persist()
-    graft.util.DeferredCleanup.enqueue(
-      () => { bSets.unpersist(blocking = false); () })
-    val bBands = Dedup.bandedBuckets(
-      bSets.select(col(idCol),
-        Dedup.minHashSignatureFromBases(Dedup.md5Bases(col("__set")),
-          numHashes).as("__sig")),
-      idCol, "__sig", bands, s => md5(s.cast("binary")))
-    matches(idx, bSets, bBands, idCol, threshold, maxBucket)
-  }
+      maxBucket: Int = 64): DataFrame =
+    probeWith(HashFamily.Md5, corpus, batch, idCol, textCol, shingleK,
+      numHashes, bands, threshold, maxBucket)
 
   /** One-shot composed form, xxhash production family. */
   def probe(corpus: DataFrame, batch: DataFrame, idCol: String,
       textCol: String, shingleK: Int = 3, numHashes: Int = 128,
       bands: Int = 32, threshold: Double = 0.8,
-      maxBucket: Int = 64): DataFrame = {
-    val idx = build(corpus, idCol, textCol, shingleK, numHashes, bands)
+      maxBucket: Int = 64): DataFrame =
+    probeWith(HashFamily.Xxhash, corpus, batch, idCol, textCol, shingleK,
+      numHashes, bands, threshold, maxBucket)
+
+  private def probeWith(family: HashFamily, corpus: DataFrame,
+      batch: DataFrame, idCol: String, textCol: String, shingleK: Int,
+      numHashes: Int, bands: Int, threshold: Double,
+      maxBucket: Int): DataFrame = {
+    val idx = buildWith(family, corpus, idCol, textCol, shingleK,
+      numHashes, bands)
     val bSets = Dedup.shingleSets(batch, idCol, textCol, shingleK)
       .persist()
     graft.util.DeferredCleanup.enqueue(
       () => { bSets.unpersist(blocking = false); () })
-    val bBands = Dedup.bandedBuckets(
-      bSets.select(col(idCol),
-        Dedup.minHashSignature(col("__set"), numHashes).as("__sig")),
-      idCol, "__sig", bands)
-    matches(idx, bSets, bBands, idCol, threshold, maxBucket)
+    matches(idx, bSets,
+      Dedup.minHashBands(family, bSets, idCol, numHashes, bands), idCol,
+      threshold, maxBucket)
   }
 }

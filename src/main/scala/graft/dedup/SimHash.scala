@@ -8,33 +8,54 @@ import org.apache.spark.sql.functions._
   * simhash(doc) sets bit j when the sum over tokens of ±1 (per token-hash
   * bit j) is positive; near-duplicate docs differ in few bits, so
   * `hamming(a, b) <= k` is the near-dup test. Computing it is one
-  * projection (no shuffle); pairing strategies (e.g. bit-block LSH on the
-  * fingerprint) reuse [[Dedup.bandedBuckets]]-style grouping.
+  * projection (no shuffle); pairing is chunk-blocked LSH on the
+  * fingerprint ([[nearDupFromFingerprints]]). The hash family
+  * ([[HashFamily]]) only chooses the per-shingle base hash and the
+  * fingerprint width; every later stage is shared.
   */
 object SimHash {
 
-  /** Per-token 64-bit hashes → one 64-bit SimHash. `tokens` is an
-    * array<string> column. Empty docs hash to 0. Native codegen'd loop
-    * (see `org.apache.spark.sql.graft.SimHash64`) — the HOF formulation's
-    * interpreted per-token-per-bit closures dominated the corpus bench.
+  /** 64-bit SimHash of an `array<string>` token column in the xxhash
+    * production family (seed-42 xxhash64 per token). Empty docs hash to
+    * 0. Two native loops (`BaseHashes`, `SimHashFromBases`) — the HOF
+    * formulation's interpreted per-token-per-bit closures dominated the
+    * corpus bench.
     */
   def simhash64(tokens: Column): Column =
-    org.apache.spark.sql.graft.ColumnShim.column(
-      org.apache.spark.sql.graft.SimHash64(
-        org.apache.spark.sql.graft.ColumnShim.expression(tokens)))
+    fingerprint(HashFamily.Xxhash, tokens)
 
-  /** ORACLE-REPLAYABLE SimHash: per-bit ±1 majority over the low `bits`
-    * bits of pre-computed base hashes (`array<long>` — md5-derived via
-    * [[Dedup.md5Base]] in the oracled lane), bit set iff the counter is
-    * strictly positive (identical tie convention to [[simhash64]]).
-    * Empty arrays fingerprint to 0. Production keeps [[simhash64]]'s
-    * one-pass xxhash loop; this seam exists so the chunk-blocked near-
-    * dup pipeline can be replayed bit-for-bit in ANSI SQL.
+  /** SimHash over PRE-COMPUTED base hashes (`array<long>`): per-bit ±1
+    * majority over the low `bits` bits, bit set iff the counter is
+    * strictly positive. Empty arrays fingerprint to 0. Over md5-derived
+    * bases ([[Dedup.md5Bases]]) the fingerprint replays bit-for-bit in
+    * ANSI SQL.
     */
   def simhashFromBases(bases: Column, bits: Int): Column =
     org.apache.spark.sql.graft.ColumnShim.column(
       org.apache.spark.sql.graft.SimHashFromBases(
         org.apache.spark.sql.graft.ColumnShim.expression(bases), bits))
+
+  /** `family`'s SimHash fingerprint of a shingle (or token) array: its
+    * base hashes voting over `family.simhashBits` bits.
+    */
+  private[graft] def fingerprint(family: HashFamily,
+      shingles: Column): Column =
+    simhashFromBases(family.bases(shingles), family.simhashBits)
+
+  /** `(idCol, fp)`: `family`'s fingerprint of each document's k-word
+    * shingles — the one fingerprint builder of the batch SimHash
+    * pipelines ([[nearDuplicates]] and the oracled
+    * `dedup_simhash_documents` lane). Two projections: tokens land as a
+    * column first, so the shingle expression's references (incl. the
+    * interpreted transform lambda) read an attribute instead of
+    * re-splitting the text per shingle ([[Dedup.shingleSets]]).
+    */
+  private[graft] def fingerprints(docs: org.apache.spark.sql.DataFrame,
+      idCol: String, textCol: String, family: HashFamily,
+      shingleK: Int = 3): org.apache.spark.sql.DataFrame =
+    docs.select(col(idCol), Dedup.tokensOf(col(textCol)).as("__toks"))
+      .select(col(idCol), fingerprint(family,
+        Dedup.wordShinglesFromTokens(col("__toks"), shingleK)).as("fp"))
 
   /** Hamming distance between two 64-bit fingerprints. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -138,9 +159,9 @@ object SimHash {
   }
 
   /** PRODUCTION SimHash near-dup pipeline — the composed form of the
-    * primitives above, with the one-pass xxhash [[simhash64]] (the API
-    * default; the registered oracle twin `dedup_simhash_documents`
-    * replays the same pipeline over md5 bases). Shape: one projection
+    * primitives above, in the xxhash family (the API default; the
+    * registered oracle twin `dedup_simhash_documents` runs the same
+    * [[fingerprints]] builder over md5 bases). Shape: one projection
     * corpus → 64-bit fingerprints (persisted: consumed by the group
     * collapse — without it the whole tokenize/shingle chain would
     * re-evaluate per consumer, the r4 lesson), then the shared
@@ -175,12 +196,9 @@ object SimHash {
   def nearDuplicates(docs: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, shingleK: Int = 3, maxHamming: Int = 12,
       maxBucket: Int = 64): org.apache.spark.sql.DataFrame = {
-    val fps = docs
-      .select(col(idCol), Dedup.tokensOf(col(textCol)).as("__toks"))
-      .select(col(idCol),
-        simhash64(Dedup.wordShinglesFromTokens(col("__toks"), shingleK))
-          .as("fp"))
-      .persist()
+    val fps =
+      fingerprints(docs, idCol, textCol, HashFamily.Xxhash, shingleK)
+        .persist()
     nearDupFromFingerprints(fps, idCol, "fp", chunkBits = 16,
       nChunks = 4, maxHamming = maxHamming, maxBucket = maxBucket)
   }

@@ -174,7 +174,7 @@ object ProfileQueries extends QueryPack {
       val numCols = Schemas.byTable("lineitem").filter(_.numeric).map(_.name)
       val acc = 1000
       // the CAST-TO-DOUBLE projection persists across the two passes
-      // (the exact lane's reuseScan treatment, r12 directive 6): the
+      // (the exact lane's cached projection, r12 directive 6): the
       // rank-check pass otherwise re-pays the parquet decode, the
       // scan-parallelism exchange AND the cast tree just to count
       // comparisons against 22 literals. Both passes read the cached

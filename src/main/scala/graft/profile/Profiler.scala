@@ -235,67 +235,6 @@ object Profiler {
   def approxProfile(df: DataFrame, now: Column = current_timestamp())
       : DataFrame = profile(df, now, exact = false)
 
-  /** Exact interpolated percentiles for several columns at once by
-    * DISTRIBUTED SELECTION over ORDER-PRESERVING BIT BUCKETS: locate
-    * each requested rank's value without ranking — or even shuffling —
-    * the data.
-    *
-    * Spark's built-in exact `percentile` buffers a value→count map per
-    * column and merges those maps across partial aggregates — a memory
-    * hazard for high-cardinality doubles — and a histogram-then-rank
-    * rewrite still shuffles every distinct value. Selection instead does:
-    *
-    *  1. ONE counting pass: each value maps to a fixed bucket — the top
-    *     `prefixBits` bits of its sort-order-isomorphic bit image
-    *     ([[graft.functions.VectorExpressions.doubleBits]], three integer
-    *     ops, codegen'd; HDR-histogram style). Buckets are
-    *     data-independent and order-contiguous, so no boundary-estimation
-    *     pass exists at all, and the aggregation's groups are only the
-    *     buckets actually present (≤ a few thousand per column): the
-    *     shuffle is tiny regardless of row count. Every bucket boundary's
-    *     exact global rank falls out of the running sum driver-side, and
-    *     each requested rank `r = (n−1)·p` maps to a (bucket, local rank)
-    *     pair — `n` comes free from the same counts.
-    *  2. ONE selection job over a union of per-target branches: a
-    *     bucket's value interval is recovered exactly by inverting the
-    *     bit image, so each branch reads ONE column under a plain
-    *     double-range predicate — pushed to the parquet reader (row-group
-    *     min/max skipping at scale) — sorts only that bucket's slice, and
-    *     keeps the bracketing order statistics, interpolated as
-    *     `lo + frac·(hi − lo)` (the `quantile_cont` definition).
-    *
-    * No task ever sorts more than one bucket's slice and no full-volume
-    * shuffle exists anywhere. At 100 TB, raise `prefixBits` (each +1 bit
-    * halves the slice) or recurse the count-then-select step inside an
-    * oversized bucket (e.g. one value repeated everywhere);
-    * `approx_percentile` (t-digest) remains the documented swap when a
-    * bounded-error estimate is acceptable, like the HLL distinct path.
-    *
-    * DRIVER MEMORY: phase 1's bucket-count frame is collected, and its
-    * size is bounded by `cols.length × 2^prefixBits` ROWS — a function
-    * of the requested width, never of the data volume (the buckets are
-    * the distinct 20-bit sign-exponent-mantissa prefixes actually
-    * present, ≤ 2^20 ≈ 1M per column, ~24 B each ⇒ ≲ 25 MB/column worst
-    * case, typically thousands). Profiling a VERY wide table (hundreds
-    * of numeric columns) multiplies that bound by the column count:
-    * chunk the `cols` argument, lower `prefixBits` (the recursion note
-    * above restores precision inside oversized buckets), or take the
-    * t-digest swap ([[approxQuantiles]]), whose state is O(accuracy)
-    * per column regardless of width.
-    *
-    * `reuseScan` caches the projected double columns across the two
-    * passes (released before returning — quantiles is eager, so no cache
-    * outlives the call); with `reuseScan = false` both passes scan the
-    * source directly and the branch predicates push down — the shape for
-    * data too big to cache.
-    *
-    * Columns whose values are all null yield null percentiles. The
-    * result (one row per requested column) is materialized eagerly and
-    * returned as a local frame.
-    *
-    * Output: (column_name, p_0, p_1, …) — one row per requested column,
-    * percentile columns named by `names`.
-    */
   /** 100 TB percentile configuration: t-digest `approx_percentile` for
     * every requested column in ONE single-scan aggregation — the
     * documented swap for [[quantiles]]'s exact distributed selection,
@@ -331,15 +270,73 @@ object Profiler {
       s"(column_name, ${names.mkString(", ")})")
   }
 
+  /** Exact interpolated percentiles for several columns at once by
+    * DISTRIBUTED SELECTION over ORDER-PRESERVING BIT BUCKETS: locate
+    * each requested rank's value without ranking — or even shuffling —
+    * the data.
+    *
+    * Spark's built-in exact `percentile` buffers a value→count map per
+    * column and merges those maps across partial aggregates — a memory
+    * hazard for high-cardinality doubles — and a histogram-then-rank
+    * rewrite still shuffles every distinct value. Selection instead does:
+    *
+    *  1. ONE counting pass: each value maps to a fixed bucket — the top
+    *     `prefixBits` bits of its sort-order-isomorphic bit image
+    *     ([[graft.functions.VectorExpressions.doubleBits]], three integer
+    *     ops, codegen'd; HDR-histogram style). Buckets are
+    *     data-independent and order-contiguous, so no boundary-estimation
+    *     pass exists at all, and the aggregation's groups are only the
+    *     buckets actually present (≤ a few thousand per column): the
+    *     shuffle is tiny regardless of row count. Every bucket boundary's
+    *     exact global rank falls out of the running sum driver-side, and
+    *     each requested rank `r = (n−1)·p` maps to a (bucket, local rank)
+    *     pair — `n` comes free from the same counts.
+    *  2. ONE selection job over a union of per-target branches: a
+    *     bucket's value interval is recovered exactly by inverting the
+    *     bit image, so each branch reads ONE column under a plain
+    *     double-range predicate — pruned by the cached projection's
+    *     per-batch min/max statistics — sorts only that bucket's slice, and
+    *     keeps the bracketing order statistics, interpolated as
+    *     `lo + frac·(hi − lo)` (the `quantile_cont` definition).
+    *
+    * No task ever sorts more than one bucket's slice and no full-volume
+    * shuffle exists anywhere. At 100 TB, raise `prefixBits` (each +1 bit
+    * halves the slice) or recurse the count-then-select step inside an
+    * oversized bucket (e.g. one value repeated everywhere);
+    * `approx_percentile` (t-digest) remains the documented swap when a
+    * bounded-error estimate is acceptable, like the HLL distinct path.
+    *
+    * DRIVER MEMORY: phase 1's bucket-count frame is collected, and its
+    * size is bounded by `cols.length × 2^prefixBits` ROWS — a function
+    * of the requested width, never of the data volume (the buckets are
+    * the distinct 20-bit sign-exponent-mantissa prefixes actually
+    * present, ≤ 2^20 ≈ 1M per column, ~24 B each ⇒ ≲ 25 MB/column worst
+    * case, typically thousands). Profiling a VERY wide table (hundreds
+    * of numeric columns) multiplies that bound by the column count:
+    * chunk the `cols` argument, lower `prefixBits` (the recursion note
+    * above restores precision inside oversized buckets), or take the
+    * t-digest swap ([[approxQuantiles]]), whose state is O(accuracy)
+    * per column regardless of width.
+    *
+    * The projected double columns are cached across the two passes
+    * (released before returning — quantiles is eager, so no cache
+    * outlives the call).
+    *
+    * Columns whose values are all null yield null percentiles. The
+    * result (one row per requested column) is materialized eagerly and
+    * returned as a local frame.
+    *
+    * Output: (column_name, p_0, p_1, …) — one row per requested column,
+    * percentile columns named by `names`.
+    */
   def quantiles(df: DataFrame, cols: Seq[String], ps: Seq[Double],
-      names: Seq[String], prefixBits: Int = 20,
-      reuseScan: Boolean = true): DataFrame = {
+      names: Seq[String], prefixBits: Int = 20): DataFrame = {
     require(cols.nonEmpty && ps.nonEmpty && ps.length == names.length)
     require(prefixBits >= 1 && prefixBits <= 63, "prefixBits in [1, 63]")
     val spark = df.sparkSession
     val shift = 64 - prefixBits
-    val proj = df.select(cols.map(c => col(c).cast(DoubleType).as(c)): _*)
-    val work = if (reuseScan) proj.persist() else proj
+    val work = df.select(cols.map(c => col(c).cast(DoubleType).as(c)): _*)
+      .persist()
     try {
       // Phase 1 — exact per-(column, bit-bucket) counts in one pass.
       val counts: Map[String, Seq[(Long, Long)]] =
@@ -405,7 +402,7 @@ object Profiler {
         StructField("column_name", StringType, nullable = false) +:
           names.map(StructField(_, DoubleType, nullable = true)))
       spark.createDataFrame(java.util.Arrays.asList(outRows: _*), schema)
-    } finally { if (reuseScan) work.unpersist(blocking = false); () }
+    } finally { work.unpersist(blocking = false); () }
   }
 
   private case class RankTarget(lo: (Long, Long), hi: (Long, Long),

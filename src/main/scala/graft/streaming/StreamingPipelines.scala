@@ -589,7 +589,9 @@ object StreamingPipelines {
     *
     * State: [[BatchState]] with horizon `batchId` (the index holds
     * strictly earlier batches), sublayers `sets` and `bands` in the
-    * persisted [[graft.dedup.IncrementalNearDup.Index]] layout.
+    * persisted [[graft.dedup.IncrementalNearDup.Index]] layout — row
+    * for row what [[graft.dedup.IncrementalNearDup.buildOracled]]
+    * builds over the batch (the md5 family, 128 hashes, 32 bands).
     */
   def nearDupStream(source: DataFrame, idCol: String, textCol: String,
       statePath: String, matchesPath: String, checkpoint: String,
@@ -607,12 +609,8 @@ object StreamingPipelines {
           textCol, 3)
         .write.mode("overwrite").parquet(s"$own/sets")
       val sets = s.read.parquet(s"$own/sets")
-      graft.dedup.Dedup.bandedBuckets(
-          sets.select(col(idCol),
-            graft.dedup.Dedup.minHashSignatureFromBases(
-              graft.dedup.Dedup.md5Bases(col("__set")), 128)
-              .as("__sig")),
-          idCol, "__sig", 32, x => md5(x.cast("binary")))
+      graft.dedup.Dedup.minHashBands(graft.dedup.HashFamily.Md5, sets,
+          idCol, numHashes = 128, bands = 32)
         .write.mode("overwrite").parquet(s"$own/bands")
       val bands = s.read.parquet(s"$own/bands")
       // horizon batchId: the index is strictly-earlier batches only

@@ -749,7 +749,8 @@ object StreamingQueries extends QueryPack {
         val src = iso.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(staged)
         val q = StreamingPipelines.simhashStream(src, "doc_id", "text",
-          graft.dedup.DedupQueries.simhashOracledFpOf, chunkBits = 15,
+          t => graft.dedup.SimHash.fingerprint(graft.dedup.HashFamily.Md5,
+            graft.dedup.Dedup.wordShingles(t, 3)), chunkBits = 15,
           nChunks = 4, maxHamming = 12,
           maxBucket = graft.dedup.DedupQueries.SimhashMaxBucket,
           report, state, ckpt)

@@ -47,13 +47,8 @@ object TextQueries extends QueryPack {
     * composed e2e oracle and the streaming maintained-aggregate oracle
     * ([[graft.streaming.StreamingQueries]]).
     */
-  private[graft] def qualityMarginSql: String = {
-    val w = QualityGatePinned.weights.mkString("[", ", ", "]::BIGINT[]")
-    s"CAST(${QualityGatePinned.bias} + coalesce(list_sum(" +
-      s"list_transform(t, tk -> ($w)[" +
-      "CAST(('0x' || substr(md5(tk), 1, 15))::BIGINT % " +
-      s"${QualityGatePinned.Buckets} AS INT) + 1])), 0) AS BIGINT)"
-  }
+  private[graft] def qualityMarginSql: String =
+    marginSql(QualityGatePinned.weights, QualityGatePinned.bias)
 
   /** [[TextAnalysis.langId]] as a DuckDB CASE chain over expression
     * `x` — shared by the doc-level stats oracle and the per-line

@@ -59,16 +59,18 @@ object GraftFunctions {
       binary("graft_dot", classOf[ArrayDot], ArrayDot(_, _)),
       binary("graft_cosine", classOf[CosineSim], CosineSim(_, _)),
       (FunctionIdentifier("graft_simhash64"),
-        new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash64"),
+        new ExpressionInfo(classOf[SimHashFromBases].getName,
+          "graft_simhash64"),
         (args: Seq[Expression]) => {
           require(args.length == 1, "graft_simhash64 expects 1 argument")
-          SimHash64(args.head)
+          SimHashFromBases(BaseHashes(args.head, md5 = false), 64)
         }),
       (FunctionIdentifier("graft_minhash_sig"),
-        new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash_sig"),
+        new ExpressionInfo(classOf[MinHashSigFromBases].getName,
+          "graft_minhash_sig"),
         (args: Seq[Expression]) => {
           require(args.length == 2, "graft_minhash_sig expects 2 arguments")
-          MinHashSig(args.head,
+          MinHashSigFromBases(BaseHashes(args.head, md5 = false),
             intLit("graft_minhash_sig", "numHashes")(args(1)))
         }),
       (FunctionIdentifier("graft_double_bits"),

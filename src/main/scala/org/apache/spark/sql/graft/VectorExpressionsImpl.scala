@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, LongType, StringType}
@@ -127,146 +127,6 @@ case class CosineSim(left: Expression, right: Expression)
       newRight: Expression): CosineSim = copy(left = newLeft, right = newRight)
 }
 
-/** 64-bit SimHash (Charikar) of an `array<string>` token column in one
-  * native loop: per token, one xxhash64 (Spark's seed-42 XXH64, identical
-  * to the SQL `xxhash64` function) and 64 counter updates; bit j of the
-  * result is set when counter j ends positive. Empty arrays hash to 0.
-  *
-  * Replaces an `aggregate(…, zip_with(…))` HOF formulation whose
-  * interpreted per-token-per-bit closures dominated the corpus bench.
-  */
-case class SimHash64(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_simhash64"
-
-  override def nullSafeEval(a: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
-    val counters = new Array[Int](64)
-    val n = arr.numElements()
-    var i = 0
-    while (i < n) {
-      val h = XXH64.hashUTF8String(arr.getUTF8String(i), 42L)
-      var j = 0
-      while (j < 64) {
-        counters(j) += (if (((h >>> j) & 1L) != 0L) 1 else -1)
-        j += 1
-      }
-      i += 1
-    }
-    var fp = 0L
-    var j = 0
-    while (j < 64) {
-      if (counters(j) > 0) fp |= (1L << j)
-      j += 1
-    }
-    fp
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val h = ctx.freshName("h")
-      val counters = ctx.freshName("counters")
-      val fp = ctx.freshName("fp")
-      s"""
-         |int $n = $a.numElements();
-         |int[] $counters = new int[64];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $h = org.apache.spark.sql.catalyst.expressions.XXH64
-         |    .hashUTF8String($a.getUTF8String($i), 42L);
-         |  for (int $j = 0; $j < 64; $j++) {
-         |    $counters[$j] += ((($h >>> $j) & 1L) != 0L) ? 1 : -1;
-         |  }
-         |}
-         |long $fp = 0L;
-         |for (int $j = 0; $j < 64; $j++) {
-         |  if ($counters[$j] > 0) $fp |= (1L << $j);
-         |}
-         |${ev.value} = $fp;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
-/** MinHash signature of an `array<string>` shingle column: `numHashes`
-  * universal-hash minima h_i(x) = (aᵢ·x + bᵢ) mod P (P = 2³¹−1, aᵢ = 2i+1,
-  * bᵢ = 40503i+12345) over the seed-42 xxhash64 of each shingle reduced
-  * mod P. Empty arrays yield the all-P sentinel signature (collides only
-  * with other empties). Identical math to the previous HOF fold, in one
-  * native loop.
-  */
-case class MinHashSig(child: Expression, numHashes: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  private val P = 2147483647L
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_minhash_sig"
-
-  override def nullSafeEval(a: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
-    val mins = Array.fill(numHashes)(P)
-    val n = arr.numElements()
-    var i = 0
-    while (i < n) {
-      val raw = XXH64.hashUTF8String(arr.getUTF8String(i), 42L)
-      val h = ((raw % P) + P) % P
-      var k = 0
-      while (k < numHashes) {
-        val v = ((2L * k + 1L) * h + (40503L * k + 12345L)) % P
-        if (v < mins(k)) mins(k) = v
-        k += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(mins)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val k = ctx.freshName("k")
-      val raw = ctx.freshName("raw")
-      val h = ctx.freshName("h")
-      val v = ctx.freshName("v")
-      val mins = ctx.freshName("mins")
-      s"""
-         |int $n = $a.numElements();
-         |long[] $mins = new long[$numHashes];
-         |java.util.Arrays.fill($mins, ${P}L);
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $raw = org.apache.spark.sql.catalyst.expressions.XXH64
-         |    .hashUTF8String($a.getUTF8String($i), 42L);
-         |  long $h = (($raw % ${P}L) + ${P}L) % ${P}L;
-         |  for (int $k = 0; $k < $numHashes; $k++) {
-         |    long $v = ((2L * $k + 1L) * $h + (40503L * $k + 12345L)) % ${P}L;
-         |    if ($v < $mins[$k]) $mins[$k] = $v;
-         |  }
-         |}
-         |${ev.value} =
-         |  new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
 /** Order-preserving bit image of a double: `doubleToLongBits` with the
   * lower 63 bits flipped for negatives, so `s(a) < s(b) ⟺ a sorts before
   * b` under Spark's double ordering EXACTLY — negatives ascend, -0.0 sits
@@ -306,17 +166,16 @@ case class SortableDoubleBits(child: Expression)
       newChild: Expression): SortableDoubleBits = copy(child = newChild)
 }
 
-/** [[MinHashSig]] minus the hashing: the same universal-hash minima
-  * h_i(x) = (aᵢ·x + bᵢ) mod P (aᵢ = 2i+1, bᵢ = 40503i+12345, P = 2³¹−1)
-  * over PRE-COMPUTED base hashes (`array<long>`, reduced mod P inside —
-  * negatives normalize like [[MinHashSig]] does for raw xxhash values).
-  * Empty arrays yield the all-P sentinel.
-  *
-  * This is the oracle seam: with bases derived from built-in md5/conv
-  * expressions (codegen'd, ANSI-SQL-replayable) instead of xxhash64, the
-  * WHOLE banded-LSH pipeline becomes expressible in DuckDB while the
-  * per-row min loop stays native — see
-  * [[graft.dedup.Dedup.nearDuplicatesOracled]].
+/** MinHash signature over per-element base hashes (`array<long>`, see
+  * [[BaseHashes]]): `numHashes` universal-hash minima h_i(x) = (aᵢ·x +
+  * bᵢ) mod P (aᵢ = 2i+1, bᵢ = 40503i+12345, P = 2³¹−1), each base
+  * reduced mod P first (negatives normalize to [0, P)). Empty arrays
+  * yield the all-P sentinel (collides only with other empties). One
+  * native loop serves both near-dup hash families — the family only
+  * chooses the base hash — and `graft_minhash_sig` is this over
+  * xxhash64 bases. Over md5 bases every step has an ANSI-SQL
+  * restatement, so the WHOLE banded-LSH pipeline replays in DuckDB
+  * (see [[graft.dedup.Dedup.nearDuplicatesOracled]]).
   */
 case class MinHashSigFromBases(child: Expression, numHashes: Int)
     extends UnaryExpression with ExpectsInputTypes {
@@ -377,12 +236,12 @@ case class MinHashSigFromBases(child: Expression, numHashes: Int)
       newChild: Expression): MinHashSigFromBases = copy(child = newChild)
 }
 
-/** [[SimHash64]] minus the hashing: per-bit ±1 majority over the low
-  * `bits` bits of PRE-COMPUTED base hashes (`array<long>`), bit set iff
-  * the counter is strictly positive — identical tie convention to
-  * [[SimHash64]]. Empty arrays fingerprint to 0. The oracle seam for the
-  * SimHash lane (md5-derived 60-bit bases replay in ANSI SQL; see
-  * [[graft.dedup.DedupQueries]]).
+/** SimHash (Charikar) over per-element base hashes (`array<long>`, see
+  * [[BaseHashes]]): per-bit ±1 majority over the low `bits` bits, bit
+  * set iff its counter ends strictly positive. Empty arrays fingerprint
+  * to 0. `graft_simhash64` is this over xxhash64 bases at 64 bits; the
+  * oracled lanes run it over md5-derived 60-bit bases, which replay in
+  * ANSI SQL (see [[graft.dedup.DedupQueries]]).
   */
 case class SimHashFromBases(child: Expression, bits: Int)
     extends UnaryExpression with ExpectsInputTypes {
@@ -448,28 +307,31 @@ case class SimHashFromBases(child: Expression, bits: Int)
       newChild: Expression): SimHashFromBases = copy(child = newChild)
 }
 
-/** md5-derived 60-bit base hash of every element of an `array<string>`
-  * column, as one codegen'd loop — the value of the first 15 hex chars
-  * of md5(s) (= the big-endian long of the first 8 digest bytes >>> 4),
-  * identical to `conv(substring(md5(s),1,15),16,10)` and to DuckDB's
-  * `('0x' || substr(md5(s),1,15))::BIGINT`.
+/** Per-element 64-bit base hash of an `array<string>` column in one
+  * codegen'd loop — the first step of both near-dup hash families:
+  *   - xxhash (`md5 = false`): Spark's seed-42 XXH64 of each element,
+  *     identical to the SQL `xxhash64` function;
+  *   - md5 (`md5 = true`): the value of the first 15 hex chars of
+  *     md5(s) (= the big-endian long of the first 8 digest bytes >>> 4),
+  *     identical to `conv(substring(md5(s),1,15),16,10)` and to
+  *     DuckDB's `('0x' || substr(md5(s),1,15))::BIGINT`.
   *
-  * Exists so the md5-oracle dedup lanes hash per element WITHOUT an
-  * explode → collect_list regroup (the md5 built-in is per-ROW, and a
-  * HOF transform lambda evaluates interpreted — the SpanDedup lesson):
-  * one projection in, one array<long> out, zero extra shuffles. Null
-  * elements (which the shingle builders never produce) are skipped,
-  * mirroring the null-dropping collect_list of the regroup formulation
-  * this replaces.
+  * Hashing per element in one projection avoids an explode →
+  * collect_list regroup (the md5 built-in is per-ROW, and a HOF
+  * transform lambda evaluates interpreted — the SpanDedup lesson): one
+  * unboxed array<long> out, zero extra shuffles. Null elements (which the
+  * shingle builders never produce) are skipped, mirroring the
+  * null-dropping collect_list of the regroup formulation this replaces.
   */
-case class Md5Bases(child: Expression)
+case class BaseHashes(child: Expression, md5: Boolean)
     extends UnaryExpression with ExpectsInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_md5_bases"
+  override def prettyName: String =
+    if (md5) "graft_md5_bases" else "graft_xxhash64_bases"
 
   override def nullSafeEval(a: Any): Any = {
     val arr = a.asInstanceOf[ArrayData]
@@ -479,12 +341,15 @@ case class Md5Bases(child: Expression)
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
-        out(m) = GraftDigest.md5Base60(arr.getUTF8String(i))
+        val s = arr.getUTF8String(i)
+        out(m) =
+          if (md5) GraftDigest.md5Base60(s) else XXH64.hashUTF8String(s, 42L)
         m += 1
       }
       i += 1
     }
-    new GenericArrayData(if (m == n) out else java.util.Arrays.copyOf(out, m))
+    UnsafeArrayData.fromPrimitiveArray(
+      if (m == n) out else java.util.Arrays.copyOf(out, m))
   }
 
   override protected def doGenCode(ctx: CodegenContext,
@@ -494,27 +359,29 @@ case class Md5Bases(child: Expression)
       val i = ctx.freshName("i")
       val m = ctx.freshName("m")
       val out = ctx.freshName("out")
+      val elem = s"$a.getUTF8String($i)"
+      val hash =
+        if (md5) s"org.apache.spark.sql.graft.GraftDigest.md5Base60($elem)"
+        else s"org.apache.spark.sql.catalyst.expressions.XXH64" +
+          s".hashUTF8String($elem, 42L)"
       s"""
          |int $n = $a.numElements();
          |long[] $out = new long[$n];
          |int $m = 0;
          |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i)) {
-         |    $out[$m++] = org.apache.spark.sql.graft.GraftDigest
-         |      .md5Base60($a.getUTF8String($i));
-         |  }
+         |  if (!$a.isNullAt($i)) $out[$m++] = $hash;
          |}
          |if ($m != $n) $out = java.util.Arrays.copyOf($out, $m);
-         |${ev.value} =
-         |  new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
+         |${ev.value} = org.apache.spark.sql.catalyst.expressions
+         |  .UnsafeArrayData.fromPrimitiveArray($out);
        """.stripMargin
     })
 
   override protected def withNewChildInternal(
-      newChild: Expression): Md5Bases = copy(child = newChild)
+      newChild: Expression): BaseHashes = copy(child = newChild)
 }
 
-/** Thread-cached MD5 for [[Md5Bases]]' per-element loop (a
+/** Thread-cached MD5 for [[BaseHashes]]' per-element loop (a
   * `MessageDigest.getInstance` per element would dominate the hash).
   */
 object GraftDigest {
