@@ -1,6 +1,18 @@
 package graft.exec
 
+import java.util.concurrent.{CompletableFuture, Executors}
+
+import scala.collection.mutable
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.PersistedView
+import org.apache.spark.sql.catalyst.plans.logical.{Command, CommandResult,
+  ParsedStatement}
+import org.apache.spark.sql.classic.ClassicConversions
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.command.CreateViewCommand
+import org.apache.spark.sql.execution.datasources.CreateTempViewUsing
 
 /** Multi-statement SQL script runner with per-statement audit, failure
   * isolation, table detection and bounded previews — the Spark-native
@@ -71,16 +83,52 @@ object ScriptEngine {
     stmts.result()
   }
 
-  /** F1: table names referenced by a statement (`:77`). */
+  /** F1: table names referenced by a statement (`:77`). A backticked
+    * path keeps its format prefix (``parquet.`/p` ``), so it stays one
+    * previewable name.
+    */
   private val TableRegex =
-    "(?i)(?:from|join|into|update|table)\\s+([a-zA-Z0-9_\\.]+)".r
+    "(?i)(?:from|join|into|update|table)\\s+((?:[a-zA-Z0-9_]+\\.)?`[^`]+`|[a-zA-Z0-9_\\.]+)".r
 
   def detectTables(stmt: String): Seq[String] =
     TableRegex.findAllMatchIn(stmt).map(_.group(1)).toSeq
 
+  private type Preview = Either[String, Seq[String]]
+
+  /** How a statement may overlap with pending previews: a query changes
+    * nothing a preview reads, and a temporary-view definition only adds a
+    * name (bound previews keep the plans they analysed). Anything else —
+    * including an unparseable statement or one of unknown kind — may
+    * rewrite files a preview lists, so it counts as a write.
+    */
+  private sealed trait Kind
+  private case object Query extends Kind
+  private case object TempView extends Kind
+  private case object Write extends Kind
+
+  private def kindOf(spark: SparkSession, stmt: String): Kind =
+    try spark.sessionState.sqlParser.parsePlan(stmt) match {
+      case v: CreateViewCommand if v.viewType != PersistedView => TempView
+      case _: CreateTempViewUsing => TempView
+      case p if !p.exists(n =>
+          n.isInstanceOf[Command] || n.isInstanceOf[ParsedStatement]) =>
+        Query
+      case _ => Write
+    } catch { case NonFatal(_) => Write }
+
+  private def previewError(e: Exception): Preview =
+    Left(s"Error fetching preview: ${e.getMessage}")
+
   /** Run a script: per-statement execution with timing, error isolation
     * (a failed statement records and continues — `:87-95`), ≤5 previews
     * of ≤5 rows for detected tables (`:59-61,77-85`).
+    *
+    * A preview is bound (analysed, which fixes the view definitions and
+    * file listings it reads) on the caller thread at the state right
+    * after its statement, then collected on a per-run pool beside the
+    * following statements. A query's previews are bound before it runs
+    * and collected while it runs; every pending preview completes before
+    * a write statement and before `run` returns.
     */
   def run(spark: SparkSession, sqlCode: String): ScriptReport = {
     val t0 = System.nanoTime()
@@ -96,35 +144,64 @@ object ScriptEngine {
     var ok = 0
     var bad = 0
     val previews =
-      scala.collection.mutable.LinkedHashMap
-        .empty[String, Either[String, Seq[String]]]
-    val detected = scala.collection.mutable.Set.empty[String]
+      mutable.LinkedHashMap.empty[String, CompletableFuture[Preview]]
+    val pool = Executors.newFixedThreadPool(PreviewLimit, { (r: Runnable) =>
+      val t = new Thread(r, "script-preview"); t.setDaemon(true); t
+    })
+    def awaitPreviews(): Unit = previews.values.foreach(_.join())
 
-    statements.zipWithIndex.foreach { case (stmt, i) =>
-      val s0 = System.nanoTime()
-      try {
-        // execute fully on the executors; never collect arbitrary results
-        spark.sql(stmt).foreach(_ => ())
-        details += StepResult(i + 1, "SUCCESS", stmt, None, secs(s0))
-        ok += 1
-        detectTables(stmt).foreach { t =>
-          if (previews.size < PreviewLimit && !detected(t)) {
-            detected += t
-            try previews(t) = Right(
-              spark.sql(s"SELECT * FROM $t LIMIT 5").toJSON.collect().toSeq)
-            catch { case e: Exception =>
-              previews(t) = Left(s"Error fetching preview: ${e.getMessage}")
+    /** Bind previews for the statement's newly detected tables (up to the
+      * cap) and start collecting them; returns the tables bound.
+      */
+    def bindPreviews(stmt: String): Seq[String] =
+      detectTables(stmt).distinct.filterNot(previews.contains)
+        .take(PreviewLimit - previews.size).map { t =>
+          // CollectLimit reads incrementally; a LIMIT under toJSON would
+          // plan a global limit with a one-partition shuffle instead
+          previews(t) =
+            try {
+              val df = spark.sql(s"SELECT to_json(struct(*)) FROM $t LIMIT 5")
+              df.queryExecution.assertAnalyzed()
+              SQLExecution.withThreadLocalCaptured(
+                ClassicConversions.castToImpl(spark), pool) {
+                try Right(df.collect().toSeq.map(_.getString(0)))
+                catch { case e: Exception => previewError(e) }
+              }
+            } catch { case e: Exception =>
+              CompletableFuture.completedFuture(previewError(e))
             }
-          }
+          t
         }
-      } catch { case e: Exception =>
-        details += StepResult(i + 1, "FAILED", stmt,
-          Some(Option(e.getMessage).getOrElse(e.getClass.getName)),
-          secs(s0))
-        bad += 1
+
+    try {
+      statements.zipWithIndex.foreach { case (stmt, i) =>
+        val kind = kindOf(spark, stmt)
+        if (kind == Write) awaitPreviews()
+        val early = if (kind == Query) bindPreviews(stmt) else Nil
+        val s0 = System.nanoTime()
+        try {
+          val df = spark.sql(stmt)
+          // a command has already run eagerly; drain only query results,
+          // on the executors — never collect arbitrary results
+          if (!df.queryExecution.commandExecuted.isInstanceOf[CommandResult])
+            df.foreach(_ => ())
+          details += StepResult(i + 1, "SUCCESS", stmt, None, secs(s0))
+          ok += 1
+          if (kind != Query) bindPreviews(stmt)
+        } catch { case e: Exception =>
+          details += StepResult(i + 1, "FAILED", stmt,
+            Some(Option(e.getMessage).getOrElse(e.getClass.getName)),
+            secs(s0))
+          bad += 1
+          // a failed statement previews nothing; its tables stay
+          // previewable by later statements
+          early.foreach(t => previews.remove(t).foreach(_.join()))
+        }
       }
-    }
+      awaitPreviews()
+    } finally pool.shutdown()
     ScriptReport("COMPLETED", AgentName, statements.size, ok, bad,
-      secs(t0), details.result(), previews.toMap)
+      secs(t0), details.result(),
+      previews.map { case (t, f) => t -> f.join() }.toMap)
   }
 }

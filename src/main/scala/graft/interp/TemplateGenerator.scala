@@ -12,7 +12,8 @@ package graft.interp
   *   - target table/view = first metadata key, extension stripped,
   *     non-identifier chars mapped to `_`
   *   - SCD1 key = first column; order column = CREATED_AT if present,
-  *     else the last column
+  *     else the last column; target rows are kept by `NOT EXISTS` (a
+  *     NULL batch key must not empty the target, as `NOT IN` would)
   *   - aggregation groups by the first VARCHAR column; FLOAT measures are
   *     summed through DECIMAL(18,4) so results don't depend on partition
   *     summation order; NUMBER measures sum exactly
@@ -53,8 +54,8 @@ object TemplateGenerator extends TextGenerator {
          |  SELECT *, ROW_NUMBER() OVER (PARTITION BY $key
          |    ORDER BY $ord DESC) AS __rn FROM ${t}_source) WHERE __rn = 1;
          |CREATE OR REPLACE TEMPORARY VIEW ${t}_merged AS
-         |SELECT * FROM ${t}_target
-         |WHERE $key NOT IN (SELECT $key FROM ${t}_latest)
+         |SELECT * FROM ${t}_target tgt
+         |WHERE NOT EXISTS (SELECT 1 FROM ${t}_latest lt WHERE lt.$key = tgt.$key)
          |UNION ALL SELECT * FROM ${t}_latest;""".stripMargin
     else
       s"""val latest = Scd1.latestPerKey(source, Seq("$key"), "$ord")

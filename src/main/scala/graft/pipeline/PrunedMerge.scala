@@ -32,7 +32,8 @@ import org.apache.spark.sql.functions._
   *     so collecting it is a report-sized driver read;
   *  3. ONE dataflow computes `touched-target ⟕anti latest ∪ latest`
   *     (the [[Scd1.merge]] relation restricted to touched partitions)
-  *     and writes it `partitionBy(__p)` into a batch-owned temp dir —
+  *     and writes it `partitionBy(__p)`, rebalanced by `__p` so each
+  *     partition lands as one file, into a batch-owned temp dir —
   *     all temp data is durable BEFORE any target mutation;
   *  4. each touched `__p=k` dir is swapped (delete old, rename temp
   *     in). Untouched directories are never read, written, or
@@ -75,9 +76,18 @@ object PrunedMerge {
   def stage(df: DataFrame, targetPath: String, keys: Seq[String],
       nParts: Int): Unit = {
     require(nParts > 0, "nParts must be positive")
-    df.withColumn("__p", partitionOf(keys, nParts))
-      .write.mode("overwrite").partitionBy("__p").parquet(targetPath)
+    writeByPartition(df.withColumn("__p", partitionOf(keys, nParts)),
+      targetPath)
   }
+
+  /** Write `partitionBy(__p)` with rows rebalanced by `__p` first, so
+    * each partition dir gets one file (AQE's rebalance still splits a
+    * skewed partition into advisory-size files, which a
+    * `repartition(__p)` would pin to a single task).
+    */
+  private def writeByPartition(df: DataFrame, path: String): Unit =
+    df.hint("rebalance", col("__p"))
+      .write.mode("overwrite").partitionBy("__p").parquet(path)
 
   /** Read the table back without the layout column. */
   def readTable(s: SparkSession, targetPath: String): DataFrame =
@@ -165,7 +175,7 @@ object PrunedMerge {
       // all temp data lands before any target mutation
       val tmp = s"${targetPath}__merge_tmp"
       fs.delete(new Path(tmp), true) // stale temp from a crashed run
-      merged.write.mode("overwrite").partitionBy("__p").parquet(tmp)
+      writeByPartition(merged, tmp)
       touched.foreach { k =>
         val dst = new Path(s"$targetPath/__p=$k")
         val src = new Path(s"$tmp/__p=$k")

@@ -34,6 +34,42 @@ class GlossarySpec extends SparkSpec {
     assert(after.filter("TABLE_NAME = 'REGION'").count() === 1)
   }
 
+  test("a regenerate that crashed mid-swap is finished, not emptied, " +
+      "by the next entry") {
+    val p = tmpPath("crash")
+    def seed(): Unit = {
+      Glossary.regenerate(spark, p,
+        Seq(("orders", "o_orderkey", "NUMBER"),
+          ("orders", "o_totalprice", "FLOAT")), Some("orders"))
+      Glossary.regenerate(spark, p,
+        Seq(("region", "r_name", "VARCHAR")), Some("region"))
+    }
+    // window 1: the glossary dir is gone and the committed temp holds
+    // the regeneration's complete output
+    seed()
+    assert(new java.io.File(p).renameTo(new java.io.File(p + ".tmp")))
+    assert(Glossary.read(spark, p).count() === 3)
+    Glossary.regenerate(spark, p,
+      Seq(("nation", "n_name", "VARCHAR")), Some("nation"))
+    assert(Glossary.read(spark, p).count() === 4)
+    // window 2: the glossary was renamed aside and no temp committed
+    assert(new java.io.File(p).renameTo(new java.io.File(p + ".bak")))
+    assert(Glossary.read(spark, p).count() === 4)
+    assert(!new java.io.File(p + ".bak").exists())
+    Glossary.deleteForTest(p)
+  }
+
+  test("a URI-qualified glossary path keeps its entries across calls") {
+    val p = tmpPath("uri")
+    val uri = new java.io.File(p).toURI.toString
+    Glossary.regenerate(spark, uri,
+      Seq(("orders", "o_orderkey", "NUMBER")), Some("orders"))
+    Glossary.regenerate(spark, uri,
+      Seq(("region", "r_name", "VARCHAR")), Some("region"))
+    assert(Glossary.read(spark, uri).count() === 2)
+    Glossary.deleteForTest(p)
+  }
+
   test("definitions use the reference prompt through the stub") {
     val p = tmpPath("defs")
     Glossary.regenerate(spark, p, Seq(("t", "c", "NUMBER")), None)

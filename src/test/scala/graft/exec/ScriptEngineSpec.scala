@@ -42,6 +42,12 @@ class SplitterSpec extends AnyFunSuite {
     assert(ScriptEngine.stripComments(in) === "SELECT 1;\nSELECT 2;")
   }
 
+  test("a backticked path keeps its format prefix as one table name") {
+    val t = ScriptEngine.detectTables(
+      "SELECT * FROM parquet.`/data/t 1` JOIN `/raw` JOIN db.t2")
+    assert(t === Seq("parquet.`/data/t 1`", "`/raw`", "db.t2"))
+  }
+
   test("table detection finds from/join/into/update/table refs") {
     val t = ScriptEngine.detectTables(
       "INSERT INTO db.t1 SELECT * FROM t2 JOIN t3 ON x UPDATE t4")
@@ -107,6 +113,86 @@ class ScriptEngineSpec extends SparkSpec {
       case Right(rows) => assert(rows.length === 5)
       case Left(err) => fail(s"preview failed: $err")
     }
+  }
+
+  test("preview strings equal toJSON across nested and typed columns") {
+    spark.sql(
+      """CREATE OR REPLACE TEMPORARY VIEW se_types AS SELECT * FROM VALUES
+        |  (1, CAST(NULL AS STRING), TIMESTAMP'2024-01-02 03:04:05.678',
+        |   CAST(12.50 AS DECIMAL(10,2)), array(1, NULL), map('a', 1),
+        |   named_struct('p', 1, 'q', 'x')),
+        |  (2, 'v', NULL, CAST(-0.01 AS DECIMAL(10,2)), NULL,
+        |   map('b', CAST(NULL AS INT)), named_struct('p', NULL, 'q', 'y'))
+        |  AS t(id, s, ts, d, arr, m, st)""".stripMargin)
+    val report = ScriptEngine.run(spark, "SELECT count(*) FROM se_types")
+    val want = spark.table("se_types").toJSON.collect().toSeq.sorted
+    assert(report.tablePreviews("se_types").map(_.sorted) === Right(want))
+  }
+
+  test("a DDL-only script posts no Spark job") {
+    val sc = spark.sparkContext
+    val group = "graft-script-ddl-jobs"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group)) seen.add(e.jobId)
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "ddl probe")
+    try {
+      val report = ScriptEngine.run(spark,
+        """CREATE OR REPLACE TEMPORARY VIEW se_ddl AS SELECT 1 AS x;
+          |DROP VIEW IF EXISTS se_ddl_absent""".stripMargin)
+      assert(report.successCount === 2)
+      // a marker job: its start arrives after every earlier job's
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 10000000000L
+      while (seen.size < 1 && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.size === 1, s"script posted ${seen.size - 1} jobs")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a preview bound before a write shows the rows from before it") {
+    spark.sql("DROP TABLE IF EXISTS se_ins")
+    spark.sql("CREATE TABLE se_ins (x INT) USING parquet")
+    spark.sql("INSERT INTO se_ins VALUES (1), (2)")
+    try {
+      def previewed(write: String): Seq[String] = {
+        val report = ScriptEngine.run(spark,
+          s"SELECT count(*) FROM se_ins; $write")
+        assert(report.successCount === 2)
+        report.tablePreviews("se_ins").toOption.get.sorted
+      }
+      assert(previewed("INSERT INTO se_ins VALUES (3)") ===
+        Seq("{\"x\":1}", "{\"x\":2}"))
+      assert(previewed("INSERT OVERWRITE TABLE se_ins VALUES (9)") ===
+        Seq("{\"x\":1}", "{\"x\":2}", "{\"x\":3}"))
+      assert(spark.table("se_ins").count() === 1)
+    } finally spark.sql("DROP TABLE IF EXISTS se_ins")
+  }
+
+  test("a path-qualified source is previewed") {
+    val dir = java.nio.file.Files.createTempDirectory("se_path").toString
+    spark.range(3).write.mode("overwrite").parquet(s"$dir/t")
+    val report = ScriptEngine.run(spark,
+      s"SELECT count(*) FROM parquet.`$dir/t`")
+    assert(report.tablePreviews(s"parquet.`$dir/t`").map(_.length) ===
+      Right(3))
+  }
+
+  test("a failed query previews nothing and leaves its tables " +
+      "previewable") {
+    spark.sql("CREATE OR REPLACE TEMPORARY VIEW se_f AS SELECT 1 AS a")
+    val report = ScriptEngine.run(spark,
+      """SELECT a, nope FROM se_f;
+        |SELECT a FROM se_f""".stripMargin)
+    assert(report.details.map(_.status) === Seq("FAILED", "SUCCESS"))
+    assert(report.tablePreviews === Map("se_f" -> Right(Seq("{\"a\":1}"))))
   }
 
   test("unpreviewable table names degrade to an error entry") {

@@ -54,6 +54,24 @@ class TemplateGeneratorSpec extends SparkSpec {
     assert(merged === Map(1L -> 2.0, 5L -> 3.0, 9L -> 9.0))
   }
 
+  test("scd1 template keeps target rows when a batch key is NULL") {
+    val code = Objective.generateCode(
+      "incremental scd1 load of orders", meta, TemplateGenerator)
+    def rows(keys: Option[Long]*) = keys
+      .map(k => (k, "EU", 1.0, "2024-01-01 00:00:00"))
+      .toDF("ORDER_ID", "REGION", "AMOUNT", "CREATED_AT")
+      .withColumn("CREATED_AT", col("CREATED_AT").cast("timestamp"))
+    rows(Some(1L), None).createOrReplaceTempView("orders_source")
+    rows(Some(1L), Some(9L)).createOrReplaceTempView("orders_target")
+    val report = ScriptEngine.run(spark, code.sqlCode)
+    assert(report.details.forall(_.status == "SUCCESS"),
+      report.details.flatMap(_.error).mkString("; "))
+    // MERGE … ON key matches no NULL key: key 9 stays, NULL is inserted
+    val keys = spark.table("orders_merged").select("ORDER_ID")
+      .as[Option[Long]].collect().toSeq.sortBy(_.getOrElse(Long.MinValue))
+    assert(keys === Seq(None, Some(1L), Some(9L)))
+  }
+
   test("join template joins two tables on the shared column and runs") {
     val meta2: Objective.Metadata = Map(
       "a.csv" -> Seq(("K", "NUMBER"), ("X", "VARCHAR")),

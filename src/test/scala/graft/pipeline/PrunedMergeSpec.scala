@@ -158,6 +158,20 @@ class PrunedMergeSpec extends SparkSpec {
     }
   }
 
+  test("stage and merge write one parquet file per partition dir") {
+    val tgt = tmpTarget()
+    // several scan partitions, each holding rows of many __p values
+    PrunedMerge.stage(targetRows.repartition(4), tgt, Seq("user_id"), P)
+    val touched = PrunedMerge.mergeInto(spark, tgt,
+      sourceRows.repartition(3), Seq("user_id"), "ts", nParts = P)
+    assert(touched.nonEmpty)
+    partDirs(tgt).keySet.foreach { d =>
+      val parquet = filesUnder(new java.io.File(s"$tgt/$d")).keySet
+        .filter(_.endsWith(".parquet"))
+      assert(parquet.size === 1, s"$d holds ${parquet.size} files")
+    }
+  }
+
   test("an empty batch touches nothing") {
     val tgt = tmpTarget()
     PrunedMerge.stage(targetRows, tgt, Seq("user_id"), P)
