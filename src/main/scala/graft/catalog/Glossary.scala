@@ -1,10 +1,10 @@
 package graft.catalog
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.interp.TextGenerator
+import graft.util.DirSwap
 
 /** Business-glossary CRUD over an immutable parquet-backed table
   * (`/root/reference/Business_Glossory.sql`).
@@ -23,41 +23,16 @@ object Glossary {
   final case class Entry(TABLE_NAME: String, COLUMN_NAME: String,
       DATA_TYPE: String, BUSINESS_DEFINITION: String)
 
-  private def fsOf(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def rename(fs: FileSystem, from: Path, to: Path): Unit =
-    if (!fs.rename(from, to))
-      throw new java.io.IOException(s"atomic swap failed: $from -> $to")
-
-  /** The glossary dir, its regeneration temp and its swap backup. */
-  private def swapPaths(path: String): (Path, Path, Path) =
-    (new Path(path), new Path(path + ".tmp"), new Path(path + ".bak"))
-
-  /** Finish a [[regenerate]] swap that crashed. With the glossary dir
-    * missing, a committed `<path>.tmp` (it has `_SUCCESS`) is the
-    * regeneration's complete output and renames in; failing that, a
-    * `<path>.bak` holds the previous glossary and renames back. A backup
-    * beside a present glossary is a finished swap's leftover.
-    */
-  private def recoverSwap(fs: FileSystem, path: String): Unit = {
-    val (dir, tmp, bak) = swapPaths(path)
-    if (!fs.exists(dir)) {
-      if (fs.exists(new Path(tmp, "_SUCCESS"))) rename(fs, tmp, dir)
-      else if (fs.exists(bak)) rename(fs, bak, dir)
-    }
-    if (fs.exists(dir) && fs.exists(bak)) fs.delete(bak, true)
-  }
-
   /** S13: create-if-absent (`Business_Glossory.sql:19-26`), after
-    * finishing any crashed swap so an interrupted regenerate is never
-    * mistaken for an absent glossary.
+    * finishing any crashed swap ([[DirSwap.recover]]) so an interrupted
+    * regenerate is never mistaken for an absent glossary.
     */
   def createIfAbsent(spark: SparkSession, path: String): Unit = {
     import spark.implicits._
-    val fs = fsOf(spark, path)
-    recoverSwap(fs, path)
-    if (!fs.exists(new Path(path)))
+    val fs = DirSwap.fsOf(spark, path)
+    val (dir, tmp, bak) = DirSwap.siblings(path)
+    DirSwap.recover(fs, dir, tmp, bak)
+    if (!fs.exists(dir))
       Seq.empty[Entry].toDF().write.mode(SaveMode.Overwrite).parquet(path)
   }
 
@@ -94,9 +69,9 @@ object Glossary {
   /** Regenerate glossary entries for the given column metadata: clear the
     * filtered slice (`:47-50`), generate definitions, append as ONE batch
     * (vs the reference's per-row INSERT loop, `:85-89`). Write is
-    * crash-safe: new content lands in `<path>.tmp`, the glossary renames
-    * aside to `<path>.bak`, the temp renames in, and only then is the
-    * backup deleted — every crash window recovers on the next entry.
+    * crash-safe: new content lands in `<path>.tmp` and swaps in through
+    * `<path>.bak` ([[DirSwap]]); [[createIfAbsent]] finishes a crashed
+    * swap on the next entry.
     *
     * @param metadata (tableName, columnName, dataType) rows, catalog order
     */
@@ -115,12 +90,9 @@ object Glossary {
     }.toDF()
     val merged = kept.unionByName(fresh)
 
-    val (dir, tmp, bak) = swapPaths(path)
+    val (dir, tmp, bak) = DirSwap.siblings(path)
     merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val fs = fsOf(spark, path)
-    rename(fs, dir, bak)
-    rename(fs, tmp, dir)
-    fs.delete(bak, true): Unit
+    DirSwap.replace(DirSwap.fsOf(spark, path), dir, tmp, bak)
   }
 
   /** Test hook: remove a glossary path and its swap siblings entirely. */

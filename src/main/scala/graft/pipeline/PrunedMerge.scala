@@ -1,8 +1,10 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.util.DirSwap
 
 /** PARTITION-PRUNED SCD1 merge sink — the X64 repair-scope ruling
   * applied to the write side of the reference's MERGE
@@ -35,10 +37,10 @@ import org.apache.spark.sql.functions._
   *     and writes it `partitionBy(__p)`, rebalanced by `__p` so each
   *     partition lands as one file, into a batch-owned temp dir —
   *     all temp data is durable BEFORE any target mutation;
-  *  4. each touched `__p=k` dir is swapped (delete old, rename temp
-  *     in). Untouched directories are never read, written, or
-  *     renamed — their files and mtimes are bit-identical after the
-  *     merge ([[PrunedMergeSpec]] pins this).
+  *  4. each touched `__p=k` dir is swapped in from the temp
+  *     ([[graft.util.DirSwap.replace]]). Untouched directories are
+  *     never read, written, or renamed — their files and mtimes are
+  *     bit-identical after the merge ([[PrunedMergeSpec]] pins this).
   *
   * Crash safety is IDEMPOTENCE, not atomicity (the temp-then-swap
   * contract every sink here honors): a crash mid-swap leaves some
@@ -48,17 +50,13 @@ import org.apache.spark.sql.functions._
   * source keys`, and re-unioning `latest` restores exactly the merged
   * rows). The stale temp dir is removed and rebuilt by the re-run.
   *
-  * The swap itself goes through a BACKUP RENAME, never a delete-then-
-  * rename (the r15 ADVICE window): each touched `__p=k` renames to a
-  * hidden `.__swap_backup_p<k>` sibling (invisible to Spark's
-  * partition discovery — dot-prefixed), the temp partition renames in,
-  * and only then is the backup deleted. Every window is recoverable:
-  * a crash between the two renames leaves the partition's rows intact
-  * in the backup, and (re)entry restores any backup whose primary dir
-  * is missing BEFORE touching the stale temp — so no window exists in
-  * which target rows live only in a dir the re-run deletes. Renames
-  * are atomic on HDFS and local filesystems (the same primitive the
-  * other temp-swap sinks rely on).
+  * Each partition swap is a [[graft.util.DirSwap]] through a hidden
+  * `.__swap_backup_p<k>` sibling (dot-prefixed, so Spark's partition
+  * discovery skips it), never a delete-then-rename (the r15 ADVICE
+  * window). (Re)entry recovers every backup BEFORE touching the stale
+  * temp — a temp partition dir has no `_SUCCESS` of its own, so a
+  * backup whose partition is missing always rolls back — and no window
+  * exists in which target rows live only in a dir the re-run deletes.
   *
   * Scale shape: per batch, I/O is O(touched partitions) + O(batch),
   * never O(table); the anti-join shuffles only touched-partition rows
@@ -93,25 +91,26 @@ object PrunedMerge {
   def readTable(s: SparkSession, targetPath: String): DataFrame =
     s.read.parquet(targetPath).drop("__p")
 
-  /** Hidden (dot-prefixed — Spark's partition discovery skips it)
-    * sibling that holds partition `k`'s previous contents for the
-    * duration of one swap.
-    */
-  private def backupOf(targetPath: String, k: Long): Path =
-    new Path(s"$targetPath/.__swap_backup_p$k")
+  private def tmpOf(targetPath: String): String = s"${targetPath}__merge_tmp"
 
+  /** Hidden prefix (Spark's partition discovery skips dot-prefixed
+    * dirs) of the sibling that holds partition `k`'s previous contents
+    * for the duration of one swap.
+    */
   private val BackupPrefix = ".__swap_backup_p"
 
-  /** Restore any partition whose swap crashed between the backup
-    * rename and the temp rename-in: a backup dir whose primary
-    * `__p=k` is MISSING holds the partition's only copy — rename it
-    * back before anything else runs. A backup whose primary exists is
-    * a completed swap's leftover (crash before backup delete) and is
-    * removed. Runs on every [[mergeInto]] entry, BEFORE the stale
-    * temp delete, so no crash window can orphan target rows.
+  /** Partition `k`'s dir, its merged temp and its swap backup. */
+  private def swapPaths(targetPath: String, k: Long): (Path, Path, Path) =
+    (new Path(s"$targetPath/__p=$k"),
+      new Path(s"${tmpOf(targetPath)}/__p=$k"),
+      new Path(s"$targetPath/$BackupPrefix$k"))
+
+  /** Finish every partition swap that crashed ([[DirSwap.recover]] per
+    * backup found). Runs on every [[mergeInto]] entry, BEFORE the stale
+    * temp is overwritten, so no crash window can orphan target rows.
     */
-  private def recoverPendingSwaps(fs: org.apache.hadoop.fs.FileSystem,
-      targetPath: String): Unit = {
+  private def recoverPendingSwaps(fs: FileSystem, targetPath: String)
+      : Unit = {
     val root = new Path(targetPath)
     if (!fs.exists(root)) return
     fs.listStatus(root).foreach { st =>
@@ -122,15 +121,8 @@ object PrunedMerge {
       // wedge every subsequent mergeInto until the dir is removed
       if (nm.startsWith(BackupPrefix) && suffix.nonEmpty &&
           suffix.length <= 18 && suffix.forall(_.isDigit)) {
-        val k = suffix.toLong
-        val primary = new Path(s"$targetPath/__p=$k")
-        if (!fs.exists(primary)) {
-          if (!fs.rename(st.getPath, primary))
-            throw new IllegalStateException(
-              s"crash recovery failed: ${st.getPath} -> $primary")
-        } else if (!fs.delete(st.getPath, true))
-          throw new IllegalStateException(
-            s"stale swap backup delete failed: ${st.getPath}")
+        val (dst, staged, bak) = swapPaths(targetPath, suffix.toLong)
+        DirSwap.recover(fs, dst, staged, bak)
       }
     }
   }
@@ -143,10 +135,9 @@ object PrunedMerge {
       keys: Seq[String], orderCol: String,
       tieBreakers: Seq[String] = Nil, nParts: Int = 256): Seq[Long] = {
     require(nParts > 0, "nParts must be positive")
-    val fs = new Path(targetPath).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
+    val fs = DirSwap.fsOf(s, targetPath)
     // heal any crashed swap BEFORE reading target partitions or
-    // deleting the stale temp — a backup may hold a partition's only
+    // overwriting the stale temp — a backup may hold a partition's only
     // copy (the r15 ADVICE crash window)
     recoverPendingSwaps(fs, targetPath)
     val latest = Scd1.latestPerKey(source, keys, orderCol, tieBreakers)
@@ -172,32 +163,18 @@ object PrunedMerge {
             .unionByName(latest)
         case None => latest.toDF()
       }
-      // all temp data lands before any target mutation
-      val tmp = s"${targetPath}__merge_tmp"
-      fs.delete(new Path(tmp), true) // stale temp from a crashed run
+      // all temp data lands before any target mutation; the overwrite
+      // replaces a crashed run's stale temp
+      val tmp = tmpOf(targetPath)
       writeByPartition(merged, tmp)
       touched.foreach { k =>
-        val dst = new Path(s"$targetPath/__p=$k")
-        val src = new Path(s"$tmp/__p=$k")
-        if (!fs.exists(src))
+        val (dst, staged, bak) = swapPaths(targetPath, k)
+        if (!fs.exists(staged))
           throw new IllegalStateException(
             s"merged temp is missing partition __p=$k under $tmp")
-        // backup-rename swap: the old partition is never deleted while
-        // it is the rows' only copy — rename it aside (atomic), rename
-        // the merged temp in, then drop the backup. Either crash
-        // window recovers on re-entry via recoverPendingSwaps.
-        val bak = backupOf(targetPath, k)
-        if (fs.exists(dst) && !fs.rename(dst, bak))
-          throw new IllegalStateException(
-            s"swap backup rename failed: $dst -> $bak")
-        if (!fs.rename(src, dst))
-          throw new IllegalStateException(
-            s"swap rename failed: $src -> $dst")
-        if (fs.exists(bak) && !fs.delete(bak, true))
-          throw new IllegalStateException(
-            s"swap backup delete failed: $bak")
+        DirSwap.replace(fs, dst, staged, bak)
       }
-      fs.delete(new Path(tmp), true)
+      DirSwap.discard(fs, new Path(tmp))
       touched
     } finally { latest.unpersist(blocking = false); () }
   }

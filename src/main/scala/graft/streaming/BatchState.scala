@@ -30,9 +30,9 @@ import org.apache.spark.sql.SparkSession
   */
 private[streaming] object BatchState {
 
-  /** The Hadoop `FileSystem` for `path` under the session's Hadoop conf. */
+  /** The state path's Hadoop `FileSystem` ([[graft.util.DirSwap.fsOf]]). */
   def fsOf(s: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(s.sparkContext.hadoopConfiguration)
+    graft.util.DirSwap.fsOf(s, path)
 
   /** Where micro-batch `batchId` writes its partial. */
   def partial(statePath: String, batchId: Long): String =

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.pipeline.Scd1
+import graft.util.DirSwap
 
 /** Structured Streaming extensions (SURVEY §2i — post-parity; the
   * reference has no streaming surface, so nothing here claims reference
@@ -96,9 +96,11 @@ object StreamingPipelines {
 
   /** Incremental SCD1: each micro-batch is merged into the parquet target
     * with the batch [[Scd1.merge]] (latest-per-key dedup inside the batch,
-    * anti-join + union against the current target). Write is
-    * temp-then-swap within the micro-batch via overwrite semantics of the
-    * parquet committer.
+    * anti-join + union against the current target), written to
+    * `<target>.tmp` and swapped in through `<target>.bak`
+    * ([[graft.util.DirSwap]]); each batch first finishes a swap that
+    * crashed, so a replayed batch merges into the old or the new target,
+    * both fixed points of the upsert.
     *
     * Returns the started query; callers await/stop it. Use
     * `Trigger.AvailableNow` for catch-up runs (tests), a processing-time
@@ -108,11 +110,11 @@ object StreamingPipelines {
       keys: Seq[String], orderCol: String, tieBreakers: Seq[String] = Nil,
       checkpoint: String, trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    eachBatch(source, checkpoint, trigger) { (batch, batchId) =>
+    eachBatch(source, checkpoint, trigger) { (batch, _) =>
       val spark = batch.sparkSession
       val target = existingTarget(spark, targetPath, batch)
       val merged = Scd1.merge(target, batch, keys, orderCol, tieBreakers)
-      swapInto(spark, merged, targetPath, s"${targetPath}__tmp_$batchId")
+      swapInto(merged, targetPath)
     }
 
   /** Run `f` on every micro-batch of `source` (append mode) under
@@ -170,28 +172,26 @@ object StreamingPipelines {
     if (bytes < SpreadMinBytes) batch else spread(batch)
   }
 
-  /** Write-temp-then-swap through the Hadoop FS: the merged plan READS
-    * `targetPath`, so a direct overwrite would clobber its own input
-    * mid-scan. `rename` is atomic on HDFS-like stores; an object-store
-    * deployment would commit via a table format's atomic pointer swap
-    * instead. Idempotent under checkpoint replay: the temp write is
-    * mode(overwrite) and a re-run repeats the delete+rename.
+  /** Write `merged` to `<targetPath>.tmp` and swap it in
+    * ([[DirSwap.replace]]): the merged plan READS `targetPath`, so a
+    * direct overwrite would clobber its own input mid-scan.
     */
-  private def swapInto(spark: SparkSession, merged: DataFrame,
-      targetPath: String, tmpPath: String): Unit = {
-    merged.write.mode("overwrite").parquet(tmpPath)
-    val fs = BatchState.fsOf(spark, targetPath)
-    fs.delete(new Path(targetPath), true)
-    if (!fs.rename(new Path(tmpPath), new Path(targetPath)))
-      throw new IllegalStateException(
-        s"state swap failed: $tmpPath -> $targetPath")
-    ()
+  private def swapInto(merged: DataFrame, targetPath: String): Unit = {
+    val (dst, tmp, bak) = DirSwap.siblings(targetPath)
+    merged.write.mode("overwrite").parquet(tmp.toString)
+    DirSwap.replace(DirSwap.fsOf(merged.sparkSession, targetPath),
+      dst, tmp, bak)
   }
 
+  /** The target's current rows (empty before its first batch), after
+    * finishing a swap that crashed ([[DirSwap.recover]]) — a replayed
+    * batch must never mistake a target renamed aside for an absent one.
+    */
   private def existingTarget(spark: SparkSession, path: String,
       batch: DataFrame): DataFrame = {
-    val fs = BatchState.fsOf(spark, path)
-    val p = new Path(path)
+    val fs = DirSwap.fsOf(spark, path)
+    val (p, tmp, bak) = DirSwap.siblings(path)
+    DirSwap.recover(fs, p, tmp, bak)
     val hasData = fs.exists(p) &&
       fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
     if (hasData) spark.read.schema(batch.schema).parquet(path)
@@ -222,9 +222,10 @@ object StreamingPipelines {
   /** Streaming rolling-actives maintenance ([[graft.pipeline.Actives]]
     * incrementally): per micro-batch, the batch's `(user, day)` pairs
     * union-distinct into the STATE frame (the reduced pairs frame —
-    * user×active-days rows, never events; write-temp-swap like
-    * [[scd1Stream]]), then the DAU/rolling/stickiness report
-    * recomputes from state alone and overwrites `reportPath`.
+    * user×active-days rows, never events; swapped through
+    * `<statePath>.tmp`/`.bak` like [[incrementalScd1]]), then the
+    * DAU/rolling/stickiness report recomputes from state alone and
+    * overwrites `reportPath`.
     * Distinct-union is commutative and idempotent, so the result is
     * independent of the micro-batch cut and equals the batch operator
     * on the same corpus — the [[graft.streaming.MaintainedAgg]]
@@ -235,14 +236,14 @@ object StreamingPipelines {
       window: Int, statePath: String, reportPath: String,
       checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    eachBatch(source, checkpoint, trigger) { (batch, batchId) =>
+    eachBatch(source, checkpoint, trigger) { (batch, _) =>
       val s = batch.sparkSession
       // NOT spread: A/B'd +0.16s — the pairs map is light and the
       // distinct-union exchange already fans out
       val newPairs = graft.pipeline.Actives.pairs(batch, userCol, tsCol)
       val merged = existingTarget(s, statePath, newPairs)
         .unionByName(newPairs).distinct()
-      swapInto(s, merged, statePath, s"${statePath}__tmp_$batchId")
+      swapInto(merged, statePath)
       graft.pipeline.Actives
         .rollingFromPairs(s.read.parquet(statePath), window)
         .write.mode("overwrite").parquet(reportPath)
