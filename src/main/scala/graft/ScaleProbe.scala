@@ -509,27 +509,15 @@ object ScaleProbe {
       "doc_id", "text", graft.text.QualityGatePinned.weights,
       graft.text.QualityGatePinned.bias)
 
-  /** Drift probe: numeric drift on l_extendedprice between two
-    * key-modulo snapshots of the scaled lineitem (the registered gate
-    * lane's shape over the corpus-scaled table).
-    */
   /** PageRank over the UNFILTERED order-part graph (the gate lane's
     * category slice removed): the full per-iteration shuffle volume.
     */
-  private def pagerankFullProbe(s: SparkSession, dir: String): DataFrame = {
-    val li = graft.io.Tables.load(s, dir, "lineitem", parallelize = true)
-    val pairs = li.select(
-        (col("l_orderkey") * 2).cast("long").as("o"),
-        (col("l_partkey") * 2 + 1).cast("long").as("p"))
-      .distinct()
-    val edges = pairs.select(explode(array(
-        struct(col("o").as("src"), col("p").as("dst")),
-        struct(col("p").as("src"), col("o").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    graft.graph.PageRank.ranks(edges, 3, assumeDistinct = true,
-      assumeMirrored = true)
+  private def pagerankFullProbe(s: SparkSession, dir: String): DataFrame =
+    graft.graph.PageRank.ranks(
+        graft.graph.GraphQueries.orderPartEdges(
+          graft.io.Tables.load(s, dir, "lineitem", parallelize = true)),
+        3, assumeDistinct = true, assumeMirrored = true)
       .orderBy(col("r").desc, col("node")).limit(20)
-  }
 
   /** SemDeDup at its own occupancy rule: k = clusterCount(n) grows
     * with the corpus — the composed fitAuto + prune path (the

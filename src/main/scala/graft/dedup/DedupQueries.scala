@@ -1,5 +1,6 @@
 package graft.dedup
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, QueryPack}
@@ -64,7 +65,52 @@ object DedupQueries extends QueryPack {
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
   }
 
+  /** `f(documents, pairs)`, `pairs` being the blocked exact 3-shingle
+    * Jaccard ≥ 0.8 pairs `(id_a, id_b)`; the shingle-set cache both pair
+    * sides read is released when `f` returns.
+    */
+  private def withNearDupPairs(s: SparkSession,
+      dir: String)(f: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val docs = Tables.load(s, dir, "documents", parallelize = true)
+    val sets = Dedup.shingleSets(docs, "doc_id", "text", 3).persist()
+    try f(docs, Dedup
+      .jaccardOnPairsFromSets(blockedPairs(docs), sets, "doc_id")
+      .filter(col("jaccard") >= 0.8)
+      .select("id_a", "id_b"))
+    finally { sets.unpersist(blocking = false); () }
+  }
+
+  /** CTEs `pairs` → `edges` → `reach(id, r)` over a `jp` pair CTE: the
+    * Jaccard ≥ 0.8 pairs and every id's reachable ids (the recursive
+    * connected components; a cluster is `MIN(r)` per id).
+    */
+  private[graft] val nearDupReachSql: String =
+    "pairs AS (SELECT id_a, id_b FROM jp WHERE jaccard >= 0.8), " +
+      "edges AS (SELECT id_a AS src, id_b AS dst FROM pairs " +
+      "UNION ALL SELECT id_b, id_a FROM pairs), " +
+      "reach(id, r) AS (SELECT src, src FROM edges " +
+      "UNION SELECT e.src, reach.r FROM edges e " +
+      "JOIN reach ON e.dst = reach.id)"
+
   private[graft] val SubstrMinLen = 12
+
+  /** `WITH` CTEs `toks(doc_id, t)` → `g` → `gh(doc_id, pos, h)`: every
+    * [[SubstrMinLen]]-gram start of every document with its md5-base
+    * hash ([[SubstringDedup.gramArrays]]). Carries its trailing ", ".
+    */
+  private def substringGramSql: String = {
+    val L = SubstrMinLen
+    s"WITH toks AS (SELECT doc_id, CASE " +
+      "WHEN length(trim(text)) = 0 THEN []::VARCHAR[] " +
+      "ELSE regexp_split_to_array(trim(text), '\\s+') END AS t " +
+      "FROM documents), " +
+      "g AS (SELECT doc_id, t, unnest(CASE WHEN len(t) >= " +
+      s"$L THEN generate_series(1, len(t) - ${L - 1}) " +
+      "ELSE []::BIGINT[] END) AS pos FROM toks), " +
+      "gh AS (SELECT doc_id, pos, ('0x' || substr(md5(" +
+      s"array_to_string(t[pos:pos+${L - 1}], ' ')), 1, 15))::BIGINT " +
+      "AS h FROM g), "
+  }
 
   /** EXACT repeated-substring coverage ([[SubstringDedup.report]] —
     * the deduplicate-text-datasets role re-expressed as anchored
@@ -91,16 +137,7 @@ object DedupQueries extends QueryPack {
     },
     Some {
       val L = SubstrMinLen
-      s"WITH toks AS (SELECT doc_id, CASE " +
-        "WHEN length(trim(text)) = 0 THEN []::VARCHAR[] " +
-        "ELSE regexp_split_to_array(trim(text), '\\s+') END AS t " +
-        "FROM documents), " +
-        "g AS (SELECT doc_id, t, unnest(CASE WHEN len(t) >= " +
-        s"$L THEN generate_series(1, len(t) - ${L - 1}) " +
-        "ELSE []::BIGINT[] END) AS pos FROM toks), " +
-        "gh AS (SELECT doc_id, pos, ('0x' || substr(md5(" +
-        s"array_to_string(t[pos:pos+${L - 1}], ' ')), 1, 15))::BIGINT " +
-        "AS h FROM g), " +
+      substringGramSql +
         "rep AS (SELECT h FROM gh GROUP BY h HAVING count(*) >= 2), " +
         "m AS (SELECT gh.doc_id, gh.pos FROM gh JOIN rep USING (h)), " +
         "w AS (SELECT doc_id, pos, CASE WHEN " +
@@ -154,16 +191,7 @@ object DedupQueries extends QueryPack {
     */
   private[graft] def substringScrubOracleSql: String = {
       val L = SubstrMinLen
-      s"WITH toks AS (SELECT doc_id, CASE " +
-        "WHEN length(trim(text)) = 0 THEN []::VARCHAR[] " +
-        "ELSE regexp_split_to_array(trim(text), '\\s+') END AS t " +
-        "FROM documents), " +
-        "g AS (SELECT doc_id, t, unnest(CASE WHEN len(t) >= " +
-        s"$L THEN generate_series(1, len(t) - ${L - 1}) " +
-        "ELSE []::BIGINT[] END) AS pos FROM toks), " +
-        "gh AS (SELECT doc_id, pos, ('0x' || substr(md5(" +
-        s"array_to_string(t[pos:pos+${L - 1}], ' ')), 1, 15))::BIGINT " +
-        "AS h FROM g), " +
+      substringGramSql +
         "f AS (SELECT h, min(doc_id * 1048576 + pos) AS mk FROM gh " +
         "GROUP BY h HAVING count(*) >= 2), " +
         "rm AS (SELECT gh.doc_id, gh.pos FROM gh JOIN f USING (h) " +
@@ -211,51 +239,44 @@ object DedupQueries extends QueryPack {
     */
   private def splitSafeQuery = QueryDef(
     "dedup_split_safe_documents",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents", parallelize = true)
-      val sets = Dedup.shingleSets(docs, "doc_id", "text", 3).persist()
+    (s, dir) => withNearDupPairs(s, dir) { (docs, nearDups) =>
+      // read by clustering AND both straddle counts
+      val pairs = nearDups.persist()
       try {
-        val pairs = Dedup
-          .jaccardOnPairsFromSets(blockedPairs(docs), sets, "doc_id")
-          .filter(col("jaccard") >= 0.8)
-          .select("id_a", "id_b")
-          .persist() // read by clustering AND both straddle counts
-        try {
-          val clusters = Dedup.survivorsLocal(pairs)
-            .select(col("id").as("doc_id"), col("cluster"))
-          val safe = graft.pipeline.CorpusSplit.assign(
-              docs.select("doc_id")
-                .join(clusters, Seq("doc_id"), "left")
-                .withColumn("rep",
-                  coalesce(col("cluster"), col("doc_id"))),
-              "rep")
-            .select(col("doc_id"), col("rep"), col("split"))
-            .localCheckpoint(true) // report + straddle join
-          val naive = graft.pipeline.CorpusSplit.assign(
-              docs.select("doc_id"), "doc_id")
-            .select(col("doc_id"), col("split"))
-          def cross(asg: org.apache.spark.sql.DataFrame) = pairs
-            .join(asg.select(col("doc_id").as("id_a"),
-              col("split").as("__sa")), "id_a")
-            .join(asg.select(col("doc_id").as("id_b"),
-              col("split").as("__sb")), "id_b")
-            .filter(col("__sa") =!= col("__sb"))
-            .groupBy(col("__sa").as("split"))
-            .agg(count(lit(1)).as("__c"))
-          safe
-            .groupBy("split").agg(
-              count(lit(1)).as("n_docs"),
-              countDistinct(col("rep")).as("n_reps"))
-            .join(cross(safe).withColumnRenamed("__c", "__cs"),
-              Seq("split"), "left")
-            .join(cross(naive).withColumnRenamed("__c", "__cn"),
-              Seq("split"), "left")
-            .select(col("split"), col("n_docs"), col("n_reps"),
-              coalesce(col("__cs"), lit(0L)).as("cross_pairs_safe"),
-              coalesce(col("__cn"), lit(0L)).as("cross_pairs_naive"))
-            .orderBy("split")
-        } finally { pairs.unpersist(blocking = false); () }
-      } finally { sets.unpersist(blocking = false); () }
+        val clusters = Dedup.survivorsLocal(pairs)
+          .select(col("id").as("doc_id"), col("cluster"))
+        val safe = graft.pipeline.CorpusSplit.assign(
+            docs.select("doc_id")
+              .join(clusters, Seq("doc_id"), "left")
+              .withColumn("rep",
+                coalesce(col("cluster"), col("doc_id"))),
+            "rep")
+          .select(col("doc_id"), col("rep"), col("split"))
+          .localCheckpoint(true) // report + straddle join
+        val naive = graft.pipeline.CorpusSplit.assign(
+            docs.select("doc_id"), "doc_id")
+          .select(col("doc_id"), col("split"))
+        def cross(asg: org.apache.spark.sql.DataFrame) = pairs
+          .join(asg.select(col("doc_id").as("id_a"),
+            col("split").as("__sa")), "id_a")
+          .join(asg.select(col("doc_id").as("id_b"),
+            col("split").as("__sb")), "id_b")
+          .filter(col("__sa") =!= col("__sb"))
+          .groupBy(col("__sa").as("split"))
+          .agg(count(lit(1)).as("__c"))
+        safe
+          .groupBy("split").agg(
+            count(lit(1)).as("n_docs"),
+            countDistinct(col("rep")).as("n_reps"))
+          .join(cross(safe).withColumnRenamed("__c", "__cs"),
+            Seq("split"), "left")
+          .join(cross(naive).withColumnRenamed("__c", "__cn"),
+            Seq("split"), "left")
+          .select(col("split"), col("n_docs"), col("n_reps"),
+            coalesce(col("__cs"), lit(0L)).as("cross_pairs_safe"),
+            coalesce(col("__cn"), lit(0L)).as("cross_pairs_naive"))
+          .orderBy("split")
+      } finally { pairs.unpersist(blocking = false); () }
     },
     Some {
       val seed = graft.pipeline.CorpusSplit.DefaultSeed
@@ -266,12 +287,7 @@ object DedupQueries extends QueryPack {
           s"< '${graft.pipeline.CorpusSplit.ValCut}' THEN 'val' " +
           "ELSE 'test' END"
       s"WITH RECURSIVE $jaccardPairsCte, " +
-        "pairs AS (SELECT id_a, id_b FROM jp WHERE jaccard >= 0.8), " +
-        "edges AS (SELECT id_a AS src, id_b AS dst FROM pairs " +
-        "UNION ALL SELECT id_b, id_a FROM pairs), " +
-        "reach(id, r) AS (SELECT src, src FROM edges " +
-        "UNION SELECT e.src, reach.r FROM edges e " +
-        "JOIN reach ON e.dst = reach.id), " +
+        nearDupReachSql + ", " +
         "cl AS (SELECT id, MIN(r) AS cluster FROM reach GROUP BY id), " +
         "asg AS (SELECT dd.doc_id, " +
         "coalesce(cl.cluster, dd.doc_id) AS rep FROM documents dd " +
@@ -326,25 +342,12 @@ object DedupQueries extends QueryPack {
     */
   private def clustersQuery = QueryDef(
     "dedup_clusters_documents",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents", parallelize = true)
-      val sets = Dedup.shingleSets(docs, "doc_id", "text", 3).persist()
-      try {
-        val pairs = Dedup
-          .jaccardOnPairsFromSets(blockedPairs(docs), sets, "doc_id")
-          .filter(col("jaccard") >= 0.8)
-          .select("id_a", "id_b")
-        // survivorsLocal releases the propagation cache inside the call
-        Dedup.survivorsLocal(pairs).orderBy("cluster", "id")
-      } finally { sets.unpersist(blocking = false); () }
+    (s, dir) => withNearDupPairs(s, dir) { (_, pairs) =>
+      // survivorsLocal releases the propagation cache inside the call
+      Dedup.survivorsLocal(pairs).orderBy("cluster", "id")
     },
     Some(s"WITH RECURSIVE $jaccardPairsCte, " +
-      "pairs AS (SELECT id_a, id_b FROM jp WHERE jaccard >= 0.8), " +
-      "edges AS (SELECT id_a AS src, id_b AS dst FROM pairs " +
-      "UNION ALL SELECT id_b, id_a FROM pairs), " +
-      "reach(id, r) AS (SELECT src, src FROM edges " +
-      "UNION SELECT e.src, reach.r FROM edges e " +
-      "JOIN reach ON e.dst = reach.id) " +
+      nearDupReachSql + " " +
       "SELECT MIN(r) AS cluster, id, (id = MIN(r)) AS is_survivor " +
       "FROM reach GROUP BY id ORDER BY cluster, id"))
 
@@ -397,35 +400,44 @@ object DedupQueries extends QueryPack {
     * on the gate corpus empirically: `EquivalenceProbe` and the floor
     * tests check it).
     */
-  private def minhashOracleSql: String = {
-      val perm = s"((2*k+1) * (h % 2147483647) + (40503*k+12345)) " +
-        "% 2147483647"
-      s"WITH ${shingleCtes("documents")}, " +
-        "sets AS (SELECT doc_id, list_distinct(s) AS s FROM sh), " +
-        "b AS (SELECT doc_id, s, list_transform(s, x -> " +
-        s"${md5BaseSql("x")}) AS bases FROM sets), " +
-        "sig AS (SELECT doc_id, list_transform(generate_series(0, 127), " +
-        "k -> coalesce(list_min(list_transform(bases, h -> " +
-        s"$perm)), 2147483647)) AS sig FROM b), " +
-        "bands AS (SELECT doc_id, u['i'] AS band_idx, u['h'] AS " +
-        "band_hash FROM (SELECT doc_id, unnest(list_transform(" +
-        "generate_series(0, 31), j -> {'i': j, 'h': md5(array_to_string(" +
-        "sig[j*4+1:(j+1)*4], '-'))})) AS u FROM sig)), " +
-        "bn AS (SELECT band_idx, band_hash, count(*) AS n FROM bands " +
-        "GROUP BY 1, 2), " +
-        "bb AS (SELECT bands.doc_id, bands.band_idx, bands.band_hash " +
-        "FROM bands JOIN bn USING (band_idx, band_hash) " +
-        "WHERE n BETWEEN 2 AND 64), " +
-        "cand AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b " +
-        "FROM bb a JOIN bb b2 ON a.band_idx = b2.band_idx AND " +
-        "a.band_hash = b2.band_hash AND a.doc_id < b2.doc_id), " +
-        "jp AS (SELECT c.id_a, c.id_b, " +
-        "len(list_intersect(sa.s, sb.s))::DOUBLE / " +
-        "greatest(len(list_distinct(list_concat(sa.s, sb.s))), 1) AS " +
-        "jaccard FROM cand c JOIN sets sa ON sa.doc_id = c.id_a " +
-        "JOIN sets sb ON sb.doc_id = c.id_b) " +
-        "SELECT id_a, id_b, jaccard FROM jp WHERE jaccard >= 0.8 " +
-        "ORDER BY id_a, id_b"
+  private def minhashOracleSql: String =
+    minhashBandsSql +
+      "bn AS (SELECT band_idx, band_hash, count(*) AS n FROM bands " +
+      "GROUP BY 1, 2), " +
+      "bb AS (SELECT bands.doc_id, bands.band_idx, bands.band_hash " +
+      "FROM bands JOIN bn USING (band_idx, band_hash) " +
+      "WHERE n BETWEEN 2 AND 64), " +
+      "cand AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b " +
+      "FROM bb a JOIN bb b2 ON a.band_idx = b2.band_idx AND " +
+      "a.band_hash = b2.band_hash AND a.doc_id < b2.doc_id), " +
+      "jp AS (SELECT c.id_a, c.id_b, " +
+      "len(list_intersect(sa.s, sb.s))::DOUBLE / " +
+      "greatest(len(list_distinct(list_concat(sa.s, sb.s))), 1) AS " +
+      "jaccard FROM cand c JOIN sets sa ON sa.doc_id = c.id_a " +
+      "JOIN sets sb ON sb.doc_id = c.id_b) " +
+      "SELECT id_a, id_b, jaccard FROM jp WHERE jaccard >= 0.8 " +
+      "ORDER BY id_a, id_b"
+
+  /** The MinHash oracles' `WITH` chain up to `bands(doc_id, band_idx,
+    * band_hash)`: distinct 3-shingle `sets`, md5 base hashes, the
+    * 128-slot signature under the closed-form family (aᵢ=2i+1,
+    * bᵢ=40503i+12345 mod 2³¹−1) and 32 md5 band hashes of 4 slots
+    * ([[Dedup.minHashBands]]). Carries its trailing ", ".
+    */
+  private def minhashBandsSql: String = {
+    val perm = s"((2*k+1) * (h % 2147483647) + (40503*k+12345)) " +
+      "% 2147483647"
+    s"WITH ${shingleCtes("documents")}, " +
+      "sets AS (SELECT doc_id, list_distinct(s) AS s FROM sh), " +
+      "b AS (SELECT doc_id, s, list_transform(s, x -> " +
+      s"${md5BaseSql("x")}) AS bases FROM sets), " +
+      "sig AS (SELECT doc_id, list_transform(generate_series(0, 127), " +
+      "k -> coalesce(list_min(list_transform(bases, h -> " +
+      s"$perm)), 2147483647)) AS sig FROM b), " +
+      "bands AS (SELECT doc_id, u['i'] AS band_idx, u['h'] AS " +
+      "band_hash FROM (SELECT doc_id, unnest(list_transform(" +
+      "generate_series(0, 31), j -> {'i': j, 'h': md5(array_to_string(" +
+      "sig[j*4+1:(j+1)*4], '-'))})) AS u FROM sig)), "
   }
 
   /** SimHash near-dup report — FULLY ORACLED since r8, re-grained in
@@ -531,18 +543,29 @@ object DedupQueries extends QueryPack {
         graft.io.Tables.load(s, dir, "embeddings"),
         "vec_id", "embedding", "label", threshold = 0.3)
       .orderBy("id_a", "id_b"),
-    Some(
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label
-        |  FROM embeddings),
-        |p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  CASE WHEN sqrt(list_dot_product(a.v, a.v)) *
-        |    sqrt(list_dot_product(b.v, b.v)) = 0 THEN 0.0
-        |  ELSE list_dot_product(a.v, b.v) /
-        |    (sqrt(list_dot_product(a.v, a.v)) *
-        |     sqrt(list_dot_product(b.v, b.v))) END AS cosine
-        |  FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id)
-        |SELECT id_a, id_b, cosine FROM p WHERE cosine >= 0.3
-        |ORDER BY id_a, id_b""".stripMargin.replace("\n", " ")))
+    Some(embBlockedOracleSql))
+
+  /** CTE `p(id_a, id_b, cosine)` over `e(vec_id, v, label)`: the exact
+    * cosine of every same-label pair.
+    */
+  private val embLabelPairsSql =
+    """p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+      |  CASE WHEN sqrt(list_dot_product(a.v, a.v)) *
+      |    sqrt(list_dot_product(b.v, b.v)) = 0 THEN 0.0
+      |  ELSE list_dot_product(a.v, b.v) /
+      |    (sqrt(list_dot_product(a.v, a.v)) *
+      |     sqrt(list_dot_product(b.v, b.v))) END AS cosine
+      |  FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id)"""
+      .stripMargin.replace("\n", " ")
+
+  /** The label-blocked cosine ≥ 0.3 pairs — also the oracle of the SQL
+    * surface's twin, `sql_embedding_dedup`.
+    */
+  private[graft] val embBlockedOracleSql =
+    "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label   " +
+      s"FROM embeddings), $embLabelPairsSql " +
+      "SELECT id_a, id_b, cosine FROM p WHERE cosine >= 0.3 " +
+      "ORDER BY id_a, id_b"
 
   /** Embedding-cosine near-dup, sign-LSH bucketed — ORACLED since the
     * r7 second pass: the hyperplanes are deterministic seeded doubles
@@ -569,19 +592,8 @@ object DedupQueries extends QueryPack {
         maxBucket = LshMaxBucket)
       .orderBy("id_a", "id_b"),
     Some {
-      def planeSql(t: Int, j: Int): String =
-        graft.util.OracleSql.dblArray(
-          graft.sim.Similarity.planeValues(t, j, LshDims))
-      def bucketSql(t: Int): String = (0 until LshBits).map { j =>
-        s"(CASE WHEN list_dot_product(v, ${planeSql(t, j)}::DOUBLE[]) " +
-          s">= 0 THEN ${1L << j} ELSE 0 END)"
-      }.mkString(" + ")
-      val idxArms = (0 until LshTables).map(t =>
-        s"SELECT vec_id, $t AS table_idx, ${bucketSql(t)} AS bucket " +
-          "FROM e").mkString(" UNION ALL ")
-      "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v " +
-        "FROM embeddings), " +
-        s"idx AS ($idxArms), " +
+      "WITH " + graft.sim.SimilarityQueries.lshIndexCtes(
+          LshTables, LshBits, LshDims) +
         "bn AS (SELECT table_idx, bucket, count(*) AS n FROM idx " +
         "GROUP BY 1, 2), " +
         "bidx AS (SELECT i.vec_id, i.table_idx, i.bucket FROM idx i " +
@@ -623,16 +635,9 @@ object DedupQueries extends QueryPack {
       Dedup.survivorsLocal(pairs).orderBy("cluster", "id")
     },
     Some(
-      """WITH RECURSIVE e AS (SELECT vec_id, embedding::DOUBLE[] AS v,
-        |  label FROM embeddings),
-        |p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  CASE WHEN sqrt(list_dot_product(a.v, a.v)) *
-        |    sqrt(list_dot_product(b.v, b.v)) = 0 THEN 0.0
-        |  ELSE list_dot_product(a.v, b.v) /
-        |    (sqrt(list_dot_product(a.v, a.v)) *
-        |     sqrt(list_dot_product(b.v, b.v))) END AS cosine
-        |  FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id),
-        |pairs AS (SELECT id_a, id_b FROM p WHERE cosine >= 0.3),
+      "WITH RECURSIVE e AS (SELECT vec_id, embedding::DOUBLE[] AS v,   " +
+        s"label FROM embeddings), $embLabelPairsSql, " +
+        """pairs AS (SELECT id_a, id_b FROM p WHERE cosine >= 0.3),
         |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
         |  UNION ALL SELECT id_b, id_a FROM pairs),
         |reach(id, r) AS (SELECT src, src FROM edges
@@ -749,20 +754,8 @@ object DedupQueries extends QueryPack {
     * lanes' [2, 64]), candidates = batch bands equi-joined to bounded
     * corpus buckets, survivors exact-Jaccard ≥ 0.8.
     */
-  private[graft] def incrementalMinhashOracleSql: String = {
-    val perm = s"((2*k+1) * (h % 2147483647) + (40503*k+12345)) " +
-      "% 2147483647"
-    s"WITH ${shingleCtes("documents")}, " +
-      "sets AS (SELECT doc_id, list_distinct(s) AS s FROM sh), " +
-      "b AS (SELECT doc_id, s, list_transform(s, x -> " +
-      s"${md5BaseSql("x")}) AS bases FROM sets), " +
-      "sig AS (SELECT doc_id, list_transform(generate_series(0, 127), " +
-      "k -> coalesce(list_min(list_transform(bases, h -> " +
-      s"$perm)), 2147483647)) AS sig FROM b), " +
-      "bands AS (SELECT doc_id, u['i'] AS band_idx, u['h'] AS " +
-      "band_hash FROM (SELECT doc_id, unnest(list_transform(" +
-      "generate_series(0, 31), j -> {'i': j, 'h': md5(array_to_string(" +
-      "sig[j*4+1:(j+1)*4], '-'))})) AS u FROM sig)), " +
+  private[graft] def incrementalMinhashOracleSql: String =
+    minhashBandsSql +
       "cb AS (SELECT * FROM bands WHERE doc_id % 10 < 8), " +
       "bn AS (SELECT band_idx, band_hash, count(*) AS n FROM cb " +
       "GROUP BY 1, 2), " +
@@ -779,7 +772,6 @@ object DedupQueries extends QueryPack {
       "JOIN sets sb ON sb.doc_id = cand.dup_of) " +
       "SELECT batch_id, dup_of, jaccard FROM jp WHERE jaccard >= 0.8 " +
       "ORDER BY batch_id, dup_of"
-  }
 
   /** Dataset-overlap matrix ([[Dedup.sourceOverlap]]): exact Jaccard of
     * per-source fingerprint sets for every source pair (zero-overlap
@@ -923,37 +915,24 @@ object DedupQueries extends QueryPack {
     */
   private def canonicalQuery = QueryDef(
     "dedup_canonical_documents",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents", parallelize = true)
-      val sets = Dedup.shingleSets(docs, "doc_id", "text", 3).persist()
-      try {
-        val pairs = Dedup
-          .jaccardOnPairsFromSets(blockedPairs(docs), sets, "doc_id")
-          .filter(col("jaccard") >= 0.8)
-          .select("id_a", "id_b")
-        val members = Dedup.survivorsLocal(pairs)
-          .select(col("cluster"), col("id").as("doc_id"))
-        val margins = graft.text.QualityModel.scorePinned(docs,
-            "doc_id", "text", graft.text.QualityGatePinned.weights,
-            graft.text.QualityGatePinned.bias)
-          .select(col("doc_id"), col("margin"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("cluster")
-          .orderBy(col("margin").desc, col("doc_id").asc)
-        members.join(margins, Seq("doc_id"))
-          .withColumn("__rn", row_number().over(w))
-          .select(col("cluster"), col("doc_id"), col("margin"),
-            (col("__rn") === 1).as("is_canonical"))
-          .orderBy("cluster", "doc_id")
-      } finally { sets.unpersist(blocking = false); () }
+    (s, dir) => withNearDupPairs(s, dir) { (docs, pairs) =>
+      val members = Dedup.survivorsLocal(pairs)
+        .select(col("cluster"), col("id").as("doc_id"))
+      val margins = graft.text.QualityModel.scorePinned(docs,
+          "doc_id", "text", graft.text.QualityGatePinned.weights,
+          graft.text.QualityGatePinned.bias)
+        .select(col("doc_id"), col("margin"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("cluster")
+        .orderBy(col("margin").desc, col("doc_id").asc)
+      members.join(margins, Seq("doc_id"))
+        .withColumn("__rn", row_number().over(w))
+        .select(col("cluster"), col("doc_id"), col("margin"),
+          (col("__rn") === 1).as("is_canonical"))
+        .orderBy("cluster", "doc_id")
     },
     Some(s"WITH RECURSIVE $jaccardPairsCte, " +
-      "pairs AS (SELECT id_a, id_b FROM jp WHERE jaccard >= 0.8), " +
-      "edges AS (SELECT id_a AS src, id_b AS dst FROM pairs " +
-      "UNION ALL SELECT id_b, id_a FROM pairs), " +
-      "reach(id, r) AS (SELECT src, src FROM edges " +
-      "UNION SELECT e.src, reach.r FROM edges e " +
-      "JOIN reach ON e.dst = reach.id), " +
+      nearDupReachSql + ", " +
       "cl AS (SELECT MIN(r) AS cluster, id AS doc_id FROM reach " +
       "GROUP BY id), " +
       "gg AS (SELECT CASE WHEN (SELECT count(*) FROM documents) = " +

@@ -55,18 +55,7 @@ object ExecQueries extends QueryPack {
           |SELECT id_a, id_b, cosine FROM p WHERE cosine >= 0.3
           |ORDER BY id_a, id_b""".stripMargin)
     },
-    Some(
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label
-        |  FROM embeddings),
-        |p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  CASE WHEN sqrt(list_dot_product(a.v, a.v)) *
-        |    sqrt(list_dot_product(b.v, b.v)) = 0 THEN 0.0
-        |  ELSE list_dot_product(a.v, b.v) /
-        |    (sqrt(list_dot_product(a.v, a.v)) *
-        |     sqrt(list_dot_product(b.v, b.v))) END AS cosine
-        |  FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id)
-        |SELECT id_a, id_b, cosine FROM p WHERE cosine >= 0.3
-        |ORDER BY id_a, id_b""".stripMargin.replace("\n", " ")))
+    Some(graft.dedup.DedupQueries.embBlockedOracleSql))
 
   override def queries: Seq[QueryDef] = Seq(scriptQuery, sqlVectorQuery)
 }

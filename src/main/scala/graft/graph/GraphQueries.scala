@@ -16,6 +16,25 @@ object GraphQueries extends QueryPack {
 
   private val Iters = 3
 
+  /** The mirrored order-part edges of lineitem rows `li`: distinct
+    * (order `2·orderkey`, part `2·partkey+1`) pairs, each emitted in
+    * both directions map-side (explode, not a second-scan union). o is
+    * even and p odd, so mirrored edges cannot collide: the
+    * `assumeDistinct`/`assumeMirrored` contracts of [[PageRank.ranks]]
+    * hold by construction, and it skips the edge re-distinct, the dst
+    * union leg and the dangling machinery.
+    */
+  private[graft] def orderPartEdges(li: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    li.select(
+        (col("l_orderkey") * 2).cast("long").as("o"),
+        (col("l_partkey") * 2 + 1).cast("long").as("p"))
+      .distinct()
+      .select(explode(array(
+        struct(col("o").as("src"), col("p").as("dst")),
+        struct(col("p").as("src"), col("o").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+
   /** PageRank over the bipartite order↔part co-occurrence graph (both
     * directions of every lineitem pair), 3 iterations, top-20 by rank.
     * At 100 TB this is the product-affinity centrality ranking; the
@@ -28,29 +47,15 @@ object GraphQueries extends QueryPack {
     * unfiltered graph is what the scale probe measures (x1–x10,
     * `graph_pagerank` row). Node ids are packed longs
     * (`2·orderkey` / `2·partkey+1`) — integer keys, not concatenated
-    * strings, because every shuffle in the operator keys on them. Edge
-    * dedup happens inside [[PageRank.ranks]]; no pre-distinct here.
+    * strings, because every shuffle in the operator keys on them. Edges
+    * come from [[orderPartEdges]].
     */
   private def pagerankQuery = QueryDef(
     "graph_pagerank_parts",
     (s, dir) => {
       val li = Tables.load(s, dir, "lineitem", parallelize = true)
         .filter(col("l_partkey") % 8 === 0)
-      // dedup at the PAIR level, then mirror map-side (explode, not a
-      // second-scan union): o is even and p odd, so mirrored edges
-      // cannot collide — the assumeDistinct/assumeMirrored contracts
-      // hold by construction and ranks() skips the edge re-distinct,
-      // the dst union leg and the dangling machinery (r12: one scan
-      // and two half-sized exchanges off the lane's fixed cost)
-      val pairs = li.select(
-          (col("l_orderkey") * 2).cast("long").as("o"),
-          (col("l_partkey") * 2 + 1).cast("long").as("p"))
-        .distinct()
-      val edges = pairs.select(explode(array(
-          struct(col("o").as("src"), col("p").as("dst")),
-          struct(col("p").as("src"), col("o").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      PageRank.ranks(edges, Iters, assumeDistinct = true,
+      PageRank.ranks(orderPartEdges(li), Iters, assumeDistinct = true,
         assumeMirrored = true)
         .select(col("node"), col("r").as("rank_pico"))
         .orderBy(col("rank_pico").desc, col("node"))
@@ -88,6 +93,20 @@ object GraphQueries extends QueryPack {
         "ORDER BY rank_pico DESC, node LIMIT 20"
     })
 
+  /** Every within-basket pair `(src, dst)` of the order-part frame
+    * `t(o, p)`, src < dst, by the AssociationRules nested-transform
+    * idiom (C(k,2) per basket, no self-join).
+    */
+  private def basketPairs(t: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    t.groupBy(col("o"))
+      .agg(sort_array(collect_set(col("p"))).as("ps"))
+      .select(explode(expr(
+        "flatten(transform(ps, (x, i) -> " +
+          "transform(slice(ps, i + 2, size(ps)), " +
+          "y -> struct(x AS src, y AS dst))))")).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+
   /** Triangle participation over the part co-purchase projection
     * (parts sharing an order, order-sliced to every fourth order so
     * baskets stay WHOLE — slicing parts would thin the very cliques
@@ -108,14 +127,7 @@ object GraphQueries extends QueryPack {
         .filter(col("l_orderkey") % 4 === 0)
         .select(col("l_orderkey").as("o"),
           col("l_partkey").cast("long").as("p"))
-      val pairs = t.groupBy(col("o"))
-        .agg(sort_array(collect_set(col("p"))).as("ps"))
-        .select(explode(expr(
-          "flatten(transform(ps, (x, i) -> " +
-            "transform(slice(ps, i + 2, size(ps)), " +
-            "y -> struct(x AS src, y AS dst))))")).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      Triangles.perNode(pairs)
+      Triangles.perNode(basketPairs(t))
         .orderBy(col("tri_cnt").desc, col("node"))
         .limit(20)
     },
@@ -164,17 +176,10 @@ object GraphQueries extends QueryPack {
     */
   private[graft] def ccPairs(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Tables.load(s, dir, "lineitem")
-      .filter(col("l_orderkey") % 16 === 0)
-      .select(col("l_orderkey").as("o"),
-        col("l_partkey").cast("long").as("p"))
-      .groupBy(col("o"))
-      .agg(sort_array(collect_set(col("p"))).as("ps"))
-      .select(explode(expr(
-        "flatten(transform(ps, (x, i) -> " +
-          "transform(slice(ps, i + 2, size(ps)), " +
-          "y -> struct(x AS src, y AS dst))))")).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+    basketPairs(Tables.load(s, dir, "lineitem")
+        .filter(col("l_orderkey") % 16 === 0)
+        .select(col("l_orderkey").as("o"),
+          col("l_partkey").cast("long").as("p")))
       .distinct()
       .select(explode(array(
           struct(col("src"), col("dst")),

@@ -479,17 +479,7 @@ object MultimodalQueries extends QueryPack {
     */
   private def audioNearDupQuery = QueryDef(
     "dedup_audio_neardup_documents",
-    (s, dir) => {
-      val media = Multimodal.synthesize(
-        Tables.load(s, dir, "documents", parallelize = true))
-      val fps = AudioHash.fingerprints(media).toDF()
-        .select(col("media_id"), col("fp"))
-      graft.util.Frames.localized(
-          graft.dedup.SimHash.nearDupFromFingerprints(fps, "media_id",
-            "fp", chunkBits = MediaChunkBits, nChunks = MediaChunks,
-            maxHamming = MediaMaxHamming, maxBucket = MediaMaxBucket))
-        .orderBy("id_a", "id_b")
-    },
+    (s, dir) => mediaNearDup(s, dir)(AudioHash.fingerprints(_).toDF()),
     Some(s"WITH $audioFpCtes, $fpNearDupTailSql"))
 
   /** Banded video near-dup — the acoustic recipe over the sampled
@@ -497,18 +487,24 @@ object MultimodalQueries extends QueryPack {
     */
   private def videoNearDupQuery = QueryDef(
     "dedup_video_neardup_documents",
-    (s, dir) => {
-      val media = Multimodal.synthesize(
-        Tables.load(s, dir, "documents", parallelize = true))
-      val fps = VideoHash.fingerprints(media).toDF()
-        .select(col("media_id"), col("fp"))
-      graft.util.Frames.localized(
-          graft.dedup.SimHash.nearDupFromFingerprints(fps, "media_id",
-            "fp", chunkBits = MediaChunkBits, nChunks = MediaChunks,
-            maxHamming = MediaMaxHamming, maxBucket = MediaMaxBucket))
-        .orderBy("id_a", "id_b")
-    },
+    (s, dir) => mediaNearDup(s, dir)(VideoHash.fingerprints(_).toDF()),
     Some(s"WITH $videoFpCtes, $fpNearDupTailSql"))
+
+  /** The banded near-dup report over the fingerprints `fps` computes
+    * from the synthesized media corpus of `documents`.
+    */
+  private def mediaNearDup(s: org.apache.spark.sql.SparkSession,
+      dir: String)(fps: org.apache.spark.sql.Dataset[Multimodal.Media] =>
+        org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    graft.util.Frames.localized(
+        graft.dedup.SimHash.nearDupFromFingerprints(
+          fps(Multimodal.synthesize(
+              Tables.load(s, dir, "documents", parallelize = true)))
+            .select(col("media_id"), col("fp")),
+          "media_id", "fp", chunkBits = MediaChunkBits,
+          nChunks = MediaChunks, maxHamming = MediaMaxHamming,
+          maxBucket = MediaMaxBucket))
+      .orderBy("id_a", "id_b")
 
   override def queries: Seq[QueryDef] =
     Seq(pipelineQuery, audioQuery, videoQuery, imageHashQuery,

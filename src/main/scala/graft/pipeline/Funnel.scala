@@ -65,10 +65,16 @@ object Funnel {
     val stageCounts = stages.indices.map(i =>
       coalesce(sum(when(col(s"__r$i"), 1L).otherwise(0L)), lit(0L))
         .as(s"__n$i"))
-    val counts = perUser.agg(stageCounts.head, stageCounts.tail: _*)
-    // unpivot the one counts row into funnel order without a driver
-    // collect (and without any window — conversion is computed against
-    // the stage-0 column while it is still a sibling column)
+    funnelRows(perUser.agg(stageCounts.head, stageCounts.tail: _*), stages)
+  }
+
+  /** Unpivots the one stage-counts row (`__n<i>` per stage) into funnel
+    * order: `(stage, stage_idx, users, conversion)`. No driver collect
+    * and no window — conversion is computed against the stage-0 column
+    * while it is still a sibling column.
+    */
+  private def funnelRows(counts: DataFrame, stages: Seq[String])
+      : DataFrame = {
     val stageRows: Seq[Column] = stages.zipWithIndex.map { case (s, i) =>
       struct(lit(s).as("stage"), lit(i.toLong).as("stage_idx"),
         col(s"__n$i").as("users"),
@@ -196,16 +202,6 @@ object Funnel {
     val stageCounts = stages.indices.map(i =>
       coalesce(sum(when(col("deepest") >= i, 1L).otherwise(0L)), lit(0L))
         .as(s"__n$i"))
-    val counts = perUser.agg(stageCounts.head, stageCounts.tail: _*)
-    val stageRows: Seq[Column] = stages.zipWithIndex.map { case (s, i) =>
-      struct(lit(s).as("stage"), lit(i.toLong).as("stage_idx"),
-        col(s"__n$i").as("users"),
-        when(col("__n0") === 0L, lit(0.0))
-          .otherwise(col(s"__n$i").cast("double") / col("__n0"))
-          .as("conversion"))
-    }
-    counts.select(explode(array(stageRows: _*)).as("e"))
-      .select(col("e.stage"), col("e.stage_idx"), col("e.users"),
-        col("e.conversion"))
+    funnelRows(perUser.agg(stageCounts.head, stageCounts.tail: _*), stages)
   }
 }

@@ -163,6 +163,46 @@ object Mixing {
       .drop("__graft_mix_cum", "__graft_mix_target")
   }
 
+  /** The per-language routed-curation funnel: each document of `docs`
+    * routes to the majority language of its `textCol` lines
+    * ([[graft.text.LangSegment.segment]], lines classified by
+    * `langOf`), [[byTemperatureRoutedT2]] rebalances sources within
+    * each language under `budgets`, and the result has one row per
+    * (`lang`, source): routed `n_docs`/`lang_tokens` and selected
+    * `n_selected`/`sel_tokens`, ordered by (lang, source).
+    *
+    * The corpus text is scanned once: the routed frame (id, source,
+    * tokens, lang) is metadata-sized and checkpointed LAZILY — the
+    * mixing aggregate, the selection window and the funnel join all
+    * consume it inside the one final action, whose first scan stage
+    * materializes the cache (block-level compute dedup covers the
+    * concurrent window), so classification pays no dedicated job.
+    */
+  def routedFunnel(docs: DataFrame, idCol: String, sourceCol: String,
+      textCol: String, budgets: Map[String, Long],
+      langOf: Column => Column = graft.text.TextAnalysis.langId)
+      : DataFrame = {
+    val base = docs
+      .select(col(idCol), col(sourceCol),
+        graft.text.TextAnalysis.tokenCount(col(textCol)).cast("long")
+          .as("n_tokens"))
+      .join(graft.text.LangSegment.segment(docs, idCol, textCol, langOf)
+        .select(col(idCol), col("majority_lang").as("lang")),
+        Seq(idCol))
+      .localCheckpoint(false)
+    val sel = byTemperatureRoutedT2(
+        base, "lang", sourceCol, idCol, "n_tokens", budgets)
+      .select(col(idCol), lit(true).as("__sel"))
+    base.join(sel, Seq(idCol), "left")
+      .groupBy("lang", sourceCol).agg(
+        count(lit(1)).as("n_docs"),
+        sum(col("n_tokens")).as("lang_tokens"),
+        sum(when(col("__sel"), 1L).otherwise(0L)).as("n_selected"),
+        sum(when(col("__sel"), col("n_tokens")).otherwise(0L))
+          .as("sel_tokens"))
+      .orderBy("lang", sourceCol)
+  }
+
   private def budgetCol(sourceCol: String, budgets: Map[String, Long],
       defaultBudget: Long): Column =
     coalesce(

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, QueryPack}
@@ -204,7 +204,14 @@ object PipelineQueries extends QueryPack {
         Tables.load(s, dir, "events"), "user_id", "ts", "event_id",
         "event_type", Seq("view", "click", "purchase"))
       .orderBy("stage_idx"),
-    Some("WITH e AS (SELECT user_id AS u, epoch_us(ts) AS ts, " +
+    Some(funnelOracleSql))
+
+  /** The view → click → purchase funnel as DuckDB SQL — also the
+    * oracle of the streaming twin `stream_funnel_events` (streaming
+    * state machine ≡ batch running windows).
+    */
+  private[graft] val funnelOracleSql: String =
+    "WITH e AS (SELECT user_id AS u, epoch_us(ts) AS ts, " +
       "event_id AS id, event_type AS t FROM events), " +
       "f0 AS (SELECT u, ts, id, t, min(CASE WHEN t = 'view' THEN ts END) " +
       "OVER w AS g0 FROM e WINDOW w AS (PARTITION BY u ORDER BY ts, id " +
@@ -230,7 +237,8 @@ object PipelineQueries extends QueryPack {
       "SELECT 'click', 1::BIGINT, n1, CASE WHEN n0 = 0 THEN 0.0 ELSE " +
       "n1::DOUBLE / n0 END FROM c UNION ALL " +
       "SELECT 'purchase', 2::BIGINT, n2, CASE WHEN n0 = 0 THEN 0.0 ELSE " +
-      "n2::DOUBLE / n0 END FROM c) ORDER BY stage_idx"))
+      "n2::DOUBLE / n0 END FROM c) ORDER BY stage_idx"
+
 
   private def snapshotDiffQuery = QueryDef(
     "snapshot_diff_orders",
@@ -349,6 +357,19 @@ object PipelineQueries extends QueryPack {
     */
   private val ResampleStepUs = 6L * 3600L * 1000000L
 
+  /** The resample oracles' CTEs over `s(user_id, slot, v, event_id,
+    * ts_us)`, between spaces: `o`, each slot's last observation, and
+    * `g`, every user's slot grid from first to last slot (via `b`).
+    */
+  private val resampleGridSql = " " +
+    """o AS (SELECT user_id, slot, v FROM s QUALIFY row_number()
+      |    OVER (PARTITION BY user_id, slot
+      |    ORDER BY ts_us DESC, event_id DESC) = 1),
+      |b AS (SELECT user_id, min(slot) AS lo, max(slot) AS hi
+      |    FROM s GROUP BY 1),
+      |g AS (SELECT user_id, unnest(generate_series(lo, hi)) AS slot
+      |    FROM b)""".stripMargin.replace("\n", " ")
+
   private def resampleQuery = QueryDef(
     "events_resample_ffill",
     (s, dir) => Timeseries.resampleFfill(
@@ -357,14 +378,8 @@ object PipelineQueries extends QueryPack {
       .orderBy("user_id", "slot"),
     Some(s"""WITH s AS (SELECT user_id,
            |    epoch_us(ts) // $ResampleStepUs AS slot, value AS v,
-           |    event_id, epoch_us(ts) AS ts_us FROM events),
-           |o AS (SELECT user_id, slot, v FROM s QUALIFY row_number()
-           |    OVER (PARTITION BY user_id, slot
-           |    ORDER BY ts_us DESC, event_id DESC) = 1),
-           |b AS (SELECT user_id, min(slot) AS lo, max(slot) AS hi
-           |    FROM s GROUP BY 1),
-           |g AS (SELECT user_id, unnest(generate_series(lo, hi)) AS slot
-           |    FROM b)
+           |    event_id, epoch_us(ts) AS ts_us FROM events),"""
+      .stripMargin.replace("\n", " ") + resampleGridSql + s"""
            |SELECT g.user_id, g.slot,
            |  g.slot * $ResampleStepUs AS slot_ts_us,
            |  last_value(o.v IGNORE NULLS) OVER (PARTITION BY g.user_id
@@ -445,14 +460,8 @@ object PipelineQueries extends QueryPack {
            |    THEN (user_id % 5 + 1) * 200.0 ELSE 0.0 END AS value
            |    FROM events),
            |s AS (SELECT user_id, epoch_us(ts) // $ResampleStepUs AS slot,
-           |    value AS v, event_id, epoch_us(ts) AS ts_us FROM e),
-           |o AS (SELECT user_id, slot, v FROM s QUALIFY row_number()
-           |    OVER (PARTITION BY user_id, slot
-           |    ORDER BY ts_us DESC, event_id DESC) = 1),
-           |b AS (SELECT user_id, min(slot) AS lo, max(slot) AS hi
-           |    FROM s GROUP BY 1),
-           |g AS (SELECT user_id, unnest(generate_series(lo, hi)) AS slot
-           |    FROM b),
+           |    value AS v, event_id, epoch_us(ts) AS ts_us FROM e),"""
+      .stripMargin.replace("\n", " ") + resampleGridSql + s""",
            |r AS (SELECT g.user_id, g.slot,
            |    last_value(o.v IGNORE NULLS) OVER (PARTITION BY g.user_id
            |    ORDER BY g.slot ROWS BETWEEN UNBOUNDED PRECEDING AND
@@ -493,10 +502,7 @@ object PipelineQueries extends QueryPack {
     "agg_incremental_events",
     (s, dir) => {
       val ev = Tables.load(s, dir, "events")
-      val deletes = ev.filter(col("event_id") % 7 === 0)
-      val inserts = ev.filter(col("event_id") % 5 === 0)
-        .withColumn("event_id", col("event_id") + 1000000000L)
-        .withColumn("value", col("value") + 100.0)
+      val (inserts, deletes) = aggChangeSet(ev)
       val state =
         IncrementalAgg.aggState(ev, Seq("event_type"), Seq("value"))
       IncrementalAgg.report(
@@ -505,18 +511,40 @@ object PipelineQueries extends QueryPack {
         Seq("event_type"), Seq("value"))
         .orderBy("event_type")
     },
-    Some("""WITH ins AS (SELECT event_type, value + 100.0 AS value
-           |    FROM events WHERE event_id % 5 = 0),
-           |b AS (SELECT event_type, value FROM events
-           |    WHERE event_id % 7 <> 0
-           |    UNION ALL SELECT event_type, value FROM ins)
-           |SELECT event_type, count(*) AS cnt,
-           |  CAST(sum(CAST(round(CAST(value AS DOUBLE), 4)
-           |    AS DECIMAL(20,4))) AS DOUBLE) AS sum_value,
-           |  CAST(sum(CAST(round(CAST(value AS DOUBLE), 4)
-           |    AS DECIMAL(20,4))) AS DOUBLE) / count(*) AS avg_value
-           |FROM b GROUP BY 1 ORDER BY 1""".stripMargin
-      .replace("\n", " ")))
+    Some(incrementalAggOracleSql))
+
+  /** The `agg_incremental_events` change set over `ev`: (inserts =
+    * `event_id % 5 = 0` copies shifted by 1e9 ids and +100 value,
+    * deletes = `event_id % 7 = 0`).
+    */
+  private def aggChangeSet(ev: DataFrame): (DataFrame, DataFrame) =
+    (ev.filter(col("event_id") % 5 === 0)
+      .withColumn("event_id", col("event_id") + 1000000000L)
+      .withColumn("value", col("value") + 100.0),
+      ev.filter(col("event_id") % 7 === 0))
+
+  /** The incremental-aggregate oracles' shared head: the after table
+    * `b` and its per-type select up to `avg_value`, without FROM.
+    */
+  private val aggAfterSelectSql =
+    """WITH ins AS (SELECT event_type, value + 100.0 AS value
+       |    FROM events WHERE event_id % 5 = 0),
+       |b AS (SELECT event_type, value FROM events
+       |    WHERE event_id % 7 <> 0
+       |    UNION ALL SELECT event_type, value FROM ins)
+       |SELECT event_type, count(*) AS cnt,
+       |  CAST(sum(CAST(round(CAST(value AS DOUBLE), 4)
+       |    AS DECIMAL(20,4))) AS DOUBLE) AS sum_value,
+       |  CAST(sum(CAST(round(CAST(value AS DOUBLE), 4)
+       |    AS DECIMAL(20,4))) AS DOUBLE) / count(*) AS avg_value"""
+      .stripMargin.replace("\n", " ")
+
+  /** The after table's per-type count, sum and avg — also the oracle of
+    * the streaming twin `stream_incremental_agg_events` (micro-batched
+    * maintenance ≡ full recompute of the after table).
+    */
+  private[graft] val incrementalAggOracleSql: String =
+    aggAfterSelectSql + " FROM b GROUP BY 1 ORDER BY 1"
 
   /** Min/max incremental maintenance ([[IncrementalAgg.applyDeltaMinMax]]):
     * the same change set as `agg_incremental_events`, now with extremes
@@ -530,10 +558,7 @@ object PipelineQueries extends QueryPack {
     "agg_incremental_minmax_events",
     (s, dir) => {
       val ev = Tables.load(s, dir, "events")
-      val deletes = ev.filter(col("event_id") % 7 === 0)
-      val inserts = ev.filter(col("event_id") % 5 === 0)
-        .withColumn("event_id", col("event_id") + 1000000000L)
-        .withColumn("value", col("value") + 100.0)
+      val (inserts, deletes) = aggChangeSet(ev)
       val base = ev.filter(col("event_id") % 7 =!= 0)
         .unionByName(inserts)
       val state = IncrementalAgg.aggStateMinMax(ev, Seq("event_type"),
@@ -544,20 +569,9 @@ object PipelineQueries extends QueryPack {
         Seq("event_type"), Seq("value"))
         .orderBy("event_type")
     },
-    Some("""WITH ins AS (SELECT event_type, value + 100.0 AS value
-           |    FROM events WHERE event_id % 5 = 0),
-           |b AS (SELECT event_type, value FROM events
-           |    WHERE event_id % 7 <> 0
-           |    UNION ALL SELECT event_type, value FROM ins)
-           |SELECT event_type, count(*) AS cnt,
-           |  CAST(sum(CAST(round(CAST(value AS DOUBLE), 4)
-           |    AS DECIMAL(20,4))) AS DOUBLE) AS sum_value,
-           |  CAST(sum(CAST(round(CAST(value AS DOUBLE), 4)
-           |    AS DECIMAL(20,4))) AS DOUBLE) / count(*) AS avg_value,
-           |  min(CAST(value AS DOUBLE)) AS min_value,
-           |  max(CAST(value AS DOUBLE)) AS max_value
-           |FROM b GROUP BY 1 ORDER BY 1""".stripMargin
-      .replace("\n", " ")))
+    Some(aggAfterSelectSql +
+      ",   min(CAST(value AS DOUBLE)) AS min_value,   " +
+      "max(CAST(value AS DOUBLE)) AS max_value FROM b GROUP BY 1 ORDER BY 1"))
 
   /** First-order Markov transition matrix ([[Transitions.matrix]]) over
     * per-user event sequences, terminal transitions included — each
@@ -933,6 +947,24 @@ object PipelineQueries extends QueryPack {
       "FROM events e JOIN dim d ON e.event_type = d.event_type " +
       "GROUP BY e.event_type, d.type_events ORDER BY e.event_type"))
 
+  /** The SCD2 lanes' events: (event_id, ts, user_id, event_type,
+    * value).
+    */
+  private def scd2Events(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "events")
+      .select("event_id", "ts", "user_id", "event_type", "value")
+
+  /** An events history with µs interval bounds, ordered by (user,
+    * valid_from_us, event_id).
+    */
+  private def historyRows(h: DataFrame): DataFrame =
+    h.select(col("event_id"), col("user_id"), col("event_type"),
+        col("value"),
+        unix_micros(col(Scd2.ValidFrom)).as("valid_from_us"),
+        unix_micros(col(Scd2.ValidTo)).as("valid_to_us"),
+        col(Scd2.IsCurrent).as("is_current"))
+      .orderBy("user_id", "valid_from_us", "event_id")
+
   /** SCD2 history build: the events change log historized per user in
     * one window pass. Interval bounds emitted as µs longs (same
     * representation rule as every ts column here); the oracle mirrors
@@ -941,16 +973,10 @@ object PipelineQueries extends QueryPack {
   private def scd2HistoryQuery = QueryDef(
     "scd2_history_events",
     (s, dir) => {
-      val events = Tables.load(s, dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value")
+      val events = scd2Events(s, dir)
       Scd2.historize(events, Seq("user_id"), "ts",
           tieBreakers = Seq("event_id"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value"),
-          unix_micros(col(Scd2.ValidFrom)).as("valid_from_us"),
-          unix_micros(col(Scd2.ValidTo)).as("valid_to_us"),
-          col(Scd2.IsCurrent).as("is_current"))
-        .orderBy("user_id", "valid_from_us", "event_id")
+        .transform(historyRows)
     },
     Some("""SELECT event_id, user_id, event_type, value,
            |  epoch_us(ts) AS valid_from_us,
@@ -970,8 +996,7 @@ object PipelineQueries extends QueryPack {
   private def scd2AsofQuery = QueryDef(
     "scd2_asof_events",
     (s, dir) => {
-      val events = Tables.load(s, dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value")
+      val events = scd2Events(s, dir)
       Scd2.asOf(
           Scd2.historize(events, Seq("user_id"), "ts",
             tieBreakers = Seq("event_id")),
@@ -1002,8 +1027,7 @@ object PipelineQueries extends QueryPack {
   private def scd2MergeQuery = QueryDef(
     "scd2_merge_events",
     (s, dir) => {
-      val events = Tables.load(s, dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value")
+      val events = scd2Events(s, dir)
       val split = lit(SplitTs).cast("timestamp")
       val target = Scd2.historize(events.filter(col("ts") < split),
         Seq("user_id"), "ts", tieBreakers = Seq("event_id"))
@@ -1011,12 +1035,7 @@ object PipelineQueries extends QueryPack {
       Scd2.merge(target, source, Seq("user_id"), "ts",
           attrs = Seq("event_type", "value"),
           tieBreakers = Seq("event_id"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value"),
-          unix_micros(col(Scd2.ValidFrom)).as("valid_from_us"),
-          unix_micros(col(Scd2.ValidTo)).as("valid_to_us"),
-          col(Scd2.IsCurrent).as("is_current"))
-        .orderBy("user_id", "valid_from_us", "event_id")
+        .transform(historyRows)
     },
     Some(
       s"""WITH hist AS (

@@ -25,19 +25,7 @@ object ProfileQueries extends QueryPack {
   private def profileOracle(table: String, cols: Seq[ColSpec]): String = {
     val selects = cols.map { c =>
       val q = c.name
-      val minMax =
-        if (c.numeric)
-          s"MIN($q)::DOUBLE AS min_val, MAX($q)::DOUBLE AS max_val, " +
-            s"ROUND(AVG($q::DOUBLE), 4) AS avg_val, " +
-            s"ROUND(STDDEV_SAMP($q::DOUBLE), 4) AS stddev_val"
-        else
-          "NULL::DOUBLE AS min_val, NULL::DOUBLE AS max_val, " +
-            "NULL::DOUBLE AS avg_val, NULL::DOUBLE AS stddev_val"
-      val future =
-        if (c.temporal)
-          s"CAST(SUM(CASE WHEN $q > TIMESTAMP '$FixedNow' THEN 1 ELSE 0 " +
-            "END) AS BIGINT) AS future_count"
-        else "NULL::BIGINT AS future_count"
+      val (minMax, future) = valueStatsSql(c)
       s"SELECT '$q' AS column_name, '${c.engineType}' AS data_type, " +
         "COUNT(*) AS count_all, " +
         s"COUNT(DISTINCT $q) AS count_distinct, " +
@@ -49,6 +37,27 @@ object ProfileQueries extends QueryPack {
         s"$minMax, $future FROM $table"
     }
     selects.mkString(" UNION ALL ") + " ORDER BY column_name"
+  }
+
+  /** Column `c`'s value-stat selects: min/max/avg/stddev (NULL unless
+    * numeric) and the future-date count (NULL unless temporal).
+    */
+  private def valueStatsSql(c: ColSpec): (String, String) = {
+    val q = c.name
+    val minMax =
+      if (c.numeric)
+        s"MIN($q)::DOUBLE AS min_val, MAX($q)::DOUBLE AS max_val, " +
+          s"ROUND(AVG($q::DOUBLE), 4) AS avg_val, " +
+          s"ROUND(STDDEV_SAMP($q::DOUBLE), 4) AS stddev_val"
+      else
+        "NULL::DOUBLE AS min_val, NULL::DOUBLE AS max_val, " +
+          "NULL::DOUBLE AS avg_val, NULL::DOUBLE AS stddev_val"
+    val future =
+      if (c.temporal)
+        s"CAST(SUM(CASE WHEN $q > TIMESTAMP '$FixedNow' THEN 1 ELSE 0 " +
+          "END) AS BIGINT) AS future_count"
+      else "NULL::BIGINT AS future_count"
+    (minMax, future)
   }
 
   /** [[profileOracle]] wrapped with the streaming audit log's `batch_id`
@@ -110,19 +119,7 @@ object ProfileQueries extends QueryPack {
       : String = {
     val selects = cols.map { c =>
       val q = c.name
-      val minMax =
-        if (c.numeric)
-          s"MIN($q)::DOUBLE AS min_val, MAX($q)::DOUBLE AS max_val, " +
-            s"ROUND(AVG($q::DOUBLE), 4) AS avg_val, " +
-            s"ROUND(STDDEV_SAMP($q::DOUBLE), 4) AS stddev_val"
-        else
-          "NULL::DOUBLE AS min_val, NULL::DOUBLE AS max_val, " +
-            "NULL::DOUBLE AS avg_val, NULL::DOUBLE AS stddev_val"
-      val future =
-        if (c.temporal)
-          s"CAST(SUM(CASE WHEN $q > TIMESTAMP '$FixedNow' THEN 1 ELSE 0 " +
-            "END) AS BIGINT) AS future_count"
-        else "NULL::BIGINT AS future_count"
+      val (minMax, future) = valueStatsSql(c)
       s"SELECT '$q' AS column_name, '${c.engineType}' AS data_type, " +
         "COUNT(*) AS count_all, " +
         s"COUNT(*) - COUNT($q) AS count_nulls, " +

@@ -77,13 +77,6 @@ object Quantize {
             (lh.getField("h") - lh.getField("l"))).cast("long"))))
   }
 
-  /** Decode a code back to the bucket's lower edge:
-    * v̂ = lo + code · (hi − lo) / 255. Reconstruction error is bounded
-    * by one step, (hi − lo)/255 (spec-pinned).
-    */
-  def decodeExpr(code: Column, lo: Column, hi: Column): Column =
-    lo + code.cast("double") * (hi - lo) / Levels.toDouble
-
   /** The input plus `<vecCol>_dec`: each vector quantized THROUGH the
     * int8 codes and decoded back (v̂ = lo + ⌊…⌋·(hi−lo)/255; a collapsed
     * dimension decodes to lo exactly) — the value a scorer reading the

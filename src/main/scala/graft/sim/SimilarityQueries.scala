@@ -70,20 +70,9 @@ object SimilarityQueries extends QueryPack {
         .orderBy("query_id", "rank")
     },
     Some {
-      def planeSql(t: Int, j: Int): String =
-        graft.util.OracleSql.dblArray(Similarity.planeValues(t, j, LshDims))
-      def bucketSql(t: Int): String = (0 until LshBits).map { j =>
-        s"(CASE WHEN list_dot_product(v, ${planeSql(t, j)}::DOUBLE[]) " +
-          s">= 0 THEN ${1L << j} ELSE 0 END)"
-      }.mkString(" + ")
-      val idxArms = (0 until LshTables).map(t =>
-        s"SELECT vec_id, $t AS table_idx, ${bucketSql(t)} AS bucket " +
-          "FROM e").mkString(" UNION ALL ")
       val masks = Similarity.probeMasks(LshBits, LshRadius)
         .mkString("[", ", ", "]")
-      "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v " +
-        "FROM embeddings), " +
-        s"idx AS ($idxArms), " +
+      "WITH " + lshIndexCtes(LshTables, LshBits, LshDims) +
         s"qp AS (SELECT vec_id AS query_id, table_idx, " +
         s"xor(bucket, m.mask) AS bucket FROM idx, " +
         s"unnest($masks::BIGINT[]) AS m(mask) " +
@@ -91,18 +80,45 @@ object SimilarityQueries extends QueryPack {
         "cand AS (SELECT DISTINCT qp.query_id, c.vec_id AS neighbor_id " +
         "FROM qp JOIN idx c USING (table_idx, bucket) " +
         "WHERE qp.query_id <> c.vec_id), " +
-        "s AS (SELECT cd.query_id, cd.neighbor_id, " +
-        "CASE WHEN sqrt(list_dot_product(q.v, q.v)) * " +
-        "sqrt(list_dot_product(c.v, c.v)) = 0 THEN 0.0 ELSE " +
-        "list_dot_product(q.v, c.v) / (sqrt(list_dot_product(q.v, q.v)) " +
-        "* sqrt(list_dot_product(c.v, c.v))) END AS cosine " +
-        "FROM cand cd JOIN e q ON q.vec_id = cd.query_id " +
-        "JOIN e c ON c.vec_id = cd.neighbor_id) " +
-        "SELECT query_id, rn AS rank, neighbor_id, cosine FROM (" +
-        "SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id " +
-        "ORDER BY cosine DESC, neighbor_id) AS rn FROM s) " +
-        s"WHERE rn <= $K ORDER BY query_id, rank"
+        lshRankSql(K)
     })
+
+  /** CTEs `e(vec_id, v)` → `idx(vec_id, table_idx, bucket)`: every
+    * embedding's sign-bit bucket in each of `tables` random-hyperplane
+    * tables of `bits` bits ([[Similarity.planeValues]]). Carries its
+    * trailing ", ".
+    */
+  private[graft] def lshIndexCtes(tables: Int, bits: Int,
+      dims: Int): String = {
+    def planeSql(t: Int, j: Int): String =
+      graft.util.OracleSql.dblArray(Similarity.planeValues(t, j, dims))
+    def bucketSql(t: Int): String = (0 until bits).map { j =>
+      s"(CASE WHEN list_dot_product(v, ${planeSql(t, j)}::DOUBLE[]) " +
+        s">= 0 THEN ${1L << j} ELSE 0 END)"
+    }.mkString(" + ")
+    val idxArms = (0 until tables).map(t =>
+      s"SELECT vec_id, $t AS table_idx, ${bucketSql(t)} AS bucket " +
+        "FROM e").mkString(" UNION ALL ")
+    "e AS (SELECT vec_id, embedding::DOUBLE[] AS v " +
+      "FROM embeddings), " +
+      s"idx AS ($idxArms), "
+  }
+
+  /** The LSH lanes' tail over `cand(query_id, neighbor_id)` and `e`:
+    * exact cosines, then each query's top `k` by (cosine DESC, id).
+    */
+  private def lshRankSql(k: Int): String =
+    "s AS (SELECT cd.query_id, cd.neighbor_id, " +
+      "CASE WHEN sqrt(list_dot_product(q.v, q.v)) * " +
+      "sqrt(list_dot_product(c.v, c.v)) = 0 THEN 0.0 ELSE " +
+      "list_dot_product(q.v, c.v) / (sqrt(list_dot_product(q.v, q.v)) " +
+      "* sqrt(list_dot_product(c.v, c.v))) END AS cosine " +
+      "FROM cand cd JOIN e q ON q.vec_id = cd.query_id " +
+      "JOIN e c ON c.vec_id = cd.neighbor_id) " +
+      "SELECT query_id, rn AS rank, neighbor_id, cosine FROM (" +
+      "SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id " +
+      "ORDER BY cosine DESC, neighbor_id) AS rn FROM s) " +
+      s"WHERE rn <= $k ORDER BY query_id, rank"
 
   val GraphK = 5
 
@@ -175,21 +191,10 @@ object SimilarityQueries extends QueryPack {
       // [1, tables] — a neighbour occupies one bucket per table), the
       // (hits desc, id) top-64·k cut, then cosine + rank — every step
       // deterministic, so the cut is hash-exact across engines
-      def planeSql(t: Int, j: Int): String =
-        graft.util.OracleSql.dblArray(Similarity.planeValues(t, j, LshDims))
-      def bucketSql(t: Int): String = (0 until KnnGateBits).map { j =>
-        s"(CASE WHEN list_dot_product(v, ${planeSql(t, j)}::DOUBLE[]) " +
-          s">= 0 THEN ${1L << j} ELSE 0 END)"
-      }.mkString(" + ")
-      val idxArms = (0 until KnnTables).map(t =>
-        s"SELECT vec_id, $t AS table_idx, ${bucketSql(t)} AS bucket " +
-          "FROM e").mkString(" UNION ALL ")
       val masks = Similarity.probeMasks(KnnGateBits, KnnRadius)
         .mkString("[", ", ", "]")
       val cap = 64 * GraphK
-      "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v " +
-        "FROM embeddings), " +
-        s"idx AS ($idxArms), " +
+      "WITH " + lshIndexCtes(KnnTables, KnnGateBits, LshDims) +
         s"qp AS (SELECT vec_id AS query_id, table_idx, " +
         s"xor(bucket, m.mask) AS bucket FROM idx, " +
         s"unnest($masks::BIGINT[]) AS m(mask)), " +
@@ -200,17 +205,7 @@ object SimilarityQueries extends QueryPack {
         "SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id " +
         "ORDER BY hits DESC, neighbor_id) AS cr FROM hits) " +
         s"WHERE cr <= $cap), " +
-        "s AS (SELECT cd.query_id, cd.neighbor_id, " +
-        "CASE WHEN sqrt(list_dot_product(q.v, q.v)) * " +
-        "sqrt(list_dot_product(c.v, c.v)) = 0 THEN 0.0 ELSE " +
-        "list_dot_product(q.v, c.v) / (sqrt(list_dot_product(q.v, q.v)) " +
-        "* sqrt(list_dot_product(c.v, c.v))) END AS cosine " +
-        "FROM cand cd JOIN e q ON q.vec_id = cd.query_id " +
-        "JOIN e c ON c.vec_id = cd.neighbor_id) " +
-        "SELECT query_id, rn AS rank, neighbor_id, cosine FROM (" +
-        "SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id " +
-        "ORDER BY cosine DESC, neighbor_id) AS rn FROM s) " +
-        s"WHERE rn <= $GraphK ORDER BY query_id, rank"
+        lshRankSql(GraphK)
     })
 
   /** IVF-probed approximate top-k — FULLY ORACLED since r9 via the
@@ -375,6 +370,20 @@ object SimilarityQueries extends QueryPack {
     * `embeddings` table by default, a survivor-restricted subquery in
     * the composed lane.
     */
+  /** CTEs `av` → `dups(ida, idb, cos)` over [[kmeansAssignCtes]]'s
+    * `a` and `n`: SemDeDup's same-cluster pairs at cosine ≥ `tau`,
+    * each vector paired with the members nearer its centroid (ties by
+    * id). Carries its trailing ", ".
+    */
+  private[graft] def semDupsSql(tau: String): String =
+    "av AS (SELECT a.vec_id, a.label, a.d2, n.nv FROM a " +
+      "JOIN n USING (vec_id)), " +
+      "dups AS (SELECT x.vec_id AS ida, y.vec_id AS idb, " +
+      "list_dot_product(x.nv, y.nv) AS cos FROM av x " +
+      "JOIN av y USING (label) WHERE x.vec_id <> y.vec_id " +
+      "AND (y.d2 < x.d2 OR (y.d2 = x.d2 AND y.vec_id < x.vec_id)) " +
+      s"AND list_dot_product(x.nv, y.nv) >= $tau), "
+
   private[graft] def kmeansAssignCtes(cents: Array[Array[Double]],
       embSource: String = "embeddings"): String = {
     def cSql(i: Int) =
@@ -427,13 +436,7 @@ object SimilarityQueries extends QueryPack {
     Some {
       val tau = graft.util.OracleSql.dbl(SemTau)
       "WITH " + kmeansAssignCtes(KmeansGatePinned.centroids) + ", " +
-        "av AS (SELECT a.vec_id, a.label, a.d2, n.nv FROM a " +
-        "JOIN n USING (vec_id)), " +
-        "dups AS (SELECT x.vec_id AS ida, y.vec_id AS idb, " +
-        "list_dot_product(x.nv, y.nv) AS cos FROM av x " +
-        "JOIN av y USING (label) WHERE x.vec_id <> y.vec_id " +
-        "AND (y.d2 < x.d2 OR (y.d2 = x.d2 AND y.vec_id < x.vec_id)) " +
-        s"AND list_dot_product(x.nv, y.nv) >= $tau), " +
+        semDupsSql(tau) +
         "best AS (SELECT ida AS vec_id, idb AS dup_of, cos AS dup_cos " +
         "FROM (SELECT *, row_number() OVER (PARTITION BY ida " +
         "ORDER BY cos DESC, idb) AS rn FROM dups) WHERE rn = 1), " +
@@ -727,6 +730,18 @@ object SimilarityQueries extends QueryPack {
          |WHERE rn <= $K ORDER BY query_id, rank""".stripMargin
         .replace("\n", " ")))
 
+  /** CTEs `e`, `q` (ids below [[QueryIds]]) and `s`: every (query,
+    * candidate) pair's exact cosine with both labels. Ends with ",".
+    */
+  private def labeledCosineCtes: String =
+    s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v
+       |  FROM embeddings),
+       |q AS (SELECT * FROM e WHERE vec_id < $QueryIds),
+       |s AS (SELECT q.vec_id AS query_id, q.label AS true_label,
+       |  c.vec_id AS neighbor_id, c.label AS nl,
+       |  $cosineSql AS cosine FROM e c, q
+       |  WHERE c.vec_id <> q.vec_id),""".stripMargin.replace("\n", " ")
+
   /** kNN classification ([[Similarity.knnClassify]]): each of the
     * [[QueryIds]] queries takes the majority label of its 10 nearest
     * corpus neighbors — the weak-supervision label-propagation step and
@@ -744,15 +759,8 @@ object SimilarityQueries extends QueryPack {
           "label", K)
         .orderBy("query_id")
     },
-    Some(
-      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v
-         |  FROM embeddings),
-         |q AS (SELECT * FROM e WHERE vec_id < $QueryIds),
-         |s AS (SELECT q.vec_id AS query_id, q.label AS true_label,
-         |  c.vec_id AS neighbor_id, c.label AS nl,
-         |  $cosineSql AS cosine FROM e c, q
-         |  WHERE c.vec_id <> q.vec_id),
-         |top AS (SELECT query_id, true_label, nl FROM (
+    Some(labeledCosineCtes + " " +
+      s"""top AS (SELECT query_id, true_label, nl FROM (
          |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
          |    ORDER BY cosine DESC, neighbor_id) AS rn FROM s)
          |  WHERE rn <= $K),
@@ -823,15 +831,8 @@ object SimilarityQueries extends QueryPack {
           "label", K)
         .orderBy("query_id")
     },
-    Some(
-      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v
-         |  FROM embeddings),
-         |q AS (SELECT * FROM e WHERE vec_id < $QueryIds),
-         |s AS (SELECT q.vec_id AS query_id, q.label AS true_label,
-         |  c.vec_id AS neighbor_id, c.label AS nl,
-         |  $cosineSql AS cosine FROM e c, q
-         |  WHERE c.vec_id <> q.vec_id),
-         |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+    Some(labeledCosineCtes + " " +
+      s"""r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
          |    ORDER BY cosine DESC, neighbor_id) AS rn,
          |  SUM(CASE WHEN nl = true_label THEN 1 ELSE 0 END)
          |    OVER (PARTITION BY query_id) AS nrel FROM s),

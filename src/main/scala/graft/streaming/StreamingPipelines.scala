@@ -102,6 +102,13 @@ object StreamingPipelines {
     * crashed, so a replayed batch merges into the old or the new target,
     * both fixed points of the upsert.
     *
+    * Latest-per-key within a batch, source wins across batches (as the
+    * reference's generated MERGE does): a later batch's row replaces
+    * the target's row for its key even when its `orderCol` is older. The
+    * target equals [[Scd1.latestPerKey]] over the whole stream only when
+    * batches arrive in event-time order; callers who need that must feed
+    * them so.
+    *
     * Returns the started query; callers await/stop it. Use
     * `Trigger.AvailableNow` for catch-up runs (tests), a processing-time
     * trigger for live tailing.

@@ -31,6 +31,30 @@ object StreamingQueries extends QueryPack {
       graft.util.Staging.deleteRecursively(new java.io.File(d)))
   }
 
+  /** Drains streaming frame `df` into a parquet sink at `out` in append
+    * mode (AvailableNow trigger, checkpoint `ckpt`) and waits for it.
+    */
+  private def drainToParquet(df: org.apache.spark.sql.DataFrame,
+      out: String, ckpt: String): Unit =
+    df.writeStream.format("parquet")
+      .option("path", out)
+      .option("checkpointLocation", ckpt)
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
+  /** The staged ×2-redelivered events feed (every event twice — an
+    * at-least-once redelivery), a [[StreamStage]] fixture shared by
+    * `stream_dedup_events` and `stream_pipeline_events`.
+    */
+  private def doubledEvents(iso: org.apache.spark.sql.SparkSession,
+      dir: String): String =
+    StreamStage.ensure(iso, dir, "doubled") { x =>
+      val ev = graft.io.Tables.load(x, dir, "events", parallelize = false)
+      ev.union(ev)
+    }
+
   /** Run `build` against a DEDICATED session (same SparkContext, shared
     * state and extensions; fresh SQL conf) whose
     * `spark.sql.shuffle.partitions` is streaming-sized: every stateful
@@ -160,26 +184,15 @@ object StreamingQueries extends QueryPack {
   private def dedupQuery = QueryDef(
     "stream_dedup_events",
     (s, dir) => withStreamSession(s) { iso =>
-      // the ×2-redelivered feed is a [[StreamStage]] fixture (shared
-      // with stream_pipeline_events); sink + checkpoint stay per-run
-      val staged = StreamStage.ensure(iso, dir, "doubled") { x =>
-        val ev = graft.io.Tables.load(x, dir, "events",
-          parallelize = false)
-        ev.union(ev)
-      }
+      // sink + checkpoint stay per-run
+      val staged = doubledEvents(iso, dir)
       withTempDirs("graft_stream_dedup_out", "graft_stream_dedup_ckpt") {
       case Seq(out, ckpt) =>
         val schema = iso.read.parquet(staged).schema
         val src = iso.readStream.schema(schema).parquet(staged)
         val deduped = StreamingPipelines.dedupStream(
           src, "ts", "2 days", Seq("event_id"))
-        val q = deduped.writeStream.format("parquet")
-          .option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        drainToParquet(deduped, out, ckpt)
         graft.util.Frames.localized(
           iso.read.parquet(out)
             .withColumn("value", col("value").cast("decimal(18,4)"))
@@ -225,13 +238,7 @@ object StreamingQueries extends QueryPack {
           clicks, "click_ts", purchases, "purchase_ts",
           col("user_id") === col("p_user_id"),
           lookback = "12 HOURS", watermark = "1 DAY")
-        val q = joined.writeStream.format("parquet")
-          .option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        drainToParquet(joined, out, ckpt)
         graft.util.Frames.localized(
           iso.read.parquet(out)
             .groupBy("user_id")
@@ -266,12 +273,7 @@ object StreamingQueries extends QueryPack {
   private def pipelineQuery = QueryDef(
     "stream_pipeline_events",
     (s, dir) => withStreamSession(s) { iso =>
-      // same ×2-redelivered [[StreamStage]] fixture as stream_dedup
-      val staged = StreamStage.ensure(iso, dir, "doubled") { x =>
-        val ev = graft.io.Tables.load(x, dir, "events",
-          parallelize = false)
-        ev.union(ev)
-      }
+      val staged = doubledEvents(iso, dir)
       withTempDirs("graft_stream_pipe_out", "graft_stream_pipe_ckpt") {
       case Seq(out, ckpt) =>
         val schema = iso.read.parquet(staged).schema
@@ -281,13 +283,7 @@ object StreamingQueries extends QueryPack {
           StreamingPipelines.dedupStream(src, "ts", "2 days",
             Seq("event_id")),
           "ts", window = "1 day")
-        val q = composed.writeStream.format("parquet")
-          .option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        drainToParquet(composed, out, ckpt)
         graft.util.Frames.localized(
           iso.read.parquet(out)
             .select(col("window_start").cast("string").as("window_start"),
@@ -374,33 +370,7 @@ object StreamingQueries extends QueryPack {
     },
     // identical oracle to the batch events_funnel — the equality IS the
     // gate's point (streaming state machine ≡ batch running windows)
-    Some("WITH e AS (SELECT user_id AS u, epoch_us(ts) AS ts, " +
-      "event_id AS id, event_type AS t FROM events), " +
-      "f0 AS (SELECT u, ts, id, t, min(CASE WHEN t = 'view' THEN ts END) " +
-      "OVER w AS g0 FROM e WINDOW w AS (PARTITION BY u ORDER BY ts, id " +
-      "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), " +
-      "f1 AS (SELECT *, min(CASE WHEN t = 'click' AND g0 IS NOT NULL " +
-      "THEN ts END) OVER w AS g1 FROM f0 WINDOW w AS (PARTITION BY u " +
-      "ORDER BY ts, id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT " +
-      "ROW)), " +
-      "f2 AS (SELECT *, min(CASE WHEN t = 'purchase' AND g1 IS NOT NULL " +
-      "THEN ts END) OVER w AS g2 FROM f1 WINDOW w AS (PARTITION BY u " +
-      "ORDER BY ts, id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT " +
-      "ROW)), " +
-      "pu AS (SELECT u, bool_or(g0 IS NOT NULL) AS r0, " +
-      "bool_or(g1 IS NOT NULL) AS r1, bool_or(g2 IS NOT NULL) AS r2 " +
-      "FROM f2 GROUP BY u), " +
-      "c AS (SELECT sum(CASE WHEN r0 THEN 1 ELSE 0 END)::BIGINT AS n0, " +
-      "sum(CASE WHEN r1 THEN 1 ELSE 0 END)::BIGINT AS n1, " +
-      "sum(CASE WHEN r2 THEN 1 ELSE 0 END)::BIGINT AS n2 FROM pu) " +
-      "SELECT * FROM (" +
-      "SELECT 'view' AS stage, 0::BIGINT AS stage_idx, n0 AS users, " +
-      "CASE WHEN n0 = 0 THEN 0.0 ELSE n0::DOUBLE / n0 END AS conversion " +
-      "FROM c UNION ALL " +
-      "SELECT 'click', 1::BIGINT, n1, CASE WHEN n0 = 0 THEN 0.0 ELSE " +
-      "n1::DOUBLE / n0 END FROM c UNION ALL " +
-      "SELECT 'purchase', 2::BIGINT, n2, CASE WHEN n0 = 0 THEN 0.0 ELSE " +
-      "n2::DOUBLE / n0 END FROM c) ORDER BY stage_idx"))
+    Some(graft.pipeline.PipelineQueries.funnelOracleSql))
 
   /** Streaming maintained aggregate ([[MaintainedAgg]]): state is
     * bootstrapped from the BEFORE table, then a staged CDC feed
@@ -455,18 +425,7 @@ object StreamingQueries extends QueryPack {
     // identical oracle to the batch agg_incremental_events — the
     // equality IS the gate's point (micro-batched maintenance ≡ full
     // recompute of the after-table)
-    Some("""WITH ins AS (SELECT event_type, value + 100.0 AS value
-           |    FROM events WHERE event_id % 5 = 0),
-           |b AS (SELECT event_type, value FROM events
-           |    WHERE event_id % 7 <> 0
-           |    UNION ALL SELECT event_type, value FROM ins)
-           |SELECT event_type, count(*) AS cnt,
-           |  CAST(sum(CAST(round(CAST(value AS DOUBLE), 4)
-           |    AS DECIMAL(20,4))) AS DOUBLE) AS sum_value,
-           |  CAST(sum(CAST(round(CAST(value AS DOUBLE), 4)
-           |    AS DECIMAL(20,4))) AS DOUBLE) / count(*) AS avg_value
-           |FROM b GROUP BY 1 ORDER BY 1""".stripMargin
-      .replace("\n", " ")))
+    Some(graft.pipeline.PipelineQueries.incrementalAggOracleSql))
 
   /** Streaming rolling actives ([[StreamingPipelines.activesStream]]):
     * the events corpus drains through 2 micro-batches
@@ -581,11 +540,8 @@ object StreamingQueries extends QueryPack {
       import graft.text.{QualityGatePinned, TextQueries}
       s"WITH toks AS (SELECT doc_id, source, ${TextQueries.tokensSql} " +
         "AS t FROM documents), " +
-        "gg AS (SELECT CASE WHEN (SELECT count(*) FROM documents) = " +
-        s"${QualityGatePinned.GateRows} THEN 1 ELSE " +
-        "error('streaming quality oracle is only valid at the " +
-        s"${QualityGatePinned.GateRows}-row gate corpus: regenerate " +
-        "QualityGatePinned') END AS ok), " +
+        TextQueries.gateGuardSql(QualityGatePinned.GateRows,
+          "streaming quality oracle", "QualityGatePinned") +
         s"m AS (SELECT source, ${TextQueries.qualityMarginSql} " +
         "AS margin FROM toks) " +
         "SELECT source, CAST(count(*) AS BIGINT) AS n_docs, " +

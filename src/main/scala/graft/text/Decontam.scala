@@ -47,12 +47,6 @@ object Decontam {
         array_distinct(Dedup.wordShinglesFromTokens(col("__toks"), n))
           .as("__grams"))
 
-  /** One row per distinct n-gram per document: (idCol, gram). */
-  def docGrams(df: DataFrame, idCol: String, textCol: String, n: Int)
-      : DataFrame =
-    docGramArrays(df, idCol, textCol, n)
-      .select(col(idCol), explode(col("__grams")).as("gram"))
-
   /** Contamination report over `corpus` against `eval`: for every corpus
     * document sharing at least one distinct n-gram with the eval set,
     * emit (idCol, matched_grams, total_grams, contamination_ratio).
@@ -60,8 +54,8 @@ object Decontam {
     * `matched_grams` counts the document's distinct grams that appear
     * anywhere in the eval set; callers threshold the ratio (or the raw
     * count) to drop or audit documents.
-    */
-  /** Convenience composition for tests/small frames — it does NOT persist
+    *
+    * Convenience composition for tests/small frames — it does NOT persist
     * the gram frames, so it takes the slow path the [[docGramArrays]]
     * scaladoc warns about. Production callers persist both array frames
     * and use [[overlapReportFromArrays]] (see the registered

@@ -24,33 +24,15 @@ object TextAnalysis {
 
   def tokenCount(c: Column): Column = size(tokens(c))
 
-  /** BPE-ish token count: letter runs, digit runs, and single other
+  /** BPE-ish token pattern: letter runs, digit runs, and single other
     * non-space chars each count as one token — a cheap proxy for subword
     * tokenizer output (both Java regex and RE2 support the classes).
     */
   val BpeishPattern = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
-  def bpeishCount(c: Column): Column = regexp_count(c, lit(BpeishPattern))
-
-  /** Punctuation character ratio over all characters (0 for empty text). */
-  def punctRatio(c: Column): Column =
-    regexp_count(c, lit("[^A-Za-z0-9\\s]")).cast("double") /
-      greatest(length(c), lit(1))
 
   /** Small fixed English stopword list for the stopword-ratio gate. */
   val Stopwords: Seq[String] =
     Seq("the", "a", "an", "and", "of", "to", "in", "is", "it", "that")
-
-  /** Fraction of tokens that are stopwords (0 when no tokens). */
-  def stopwordRatio(c: Column): Column = {
-    val stops = array(Stopwords.map(lit): _*)
-    size(filter(tokens(c), t => array_contains(stops, t))).cast("double") /
-      greatest(size(tokens(c)), lit(1))
-  }
-
-  /** Mean token length = non-space characters / token count. */
-  def avgTokenLen(c: Column): Column =
-    length(regexp_replace(c, "\\s+", "")).cast("double") /
-      greatest(size(tokens(c)), lit(1))
 
   /** Gopher/C4-style quality gates: fraction of four rules passed.
     * Each gate is a hard boolean so the score is exactly k/4 — robust to
@@ -66,10 +48,6 @@ object TextAnalysis {
   def scoreFromGates(gates: Seq[Column]): Column =
     gates.map(g => when(g, 1).otherwise(0))
       .reduce(_ + _).cast("double") / 4
-
-  def qualityScore(c: Column): Column =
-    scoreFromGates(qualityGates(length(c), avgTokenLen(c), punctRatio(c),
-      stopwordRatio(c)))
 
   /** Marker-word / script language heuristic. CJK codepoints → zh;
     * else the language whose marker stopwords appear; default en.

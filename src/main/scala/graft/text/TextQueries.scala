@@ -1,5 +1,6 @@
 package graft.text
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, QueryPack}
@@ -66,6 +67,55 @@ object TextQueries extends QueryPack {
       "ELSE 'en' END"
   }
 
+  /** The `gg` CTE of a pinned-literal oracle: 1 on the `rows`-row gate
+    * corpus, else a DuckDB `error` naming the `oracle` and what to
+    * `regenerate`. Carries its trailing ", ".
+    */
+  private[graft] def gateGuardSql(rows: Long, oracle: String,
+      regenerate: String): String =
+    "gg AS (SELECT CASE WHEN (SELECT count(*) FROM documents) = " +
+      s"$rows THEN 1 ELSE error('$oracle is only valid at the " +
+      s"$rows-row gate corpus: regenerate $regenerate') END AS ok), "
+
+  /** The [[LangGatePinned]] model over a token-list column `t`: the
+    * per-class `m_<lang>` margins, their `greatest`, and the CASE
+    * naming the first class whose margin equals `best`.
+    */
+  private def pinnedLangSql: (String, String, String) = {
+    val cls = LangGatePinned.classes
+    (cls.indices.map(i =>
+        marginSql(LangGatePinned.weights(i), LangGatePinned.biases(i)) +
+          s" AS m_${cls(i)}").mkString(", "),
+      cls.map(c => s"m_$c").mkString("greatest(", ", ", ")"),
+      "CASE " + cls.map(c =>
+        s"WHEN m_$c = best THEN '$c'").mkString(" ") + " END")
+  }
+
+  /** CTEs `ls` → `li` → `l` → `ln(doc_id, line)`: the trimmed non-empty
+    * lines of `d.<textCol>` ([[LangSegment.segment]]'s line split).
+    */
+  private def lineSplitSql(textCol: String): String =
+    s"ls AS (SELECT doc_id, string_split($textCol, chr(10)) AS lines " +
+      "FROM d), " +
+      "li AS (SELECT doc_id, lines, " +
+      "unnest(generate_series(1, len(lines))) AS pos FROM ls), " +
+      "l AS (SELECT doc_id, trim(lines[pos]) AS line FROM li), " +
+      "ln AS (SELECT doc_id, line FROM l WHERE length(line) > 0), "
+
+  /** CTE `lg(doc_id, lang)`: each `ln` line under [[langCaseSql]]. */
+  private def ruleLineLangSql: String =
+    s"lg AS (SELECT doc_id, ${langCaseSql("line")} AS lang " +
+      "FROM ln), "
+
+  /** CTEs `c` → `r`: per-document line counts by `lg.lang`, ranked
+    * (count DESC, lang) — the majority window.
+    */
+  private def lineRankSql: String =
+    "c AS (SELECT doc_id, lang, count(*) AS cnt FROM lg " +
+      "GROUP BY 1, 2), " +
+      "r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id " +
+      "ORDER BY cnt DESC, lang) AS rn FROM c), "
+
   private def statsOracle: String = {
     val toks = tokensSql
     val punct = "len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))::DOUBLE " +
@@ -123,6 +173,17 @@ object TextQueries extends QueryPack {
         "AND n_tokens BETWEEN 20 AND 2000 ORDER BY doc_id"
     })
 
+  /** `documents` with [[TextAnalysis.withStats]] under the curation
+    * gates: quality ≥ 0.75, English, 20 to 2000 tokens.
+    */
+  private def curatedDocs(s: SparkSession, dir: String): DataFrame =
+    TextAnalysis
+      .withStats(Tables.load(s, dir, "documents", parallelize = true),
+        "text")
+      .select("doc_id", "text", "n_tokens", "quality_score", "lang_id")
+      .filter(col("quality_score") >= 0.75 && col("lang_id") === "en" &&
+        col("n_tokens").between(20, 2000))
+
   /** The composed training-data pipeline: curate (quality/lang/token
     * gates) → exact dedup → corpus summary. One row: how much survives
     * each stage plus total retained tokens — the shape a 100 TB corpus
@@ -131,11 +192,7 @@ object TextQueries extends QueryPack {
   private def pipelineQuery = QueryDef(
     "corpus_pipeline_documents",
     (s, dir) => {
-      val curated = TextAnalysis
-        .withStats(Tables.load(s, dir, "documents", parallelize = true), "text")
-        .select("doc_id", "text", "n_tokens", "quality_score", "lang_id")
-        .filter(col("quality_score") >= 0.75 && col("lang_id") === "en" &&
-          col("n_tokens").between(20, 2000))
+      val curated = curatedDocs(s, dir)
       val deduped = curated
         .groupBy("text")
         .agg(min("doc_id").as("keep_id"), first("n_tokens").as("n_tokens"))
@@ -168,11 +225,7 @@ object TextQueries extends QueryPack {
   private def pipelineFullQuery = QueryDef(
     "corpus_pipeline_full_documents",
     (s, dir) => {
-      val curated = TextAnalysis
-        .withStats(Tables.load(s, dir, "documents", parallelize = true), "text")
-        .select("doc_id", "text", "n_tokens", "quality_score", "lang_id")
-        .filter(col("quality_score") >= 0.75 && col("lang_id") === "en" &&
-          col("n_tokens").between(20, 2000))
+      val curated = curatedDocs(s, dir)
       // persisted: read by the pair generator (both join sides via the
       // shingle sets), the survivor anti-join, and the final summary
       val kept = curated.groupBy("text")
@@ -211,12 +264,7 @@ object TextQueries extends QueryPack {
         "kept AS (SELECT MIN(doc_id) AS doc_id, text, " +
         "MIN(n_tokens) AS n_tokens FROM curated GROUP BY text), " +
         graft.dedup.DedupQueries.jaccardPairsCteFor("kept") + ", " +
-        "pairs AS (SELECT id_a, id_b FROM jp WHERE jaccard >= 0.8), " +
-        "edges AS (SELECT id_a AS src, id_b AS dst FROM pairs " +
-        "UNION ALL SELECT id_b, id_a FROM pairs), " +
-        "reach(id, r) AS (SELECT src, src FROM edges " +
-        "UNION SELECT e.src, reach.r FROM edges e " +
-        "JOIN reach ON e.dst = reach.id), " +
+        graft.dedup.DedupQueries.nearDupReachSql + ", " +
         "removed AS (SELECT id FROM reach GROUP BY id " +
         "HAVING id <> MIN(r)) " +
         "SELECT COUNT(*) AS kept_docs, SUM(n_tokens)::BIGINT AS " +
@@ -519,26 +567,33 @@ object TextQueries extends QueryPack {
 
   private def decontamQuery = QueryDef(
     "decontam_overlap_documents",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents", parallelize = true)
-      // both gram frames persisted per the docGramArrays contract (the
-      // explode must read a materialized array column); the report is
-      // contamination-sized, so localize + release before returning
-      val corpusGrams = Decontam.docGramArrays(
-        docs.filter(col("doc_id") % 100 >= 5), "doc_id", "text",
-        DecontamN).persist()
-      val evalGrams = Decontam.docGramArrays(
-        docs.filter(col("doc_id") % 100 < 5), "doc_id", "text",
-        DecontamN).persist()
-      try graft.util.Frames.localized(
-        Decontam.overlapReportFromArrays(corpusGrams, evalGrams, "doc_id")
-          .orderBy("doc_id"))
-      finally {
-        corpusGrams.unpersist(blocking = false)
-        evalGrams.unpersist(blocking = false): Unit
-      }
-    },
+    (s, dir) => withDecontamGrams(s, dir)((corpusGrams, evalGrams) =>
+      Decontam.overlapReportFromArrays(corpusGrams, evalGrams, "doc_id")
+        .orderBy("doc_id")),
     Some(decontamOverlapOracleSql))
+
+  /** `report(corpusGrams, evalGrams)` over the [[DecontamN]]-gram
+    * arrays of the corpus (`doc_id % 100 >= 5`) and eval (`< 5`)
+    * slices of `documents`. Both gram frames are persisted per the
+    * docGramArrays contract (the explode must read a materialized
+    * array column); the report is contamination-sized, so it is
+    * localized and the grams released before returning.
+    */
+  private def withDecontamGrams(s: SparkSession, dir: String)(
+      report: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val docs = Tables.load(s, dir, "documents", parallelize = true)
+    val corpusGrams = Decontam.docGramArrays(
+      docs.filter(col("doc_id") % 100 >= 5), "doc_id", "text",
+      DecontamN).persist()
+    val evalGrams = Decontam.docGramArrays(
+      docs.filter(col("doc_id") % 100 < 5), "doc_id", "text",
+      DecontamN).persist()
+    try graft.util.Frames.localized(report(corpusGrams, evalGrams))
+    finally {
+      corpusGrams.unpersist(blocking = false)
+      evalGrams.unpersist(blocking = false): Unit
+    }
+  }
 
   /** Eval-item exposure ([[Decontam.exposureReportFromArrays]] — the
     * reverse view of the overlap report): per eval document, the
@@ -549,31 +604,12 @@ object TextQueries extends QueryPack {
     */
   private def decontamExposureQuery = QueryDef(
     "decontam_exposure_documents",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents", parallelize = true)
-      val corpusGrams = Decontam.docGramArrays(
-        docs.filter(col("doc_id") % 100 >= 5), "doc_id", "text",
-        DecontamN).persist()
-      val evalGrams = Decontam.docGramArrays(
-        docs.filter(col("doc_id") % 100 < 5), "doc_id", "text",
-        DecontamN).persist()
-      try graft.util.Frames.localized(
-        Decontam.exposureReportFromArrays(evalGrams, corpusGrams,
-          "doc_id").orderBy("doc_id"))
-      finally {
-        corpusGrams.unpersist(blocking = false)
-        evalGrams.unpersist(blocking = false): Unit
-      }
-    },
+    (s, dir) => withDecontamGrams(s, dir)((corpusGrams, evalGrams) =>
+      Decontam.exposureReportFromArrays(evalGrams, corpusGrams, "doc_id")
+        .orderBy("doc_id")),
     Some {
-      val n = DecontamN
-      val gramArr = "list_distinct(CASE WHEN len(t) = 0 " +
-        "THEN []::VARCHAR[] " +
-        s"WHEN len(t) <= $n THEN [array_to_string(t, ' ')] " +
-        s"ELSE list_transform(range(1, len(t) - ${n - 2}), " +
-        s"i -> array_to_string(t[i:i+${n - 1}], ' ')) END)"
       s"WITH toks AS (SELECT doc_id, $tokensSql AS t FROM documents), " +
-        s"ga AS (SELECT doc_id, $gramArr AS gs FROM toks), " +
+        s"ga AS (SELECT doc_id, $decontamGramsSql AS gs FROM toks), " +
         "evg AS (SELECT doc_id, unnest(gs) AS g FROM ga " +
         "WHERE doc_id % 100 < 5), " +
         "cg AS (SELECT doc_id AS cid, unnest(gs) AS g FROM ga " +
@@ -600,16 +636,8 @@ object TextQueries extends QueryPack {
     * depends only on (doc, eval set), so a micro-batched drain equals
     * the batch operator under ANY cut and this one oracle pins both.
     */
-  private[graft] def decontamOverlapOracleSql: String = {
-    val n = DecontamN
-    s"WITH toks AS (SELECT doc_id, $tokensSql AS t FROM documents), " +
-      "grams AS (SELECT doc_id, unnest(list_distinct(" +
-      "CASE WHEN len(t) = 0 THEN []::VARCHAR[] " +
-      s"WHEN len(t) <= $n THEN [array_to_string(t, ' ')] " +
-      s"ELSE list_transform(range(1, len(t) - ${n - 2}), " +
-      s"i -> array_to_string(t[i:i+${n - 1}], ' ')) END)) AS g " +
-      "FROM toks), " +
-      "ev AS (SELECT DISTINCT g FROM grams WHERE doc_id % 100 < 5), " +
+  private[graft] def decontamOverlapOracleSql: String =
+    "WITH " + decontamGramCtes +
       "tot AS (SELECT doc_id, count(*) AS total_grams FROM grams " +
       "WHERE doc_id % 100 >= 5 GROUP BY doc_id), " +
       "hits AS (SELECT doc_id, count(*) AS matched_grams FROM grams " +
@@ -618,7 +646,26 @@ object TextQueries extends QueryPack {
       "SELECT h.doc_id, h.matched_grams, t.total_grams, " +
       "h.matched_grams::DOUBLE / t.total_grams AS contamination_ratio " +
       "FROM hits h JOIN tot t USING (doc_id) ORDER BY doc_id"
+
+  /** The distinct [[DecontamN]]-grams of token list `t` as a DuckDB
+    * list ([[Decontam.docGramArrays]]).
+    */
+  private def decontamGramsSql: String = {
+    val n = DecontamN
+    "list_distinct(CASE WHEN len(t) = 0 THEN []::VARCHAR[] " +
+      s"WHEN len(t) <= $n THEN [array_to_string(t, ' ')] " +
+      s"ELSE list_transform(range(1, len(t) - ${n - 2}), " +
+      s"i -> array_to_string(t[i:i+${n - 1}], ' ')) END)"
   }
+
+  /** CTEs `toks` → `grams(doc_id, g)` → `ev(g)`: every document's
+    * distinct grams and the eval slice's gram set.
+    */
+  private def decontamGramCtes: String =
+    s"toks AS (SELECT doc_id, $tokensSql AS t FROM documents), " +
+      s"grams AS (SELECT doc_id, unnest($decontamGramsSql) AS g " +
+      "FROM toks), " +
+      "ev AS (SELECT DISTINCT g FROM grams WHERE doc_id % 100 < 5), "
 
   /** [[DecontamN]] for the streaming twin's lane. */
   private[graft] def decontamN: Int = DecontamN
@@ -731,20 +778,12 @@ object TextQueries extends QueryPack {
     Some {
       val full = statsOracle
       val body = full.substring(0, full.lastIndexOf(" ORDER BY"))
-      val n = DecontamN
       s"WITH s AS ($body), " +
         "curated AS (SELECT s.doc_id, d.text, s.n_tokens " +
         "FROM s JOIN documents d ON s.doc_id = d.doc_id " +
         "WHERE s.quality_score >= 0.75 AND s.lang_id = 'en' " +
         "AND s.n_tokens BETWEEN 20 AND 2000 AND s.doc_id % 100 >= 5), " +
-        s"toks AS (SELECT doc_id, $tokensSql AS t FROM documents), " +
-        "grams AS (SELECT doc_id, unnest(list_distinct(" +
-        "CASE WHEN len(t) = 0 THEN []::VARCHAR[] " +
-        s"WHEN len(t) <= $n THEN [array_to_string(t, ' ')] " +
-        s"ELSE list_transform(range(1, len(t) - ${n - 2}), " +
-        s"i -> array_to_string(t[i:i+${n - 1}], ' ')) END)) AS g " +
-        "FROM toks), " +
-        "ev AS (SELECT DISTINCT g FROM grams WHERE doc_id % 100 < 5), " +
+        decontamGramCtes +
         "cg AS (SELECT g.doc_id, g.g FROM grams g " +
         "JOIN curated c ON g.doc_id = c.doc_id), " +
         "tot AS (SELECT doc_id, count(*) AS total FROM cg GROUP BY 1), " +
@@ -797,23 +836,34 @@ object TextQueries extends QueryPack {
     */
   private val MixBudget = 600L
 
+  /** `documents` as the mixing lanes' (doc_id, source, n_tokens). */
+  private def docTokens(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "documents", parallelize = true)
+      .select(col("doc_id"), col("source"),
+        TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"))
+
+  /** The mixing oracles' `toks(doc_id, source, n)` CTE. */
+  private def mixToksSql: String =
+    s"toks AS (SELECT doc_id, source, len($tokensSql)::BIGINT " +
+      "AS n FROM documents), "
+
+  /** The mixing oracles' last CTE, `c`: each doc's running token sum
+    * within its source in md5(doc_id) order.
+    */
+  private def mixCumSql: String =
+    "c AS (SELECT doc_id, source, n, SUM(n) OVER (" +
+      "PARTITION BY source ORDER BY md5(doc_id::VARCHAR), doc_id " +
+      "ROWS UNBOUNDED PRECEDING) AS cum FROM toks) "
+
   private def mixQuery = QueryDef(
     "corpus_mix_documents",
     (s, dir) => graft.pipeline.Mixing.byTokenBudget(
-        Tables.load(s, dir, "documents", parallelize = true)
-          .select(col("doc_id"), col("source"),
-            TextAnalysis.tokenCount(col("text")).cast("long")
-              .as("n_tokens")),
-        "source", "doc_id", "n_tokens",
+        docTokens(s, dir), "source", "doc_id", "n_tokens",
         budgets = Map.empty, defaultBudget = MixBudget)
       .select("source", "doc_id", "n_tokens")
       .orderBy("source", "doc_id"),
     Some(
-      s"WITH toks AS (SELECT doc_id, source, len($tokensSql)::BIGINT " +
-        "AS n FROM documents), " +
-        "c AS (SELECT doc_id, source, n, SUM(n) OVER (" +
-        "PARTITION BY source ORDER BY md5(doc_id::VARCHAR), doc_id " +
-        "ROWS UNBOUNDED PRECEDING) AS cum FROM toks) " +
+      "WITH " + mixToksSql + mixCumSql +
         "SELECT source, doc_id, n AS n_tokens FROM c " +
         s"WHERE cum - n < $MixBudget ORDER BY source, doc_id"))
 
@@ -830,16 +880,11 @@ object TextQueries extends QueryPack {
   private def mixTemperatureQuery = QueryDef(
     "corpus_mix_temperature_documents",
     (s, dir) => graft.pipeline.Mixing.byTemperatureT2(
-        Tables.load(s, dir, "documents", parallelize = true)
-          .select(col("doc_id"), col("source"),
-            TextAnalysis.tokenCount(col("text")).cast("long")
-              .as("n_tokens")),
-        "source", "doc_id", "n_tokens", totalTokens = TempBudget)
+        docTokens(s, dir), "source", "doc_id", "n_tokens", totalTokens = TempBudget)
       .select("source", "doc_id", "n_tokens")
       .orderBy("source", "doc_id"),
     Some(
-      s"WITH toks AS (SELECT doc_id, source, len($tokensSql)::BIGINT " +
-        "AS n FROM documents), " +
+      "WITH " + mixToksSql +
         "s AS (SELECT source, CAST(sum(n) AS BIGINT) AS stok " +
         "FROM toks GROUP BY 1), " +
         "z AS (SELECT CAST(sum(CAST(sqrt(stok) AS DECIMAL(38,12))) " +
@@ -847,9 +892,7 @@ object TextQueries extends QueryPack {
         "t AS (SELECT source, CAST(floor(" +
         s"CAST($TempBudget AS DOUBLE) * sqrt(stok) / zsum) AS BIGINT) " +
         "AS target FROM s CROSS JOIN z), " +
-        "c AS (SELECT doc_id, source, n, SUM(n) OVER (" +
-        "PARTITION BY source ORDER BY md5(doc_id::VARCHAR), doc_id " +
-        "ROWS UNBOUNDED PRECEDING) AS cum FROM toks) " +
+        mixCumSql +
         "SELECT c.source, c.doc_id, c.n AS n_tokens FROM c " +
         "JOIN t USING (source) WHERE cum - n < target " +
         "ORDER BY source, doc_id"))
@@ -871,20 +914,12 @@ object TextQueries extends QueryPack {
   private def mixWeightedQuery = QueryDef(
     "corpus_mix_weighted_documents",
     (s, dir) => graft.pipeline.Mixing.byWeights(
-        Tables.load(s, dir, "documents", parallelize = true)
-          .select(col("doc_id"), col("source"),
-            TextAnalysis.tokenCount(col("text")).cast("long")
-              .as("n_tokens")),
-        "source", "doc_id", "n_tokens",
+        docTokens(s, dir), "source", "doc_id", "n_tokens",
         weights = MixWeights, totalTokens = MixWeightTotal)
       .select("source", "doc_id", "n_tokens")
       .orderBy("source", "doc_id"),
     Some(
-      s"WITH toks AS (SELECT doc_id, source, len($tokensSql)::BIGINT " +
-        "AS n FROM documents), " +
-        "c AS (SELECT doc_id, source, n, SUM(n) OVER (" +
-        "PARTITION BY source ORDER BY md5(doc_id::VARCHAR), doc_id " +
-        "ROWS UNBOUNDED PRECEDING) AS cum FROM toks) " +
+      "WITH " + mixToksSql + mixCumSql +
         "SELECT source, doc_id, n AS n_tokens FROM c " +
         "WHERE cum - n < CASE source " +
         "WHEN 'src0' THEN 429 WHEN 'src1' THEN 214 " +
@@ -1097,23 +1132,28 @@ object TextQueries extends QueryPack {
           "(ORDER BY word) AS wid, " +
           "list_append(regexp_extract_all(word, '.'), '_') AS l, cnt " +
           "FROM wc)"
-      val steps = (1 to BpeSteps).map { k =>
-        val p = k - 1
-        s"p$k AS MATERIALIZED (SELECT pr[1] AS lhs, pr[2] AS rhs, " +
-          "CAST(sum(cnt) AS BIGINT) AS weight FROM (SELECT " +
-          "unnest(list_zip(list_slice(l, 1, len(l)-1), " +
-          s"list_slice(l, 2, len(l)))) AS pr, cnt FROM s$p) " +
-          "GROUP BY 1, 2), " +
-          s"m$k AS MATERIALIZED (SELECT lhs, rhs, weight FROM p$k " +
-          "ORDER BY weight DESC, lhs, rhs LIMIT 1), " +
-          bpeRewriteSql(s"s$p", s"s$k", s"m$k", s"t$k", Seq("cnt"))
-      }.mkString(", ")
       val sel = (1 to BpeSteps).map(k =>
         s"SELECT $k AS step, lhs, rhs, lhs || rhs AS merged, weight " +
           s"FROM m$k").mkString(" UNION ALL ")
-      header + ", " + steps +
+      header + ", " + bpeTrainSql +
         " SELECT * FROM (" + sel + ") ORDER BY step"
     })
+
+  /** The BPE training CTEs for steps 1..[[BpeSteps]] over `s0(wid,
+    * l, cnt)`: step k's pair weights `p<k>`, its winning merge `m<k>`
+    * and the rewritten words `s<k>`.
+    */
+  private def bpeTrainSql: String = (1 to BpeSteps).map { k =>
+    val p = k - 1
+    s"p$k AS MATERIALIZED (SELECT pr[1] AS lhs, pr[2] AS rhs, " +
+      "CAST(sum(cnt) AS BIGINT) AS weight FROM (SELECT " +
+      "unnest(list_zip(list_slice(l, 1, len(l)-1), " +
+      s"list_slice(l, 2, len(l)))) AS pr, cnt FROM s$p) " +
+      "GROUP BY 1, 2), " +
+      s"m$k AS MATERIALIZED (SELECT lhs, rhs, weight FROM p$k " +
+      "ORDER BY weight DESC, lhs, rhs LIMIT 1), " +
+      bpeRewriteSql(s"s$p", s"s$k", s"m$k", s"t$k", Seq("cnt"))
+  }.mkString(", ")
 
   /** BPE ENCODE ([[Bpe.encodeWords]]): train the [[BpeSteps]]-rule
     * merge table live (same schedule as the merges lane), apply it in
@@ -1196,22 +1236,11 @@ object TextQueries extends QueryPack {
           "(ORDER BY word) AS wid, word, " +
           "list_append(regexp_extract_all(word, '.'), '_') AS l " +
           "FROM wc)"
-      val train = (1 to BpeSteps).map { k =>
-        val p = k - 1
-        s"p$k AS MATERIALIZED (SELECT pr[1] AS lhs, pr[2] AS rhs, " +
-          "CAST(sum(cnt) AS BIGINT) AS weight FROM (SELECT " +
-          "unnest(list_zip(list_slice(l, 1, len(l)-1), " +
-          s"list_slice(l, 2, len(l)))) AS pr, cnt FROM s$p) " +
-          "GROUP BY 1, 2), " +
-          s"m$k AS MATERIALIZED (SELECT lhs, rhs, weight FROM p$k " +
-          "ORDER BY weight DESC, lhs, rhs LIMIT 1), " +
-          bpeRewriteSql(s"s$p", s"s$k", s"m$k", s"t$k", Seq("cnt"))
-      }.mkString(", ")
       val encode = (1 to BpeSteps).map { k =>
         bpeRewriteSql(s"w${k - 1}", s"w$k", s"m$k", s"u$k",
           Seq("word"))
       }.mkString(", ")
-      header + ", " + train + ", " + encode +
+      header + ", " + bpeTrainSql + ", " + encode +
         ", vocab AS MATERIALIZED (SELECT token, CAST(row_number() " +
         "OVER (ORDER BY token) AS INT) AS token_id FROM (SELECT " +
         s"DISTINCT unnest(l) AS token FROM w$BpeSteps)), " +
@@ -1541,11 +1570,8 @@ object TextQueries extends QueryPack {
     },
     Some {
       s"WITH toks AS (SELECT doc_id, $tokensSql AS t FROM documents), " +
-        "gg AS (SELECT CASE WHEN (SELECT count(*) FROM documents) = " +
-        s"${QualityGatePinned.GateRows} THEN 1 ELSE " +
-        "error('quality-model trained-literal oracle is only valid " +
-        s"at the ${QualityGatePinned.GateRows}-row gate corpus: " +
-        "regenerate QualityGatePinned') END AS ok), " +
+        gateGuardSql(QualityGatePinned.GateRows,
+          "quality-model trained-literal oracle", "QualityGatePinned") +
         "m AS (SELECT doc_id, CAST(len(t) AS INT) AS n_tokens, " +
         s"$qualityMarginSql AS margin FROM toks) " +
         "SELECT doc_id, n_tokens, margin, " +
@@ -1587,11 +1613,8 @@ object TextQueries extends QueryPack {
     },
     Some {
       s"WITH toks AS (SELECT doc_id, $tokensSql AS t FROM documents), " +
-        "gg AS (SELECT CASE WHEN (SELECT count(*) FROM documents) = " +
-        s"${QualityGatePinned.GateRows} THEN 1 ELSE " +
-        "error('calibration pinned oracle is only valid at the " +
-        s"${QualityGatePinned.GateRows}-row gate corpus: regenerate " +
-        "QualityGatePinned') END AS ok), " +
+        gateGuardSql(QualityGatePinned.GateRows,
+          "calibration pinned oracle", "QualityGatePinned") +
         "m AS (SELECT doc_id, " +
         "len(list_distinct(t)) * 2 >= len(t) AS label, " +
         s"($qualityMarginSql)::DOUBLE / greatest(len(t), 1) " +
@@ -1666,11 +1689,8 @@ object TextQueries extends QueryPack {
       s"WITH h AS (SELECT doc_id, nfc_normalize($htmlFixtureSql) " +
         "AS html FROM documents), " +
         htmlExtractionCtes + ", " +
-        "gg AS (SELECT CASE WHEN (SELECT count(*) FROM documents) = " +
-        s"${QualityGatePinned.GateRows} THEN 1 ELSE " +
-        "error('threshold pinned oracle is only valid at the " +
-        s"${QualityGatePinned.GateRows}-row gate corpus: regenerate " +
-        "the pinned models') END AS ok), " +
+        gateGuardSql(QualityGatePinned.GateRows,
+          "threshold pinned oracle", "the pinned models") +
         "toks AS (SELECT doc_id, " +
         "CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[] " +
         "ELSE regexp_split_to_array(trim(text), '\\s+') END AS t " +
@@ -1902,27 +1922,18 @@ object TextQueries extends QueryPack {
         .orderBy("doc_id")
     },
     Some {
-      val cls = LangGatePinned.classes
-      val margins = cls.indices.map(i =>
-        marginSql(LangGatePinned.weights(i), LangGatePinned.biases(i)) +
-          s" AS m_${cls(i)}").mkString(", ")
-      val best = cls.map(c => s"m_$c").mkString("greatest(", ", ", ")")
-      val langCase = "CASE " + cls.map(c =>
-        s"WHEN m_$c = best THEN '$c'").mkString(" ") + " END"
+      val (margins, best, langCase) = pinnedLangSql
       s"WITH d AS (SELECT doc_id, $langFixtureSql AS ltext " +
         "FROM documents), " +
-        "gg AS (SELECT CASE WHEN (SELECT count(*) FROM documents) = " +
-        s"${LangGatePinned.GateRows} THEN 1 ELSE " +
-        "error('lang-model trained-literal oracle is only valid at " +
-        s"the ${LangGatePinned.GateRows}-row gate corpus: regenerate " +
-        "LangGatePinned') END AS ok), " +
+        gateGuardSql(LangGatePinned.GateRows,
+          "lang-model trained-literal oracle", "LangGatePinned") +
         "toks AS (SELECT doc_id, ltext, " +
         s"${tokensSqlOf("ltext")} AS t FROM d), " +
         s"m AS (SELECT doc_id, ${langCaseSql("ltext")} AS lang_rule, " +
         s"CAST(len(t) AS INT) AS n_tokens, $margins FROM toks), " +
         s"b AS (SELECT *, $best AS best FROM m) " +
         "SELECT doc_id, lang_rule, n_tokens, " +
-        cls.map(c => s"m_$c").mkString(", ") + ", " +
+        LangGatePinned.classes.map(c => s"m_$c").mkString(", ") + ", " +
         s"$langCase AS lang, ($langCase) = lang_rule AS agree " +
         "FROM b CROSS JOIN gg ORDER BY doc_id"
     })
@@ -1966,97 +1977,66 @@ object TextQueries extends QueryPack {
       "ELSE '' END"
 
   /** Per-LANGUAGE routed curation — the composition [[LangSegment]]
-    * exists to serve (X110 → route → X91): per-line language
-    * segmentation picks each document's majority language, documents
-    * route to per-language pipelines, and
+    * exists to serve (X110 → route → X91), run by
+    * [[graft.pipeline.Mixing.routedFunnel]]: per-line language
+    * segmentation picks each document's majority language, and
     * [[graft.pipeline.Mixing.byTemperatureRoutedT2]] rebalances
     * sources WITHIN each language under that language's own token
-    * budget — one dataflow for all languages (one (lang, source)
-    * aggregate, broadcast targets, ONE corpus shuffle for the
-    * selection window). Output: the (language × source) funnel —
-    * routed docs/tokens and selected docs/tokens. The oracle replays
-    * line split → shared [[langCaseSql]] → majority window → sqrt-mass
+    * budget. Output: the (language × source) funnel — routed
+    * docs/tokens and selected docs/tokens. The oracle replays line
+    * split → shared [[langCaseSql]] → majority window → sqrt-mass
     * targets under the shared [[RouteBudgets]] CASE → md5-order greedy
-    * selection → funnel roll-up verbatim.
+    * selection → funnel roll-up verbatim ([[routeOracleSql]]).
     */
   private def routeLangQuery = QueryDef(
     "corpus_route_lang_documents",
-    (s, dir) => {
-      val fixt = withRouteFixture(
-        Tables.load(s, dir, "documents", parallelize = true))
-      // metadata-sized routed frame (id, source, tokens, lang):
-      // checkpointed once, read by the mixing AND the funnel — the
-      // corpus text is never scanned again downstream
-      val base = fixt
-        .select(col("doc_id"), col("source"),
-          TextAnalysis.tokenCount(col("rtext")).cast("long")
-            .as("n_tokens"))
-        .join(LangSegment.segment(fixt, "doc_id", "rtext")
-          .select(col("doc_id"), col("majority_lang").as("lang")),
-          Seq("doc_id"))
-        // LAZY (r17): the mixing aggregate, the selection window and
-        // the funnel join all consume base inside the one final
-        // action; the first scan stage materializes the cache
-        // (block-level compute dedup covers the concurrent window), so
-        // the classify chain pays no dedicated materialization job
-        .localCheckpoint(false)
-      val sel = graft.pipeline.Mixing.byTemperatureRoutedT2(
-          base, "lang", "source", "doc_id", "n_tokens", RouteBudgets)
-        .select(col("doc_id"), lit(true).as("__sel"))
-      base.join(sel, Seq("doc_id"), "left")
-        .groupBy("lang", "source").agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("lang_tokens"),
-          sum(when(col("__sel"), 1L).otherwise(0L)).as("n_selected"),
-          sum(when(col("__sel"), col("n_tokens")).otherwise(0L))
-            .as("sel_tokens"))
-        .orderBy("lang", "source")
-    },
-    Some {
-      val budgetCase = "CASE s.lang " + RouteBudgets.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"WHEN '$k' THEN $v" }
-        .mkString(" ") + " ELSE 0 END"
-      s"WITH d AS (SELECT doc_id, source, $routeFixtureSql AS rtext " +
-        "FROM documents), " +
-        "ls AS (SELECT doc_id, string_split(rtext, chr(10)) AS lines " +
-        "FROM d), " +
-        "li AS (SELECT doc_id, lines, " +
-        "unnest(generate_series(1, len(lines))) AS pos FROM ls), " +
-        "l AS (SELECT doc_id, trim(lines[pos]) AS line FROM li), " +
-        "ln AS (SELECT doc_id, line FROM l WHERE length(line) > 0), " +
-        s"lg AS (SELECT doc_id, ${langCaseSql("line")} AS lang " +
-        "FROM ln), " +
-        "c AS (SELECT doc_id, lang, count(*) AS cnt FROM lg " +
-        "GROUP BY 1, 2), " +
-        "r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id " +
-        "ORDER BY cnt DESC, lang) AS rn FROM c), " +
-        "mj AS (SELECT doc_id, max(CASE WHEN rn = 1 THEN lang END) " +
-        "AS lang FROM r GROUP BY 1), " +
-        "toks AS (SELECT d.doc_id, d.source, mj.lang, " +
-        s"len(${tokensSqlOf("rtext")})::BIGINT AS n " +
-        "FROM d JOIN mj USING (doc_id)), " +
-        "s AS (SELECT lang, source, CAST(sum(n) AS BIGINT) AS stok " +
-        "FROM toks GROUP BY 1, 2), " +
-        "z AS (SELECT lang, CAST(sum(CAST(sqrt(stok) " +
-        "AS DECIMAL(38,12))) AS DOUBLE) AS zsum FROM s GROUP BY 1), " +
-        s"t AS (SELECT s.lang, s.source, CAST(floor(CAST($budgetCase " +
-        "AS DOUBLE) * sqrt(stok) / zsum) AS BIGINT) AS target " +
-        "FROM s JOIN z USING (lang)), " +
-        "cm AS (SELECT doc_id, lang, source, n, SUM(n) OVER (" +
-        "PARTITION BY lang, source ORDER BY md5(doc_id::VARCHAR), " +
-        "doc_id ROWS UNBOUNDED PRECEDING) AS cum FROM toks), " +
-        "sel AS (SELECT cm.doc_id FROM cm JOIN t USING (lang, source) " +
-        "WHERE cum - n < target) " +
-        "SELECT toks.lang, toks.source, " +
-        "CAST(count(*) AS BIGINT) AS n_docs, " +
-        "CAST(sum(n) AS BIGINT) AS lang_tokens, " +
-        "CAST(sum(CASE WHEN sel.doc_id IS NOT NULL THEN 1 ELSE 0 END) " +
-        "AS BIGINT) AS n_selected, " +
-        "CAST(sum(CASE WHEN sel.doc_id IS NOT NULL THEN n ELSE 0 END) " +
-        "AS BIGINT) AS sel_tokens " +
-        "FROM toks LEFT JOIN sel ON toks.doc_id = sel.doc_id " +
-        "GROUP BY 1, 2 ORDER BY 1, 2"
-    })
+    (s, dir) => graft.pipeline.Mixing.routedFunnel(
+      withRouteFixture(Tables.load(s, dir, "documents", parallelize = true)),
+      "doc_id", "source", "rtext", RouteBudgets),
+    Some(routeOracleSql("", ruleLineLangSql)))
+
+  /** The routed-curation oracle over the [[routeFixtureSql]] corpus:
+    * [[lineSplitSql]], the `lg` line classifier `lineLang`, the
+    * majority window, sqrt-mass targets under [[RouteBudgets]],
+    * md5-order greedy selection and the (lang × source) funnel. A
+    * non-empty `guard` CTE ([[gateGuardSql]]) follows `d` and is
+    * cross-joined into the final select.
+    */
+  private def routeOracleSql(guard: String, lineLang: String): String = {
+    val budgetCase = "CASE s.lang " + RouteBudgets.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"WHEN '$k' THEN $v" }
+      .mkString(" ") + " ELSE 0 END"
+    s"WITH d AS (SELECT doc_id, source, $routeFixtureSql AS rtext " +
+      "FROM documents), " + guard + lineSplitSql("rtext") + lineLang +
+      lineRankSql +
+      "mj AS (SELECT doc_id, max(CASE WHEN rn = 1 THEN lang END) " +
+      "AS lang FROM r GROUP BY 1), " +
+      "toks AS (SELECT d.doc_id, d.source, mj.lang, " +
+      s"len(${tokensSqlOf("rtext")})::BIGINT AS n " +
+      "FROM d JOIN mj USING (doc_id)), " +
+      "s AS (SELECT lang, source, CAST(sum(n) AS BIGINT) AS stok " +
+      "FROM toks GROUP BY 1, 2), " +
+      "z AS (SELECT lang, CAST(sum(CAST(sqrt(stok) " +
+      "AS DECIMAL(38,12))) AS DOUBLE) AS zsum FROM s GROUP BY 1), " +
+      s"t AS (SELECT s.lang, s.source, CAST(floor(CAST($budgetCase " +
+      "AS DOUBLE) * sqrt(stok) / zsum) AS BIGINT) AS target " +
+      "FROM s JOIN z USING (lang)), " +
+      "cm AS (SELECT doc_id, lang, source, n, SUM(n) OVER (" +
+      "PARTITION BY lang, source ORDER BY md5(doc_id::VARCHAR), " +
+      "doc_id ROWS UNBOUNDED PRECEDING) AS cum FROM toks), " +
+      "sel AS (SELECT cm.doc_id FROM cm JOIN t USING (lang, source) " +
+      "WHERE cum - n < target) " +
+      "SELECT toks.lang, toks.source, " +
+      "CAST(count(*) AS BIGINT) AS n_docs, " +
+      "CAST(sum(n) AS BIGINT) AS lang_tokens, " +
+      "CAST(sum(CASE WHEN sel.doc_id IS NOT NULL THEN 1 ELSE 0 END) " +
+      "AS BIGINT) AS n_selected, " +
+      "CAST(sum(CASE WHEN sel.doc_id IS NOT NULL THEN n ELSE 0 END) " +
+      "AS BIGINT) AS sel_tokens " +
+      "FROM toks LEFT JOIN sel ON toks.doc_id = sel.doc_id " +
+      (if (guard.isEmpty) "" else "CROSS JOIN gg ") +
+      "GROUP BY 1, 2 ORDER BY 1, 2"
+  }
 
   /** Per-language routed curation under the LEARNED language model —
     * the composition X113 was built for: identical dataflow to
@@ -2082,91 +2062,20 @@ object TextQueries extends QueryPack {
         withLangFixture(docs)
           .withColumn("__label", TextAnalysis.langId(col("ltext"))),
         "doc_id", "ltext", "__label")
-      val fixt = withRouteFixture(docs)
-      val base = fixt
-        .select(col("doc_id"), col("source"),
-          TextAnalysis.tokenCount(col("rtext")).cast("long")
-            .as("n_tokens"))
-        .join(LangSegment.segment(fixt, "doc_id", "rtext",
-            langOf = l => LangModel.classify(l, m))
-          .select(col("doc_id"), col("majority_lang").as("lang")),
-          Seq("doc_id"))
-        // LAZY (r17): the mixing aggregate, the selection window and
-        // the funnel join all consume base inside the one final
-        // action; the first scan stage materializes the cache
-        // (block-level compute dedup covers the concurrent window), so
-        // the classify chain pays no dedicated materialization job
-        .localCheckpoint(false)
-      val sel = graft.pipeline.Mixing.byTemperatureRoutedT2(
-          base, "lang", "source", "doc_id", "n_tokens", RouteBudgets)
-        .select(col("doc_id"), lit(true).as("__sel"))
-      base.join(sel, Seq("doc_id"), "left")
-        .groupBy("lang", "source").agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("lang_tokens"),
-          sum(when(col("__sel"), 1L).otherwise(0L)).as("n_selected"),
-          sum(when(col("__sel"), col("n_tokens")).otherwise(0L))
-            .as("sel_tokens"))
-        .orderBy("lang", "source")
+      graft.pipeline.Mixing.routedFunnel(withRouteFixture(docs),
+        "doc_id", "source", "rtext", RouteBudgets,
+        langOf = l => LangModel.classify(l, m))
     },
     Some {
-      val cls = LangGatePinned.classes
-      val margins = cls.indices.map(i =>
-        marginSql(LangGatePinned.weights(i), LangGatePinned.biases(i)) +
-          s" AS m_${cls(i)}").mkString(", ")
-      val best = cls.map(c => s"m_$c").mkString("greatest(", ", ", ")")
-      val langCase = "CASE " + cls.map(c =>
-        s"WHEN m_$c = best THEN '$c'").mkString(" ") + " END"
-      val budgetCase = "CASE s.lang " + RouteBudgets.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"WHEN '$k' THEN $v" }
-        .mkString(" ") + " ELSE 0 END"
-      s"WITH d AS (SELECT doc_id, source, $routeFixtureSql AS rtext " +
-        "FROM documents), " +
-        "gg AS (SELECT CASE WHEN (SELECT count(*) FROM documents) = " +
-        s"${LangGatePinned.GateRows} THEN 1 ELSE " +
-        "error('model-routed-curation trained-literal oracle is only " +
-        s"valid at the ${LangGatePinned.GateRows}-row gate corpus: " +
-        "regenerate LangGatePinned') END AS ok), " +
-        "ls AS (SELECT doc_id, string_split(rtext, chr(10)) AS lines " +
-        "FROM d), " +
-        "li AS (SELECT doc_id, lines, " +
-        "unnest(generate_series(1, len(lines))) AS pos FROM ls), " +
-        "l AS (SELECT doc_id, trim(lines[pos]) AS line FROM li), " +
-        "ln AS (SELECT doc_id, line FROM l WHERE length(line) > 0), " +
+      val (margins, best, langCase) = pinnedLangSql
+      routeOracleSql(
+        gateGuardSql(LangGatePinned.GateRows,
+          "model-routed-curation trained-literal oracle",
+          "LangGatePinned"),
         s"lt AS (SELECT doc_id, ${tokensSqlOf("line")} AS t FROM ln), " +
-        s"lm AS (SELECT doc_id, $margins FROM lt), " +
-        s"lb AS (SELECT *, $best AS best FROM lm), " +
-        s"lg AS (SELECT doc_id, $langCase AS lang FROM lb), " +
-        "c AS (SELECT doc_id, lang, count(*) AS cnt FROM lg " +
-        "GROUP BY 1, 2), " +
-        "r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id " +
-        "ORDER BY cnt DESC, lang) AS rn FROM c), " +
-        "mj AS (SELECT doc_id, max(CASE WHEN rn = 1 THEN lang END) " +
-        "AS lang FROM r GROUP BY 1), " +
-        "toks AS (SELECT d.doc_id, d.source, mj.lang, " +
-        s"len(${tokensSqlOf("rtext")})::BIGINT AS n " +
-        "FROM d JOIN mj USING (doc_id)), " +
-        "s AS (SELECT lang, source, CAST(sum(n) AS BIGINT) AS stok " +
-        "FROM toks GROUP BY 1, 2), " +
-        "z AS (SELECT lang, CAST(sum(CAST(sqrt(stok) " +
-        "AS DECIMAL(38,12))) AS DOUBLE) AS zsum FROM s GROUP BY 1), " +
-        s"t AS (SELECT s.lang, s.source, CAST(floor(CAST($budgetCase " +
-        "AS DOUBLE) * sqrt(stok) / zsum) AS BIGINT) AS target " +
-        "FROM s JOIN z USING (lang)), " +
-        "cm AS (SELECT doc_id, lang, source, n, SUM(n) OVER (" +
-        "PARTITION BY lang, source ORDER BY md5(doc_id::VARCHAR), " +
-        "doc_id ROWS UNBOUNDED PRECEDING) AS cum FROM toks), " +
-        "sel AS (SELECT cm.doc_id FROM cm JOIN t USING (lang, source) " +
-        "WHERE cum - n < target) " +
-        "SELECT toks.lang, toks.source, " +
-        "CAST(count(*) AS BIGINT) AS n_docs, " +
-        "CAST(sum(n) AS BIGINT) AS lang_tokens, " +
-        "CAST(sum(CASE WHEN sel.doc_id IS NOT NULL THEN 1 ELSE 0 END) " +
-        "AS BIGINT) AS n_selected, " +
-        "CAST(sum(CASE WHEN sel.doc_id IS NOT NULL THEN n ELSE 0 END) " +
-        "AS BIGINT) AS sel_tokens " +
-        "FROM toks LEFT JOIN sel ON toks.doc_id = sel.doc_id " +
-        "CROSS JOIN gg GROUP BY 1, 2 ORDER BY 1, 2"
+          s"lm AS (SELECT doc_id, $margins FROM lt), " +
+          s"lb AS (SELECT *, $best AS best FROM lm), " +
+          s"lg AS (SELECT doc_id, $langCase AS lang FROM lb), ")
     })
 
   private def langSegmentsQuery = QueryDef(
@@ -2194,18 +2103,7 @@ object TextQueries extends QueryPack {
         "CASE WHEN doc_id % 7 = 0 THEN chr(10) || " +
         "'el mundo es grande los dias' ELSE '' END AS text " +
         "FROM documents), " +
-        "ls AS (SELECT doc_id, string_split(text, chr(10)) AS lines " +
-        "FROM d), " +
-        "li AS (SELECT doc_id, lines, " +
-        "unnest(generate_series(1, len(lines))) AS pos FROM ls), " +
-        "l AS (SELECT doc_id, trim(lines[pos]) AS line FROM li), " +
-        "ln AS (SELECT doc_id, line FROM l WHERE length(line) > 0), " +
-        s"lg AS (SELECT doc_id, ${langCaseSql("line")} AS lang " +
-        "FROM ln), " +
-        "c AS (SELECT doc_id, lang, count(*) AS cnt FROM lg " +
-        "GROUP BY 1, 2), " +
-        "r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id " +
-        "ORDER BY cnt DESC, lang) AS rn FROM c), " +
+        lineSplitSql("text") + ruleLineLangSql + lineRankSql +
         "m AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_lines, " +
         "CAST(count(*) AS BIGINT) AS n_langs, " +
         "max(CASE WHEN rn = 1 THEN lang END) AS majority_lang, " +
@@ -2273,11 +2171,8 @@ object TextQueries extends QueryPack {
     s"WITH h AS (SELECT doc_id, nfc_normalize($htmlFixtureSql) " +
       "AS html FROM documents), " +
       htmlExtractionCtes + ", " +
-      "gg AS (SELECT CASE WHEN (SELECT count(*) FROM documents) = " +
-      s"${QualityGatePinned.GateRows} THEN 1 ELSE " +
-      "error('e2e pinned oracle is only valid at the " +
-      s"${QualityGatePinned.GateRows}-row gate corpus: regenerate " +
-      "the pinned models') END AS ok), " +
+      gateGuardSql(QualityGatePinned.GateRows,
+        "e2e pinned oracle", "the pinned models") +
       "ex AS (SELECT d2.doc_id, d2.source, agg.text FROM documents d2 " +
       "JOIN agg USING (doc_id)), " +
       "toks AS (SELECT doc_id, source, " +
@@ -2293,13 +2188,7 @@ object TextQueries extends QueryPack {
         "(SELECT embeddings.vec_id, embeddings.embedding " +
           "FROM embeddings JOIN q ON q.doc_id = embeddings.vec_id) " +
           "embq") + ", " +
-      "av AS (SELECT a.vec_id, a.label, a.d2, n.nv FROM a " +
-      "JOIN n USING (vec_id)), " +
-      "dups AS (SELECT x.vec_id AS ida, y.vec_id AS idb, " +
-      "list_dot_product(x.nv, y.nv) AS cos FROM av x " +
-      "JOIN av y USING (label) WHERE x.vec_id <> y.vec_id " +
-      "AND (y.d2 < x.d2 OR (y.d2 = x.d2 AND y.vec_id < x.vec_id)) " +
-      s"AND list_dot_product(x.nv, y.nv) >= $tau), " +
+      graft.sim.SimilarityQueries.semDupsSql(tau) +
       "best AS (SELECT ida AS vec_id FROM (SELECT ida, " +
       "row_number() OVER (PARTITION BY ida ORDER BY cos DESC, idb) " +
       "AS rn FROM dups) WHERE rn = 1), " +

@@ -75,6 +75,45 @@ class StreamingPipelinesSpec extends SparkSpec {
     assert(streamedFinal.nonEmpty)
   }
 
+  test("incremental SCD1 across micro-batches: the later batch's row " +
+      "wins even when its orderCol is older") {
+    import spark.implicits._
+    def ts(day: String) = java.sql.Timestamp.valueOf(s"$day 00:00:00")
+    val cols = Seq("event_id", "user_id", "event_type", "ts", "value")
+    val wave0 = Seq((1L, 1L, "view", ts("2024-01-05"), 1.0),
+      (2L, 2L, "view", ts("2024-01-01"), 2.0)).toDF(cols: _*)
+    val wave1 = Seq((3L, 1L, "click", ts("2024-01-02"), 3.0)).toDF(cols: _*)
+    val src = tmpDir("graft_scd1_xbatch_src")
+    def files = new java.io.File(src).listFiles()
+      .filter(_.getName.endsWith(".parquet")).toSet
+    wave0.coalesce(1).write.mode("append").parquet(src)
+    val first = files
+    wave1.coalesce(1).write.mode("append").parquet(src)
+    // the file source drains in modification-time order: wave 1 after 0
+    (files -- first).foreach(f =>
+      assert(f.setLastModified(first.map(_.lastModified).max + 60000)))
+
+    val target = tmpDir("graft_scd1_xbatch_target") + "/t"
+    val stream = spark.readStream.schema(wave0.schema)
+      .option("maxFilesPerTrigger", 1).parquet(src)
+    val q = StreamingPipelines.incrementalScd1(stream, target,
+      keys = Seq("user_id"), orderCol = "ts",
+      tieBreakers = Seq("event_id"),
+      checkpoint = tmpDir("graft_scd1_xbatch_ckpt"))
+    assert(q.awaitTermination(120000), "streaming query timed out")
+    assert(q.recentProgress.count(_.numInputRows > 0) === 2,
+      "each wave must drain in its own micro-batch")
+
+    val got = spark.read.parquet(target)
+      .select("user_id", "event_id").as[(Long, Long)].collect().toSet
+    assert(got === Set((1L, 3L), (2L, 2L)))
+    // over the whole stream, latest-per-key would keep user 1's newer row
+    val latest = Scd1.latestPerKey(wave0.union(wave1), Seq("user_id"),
+        "ts", tieBreakers = Seq("event_id"))
+      .select("user_id", "event_id").as[(Long, Long)].collect().toSet
+    assert(latest === Set((1L, 1L), (2L, 2L)))
+  }
+
   test("profileStream appends one batch-tagged profile per micro-batch") {
     val events = Tables.load(spark, sf, "events")
       .select("event_id", "value")
