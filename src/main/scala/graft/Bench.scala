@@ -6,6 +6,16 @@ import org.apache.spark.sql.SparkSession
   * forces a nonzero exit — failures must never look like fast successes.
   */
 object Bench {
+
+  /** The `sf0.001` sibling of `sfDir` when it exists and differs: the
+    * warm-up scale of [[Bench]] and [[BenchOne]].
+    */
+  private[graft] def warmDirOf(sfDir: String): Option[String] =
+    Option(new java.io.File(sfDir).getParentFile)
+      .map(new java.io.File(_, "sf0.001"))
+      .filter(w => w.isDirectory && w.getPath != sfDir)
+      .map(_.getPath)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Optional comma-separated query-name filter for foreground isolation
@@ -18,12 +28,7 @@ object Bench {
     // measures execution rather than first-run compilation (which swung
     // totals by ±40% between otherwise identical runs). Failures are
     // ignored here — the timed loop reports them.
-    val warmDir = new java.io.File(sfDir).getParentFile match {
-      case null => None
-      case p =>
-        val w = new java.io.File(p, "sf0.001")
-        if (w.isDirectory && w.getPath != sfDir) Some(w.getPath) else None
-    }
+    val warmDir = warmDirOf(sfDir)
     val selected = SparkEntry.queries.filter { case (n, _) =>
       only.forall(_.contains(n))
     }
@@ -220,12 +225,7 @@ object Bench {
       if (cotenantExit.isEmpty) cotenantExit = cotenantCores(2000)
       firstPass.map { case (k, v) => k -> better.getOrElse(k, v) }
     }
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
+    def jstr(s: String): String = util.JStr(s).render
     // The harness captures only the last 2000 chars of output, and a
     // truncated line parses as null (the r4 failure mode). At 68+
     // queries even 1-decimal per-query entries overflow, so the line is

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.graft.ListenerBusShim
+
 /** Dev helper: time the named queries (min-of-3 with an sf0.001 warm-up
   * pass over the SAME queries — the [[Bench]] protocol scoped down)
   * without running the whole suite; `--explain` also prints each query's
@@ -39,6 +41,7 @@ object BenchOne {
     val named = args.toSeq.filterNot(a => a == "--explain" || a == "--jobs")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local()
+    def settle(): Unit = ListenerBusShim.waitUntilEmpty(spark.sparkContext)
     val names =
       if (named.nonEmpty) named else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
@@ -46,13 +49,7 @@ object BenchOne {
         s"unknown query '$name'; known: " +
           SparkEntry.queries.keys.toSeq.sorted.mkString(", "))
     }
-    val warmDir = new java.io.File(sfDir).getParentFile match {
-      case null => None
-      case p =>
-        val w = new java.io.File(p, "sf0.001")
-        if (w.isDirectory && w.getPath != sfDir) Some(w.getPath) else None
-    }
-    warmDir.foreach { w =>
+    Bench.warmDirOf(sfDir).foreach { w =>
       names.distinct.foreach { name =>
         try SparkEntry.queries(name)(spark, w).queryExecution.toRdd.count()
         catch { case _: Throwable => () }
@@ -67,7 +64,7 @@ object BenchOne {
       val times = (1 to 3).map { i =>
         if (jobsDiag && i == 3) {
           // settle listener events from prior runs, then count run 3
-          Thread.sleep(300); counters.reset()
+          settle(); counters.reset()
         }
         val t0 = System.nanoTime()
         fn(spark, sfDir).queryExecution.toRdd.count()
@@ -78,7 +75,7 @@ object BenchOne {
         dt
       }
       if (jobsDiag) {
-        Thread.sleep(300) // let queued listener events drain
+        settle()
         println(f"BENCHJOBS $name run3=${times.last}%.3f " +
           s"jobs=${counters.jobs} stages=${counters.stages} " +
           s"tasks=${counters.tasks} " +

@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Frames
+
 /** Corpus deduplication for training-data pipelines: exact, MinHash+LSH
   * near-dup, and n-gram Jaccard verification.
   *
@@ -148,19 +150,19 @@ object Dedup {
     * frame: buckets bounded to [2, maxBucket] (a bucket of m docs yields
     * m·(m−1)/2 pairs — a degenerate bucket must not explode the
     * self-join quadratically), then the banded self-join, distinct. The
-    * bounded index is persisted: it is the LSH index proper, read by
-    * both sides of the self-join — without the persist CollapseProject
-    * re-derives the MinHash per band and per side. ~1 KB/row; at
-    * cluster scale this is the standard materialized sketch table.
+    * bounded index is cached ([[Frames.deferred]]): it is the LSH index
+    * proper, read by both sides of the self-join — without the cache
+    * CollapseProject re-derives the MinHash per band and per side.
+    * ~1 KB/row; at cluster scale this is the standard materialized
+    * sketch table.
     */
   private[dedup] def pairsFromBands(buckets: DataFrame, idCol: String,
       maxBucket: Int): DataFrame = {
-    val bounded = buckets.withColumn("__bucket_n",
+    val bounded = Frames.deferred(buckets.withColumn("__bucket_n",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
           .partitionBy("band_idx", "band_hash")))
       .filter(col("__bucket_n").between(2, maxBucket))
-      .drop("__bucket_n")
-      .persist()
+      .drop("__bucket_n"))
     val left = bounded.select(col("band_idx"), col("band_hash"),
       col(idCol).as("id_a"))
     val right = bounded.select(col("band_idx"), col("band_hash"),
@@ -172,17 +174,21 @@ object Dedup {
 
   /** Exact Jaccard similarity of the k-shingle SETS of each candidate
     * pair. Runs on pairs only: two hash joins back to the (id, shingles)
-    * projection — never quadratic in the corpus.
+    * projection — never quadratic in the corpus. The result is lazy over
+    * a deferred shingle-set cache: consume it, then
+    * `graft.util.DeferredCleanup.drain()`.
     */
   def jaccardOnPairs(pairs: DataFrame, df: DataFrame, idCol: String,
       textCol: String, shingleK: Int): DataFrame =
     jaccardOnPairsFromSets(pairs,
-      // persist: joined once per pair side — without it the corpus is
+      // cached: joined once per pair side — without it the corpus is
       // re-shingled twice.
-      shingleSets(df, idCol, textCol, shingleK).persist(), idCol)
+      Frames.deferred(shingleSets(df, idCol, textCol, shingleK)), idCol)
 
   /** Exact Jaccard over candidate pairs from a precomputed (id, __set)
-    * frame (persist it if it is not already materialized).
+    * frame. Both pair sides join it, so pass a materialized frame (one
+    * the caller holds in [[Frames.cached]], a checkpoint or a table);
+    * a lazy one is re-derived per side.
     */
   def jaccardOnPairsFromSets(pairs: DataFrame, sets0: DataFrame,
       idCol: String): DataFrame = {
@@ -200,7 +206,9 @@ object Dedup {
   }
 
   /** Full near-dup pipeline in the xxhash production family: banded
-    * LSH candidates → exact Jaccard ≥ threshold.
+    * LSH candidates → exact Jaccard ≥ threshold. The result is lazy over
+    * deferred caches (shingle sets, band index): consume it, then
+    * `graft.util.DeferredCleanup.drain()`.
     */
   def nearDuplicates(df: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, numHashes: Int = 128, bands: Int = 32,
@@ -218,7 +226,7 @@ object Dedup {
     nearDuplicatesWith(HashFamily.Md5, df, idCol, textCol, shingleK,
       numHashes, bands, threshold, maxBucket)
 
-  /** The corpus is shingled ONCE: the persisted (id, set) frame feeds
+  /** The corpus is shingled ONCE: the cached (id, set) frame feeds
     * both the MinHash band index ([[minHashBands]], bounded by
     * [[pairsFromBands]]) and the exact verification joins. Empty
     * shingle sets yield empty base arrays and thus the all-P sentinel
@@ -227,7 +235,7 @@ object Dedup {
   private def nearDuplicatesWith(family: HashFamily, df: DataFrame,
       idCol: String, textCol: String, shingleK: Int, numHashes: Int,
       bands: Int, threshold: Double, maxBucket: Int): DataFrame = {
-    val sets = shingleSets(df, idCol, textCol, shingleK).persist()
+    val sets = Frames.deferred(shingleSets(df, idCol, textCol, shingleK))
     val pairs = pairsFromBands(
       minHashBands(family, sets, idCol, numHashes, bands), idCol, maxBucket)
     jaccardOnPairsFromSets(pairs, sets, idCol)
@@ -282,33 +290,34 @@ object Dedup {
     * fixpoint. Iterations are bounded by the cluster graph's diameter —
     * near-dup graphs are clique-like, so convergence is fast; `maxIter`
     * guards adversarial chains (hitting it raises rather than returning a
-    * half-propagated clustering). Each iteration's labels are persisted
-    * and the previous iteration's unpersisted — the standard iterative-
-    * algorithm memory discipline (GraphX does the same internally).
+    * half-propagated clustering). Each iteration's labels are cached
+    * and the previous iteration's released — the standard iterative-
+    * algorithm memory discipline (GraphX does the same internally). The
+    * returned labels stay cached: the caller owns that cache.
     *
     * @param pairs (id_a, id_b) near-dup pairs, any orientation
     */
-  def clusters(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .persist()
-    var labels = edges.select(col("src").as("id"))
-      .distinct()
-      .withColumn("cluster", col("id"))
-      .persist()
-    // Labels only ever DECREASE (least of self and pulled minima), so
-    // sum(cluster) is a monotone convergence metric: fixpoint ⇔ the sum
-    // stops changing. One cheap aggregate per iteration instead of a
-    // self-join diff. The sum accumulates in DECIMAL(38,0): a Long sum
-    // can wrap on large/adversarial id values, and a wrapped-equal sum
-    // would silently report convergence on a not-yet-converged labeling.
-    // SUM over zero rows is NULL → 0 (empty pair set = already converged
-    // on an empty clustering).
-    def sumOf(df: DataFrame): BigDecimal =
-      Option(df.agg(sum(col("cluster").cast("decimal(38,0)"))).head.get(0))
-        .map(d => BigDecimal(d.asInstanceOf[java.math.BigDecimal]))
-        .getOrElse(BigDecimal(0))
-    try {
+  def clusters(pairs: DataFrame, maxIter: Int = 25): DataFrame =
+    Frames.cached(
+        pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+          .union(pairs.select(col("id_b").as("src"),
+            col("id_a").as("dst")))) { edges =>
+      var labels = edges.select(col("src").as("id"))
+        .distinct()
+        .withColumn("cluster", col("id"))
+        .persist()
+      // Labels only ever DECREASE (least of self and pulled minima), so
+      // sum(cluster) is a monotone convergence metric: fixpoint ⇔ the sum
+      // stops changing. One cheap aggregate per iteration instead of a
+      // self-join diff. The sum accumulates in DECIMAL(38,0): a Long sum
+      // can wrap on large/adversarial id values, and a wrapped-equal sum
+      // would silently report convergence on a not-yet-converged labeling.
+      // SUM over zero rows is NULL → 0 (empty pair set = already converged
+      // on an empty clustering).
+      def sumOf(df: DataFrame): BigDecimal =
+        Option(df.agg(sum(col("cluster").cast("decimal(38,0)"))).head.get(0))
+          .map(d => BigDecimal(d.asInstanceOf[java.math.BigDecimal]))
+          .getOrElse(BigDecimal(0))
       var prevSum = sumOf(labels)
       // sum != 0 proves non-empty without a second job; the isEmpty probe
       // only runs in the (sum == 0) corner: empty input, or ids that
@@ -338,12 +347,10 @@ object Dedup {
           s"label propagation did not converge in $maxIter iterations — " +
             "pathological chain structure; raise maxIter")
       }
-      // the returned frame STAYS persisted — it is the computed result;
-      // unpersisting here would force a full re-propagation on first use.
-      // Callers drop it with unpersist()/clearCache when done.
+      // the returned frame STAYS cached — it is the computed result;
+      // releasing it here would force a full re-propagation on first use
       labels
-    } finally edges.unpersist(): Unit
-  }
+    }
 
   /** One row per cluster member with its survivor: (cluster, id,
     * is_survivor). Survivor = minimum id in the cluster, the conventional

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, QueryPack}
 import graft.io.Tables
+import graft.util.Frames
 
 /** Registered dedup queries over `documents`.
   *
@@ -72,12 +73,12 @@ object DedupQueries extends QueryPack {
   private def withNearDupPairs(s: SparkSession,
       dir: String)(f: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val docs = Tables.load(s, dir, "documents", parallelize = true)
-    val sets = Dedup.shingleSets(docs, "doc_id", "text", 3).persist()
-    try f(docs, Dedup
-      .jaccardOnPairsFromSets(blockedPairs(docs), sets, "doc_id")
-      .filter(col("jaccard") >= 0.8)
-      .select("id_a", "id_b"))
-    finally { sets.unpersist(blocking = false); () }
+    Frames.cached(Dedup.shingleSets(docs, "doc_id", "text", 3)) { sets =>
+      f(docs, Dedup
+        .jaccardOnPairsFromSets(blockedPairs(docs), sets, "doc_id")
+        .filter(col("jaccard") >= 0.8)
+        .select("id_a", "id_b"))
+    }
   }
 
   /** CTEs `pairs` → `edges` → `reach(id, r)` over a `jp` pair CTE: the
@@ -124,16 +125,16 @@ object DedupQueries extends QueryPack {
   private def substringQuery = QueryDef(
     "dedup_substring_documents",
     (s, dir) => {
-      // persisted per the gramArrays contract (the explode must read
+      // cached per the gramArrays contract (the explode must read
       // a materialized array column); per-doc report localizes +
       // releases before returning
-      val arrays = SubstringDedup.gramArrays(
-        Tables.load(s, dir, "documents", parallelize = true),
-        "doc_id", "text", SubstrMinLen).persist()
-      try graft.util.Frames.localized(
-        SubstringDedup.reportFromArrays(arrays, "doc_id", SubstrMinLen)
-          .orderBy("doc_id"))
-      finally { arrays.unpersist(blocking = false); () }
+      Frames.cached(SubstringDedup.gramArrays(
+          Tables.load(s, dir, "documents", parallelize = true),
+          "doc_id", "text", SubstrMinLen)) { arrays =>
+        Frames.localized(
+          SubstringDedup.reportFromArrays(arrays, "doc_id", SubstrMinLen)
+            .orderBy("doc_id"))
+      }
     },
     Some {
       val L = SubstrMinLen
@@ -174,13 +175,13 @@ object DedupQueries extends QueryPack {
   private def substringScrubQuery = QueryDef(
     "dedup_substring_scrub_documents",
     (s, dir) => {
-      val arrays = SubstringDedup.gramArrays(
-        Tables.load(s, dir, "documents", parallelize = true),
-        "doc_id", "text", SubstrMinLen).persist()
-      try graft.util.Frames.localized(
-        SubstringDedup.scrubFromArrays(arrays, "doc_id", SubstrMinLen)
-          .orderBy("doc_id"))
-      finally { arrays.unpersist(blocking = false); () }
+      Frames.cached(SubstringDedup.gramArrays(
+          Tables.load(s, dir, "documents", parallelize = true),
+          "doc_id", "text", SubstrMinLen)) { arrays =>
+        Frames.localized(
+          SubstringDedup.scrubFromArrays(arrays, "doc_id", SubstrMinLen)
+            .orderBy("doc_id"))
+      }
     },
     Some(substringScrubOracleSql))
 
@@ -241,8 +242,7 @@ object DedupQueries extends QueryPack {
     "dedup_split_safe_documents",
     (s, dir) => withNearDupPairs(s, dir) { (docs, nearDups) =>
       // read by clustering AND both straddle counts
-      val pairs = nearDups.persist()
-      try {
+      Frames.cached(nearDups) { pairs =>
         val clusters = Dedup.survivorsLocal(pairs)
           .select(col("id").as("doc_id"), col("cluster"))
         val safe = graft.pipeline.CorpusSplit.assign(
@@ -276,7 +276,7 @@ object DedupQueries extends QueryPack {
             coalesce(col("__cs"), lit(0L)).as("cross_pairs_safe"),
             coalesce(col("__cn"), lit(0L)).as("cross_pairs_naive"))
           .orderBy("split")
-      } finally { pairs.unpersist(blocking = false); () }
+      }
     },
     Some {
       val seed = graft.pipeline.CorpusSplit.DefaultSeed
@@ -324,12 +324,12 @@ object DedupQueries extends QueryPack {
     (s, dir) => {
       val docs = Tables.load(s, dir, "documents", parallelize = true)
       // caller-managed shingle cache: the pair-sized result materializes
-      // so the persisted set frame releases before returning
-      val sets = Dedup.shingleSets(docs, "doc_id", "text", 3).persist()
-      try graft.util.Frames.localized(
-          Dedup.jaccardOnPairsFromSets(blockedPairs(docs), sets, "doc_id"))
-        .orderBy("id_a", "id_b")
-      finally { sets.unpersist(blocking = false); () }
+      // so the cached set frame releases before returning
+      Frames.cached(Dedup.shingleSets(docs, "doc_id", "text", 3)) { sets =>
+        Frames.localized(
+            Dedup.jaccardOnPairsFromSets(blockedPairs(docs), sets, "doc_id"))
+          .orderBy("id_a", "id_b")
+      }
     },
     Some(s"WITH $jaccardPairsCte SELECT id_a, id_b, jaccard FROM jp " +
       "ORDER BY id_a, id_b"))
@@ -473,23 +473,21 @@ object DedupQueries extends QueryPack {
       val docs = Tables.load(s, dir, "documents", parallelize = true)
       // the md5 family through the shared fingerprint builder (empty
       // docs yield empty base arrays and fp = 0).
-      // persist: the fingerprint frame is exploded into 4 chunks and
+      // cached: the fingerprint frame is exploded into 4 chunks and
       // self-joined — without it the whole base pipeline re-evaluates
       // per chunk element and per join side (the r4 SimHash lesson).
       // The survivor set is report-sized, so it localizes and the fps
-      // persist releases in the finally below; the shared core's OWN
-      // groups/bounded persists (nearDupFromFingerprints's documented
-      // lifecycle) stay cached after return and are released by the
-      // gate/bench-boundary clearCache.
-      val fps = SimHash.fingerprints(docs, "doc_id", "text",
-        HashFamily.Md5).persist()
-      try {
-        graft.util.Frames.localized(
+      // cache releases on return; the shared core's OWN groups/bounded
+      // caches (nearDupFromFingerprints's documented lifecycle) are
+      // deferred and release at the harness's DeferredCleanup.drain().
+      Frames.cached(SimHash.fingerprints(docs, "doc_id", "text",
+          HashFamily.Md5)) { fps =>
+        Frames.localized(
           SimHash.nearDupFromFingerprints(fps, "doc_id", "fp",
               chunkBits = 15, nChunks = 4, maxHamming = 12,
               maxBucket = SimhashMaxBucket))
           .orderBy("id_a", "id_b")
-      } finally { fps.unpersist(blocking = false); () }
+      }
     },
     Some(simhashOracleSql))
 

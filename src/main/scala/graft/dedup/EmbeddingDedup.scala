@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sim.Similarity
+import graft.util.Frames
 
 /** Embedding-cosine near-duplicate detection — the vector-space member of
   * the dedup family (exact / MinHash / SimHash / n-gram Jaccard live in
@@ -129,12 +130,13 @@ object EmbeddingDedup {
     *                   the cap only fires on pathological data.
     * @param corpusSize pass when known to skip the sizing count
     *
-    * Cache lifecycle: the returned pair frame is LAZY over the persisted
+    * Cache lifecycle: the returned pair frame is LAZY over the cached
     * bounded-bucket index (consumed by both self-join sides), so the
-    * persist outlives this call by design — callers release via
-    * `clearCache()` (the gate/bench/spec boundaries) or materialize the
-    * pairs and unpersist; releasing here would rebuild the index once
-    * per join side.
+    * cache outlives this call by design as a
+    * [[graft.util.Frames.deferred]] release — consume the pairs, then
+    * `graft.util.DeferredCleanup.drain()` (what the gate/bench/spec
+    * boundaries do); releasing here would rebuild the index once per
+    * join side.
     */
   def lshCandidatePairs(df: DataFrame, idCol: String, vecCol: String,
       tables: Int = 8, bits: Int = 0, dims: Int = 64,
@@ -145,13 +147,12 @@ object EmbeddingDedup {
       else Similarity.scaledBits(corpusSize.getOrElse(df.count()),
         targetBucket)
     val idx = Similarity.lshIndex(df, idCol, vecCol, tables, b, dims)
-    // Materialized ANN index: without the persist the hyperplane hashing
+    // Materialized ANN index: without the cache the hyperplane hashing
     // is re-derived on each side of the self-join (and under the window).
-    val bounded = idx.withColumn("__bucket_n",
+    val bounded = Frames.deferred(idx.withColumn("__bucket_n",
         count(lit(1)).over(Window.partitionBy("table_idx", "bucket")))
       .filter(col("__bucket_n").between(2, maxBucket))
-      .drop("__bucket_n")
-      .persist()
+      .drop("__bucket_n"))
     val left = bounded.select(col("table_idx"), col("bucket"),
       col(idCol).as("id_a"))
     val right = bounded.select(col("table_idx"), col("bucket"),

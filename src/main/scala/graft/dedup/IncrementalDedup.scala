@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.graft.BloomShim
 
+import graft.util.Frames
+
 /** Incremental (batch-vs-corpus) exact dedup — the continuous-ingest
   * shape: admit only batch documents whose key does not already exist in
   * the accumulated corpus, WITHOUT joining the batch against the corpus.
@@ -105,11 +107,11 @@ object IncrementalDedup {
     * sketch build). The candidate frame is PERSISTED across that count
     * and the returned plan's branches (the count, the confirm join and
     * the final anti-join would otherwise each re-scan the batch and
-    * re-evaluate the bloom probe); its release is enqueued on
-    * [[graft.util.DeferredCleanup]] — the gate/bench/spec harnesses
-    * drain it after their compare/timing boundary, and a long-lived
-    * caller should `DeferredCleanup.drain()` (or `clearCache`) once the
-    * returned frame is materialized. At or under
+    * re-evaluate the bloom probe); its release is deferred
+    * ([[graft.util.Frames.deferred]]) — the gate/bench/spec harnesses
+    * drain it after their compare/timing boundary, a stream batch
+    * releases it at its end, and any other caller consumes the result
+    * and then calls `graft.util.DeferredCleanup.drain()`. At or under
     * `maxBroadcastCandidates` the confirm path broadcasts the candidate
     * keys and only STREAMS the corpus; past it, candidates anti-join
     * the corpus keys through a regular exchange — the corpus IS
@@ -123,9 +125,7 @@ object IncrementalDedup {
       : DataFrame = {
     val might = BloomShim.mightContain(bloom, xxhash64(col(keyCol)))
     val definitelyNew = batch.filter(!might)
-    val candidates = batch.filter(might).persist()
-    graft.util.DeferredCleanup.enqueue(
-      () => { candidates.unpersist(blocking = false); () })
+    val candidates = Frames.deferred(batch.filter(might))
     val newFromCandidates =
       if (candidates.count() <= maxBroadcastCandidates) {
         // corpus keys that really collide with a candidate: broadcast

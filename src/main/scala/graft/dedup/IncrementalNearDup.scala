@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Frames
+
 /** Incremental batch-vs-corpus NEAR-dup dedup — the composition of
   * [[Dedup]]'s MinHash-LSH banding (X2) with [[IncrementalDedup]]'s
   * batch-vs-corpus shape (X27): a daily ingest batch is probed against
@@ -90,27 +92,25 @@ object IncrementalNearDup {
     *
     * EAGER-ACTION NOTE (the [[IncrementalDedup.newRows]] contract): the
     * verify-path broadcast is count-gated, so one candidate-sized count
-    * job runs at call time; the batch-side frames persist across the
-    * count and the returned plan, released via
-    * [[graft.util.DeferredCleanup]].
+    * job runs at call time; the batch-side frames stay cached across
+    * the count and the returned plan as [[graft.util.Frames.deferred]]
+    * releases: consume the result, then
+    * `graft.util.DeferredCleanup.drain()` (a stream batch releases them
+    * at its end).
     */
   def matches(index: Index, batchSets: DataFrame,
       batchBands: DataFrame, idCol: String, threshold: Double,
       maxBucket: Int = 64,
       maxBroadcastCandidates: Long =
         IncrementalDedup.DefaultMaxBroadcastCandidates): DataFrame = {
-    val qb = batchBands.select(col(idCol).as("batch_id"),
-      col("band_idx"), col("band_hash")).persist()
-    graft.util.DeferredCleanup.enqueue(
-      () => { qb.unpersist(blocking = false); () })
+    val qb = Frames.deferred(batchBands.select(col(idCol).as("batch_id"),
+      col("band_idx"), col("band_hash")))
     // 1. bucket-key semi-join: the corpus band index streams ONCE
     // against the broadcast batch keys; output is candidate-sized
     val keys = qb.select(col("band_idx"), col("band_hash")).distinct()
-    val matched = index.bands
-      .join(broadcast(keys), Seq("band_idx", "band_hash"), "left_semi")
-      .persist() // read by the bound window AND the candidate join
-    graft.util.DeferredCleanup.enqueue(
-      () => { matched.unpersist(blocking = false); () })
+    // cached: read by the bound window AND the candidate join
+    val matched = Frames.deferred(index.bands
+      .join(broadcast(keys), Seq("band_idx", "band_hash"), "left_semi"))
     // 2. degenerate-bucket guard over the matched (= full, the semi-
     // join never splits a bucket) corpus bucket counts. No lower bound:
     // unlike the self-join lanes' [2, max], a SINGLE corpus member is a
@@ -122,11 +122,8 @@ object IncrementalNearDup {
       .select(col(idCol).as("dup_of"), col("band_idx"),
         col("band_hash"))
     // 3. candidate pairs — both sides candidate-sized
-    val cand = qb.join(bounded, Seq("band_idx", "band_hash"))
-      .select(col("batch_id"), col("dup_of")).distinct()
-      .persist()
-    graft.util.DeferredCleanup.enqueue(
-      () => { cand.unpersist(blocking = false); () })
+    val cand = Frames.deferred(qb.join(bounded, Seq("band_idx", "band_hash"))
+      .select(col("batch_id"), col("dup_of")).distinct())
     // 4. exact verify: candidates carry the batch set (broadcast-
     // joined — batch-sized by construction), then meet the corpus set
     // table map-side under the count gate
@@ -173,10 +170,8 @@ object IncrementalNearDup {
       maxBucket: Int): DataFrame = {
     val idx = buildWith(family, corpus, idCol, textCol, shingleK,
       numHashes, bands)
-    val bSets = Dedup.shingleSets(batch, idCol, textCol, shingleK)
-      .persist()
-    graft.util.DeferredCleanup.enqueue(
-      () => { bSets.unpersist(blocking = false); () })
+    val bSets = Frames.deferred(
+      Dedup.shingleSets(batch, idCol, textCol, shingleK))
     matches(idx, bSets,
       Dedup.minHashBands(family, bSets, idCol, numHashes, bands), idCol,
       threshold, maxBucket)

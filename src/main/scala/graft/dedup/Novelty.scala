@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Frames
+
 /** N-gram novelty / memorization-contribution audit: for every
   * document, the fraction of its distinct k-word shingles whose
   * corpus-wide FIRST OWNER (minimum document id) is the document
@@ -31,20 +33,18 @@ object Novelty {
   def firstOwnership(docs: DataFrame, idCol: String, textCol: String,
       k: Int): DataFrame = {
     require(k >= 1, "need a positive shingle width")
-    val grams = docs
-      .select(col(idCol), Dedup.tokensOf(col(textCol)).as("__t"))
-      .select(col(idCol),
-        explode(Dedup.wordShinglesFromTokens(col("__t"), k)).as("g"))
-      .distinct()
-      .persist()
-    try {
+    Frames.cached(docs
+        .select(col(idCol), Dedup.tokensOf(col(textCol)).as("__t"))
+        .select(col(idCol),
+          explode(Dedup.wordShinglesFromTokens(col("__t"), k)).as("g"))
+        .distinct()) { grams =>
       val perDoc = grams.groupBy(col(idCol))
         .agg(count(lit(1)).as("n_grams"))
       val novel = grams.groupBy(col("g"))
         .agg(min(col(idCol)).as(idCol))
         .groupBy(col(idCol)).agg(count(lit(1)).as("n_novel"))
       // DOC-GRAIN output: materialized with localCheckpoint (never a
-      // driver collect) so the gram persist can release on return
+      // driver collect) so the gram cache can release on return
       docs.select(col(idCol))
         .join(perDoc, Seq(idCol), "left")
         .join(novel, Seq(idCol), "left")
@@ -56,6 +56,6 @@ object Novelty {
             .otherwise(coalesce(col("n_novel"), lit(0L)).cast("double")
               / col("n_grams").cast("double")).as("novelty"))
         .localCheckpoint(true)
-    } finally { grams.unpersist(blocking = false); () }
+    }
   }
 }

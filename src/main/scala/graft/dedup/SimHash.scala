@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.util.Frames
+
 /** 64-bit SimHash fingerprints (Charikar) as native column expressions.
   *
   * simhash(doc) sets bit j when the sum over tokens of ±1 (per token-hash
@@ -84,10 +86,12 @@ object SimHash {
     * Output: `(id_a, id_b, hamming, n_a, n_b)` — cross rows have
     * `id_a < id_b`, diagonal rows `id_a = id_b`.
     *
-    * Cache lifecycle: the group and bounded-bucket frames persist
+    * Cache lifecycle: the group and bounded-bucket frames are cached
     * (each feeds two downstream consumers) and the result is lazy, so
-    * the persists outlive this call ([[Dedup.clusters]] convention) —
-    * the caller releases with `clearCache()` or materializes first.
+    * the caches outlive this call as [[graft.util.Frames.deferred]]
+    * releases: consume the result, then
+    * `graft.util.DeferredCleanup.drain()` (a stream batch releases
+    * them at its end).
     */
   def nearDupFromFingerprints(fps: org.apache.spark.sql.DataFrame,
       idCol: String, fpCol: String, chunkBits: Int, nChunks: Int,
@@ -105,7 +109,7 @@ object SimHash {
     * index folded over any batch cut feeds this tail and reproduces
     * the batch report exactly ([[graft.streaming.StreamingPipelines
     * .simhashStream]]). `persistIntermediates = false` skips the
-    * internal persists when `groups` is already materialized state
+    * internal caches when `groups` is already materialized state
     * (parquet/localCheckpoint) — re-reading tiny materialized frames
     * beats caching them per micro-batch.
     */
@@ -119,7 +123,7 @@ object SimHash {
     require(maxBucket >= 2, "maxBucket must admit at least one pair")
     val mask = (1L << chunkBits) - 1L
     val groups =
-      if (persistIntermediates) groups0.persist() else groups0
+      if (persistIntermediates) Frames.deferred(groups0) else groups0
     val chunks = groups.select(col(idCol), col(fpCol), col("__n"),
       posexplode(array((0 until nChunks).map(i =>
         shiftrightunsigned(col(fpCol), i * chunkBits)
@@ -131,12 +135,11 @@ object SimHash {
       .filter(col("__bucket_n").between(2, maxBucket))
       .drop("__bucket_n")
     // the bounded index feeds BOTH join sides: cache it in the batch
-    // lanes (released at the gate/bench boundary), or — when the
-    // input is materialized state (the streaming path, where per-batch
-    // cache entries would leak) — take a localCheckpoint barrier that
+    // lanes (a deferred release), or — when the input is materialized
+    // state (the streaming path) — take a localCheckpoint barrier that
     // frees with the frame, so the bucket window still runs ONCE
     val bounded =
-      if (persistIntermediates) bounded0.persist()
+      if (persistIntermediates) Frames.deferred(bounded0)
       else bounded0.localCheckpoint(true)
     val cross = bounded.as("a")
       .join(bounded.as("b"),
@@ -162,7 +165,7 @@ object SimHash {
     * primitives above, in the xxhash family (the API default; the
     * registered oracle twin `dedup_simhash_documents` runs the same
     * [[fingerprints]] builder over md5 bases). Shape: one projection
-    * corpus → 64-bit fingerprints (persisted: consumed by the group
+    * corpus → 64-bit fingerprints (cached: consumed by the group
     * collapse — without it the whole tokenize/shingle chain would
     * re-evaluate per consumer, the r4 lesson), then the shared
     * [[nearDupFromFingerprints]] core: exact-equal fingerprints
@@ -177,11 +180,11 @@ object SimHash {
     * more than `maxBucket` rows.
     *
     * Cache lifecycle: the returned frame is LAZY and derives from
-    * persisted intermediates, so the persists outlive this call by
-    * design (the [[Dedup.clusters]] convention) — the caller releases
-    * them with `clearCache()` (what the gate/bench/spec boundaries do)
-    * or materializes the pair set first. Unpersisting here would
-    * re-tokenize the corpus on first use of the result.
+    * cached intermediates, so the caches outlive this call by design
+    * as [[graft.util.Frames.deferred]] releases: consume the result,
+    * then `graft.util.DeferredCleanup.drain()` (what the
+    * gate/bench/spec boundaries do). Releasing here would re-tokenize
+    * the corpus on first use of the result.
     *
     * API-CHANGE NOTE (r15): output is at FINGERPRINT-GROUP grain, not
     * pair grain — exact-equal fingerprints report as ONE diagonal
@@ -196,9 +199,8 @@ object SimHash {
   def nearDuplicates(docs: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, shingleK: Int = 3, maxHamming: Int = 12,
       maxBucket: Int = 64): org.apache.spark.sql.DataFrame = {
-    val fps =
-      fingerprints(docs, idCol, textCol, HashFamily.Xxhash, shingleK)
-        .persist()
+    val fps = Frames.deferred(
+      fingerprints(docs, idCol, textCol, HashFamily.Xxhash, shingleK))
     nearDupFromFingerprints(fps, idCol, "fp", chunkBits = 16,
       nChunks = 4, maxHamming = maxHamming, maxBucket = maxBucket)
   }

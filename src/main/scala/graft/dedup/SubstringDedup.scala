@@ -130,6 +130,22 @@ object SubstringDedup {
     partials.filter(col("__n") >= 2)
       .select(col("gh"), col("__minkey"))
 
+  /** `starts` (`idCol`, `pos`: gram start positions) plus `__span`, the
+    * per-document id of the merged span each start falls in: a start
+    * more than `minLen - 1` past its predecessor opens a new span.
+    */
+  private def withSpanIds(starts: DataFrame, idCol: String,
+      minLen: Int): DataFrame = {
+    val w = Window.partitionBy(idCol).orderBy(col("pos"))
+    starts
+      .withColumn("__brk",
+        when(lag(col("pos"), 1).over(w).isNull ||
+          col("pos") > lag(col("pos"), 1).over(w) + (minLen - 1), 1L)
+          .otherwise(0L))
+      .withColumn("__span", sum(col("__brk")).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+  }
+
   /** The scrub body against a PRECOMPUTED first-occurrence index —
     * the shared core of the batch lane ([[scrubFromArrays]]) and the
     * streaming twin ([[graft.streaming.StreamingPipelines
@@ -145,14 +161,7 @@ object SubstringDedup {
       .join(firsts, Seq("gh"))
       .filter(key =!= col("__minkey"))
       .select(col(idCol), col("pos"))
-    val w = Window.partitionBy(idCol).orderBy(col("pos"))
-    val spans = removable
-      .withColumn("__brk",
-        when(lag(col("pos"), 1).over(w).isNull ||
-          col("pos") > lag(col("pos"), 1).over(w) + (minLen - 1), 1L)
-          .otherwise(0L))
-      .withColumn("__span", sum(col("__brk")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val spans = withSpanIds(removable, idCol, minLen)
       .groupBy(col(idCol), col("__span"))
       .agg(min(col("pos")).as("__a"),
         (max(col("pos")) + (minLen - 1)).as("__b"))
@@ -191,14 +200,7 @@ object SubstringDedup {
     val marked = grams
       .join(repeated, Seq("gh"), "left_semi")
       .select(col(idCol), col("pos"))
-    val w = Window.partitionBy(idCol).orderBy(col("pos"))
-    val spans = marked
-      .withColumn("__brk",
-        when(lag(col("pos"), 1).over(w).isNull ||
-          col("pos") > lag(col("pos"), 1).over(w) + (minLen - 1), 1L)
-          .otherwise(0L))
-      .withColumn("__span", sum(col("__brk")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val spans = withSpanIds(marked, idCol, minLen)
       .groupBy(col(idCol), col("__span"))
       .agg(min(col("pos")).as("__a"), max(col("pos")).as("__b"))
       .groupBy(col(idCol))

@@ -6,6 +6,7 @@ import graft.{QueryDef, QueryPack}
 import graft.io.{Schemas, Tables}
 import graft.io.Schemas.ColSpec
 import graft.profile.Profiler
+import graft.util.Frames
 
 /** Registered file-variant DQ report queries with DuckDB oracles.
   *
@@ -110,14 +111,12 @@ object FileDqQueries extends QueryPack {
     */
   private def builtReport(s: org.apache.spark.sql.SparkSession,
       dir: String, table: String): org.apache.spark.sql.DataFrame = {
-    val df = Tables.load(s, dir, table, parallelize = true).persist()
-    val profile = Profiler.profile(df,
-      now = lit(DqQueries.FixedNow).cast("timestamp"),
-      withRaw = true).persist()
-    try graft.util.Frames.localized(FileDq.report(df, profile))
-    finally {
-      profile.unpersist(blocking = false)
-      df.unpersist(blocking = false): Unit
+    Frames.cached(Tables.load(s, dir, table, parallelize = true)) { df =>
+      Frames.cached(Profiler.profile(df,
+          now = lit(DqQueries.FixedNow).cast("timestamp"),
+          withRaw = true)) { profile =>
+        Frames.localized(FileDq.report(df, profile))
+      }
     }
   }
 

@@ -81,10 +81,10 @@ object TableDq {
   def document(profile: DataFrame, catalog: DataFrame,
       tableName: String): String = {
     import graft.util._
-    val prof = profile.persist()
-    val profRows = prof.orderBy("column_name").collect()
-    val scoreRows = score(prof).orderBy("column_name").collect()
-    prof.unpersist()
+    val (profRows, scoreRows) = Frames.cached(profile) { prof =>
+      (prof.orderBy("column_name").collect(),
+        score(prof).orderBy("column_name").collect())
+    }
 
     val columns = JArr(catalog.orderBy("ordinal_position").collect().toSeq
       .map { r =>

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Frames
+
 /** Distributed connected components via min-label propagation with
   * POINTER JUMPING: each round (a) relaxes — every node takes the
   * minimum of its own and its neighbors' labels (one edge join + one
@@ -90,8 +92,7 @@ object Components {
       assumeMirrored: Boolean = false): DataFrame = {
     require(rounds >= 1, "need at least one round")
     require(jumps >= 1, "need at least one jump per round")
-    val dir = prepared(edges, assumeDistinct, assumeMirrored).persist()
-    try {
+    Frames.cached(prepared(edges, assumeDistinct, assumeMirrored)) { dir =>
       // the persist-materializing count doubles as the broadcast gate:
       // mirrored-edge count ≥ node count, so edges ≤ threshold is a
       // CONSERVATIVE broadcast decision (no separate node-count job)
@@ -160,7 +161,7 @@ object Components {
         i += 1
       }
       l
-    } finally { dir.unpersist(blocking = false); () }
+    }
   }
 
   /** `(node, lbl)` after exactly `rounds` relax + `jumps`-fold jump

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import Multimodal.{Media, MediaCodec}
+import graft.util.Frames
 
 /** Perceptual image fingerprints — aHash + dHash over the multimodal
   * decode seam, extending near-dup dedup to the image modality (the
@@ -135,11 +136,11 @@ object ImageHash {
     * pigeonhole (within-bound buckets only — the bucket cap is the
     * one deliberate recall trade, exactly as in the MinHash lanes).
     *
-    * Cache lifecycle: the group and bounded-bucket frames persist
+    * Cache lifecycle: the group and bounded-bucket frames are cached
     * (each is read by two downstream consumers) and the result is
-    * lazy, so the persists outlive this call by design (the
-    * [[graft.dedup.Dedup.clusters]] convention) — the caller releases
-    * them with `clearCache()` or materializes the report first.
+    * lazy, so the caches outlive this call by design as
+    * [[graft.util.Frames.deferred]] releases — consume the report,
+    * then `graft.util.DeferredCleanup.drain()`.
     */
   def nearDupPairs(hashes: DataFrame, idCol: String,
       maxHamming: Int = 3, bands: Int = 4,
@@ -152,19 +153,18 @@ object ImageHash {
     require(maxBucket >= 2, "maxBucket must admit at least one pair")
     val width = 64 / bands
     val mask = if (width == 64) -1L else (1L << width) - 1L
-    val groups = fingerprintGroups(hashes, idCol).persist()
+    val groups = Frames.deferred(fingerprintGroups(hashes, idCol))
     val chunks = groups.select(col(idCol), col("ahash"), col("dhash"),
       col("n_group"),
       posexplode(array((0 until bands).map(k =>
         shiftrightunsigned(col("ahash"), k * width)
           .bitwiseAND(lit(mask))): _*))
         .as(Seq("__ci", "__cv")))
-    val bounded = chunks.withColumn("__bucket_n",
+    val bounded = Frames.deferred(chunks.withColumn("__bucket_n",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
           .partitionBy("__ci", "__cv")))
       .filter(col("__bucket_n").between(2, maxBucket))
-      .drop("__bucket_n")
-      .persist()
+      .drop("__bucket_n"))
     val cross = bounded.as("a")
       .join(bounded.as("b"),
         col("a.__ci") === col("b.__ci") &&

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Frames
+
 /** Market-basket association rules over item CO-OCCURRENCE — "users
   * who did X in a session also did Y" — the unordered-set complement of
   * [[graft.text.Collocations]] (adjacency in a sequence) and of
@@ -61,10 +63,8 @@ object AssociationRules {
       .agg(sort_array(collect_set(col(itemCol).cast("string")))
         .as("__items"))
       .filter(size(col("__items")) <= maxBasket)
-      .persist()
-    try pairRulesPlan(baskets, minSupport, broadcastSupports)
-      .localCheckpoint(true)
-    finally { baskets.unpersist(blocking = false); () }
+    Frames.cached(baskets)(
+      pairRulesPlan(_, minSupport, broadcastSupports).localCheckpoint(true))
   }
 
   /** The lazy plan over a materialized basket frame (`__items` sorted

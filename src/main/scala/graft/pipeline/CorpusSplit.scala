@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Frames
+
 /** Deterministic train/val/test corpus split + duplicate-leakage audit —
   * the release gate every training-data pipeline runs before cutting an
   * eval set: assign each document to a split by seeded hash (stable
@@ -102,8 +104,7 @@ object CorpusSplit {
     * localCheckpoints so the cache releases before return.
     */
   def leakageAudit(assigned: DataFrame, fpCol: String): DataFrame = {
-    val fpSplit = fingerprintSplitCounts(assigned, fpCol).persist()
-    try leakageAuditFrom(fpSplit).localCheckpoint(true)
-    finally { fpSplit.unpersist(blocking = false); () }
+    Frames.cached(fingerprintSplitCounts(assigned, fpCol))(
+      leakageAuditFrom(_).localCheckpoint(true))
   }
 }

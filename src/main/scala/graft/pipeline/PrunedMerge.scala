@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.util.DirSwap
+import graft.util.{DirSwap, Frames}
 
 /** PARTITION-PRUNED SCD1 merge sink — the X64 repair-scope ruling
   * applied to the write side of the reference's MERGE
@@ -140,42 +140,42 @@ object PrunedMerge {
     // overwriting the stale temp — a backup may hold a partition's only
     // copy (the r15 ADVICE crash window)
     recoverPendingSwaps(fs, targetPath)
-    val latest = Scd1.latestPerKey(source, keys, orderCol, tieBreakers)
-      .withColumn("__p", partitionOf(keys, nParts))
-      .persist() // read by the touched-list collect AND the merge
-    try {
+    // cached: read by the touched-list collect AND the merge
+    Frames.cached(Scd1.latestPerKey(source, keys, orderCol, tieBreakers)
+        .withColumn("__p", partitionOf(keys, nParts))) { latest =>
       val touched = latest.select("__p").distinct()
         .collect().map(_.getLong(0)).sorted.toSeq
-      if (touched.isEmpty) return Seq.empty
-      val existing = touched
-        .map(k => s"$targetPath/__p=$k")
-        .filter(p => fs.exists(new Path(p)))
-      val target =
-        if (existing.isEmpty) None
-        // partition discovery infers __p as int — re-widen to the
-        // long the partition expression produces before the union
-        else Some(s.read.option("basePath", targetPath)
-          .parquet(existing: _*)
-          .withColumn("__p", col("__p").cast("long")))
-      val merged = target match {
-        case Some(t) =>
-          t.join(latest.select(keys.map(col): _*), keys, "left_anti")
-            .unionByName(latest)
-        case None => latest.toDF()
+      if (touched.nonEmpty) {
+        val existing = touched
+          .map(k => s"$targetPath/__p=$k")
+          .filter(p => fs.exists(new Path(p)))
+        val target =
+          if (existing.isEmpty) None
+          // partition discovery infers __p as int — re-widen to the
+          // long the partition expression produces before the union
+          else Some(s.read.option("basePath", targetPath)
+            .parquet(existing: _*)
+            .withColumn("__p", col("__p").cast("long")))
+        val merged = target match {
+          case Some(t) =>
+            t.join(latest.select(keys.map(col): _*), keys, "left_anti")
+              .unionByName(latest)
+          case None => latest.toDF()
+        }
+        // all temp data lands before any target mutation; the overwrite
+        // replaces a crashed run's stale temp
+        val tmp = tmpOf(targetPath)
+        writeByPartition(merged, tmp)
+        touched.foreach { k =>
+          val (dst, staged, bak) = swapPaths(targetPath, k)
+          if (!fs.exists(staged))
+            throw new IllegalStateException(
+              s"merged temp is missing partition __p=$k under $tmp")
+          DirSwap.replace(fs, dst, staged, bak)
+        }
+        DirSwap.discard(fs, new Path(tmp))
       }
-      // all temp data lands before any target mutation; the overwrite
-      // replaces a crashed run's stale temp
-      val tmp = tmpOf(targetPath)
-      writeByPartition(merged, tmp)
-      touched.foreach { k =>
-        val (dst, staged, bak) = swapPaths(targetPath, k)
-        if (!fs.exists(staged))
-          throw new IllegalStateException(
-            s"merged temp is missing partition __p=$k under $tmp")
-        DirSwap.replace(fs, dst, staged, bak)
-      }
-      DirSwap.discard(fs, new Path(tmp))
       touched
-    } finally { latest.unpersist(blocking = false); () }
+    }
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.{QueryDef, QueryPack}
 import graft.io.{Schemas, Tables}
 import graft.io.Schemas.ColSpec
+import graft.util.Frames
 
 /** Verifiable profiling queries (SURVEY §2d A1–A5, §3.3).
   *
@@ -178,9 +179,8 @@ object ProfileQueries extends QueryPack {
       // doubles, so estimate and rank bracket also see the identical
       // value space by construction.
       val df = Tables.load(s, dir, "lineitem", parallelize = true)
-      val work = df.select(numCols.map(c =>
-        col(c).cast("double").as(c)): _*).persist()
-      try {
+      Frames.cached(df.select(numCols.map(c =>
+        col(c).cast("double").as(c)): _*)) { work =>
         val est = Profiler
           .approxQuantiles(work, numCols, ps = Seq(0.5, 0.95),
             names = Seq("p50", "p95"), accuracy = acc)
@@ -215,7 +215,7 @@ object ProfileQueries extends QueryPack {
         (c, ok(c, 0.5, lt50, le50, n), ok(c, 0.95, lt95, le95, n))
       }.toDF("column_name", "p50_rank_ok", "p95_rank_ok")
         .orderBy("column_name")
-      } finally { work.unpersist(blocking = false): Unit }
+      }
     },
     Some(Schemas.byTable("lineitem").filter(_.numeric).map(_.name).map { c =>
       s"SELECT '$c' AS column_name, TRUE AS p50_rank_ok, " +

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.types.TypeMapper
+import graft.util.Frames
 
 /** Single-pass per-column table profiling.
   *
@@ -335,9 +336,8 @@ object Profiler {
     require(prefixBits >= 1 && prefixBits <= 63, "prefixBits in [1, 63]")
     val spark = df.sparkSession
     val shift = 64 - prefixBits
-    val work = df.select(cols.map(c => col(c).cast(DoubleType).as(c)): _*)
-      .persist()
-    try {
+    Frames.cached(
+        df.select(cols.map(c => col(c).cast(DoubleType).as(c)): _*)) { work =>
       // Phase 1 — exact per-(column, bit-bucket) counts in one pass.
       val counts: Map[String, Seq[(Long, Long)]] =
         bucketCounts(work, cols, shift)
@@ -402,7 +402,7 @@ object Profiler {
         StructField("column_name", StringType, nullable = false) +:
           names.map(StructField(_, DoubleType, nullable = true)))
       spark.createDataFrame(java.util.Arrays.asList(outRows: _*), schema)
-    } finally { work.unpersist(blocking = false); () }
+    }
   }
 
   private case class RankTarget(lo: (Long, Long), hi: (Long, Long),

@@ -60,16 +60,7 @@ object Kmeans {
     if (k <= DriverFitMaxK) driverFit(df, vecCol, k, iters, seed,
       totalRows)
     else {
-      val normed = df.select(
-        IvfSimilarity.normalize(IvfSimilarity.asDouble(col(vecCol)))
-          .as("__nv"))
-      val target = 512L * k
-      val total = totalRows.getOrElse(df.count())
-      val sampled =
-        if (total > target)
-          normed.sample(withReplacement = false,
-            target.toDouble / total, seed)
-        else normed
+      val sampled = normedSample(df, vecCol, 512L * k, seed, totalRows)
       val withVec = sampled.withColumn("__mlv",
         org.apache.spark.ml.functions.array_to_vector(col("__nv")))
       new org.apache.spark.ml.clustering.KMeans()
@@ -88,19 +79,25 @@ object Kmeans {
   private def driverFit(df: DataFrame, vecCol: String, k: Int,
       iters: Int, seed: Long,
       totalRows: Option[Long]): Array[Array[Double]] = {
+    val target = 256L * k
+    val pts = normedSample(df, vecCol, target, seed, totalRows)
+      .limit(target.toInt).collect()
+      .map(_.getSeq[Double](0).toArray)
+    IvfSimilarity.localKMeans(pts, k, iters, seed)
+  }
+
+  /** `(__nv)`: the normalized vectors of `df`, Bernoulli-sampled down
+    * to about `target` rows (all of them when `df` holds no more).
+    */
+  private def normedSample(df: DataFrame, vecCol: String, target: Long,
+      seed: Long, totalRows: Option[Long]): DataFrame = {
     val normed = df.select(
       IvfSimilarity.normalize(IvfSimilarity.asDouble(col(vecCol)))
         .as("__nv"))
-    val target = 256L * k
     val total = totalRows.getOrElse(df.count())
-    val sampled =
-      if (total > target)
-        normed.sample(withReplacement = false,
-          target.toDouble / total, seed)
-      else normed
-    val pts = sampled.limit(target.toInt).collect()
-      .map(_.getSeq[Double](0).toArray)
-    IvfSimilarity.localKMeans(pts, k, iters, seed)
+    if (total > target)
+      normed.sample(withReplacement = false, target.toDouble / total, seed)
+    else normed
   }
 
   /** Train `k` centroids with the seed-deterministic driver Lloyd's

@@ -60,21 +60,27 @@ object Quantize {
     * transform — zero shuffles, zero joins. Returns the input plus
     * `<vecCol>_q` (array<long> of 0..255 codes).
     */
-  def encode(emb: DataFrame, vecCol: String, stats: DataFrame): DataFrame = {
+  def encode(emb: DataFrame, vecCol: String, stats: DataFrame): DataFrame =
+    emb.withColumn(s"${vecCol}_q",
+      zip_with(col(vecCol).cast("array<double>"), calibration(stats),
+        (v, lh) => when(lh.getField("h") === lh.getField("l"), lit(0L))
+          .otherwise(floor((v - lh.getField("l")) * Levels.toDouble /
+            (lh.getField("h") - lh.getField("l"))).cast("long"))))
+
+  /** A `(dim, lo, hi)` calibration frame collected into one literal
+    * array of `(l, h)` structs in dim order.
+    */
+  private def calibration(stats: DataFrame): Column = {
     val s = stats.select(col("dim").cast("int"), col("lo"), col("hi"))
       .collect().map(r => (r.getInt(0), (r.getDouble(1), r.getDouble(2))))
       .toMap
     val dims = s.keys.toSeq.sorted
     require(dims == dims.indices.toList,
       s"calibration must cover dims 0..${dims.size - 1} contiguously")
-    val los = array(dims.map(d => lit(s(d)._1)): _*)
-    val his = array(dims.map(d => lit(s(d)._2)): _*)
-    emb.withColumn(s"${vecCol}_q",
-      zip_with(col(vecCol).cast("array<double>"),
-        zip_with(los, his, (l, h) => struct(l.as("l"), h.as("h"))),
-        (v, lh) => when(lh.getField("h") === lh.getField("l"), lit(0L))
-          .otherwise(floor((v - lh.getField("l")) * Levels.toDouble /
-            (lh.getField("h") - lh.getField("l"))).cast("long"))))
+    zip_with(
+      array(dims.map(d => lit(s(d)._1)): _*),
+      array(dims.map(d => lit(s(d)._2)): _*),
+      (l, h) => struct(l.as("l"), h.as("h")))
   }
 
   /** The input plus `<vecCol>_dec`: each vector quantized THROUGH the
@@ -84,26 +90,15 @@ object Quantize {
     * array shape as [[encode]].
     */
   def decodedView(emb: DataFrame, vecCol: String,
-      stats: DataFrame): DataFrame = {
-    val s = stats.select(col("dim").cast("int"), col("lo"), col("hi"))
-      .collect().map(r => (r.getInt(0), (r.getDouble(1), r.getDouble(2))))
-      .toMap
-    val dims = s.keys.toSeq.sorted
-    require(dims == dims.indices.toList,
-      s"calibration must cover dims 0..${dims.size - 1} contiguously")
-    val lohi = zip_with(
-      array(dims.map(d => lit(s(d)._1)): _*),
-      array(dims.map(d => lit(s(d)._2)): _*),
-      (l, h) => struct(l.as("l"), h.as("h")))
+      stats: DataFrame): DataFrame =
     emb.withColumn(s"${vecCol}_dec",
-      zip_with(col(vecCol).cast("array<double>"), lohi,
+      zip_with(col(vecCol).cast("array<double>"), calibration(stats),
         (v, lh) => {
           val (l, h) = (lh.getField("l"), lh.getField("h"))
           when(h === l, l).otherwise(
             l + floor((v - l) * Levels.toDouble / (h - l)) *
               (h - l) / Levels.toDouble)
         }))
-  }
 
   /** Brute-force top-k where the CORPUS side scores through its int8
     * codes (asymmetric distance: float queries vs decoded corpus) — the

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Frames
+
 /** Similarity search over an embedding column (`array<float>`).
   *
   * Three paths, per the training-data-pipeline mandate:
@@ -85,10 +87,7 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         cosine(col("__qv"), col("__cv")).as("cosine"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    topKOf(scored, k)
   }
 
   /** HARD-NEGATIVE MINING for contrastive/retrieval training: for each
@@ -118,10 +117,7 @@ object Similarity {
       .select(col("query_id"), col("__ql").as("query_label"),
         col("neighbor_id"), col("__nl").as("neighbor_label"),
         cosine(col("__qv"), col("__cv")).as("cosine"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    topKOf(scored, k)
   }
 
   /** kNN CLASSIFICATION / auto-labeling: predict each query's label by
@@ -364,8 +360,7 @@ object Similarity {
       if (maxCandidatesPerQuery > 0) maxCandidatesPerQuery
       else if (maxCandidatesPerQuery == 0) 64 * k
       else Int.MaxValue
-    val idx = lshIndex(corpus, idCol, vecCol, tables, b, dims).persist()
-    try {
+    Frames.cached(lshIndex(corpus, idCol, vecCol, tables, b, dims)) { idx =>
       val hits = probed(idx, b, probeRadius)
         .withColumnRenamed(idCol, "query_id")
         .join(idx.withColumnRenamed(idCol, "neighbor_id"),
@@ -382,7 +377,7 @@ object Similarity {
       scoreTopK(cands, corpus, corpus, idCol, vecCol, k)
         // materialize while the index is cached; the graph is k·n rows
         .localCheckpoint(true)
-    } finally idx.unpersist(): Unit
+    }
   }
 
   /** Exact cosine + per-query ranking over a candidate pair frame. */
@@ -396,6 +391,13 @@ object Similarity {
     val scored = cands.join(cVec, "neighbor_id").join(qVec, "query_id")
       .select(col("query_id"), col("neighbor_id"),
         cosine(col("__qv"), col("__cv")).as("cosine"))
+    topKOf(scored, k)
+  }
+
+  /** Each query's `k` best `scored` rows by cosine desc with neighbor-id
+    * tie-break, ranked 1..k in `rank`.
+    */
+  private def topKOf(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.pipeline.Scd1
-import graft.util.DirSwap
+import graft.util.{DeferredCleanup, DirSwap, Frames}
 
 /** Structured Streaming extensions (SURVEY §2i — post-parity; the
   * reference has no streaming surface, so nothing here claims reference
@@ -125,16 +125,21 @@ object StreamingPipelines {
     }
 
   /** Run `f` on every micro-batch of `source` (append mode) under
-    * `checkpoint`; returns the started query.
+    * `checkpoint`; returns the started query. Each batch runs in its own
+    * [[DeferredCleanup.scoped]], so a cache that `f` (or an operator it
+    * calls) defers is released when the batch ends.
     */
   private def eachBatch(source: DataFrame, checkpoint: String,
-      trigger: Trigger)(f: (DataFrame, Long) => Unit): StreamingQuery =
+      trigger: Trigger)(f: (DataFrame, Long) => Unit): StreamingQuery = {
+    val scopedF: (DataFrame, Long) => Unit =
+      (batch, batchId) => DeferredCleanup.scoped(f(batch, batchId))
     source.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreachBatch(f)
+      .foreachBatch(scopedF)
       .start()
+  }
 
   /** Restore scan parallelism for a micro-batch before heavy fused
     * map work (tokenize/shingle/fingerprint/extract chains): a
@@ -378,9 +383,9 @@ object StreamingPipelines {
     * StreamingQuery — the X17 eval-gram probe applied at ingest time,
     * so contaminated documents are flagged as they ARRIVE instead of
     * in a later corpus pass): the eval side is FIXED (`evalArrays`
-    * persisted once here for the whole stream — the docGramArrays
-    * materialization contract; released via
-    * [[graft.util.DeferredCleanup]]), each micro-batch probes its
+    * cached once here for the whole stream — the docGramArrays
+    * materialization contract; released at the caller's
+    * [[DeferredCleanup.drain]]), each micro-batch probes its
     * documents map-side against the broadcast set and writes its
     * per-doc contamination report to a batch-owned,
     * overwrite-idempotent subdir of `reportPath`
@@ -401,18 +406,15 @@ object StreamingPipelines {
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     require(compactEvery >= 2, "compactEvery must be at least 2")
     // the docGramArrays contract: the frame the probe explodes must be
-    // MATERIALIZED — persist the eval side once for the whole stream
+    // MATERIALIZED — cache the eval side once for the whole stream
     // (each batch re-derives only the bounded distinct gram set from
-    // the cached arrays), released when the session drains cleanup
-    val evalCached = evalArrays.persist()
-    graft.util.DeferredCleanup.enqueue(
-      () => { evalCached.unpersist(blocking = false); () })
+    // the cached arrays); deferred outside any batch scope, so it
+    // outlives the batches and releases when the caller drains
+    val evalCached = Frames.deferred(evalArrays)
     eachBatch(source, checkpoint, trigger) { (batch, batchId) =>
       val s = batch.sparkSession
-      val grams = graft.text.Decontam
-        .docGramArrays(spreadByBytes(batch), idCol, textCol, n)
-        .persist()
-      try {
+      Frames.cached(graft.text.Decontam
+          .docGramArrays(spreadByBytes(batch), idCol, textCol, n)) { grams =>
         val report = graft.text.Decontam
           .overlapReportFromArrays(grams, evalCached, idCol)
           .localCheckpoint(true) // read by the sink AND the partial
@@ -431,7 +433,7 @@ object StreamingPipelines {
             .as("matched_grams"))
         totals.crossJoin(hits).write.mode("overwrite")
           .parquet(BatchState.partial(statePath, batchId))
-      } finally { grams.unpersist(blocking = false); () }
+      }
       val st = BatchState.open(s, statePath, batchId + 1, compactEvery)
       // checkpoint only when a compaction fold will read the frame
       // too; otherwise the ledger write is the single consumer
@@ -552,16 +554,14 @@ object StreamingPipelines {
     eachBatch(source, checkpoint, trigger) { (batch, batchId) =>
       val s = batch.sparkSession
       val own = BatchState.partial(statePath, batchId)
-      // the gramArrays persist contract: the frame is read by the
+      // the gramArrays cache contract: the frame is read by the
       // docs-layer write AND the partial aggregate
-      val arrays = graft.dedup.SubstringDedup
-        .gramArrays(spreadByBytes(batch), idCol, textCol, minLen)
-        .persist()
-      try {
+      Frames.cached(graft.dedup.SubstringDedup
+          .gramArrays(spreadByBytes(batch), idCol, textCol, minLen)) { arrays =>
         arrays.write.mode("overwrite").parquet(s"$own/docs")
         graft.dedup.SubstringDedup.gramPartials(arrays, idCol)
           .write.mode("overwrite").parquet(s"$own/grams")
-      } finally { arrays.unpersist(blocking = false); () }
+      }
       val st = BatchState.open(s, statePath, batchId + 1, compactEvery,
         "docs", "grams")
       val docsState = s.read.parquet(st.layer("docs"): _*)

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Frames
+
 /** Collocation (multi-word-expression) extraction: rank adjacent token
   * pairs by pointwise-mutual-information LIFT — how much more often the
   * pair occurs than its unigram frequencies predict. The corpus-analysis
@@ -50,11 +52,9 @@ object Collocations {
       k: Int = 100, broadcastUnigrams: Boolean = true): DataFrame = {
     // tokens materialized once per doc (the shingling lesson: an
     // inlined split() re-tokenizes per emitted element)
-    val toks = df.select(TextAnalysis.tokens(col(textCol)).as("__toks"))
-      .persist()
-    try topBigramsPlan(toks, minCount, k, broadcastUnigrams)
-      .localCheckpoint(true)
-    finally { toks.unpersist(blocking = false); () }
+    Frames.cached(df.select(TextAnalysis.tokens(col(textCol)).as("__toks"))) {
+      topBigramsPlan(_, minCount, k, broadcastUnigrams).localCheckpoint(true)
+    }
   }
 
   /** The lazy plan over a materialized `(__toks)` frame — split out so

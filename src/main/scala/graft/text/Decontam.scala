@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
+import graft.util.Frames
 
 /** Benchmark decontamination for training-data pipelines: flag corpus
   * documents that share word n-grams with a held-out evaluation set —
@@ -160,64 +161,66 @@ object Decontam {
   def scrubSpans(corpus: DataFrame, eval: DataFrame, idCol: String,
       textCol: String, n: Int = 5,
       broadcastEval: Boolean = true): DataFrame = {
-    // the eval ARRAY frame persists per the docGramArrays contract (the
+    // the eval ARRAY frame is cached per the docGramArrays contract (the
     // join above the explode otherwise re-derives the shingling per row);
-    // released in the finally below once the result is materialized
-    val evalArrays = docGramArrays(eval, idCol, textCol, n).persist()
-    val evalSet = evalArrays
-      .select(explode(col("__grams")).as("__eg")).distinct()
-    // persisted: three consumers (window pass, token stream, totals)
-    // would otherwise re-scan and re-tokenize the corpus each — measured
-    // 5.4 → 1.9s at sf0.1. The result is localCheckpoint-materialized
-    // below so BOTH caches release before returning (the lshKnnGraph
-    // lifecycle — a long-lived session scrubbing many corpora must not
-    // accumulate two leaked cached frames per call); a caller scrubbing
-    // a 100 TB corpus should persist to DISK via StorageLevel instead.
-    val base = corpus
-      .select(col(idCol).as("doc_id"), Dedup.tokensOf(col(textCol)).as("toks"))
-      .select(col("doc_id"), col("toks"),
-        size(col("toks")).cast("long").as("n_tokens"))
-      .persist()
-    try { val spans = base
-      .filter(col("n_tokens") > 0)
-      .select(col("doc_id"), col("toks"), col("n_tokens"),
-        explode(sequence(lit(1),
-          greatest(size(col("toks")) - (n - 1), lit(1)))).as("i"))
-      .select(col("doc_id"), col("n_tokens"),
-        (col("i") - 1).cast("long").as("pos"),
-        concat_ws(" ", slice(col("toks"), col("i"), lit(n))).as("__g"))
-    val hits = spans
-      .join(if (broadcastEval) broadcast(evalSet) else evalSet,
-        col("__g") === col("__eg"))
-      .select(col("doc_id"), col("pos"), col("n_tokens"))
-    val covered = hits
-      .select(col("doc_id"), explode(sequence(col("pos"),
-        least(col("pos") + (n - 1), col("n_tokens") - 1))).as("pos"))
-      .distinct()
-    val toks = base
-      .select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "tok")))
-      .select(col("doc_id"), col("pos").cast("long").as("pos"), col("tok"))
-    val rebuilt = toks
-      .join(covered, Seq("doc_id", "pos"), "left_anti")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("kept_tokens"),
-        md5(concat_ws(" ",
-          transform(array_sort(collect_list(struct(col("pos"), col("tok")))),
-            x => x.getField("tok"))).cast("binary")).as("clean_md5"))
-    base.select("doc_id", "n_tokens")
-      .join(rebuilt, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_tokens"),
-        coalesce(col("kept_tokens"), lit(0L)).as("kept_tokens"),
-        (col("n_tokens") - coalesce(col("kept_tokens"), lit(0L)))
-          .as("removed_tokens"),
-        coalesce(col("clean_md5"),
-          md5(lit("").cast("binary"))).as("clean_md5"))
-      // one row per doc: materialize on the executors while both caches
-      // are live (never collected through the driver), then release them
-      .localCheckpoint(true)
-    } finally {
-      evalArrays.unpersist(blocking = false)
-      base.unpersist(blocking = false): Unit
+    // released once the result is materialized
+    Frames.cached(docGramArrays(eval, idCol, textCol, n)) { evalArrays =>
+      val evalSet = evalArrays
+        .select(explode(col("__grams")).as("__eg")).distinct()
+      // cached: three consumers (window pass, token stream, totals)
+      // would otherwise re-scan and re-tokenize the corpus each — measured
+      // 5.4 → 1.9s at sf0.1. The result is localCheckpoint-materialized
+      // below so BOTH caches release before returning (the lshKnnGraph
+      // lifecycle — a long-lived session scrubbing many corpora must not
+      // accumulate two leaked cached frames per call); a caller scrubbing
+      // a 100 TB corpus should persist to DISK via StorageLevel instead.
+      Frames.cached(corpus
+          .select(col(idCol).as("doc_id"),
+            Dedup.tokensOf(col(textCol)).as("toks"))
+          .select(col("doc_id"), col("toks"),
+            size(col("toks")).cast("long").as("n_tokens"))) { base =>
+        val spans = base
+          .filter(col("n_tokens") > 0)
+          .select(col("doc_id"), col("toks"), col("n_tokens"),
+            explode(sequence(lit(1),
+              greatest(size(col("toks")) - (n - 1), lit(1)))).as("i"))
+          .select(col("doc_id"), col("n_tokens"),
+            (col("i") - 1).cast("long").as("pos"),
+            concat_ws(" ", slice(col("toks"), col("i"), lit(n))).as("__g"))
+        val hits = spans
+          .join(if (broadcastEval) broadcast(evalSet) else evalSet,
+            col("__g") === col("__eg"))
+          .select(col("doc_id"), col("pos"), col("n_tokens"))
+        val covered = hits
+          .select(col("doc_id"), explode(sequence(col("pos"),
+            least(col("pos") + (n - 1), col("n_tokens") - 1))).as("pos"))
+          .distinct()
+        val toks = base
+          .select(col("doc_id"),
+            posexplode(col("toks")).as(Seq("pos", "tok")))
+          .select(col("doc_id"), col("pos").cast("long").as("pos"),
+            col("tok"))
+        val rebuilt = toks
+          .join(covered, Seq("doc_id", "pos"), "left_anti")
+          .groupBy("doc_id")
+          .agg(count(lit(1)).as("kept_tokens"),
+            md5(concat_ws(" ",
+              transform(array_sort(collect_list(
+                  struct(col("pos"), col("tok")))),
+                x => x.getField("tok"))).cast("binary")).as("clean_md5"))
+        base.select("doc_id", "n_tokens")
+          .join(rebuilt, Seq("doc_id"), "left")
+          .select(col("doc_id"), col("n_tokens"),
+            coalesce(col("kept_tokens"), lit(0L)).as("kept_tokens"),
+            (col("n_tokens") - coalesce(col("kept_tokens"), lit(0L)))
+              .as("removed_tokens"),
+            coalesce(col("clean_md5"),
+              md5(lit("").cast("binary"))).as("clean_md5"))
+          // one row per doc: materialize on the executors while both
+          // caches are live (never collected through the driver), then
+          // release them
+          .localCheckpoint(true)
+      }
     }
   }
 }

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Frames
+
 /** Unigram language-model document scoring — the cheapest member of the
   * model-based quality-filter family (CCNet's wikipedia-LM perplexity
   * filter, Gopher's quality signals): score each document by the mean
@@ -38,10 +40,8 @@ object LmScore {
     require(topV > 0, "need a positive vocabulary size")
     val tok = docs.select(col(idCol),
       explode_outer(TextAnalysis.tokens(col(textCol))).as("token"))
-    val counts = tok.filter(col("token").isNotNull)
-      .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-      .persist()
-    try {
+    Frames.cached(tok.filter(col("token").isNotNull)
+        .groupBy(col("token")).agg(count(lit(1)).as("cnt"))) { counts =>
       val vocab = counts
         .orderBy(col("cnt").desc, col("token").asc).limit(topV)
         .withColumnRenamed("cnt", "__vcnt")
@@ -60,6 +60,6 @@ object LmScore {
             .otherwise(col("sum_cnt").cast("double") /
               (col("n_tokens").cast("double") *
                 col("__total").cast("double"))).as("lm_score"))
-    } finally { counts.unpersist(blocking = false); () }
+    }
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, QueryPack}
 import graft.io.Tables
+import graft.util.Frames
 
 /** Registered text-analysis queries over `documents` with DuckDB oracles.
   *
@@ -226,31 +227,28 @@ object TextQueries extends QueryPack {
     "corpus_pipeline_full_documents",
     (s, dir) => {
       val curated = curatedDocs(s, dir)
-      // persisted: read by the pair generator (both join sides via the
-      // shingle sets), the survivor anti-join, and the final summary
-      val kept = curated.groupBy("text")
-        .agg(min("doc_id").as("doc_id"), min("n_tokens").as("n_tokens"))
-        .persist()
-      val sets = graft.dedup.Dedup.shingleSets(kept, "doc_id", "text", 3)
-        .persist()
+      // cached: read by the pair generator (both join sides via the
+      // shingle sets), the survivor anti-join, and the final summary.
       // survivorsLocal releases the propagation cache inside the call;
       // the 1-row summary is then materialized so `kept` and the shingle
-      // cache release too (even on failure) — nothing persisted outlives
+      // cache release too (even on failure) — nothing cached outlives
       // the query build.
-      try {
-        val pairs = graft.dedup.Dedup.jaccardOnPairsFromSets(
-            graft.dedup.DedupQueries.blockedPairs(kept), sets, "doc_id")
-          .filter(col("jaccard") >= 0.8)
-          .select("id_a", "id_b")
-        val removed = graft.dedup.Dedup.survivorsLocal(pairs)
-          .filter(!col("is_survivor")).select(col("id").as("doc_id"))
-        graft.util.Frames.localized(
-          kept.join(removed, Seq("doc_id"), "left_anti")
-            .agg(count(lit(1)).as("kept_docs"),
-              sum("n_tokens").as("kept_tokens")))
-      } finally {
-        sets.unpersist(blocking = false)
-        kept.unpersist(blocking = false): Unit
+      Frames.cached(curated.groupBy("text")
+          .agg(min("doc_id").as("doc_id"),
+            min("n_tokens").as("n_tokens"))) { kept =>
+        Frames.cached(
+            graft.dedup.Dedup.shingleSets(kept, "doc_id", "text", 3)) { sets =>
+          val pairs = graft.dedup.Dedup.jaccardOnPairsFromSets(
+              graft.dedup.DedupQueries.blockedPairs(kept), sets, "doc_id")
+            .filter(col("jaccard") >= 0.8)
+            .select("id_a", "id_b")
+          val removed = graft.dedup.Dedup.survivorsLocal(pairs)
+            .filter(!col("is_survivor")).select(col("id").as("doc_id"))
+          Frames.localized(
+            kept.join(removed, Seq("doc_id"), "left_anti")
+              .agg(count(lit(1)).as("kept_docs"),
+                sum("n_tokens").as("kept_tokens")))
+        }
       }
     },
     Some {
@@ -574,24 +572,27 @@ object TextQueries extends QueryPack {
 
   /** `report(corpusGrams, evalGrams)` over the [[DecontamN]]-gram
     * arrays of the corpus (`doc_id % 100 >= 5`) and eval (`< 5`)
-    * slices of `documents`. Both gram frames are persisted per the
-    * docGramArrays contract (the explode must read a materialized
-    * array column); the report is contamination-sized, so it is
-    * localized and the grams released before returning.
+    * slices of `documents`. The report is contamination-sized, so it
+    * is localized and the grams released before returning.
     */
   private def withDecontamGrams(s: SparkSession, dir: String)(
       report: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val docs = Tables.load(s, dir, "documents", parallelize = true)
-    val corpusGrams = Decontam.docGramArrays(
-      docs.filter(col("doc_id") % 100 >= 5), "doc_id", "text",
-      DecontamN).persist()
-    val evalGrams = Decontam.docGramArrays(
-      docs.filter(col("doc_id") % 100 < 5), "doc_id", "text",
-      DecontamN).persist()
-    try graft.util.Frames.localized(report(corpusGrams, evalGrams))
-    finally {
-      corpusGrams.unpersist(blocking = false)
-      evalGrams.unpersist(blocking = false): Unit
+    withGrams(docs, docs.filter(col("doc_id") % 100 >= 5))(
+      (c, e) => Frames.localized(report(c, e)))
+  }
+
+  /** `f(corpusGrams, evalGrams)` over the cached [[DecontamN]]-gram
+    * arrays of `corpus` and of the eval slice (`doc_id % 100 < 5`) of
+    * `docs`, cached per the docGramArrays contract (the explode must
+    * read a materialized array column) and released when `f` returns.
+    */
+  private def withGrams[T](docs: DataFrame, corpus: DataFrame)(
+      f: (DataFrame, DataFrame) => T): T = {
+    def grams(df: DataFrame) =
+      Decontam.docGramArrays(df, "doc_id", "text", DecontamN)
+    Frames.cached(grams(corpus)) { c =>
+      Frames.cached(grams(docs.filter(col("doc_id") % 100 < 5)))(f(c, _))
     }
   }
 
@@ -741,38 +742,30 @@ object TextQueries extends QueryPack {
     "corpus_decontam_pipeline_documents",
     (s, dir) => {
       val docs = Tables.load(s, dir, "documents", parallelize = true)
-      // persisted: read by the gram builder AND the final anti-join/dedup
+      // cached: read by the gram builder AND the final anti-join/dedup
       // (withStats is the expensive full-text pass — don't run it twice)
-      val curated = TextAnalysis.withStats(docs, "text")
-        .select("doc_id", "text", "n_tokens", "quality_score", "lang_id")
-        .filter(col("quality_score") >= 0.75 && col("lang_id") === "en" &&
-          col("n_tokens").between(20, 2000) && col("doc_id") % 100 >= 5)
-        .persist()
-      val corpusGrams = Decontam.docGramArrays(
-        curated, "doc_id", "text", DecontamN).persist()
-      val evalGrams = Decontam.docGramArrays(
-        docs.filter(col("doc_id") % 100 < 5), "doc_id", "text",
-        DecontamN).persist()
-      try {
-        val contaminated = Decontam
-          .overlapReportFromArrays(corpusGrams, evalGrams, "doc_id")
-          .filter(col("contamination_ratio") >= ContamThreshold)
-          .select("doc_id")
-        // exact dedup keyed on md5(text), not text: the group-by key
-        // is what shuffles, and 32 hex chars beat whole documents by
-        // orders of magnitude at corpus scale (the oracle groups on
-        // raw text — identical result, 128-bit collisions aside)
-        val deduped = curated
-          .join(contaminated, Seq("doc_id"), "left_anti")
-          .groupBy(md5(col("text").cast("binary")).as("__k"))
-          .agg(min("doc_id").as("doc_id"), min("n_tokens").as("n_tokens"))
-        graft.util.Frames.localized(
-          deduped.agg(count(lit(1)).as("kept_docs"),
-            sum("n_tokens").as("kept_tokens")))
-      } finally {
-        corpusGrams.unpersist(blocking = false)
-        evalGrams.unpersist(blocking = false)
-        curated.unpersist(blocking = false): Unit
+      Frames.cached(TextAnalysis.withStats(docs, "text")
+          .select("doc_id", "text", "n_tokens", "quality_score", "lang_id")
+          .filter(col("quality_score") >= 0.75 && col("lang_id") === "en" &&
+            col("n_tokens").between(20, 2000) &&
+            col("doc_id") % 100 >= 5)) { curated =>
+        withGrams(docs, curated) { (corpusGrams, evalGrams) =>
+          val contaminated = Decontam
+            .overlapReportFromArrays(corpusGrams, evalGrams, "doc_id")
+            .filter(col("contamination_ratio") >= ContamThreshold)
+            .select("doc_id")
+          // exact dedup keyed on md5(text), not text: the group-by key
+          // is what shuffles, and 32 hex chars beat whole documents by
+          // orders of magnitude at corpus scale (the oracle groups on
+          // raw text — identical result, 128-bit collisions aside)
+          val deduped = curated
+            .join(contaminated, Seq("doc_id"), "left_anti")
+            .groupBy(md5(col("text").cast("binary")).as("__k"))
+            .agg(min("doc_id").as("doc_id"), min("n_tokens").as("n_tokens"))
+          Frames.localized(
+            deduped.agg(count(lit(1)).as("kept_docs"),
+              sum("n_tokens").as("kept_tokens")))
+        }
       }
     },
     Some {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Frames
+
 /** Vocabulary induction for tokenizer prep: the top-V corpus tokens with
   * cumulative coverage — "how much of the token stream does a V-entry
   * vocabulary capture?" — the sizing curve every tokenizer build starts
@@ -118,8 +120,6 @@ object Vocab {
       .select(TextAnalysis.tokens(col(textCol)).as("toks"))
       .select(explode(col("toks")).as("token"))
       .groupBy("token").agg(count(lit(1)).as("cnt"))
-      .persist()
-    try coveragePlan(counts, topV).localCheckpoint(true)
-    finally { counts.unpersist(blocking = false); () }
+    Frames.cached(counts)(coveragePlan(_, topV).localCheckpoint(true))
   }
 }

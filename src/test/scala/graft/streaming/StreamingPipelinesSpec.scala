@@ -262,4 +262,38 @@ class StreamingPipelinesSpec extends SparkSpec {
     // (one per-batch subdir per wave)
     assert(spark.read.parquet(s"$state/b*/sets").count() === 7L)
   }
+
+  test("nearDupStream leaves no cache behind: each micro-batch releases " +
+      "what its probe cached (3 one-file waves, no drain)") {
+    import spark.implicits._
+    // scope the empty-cache assertion to THIS test (as
+    // IncrementalDedupSpec does)
+    spark.catalog.clearCache()
+    graft.util.DeferredCleanup.drain()
+    def doc(g: Int, mut: Boolean = false): String =
+      (0 until 40).map(i =>
+        if (mut && i == 20) s"v${g}_$i" else s"w${g}_$i").mkString(" ")
+    val waves = Seq(
+      Seq(1L -> doc(1), 2L -> doc(2)),
+      Seq(3L -> doc(1, mut = true), 4L -> doc(3)),
+      Seq(5L -> doc(3), 6L -> doc(2)))
+    val (src, state, out, ckpt) = (tmpDir("ndc_src"), tmpDir("ndc_state"),
+      tmpDir("ndc_out"), tmpDir("ndc_ckpt"))
+    waves.foreach { w =>
+      w.toDF("doc_id", "text").coalesce(1)
+        .write.mode("append").parquet(src)
+      Thread.sleep(50)
+    }
+    val schema = spark.read.parquet(src).schema
+    val stream = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(src)
+    StreamingPipelines.nearDupStream(stream, "doc_id", "text",
+      state, out, ckpt).awaitTermination()
+    // the later batches did probe the index (so they did cache)
+    assert(StreamingPipelines.nearDupMatches(spark, out)
+      .select("batch_id", "dup_of").as[(Long, Long)].collect().toSet ===
+      Set((3L, 1L), (5L, 4L), (6L, 2L)))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "every micro-batch must release the caches its probe deferred")
+  }
 }
