@@ -61,25 +61,28 @@ object BenchOne {
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       if (explain) fn(spark, sfDir).explain("formatted")
-      val times = (1 to 3).map { i =>
-        if (jobsDiag && i == 3) {
-          // settle listener events from prior runs, then count run 3
-          settle(); counters.reset()
-        }
+      // per run: (seconds, jobs, stages, tasks, task seconds); the
+      // listener bus settles before each run's counters reset and again
+      // before they are read, so no run's events leak into another's
+      val runs = (1 to 3).map { _ =>
+        if (jobsDiag) { settle(); counters.reset() }
         val t0 = System.nanoTime()
         fn(spark, sfDir).queryExecution.toRdd.count()
         spark.catalog.clearCache()
         val dt = (System.nanoTime() - t0) / 1e9
         // post-timing teardown, same boundary as Bench
         util.DeferredCleanup.drain()
-        dt
+        if (jobsDiag) settle()
+        (dt, counters.jobs, counters.stages, counters.tasks,
+          counters.taskMs / 1e3)
       }
+      val times = runs.map(_._1)
       if (jobsDiag) {
-        settle()
-        println(f"BENCHJOBS $name run3=${times.last}%.3f " +
-          s"jobs=${counters.jobs} stages=${counters.stages} " +
-          s"tasks=${counters.tasks} " +
-          f"taskSec=${counters.taskMs / 1e3}%.2f")
+        def each(f: ((Double, Int, Int, Int, Double)) => Any) =
+          runs.map(f).mkString(",")
+        println(s"BENCHJOBS $name runs=${each(r => f"${r._1}%.3f")} " +
+          s"jobs=${each(_._2)} stages=${each(_._3)} tasks=${each(_._4)} " +
+          s"taskSec=${each(r => f"${r._5}%.2f")}")
       }
       println(f"BENCHONE $name min=${times.min}%.3f runs=" +
         times.map(t => f"$t%.3f").mkString(","))

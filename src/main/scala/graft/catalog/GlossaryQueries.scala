@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.{QueryDef, QueryPack}
 import graft.interp.TextGenerator
 import graft.io.Schemas
+import graft.util.Staging
 
 /** Registered glossary query: the full CRUD cycle (create-if-absent,
   * batched append, table-filtered delete + regenerate) run against a
@@ -27,8 +28,7 @@ object GlossaryQueries extends QueryPack {
   private def glossaryQuery = QueryDef(
     "glossary_crud_cycle",
     (s, dir) => {
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_glossary_q"
+      val path = Staging.tmpPath("graft_glossary_q")
       Glossary.deleteForTest(path)
       Glossary.createIfAbsent(s, path)
       Glossary.regenerate(s, path, meta("region"), Some("region"))
@@ -70,8 +70,7 @@ object GlossaryQueries extends QueryPack {
   private def wideBatchQuery = QueryDef(
     "glossary_wide_batch",
     (s, dir) => {
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_glossary_wide"
+      val path = Staging.tmpPath("graft_glossary_wide")
       Glossary.deleteForTest(path)
       Glossary.regenerate(s, path, wideMeta, None)
       Glossary.read(s, path).orderBy("COLUMN_NAME")

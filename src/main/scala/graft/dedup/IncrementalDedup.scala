@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.graft.BloomShim
 
-import graft.util.Frames
+import graft.util.{Frames, Gates}
 
 /** Incremental (batch-vs-corpus) exact dedup — the continuous-ingest
   * shape: admit only batch documents whose key does not already exist in
@@ -84,18 +84,6 @@ object IncrementalDedup {
     }
   }
 
-  /** Broadcast gate for the candidate confirm path: candidate sets up
-    * to this many rows take the corpus-never-shuffled broadcast route;
-    * larger sets (a duplicate-heavy batch — a re-delivered Kafka
-    * partition, a re-crawl — makes candidates ≈ batch-sized) fall back
-    * to a plain shuffle anti-join, because two unconditional
-    * `broadcast()` hints on a batch-sized frame would OOM the driver or
-    * die at the broadcast size limit. 4M keys ≈ tens of MB broadcast —
-    * comfortably under Spark's 8 GB hard cap with headroom for wide
-    * keys.
-    */
-  val DefaultMaxBroadcastCandidates: Long = 4L * 1000 * 1000
-
   /** Batch rows whose `key` is absent from `corpus` (exact anti-join
     * semantics, bloom-accelerated as described above).
     *
@@ -111,23 +99,23 @@ object IncrementalDedup {
     * ([[graft.util.Frames.deferred]]) — the gate/bench/spec harnesses
     * drain it after their compare/timing boundary, a stream batch
     * releases it at its end, and any other caller consumes the result
-    * and then calls `graft.util.DeferredCleanup.drain()`. At or under
-    * `maxBroadcastCandidates` the confirm path broadcasts the candidate
-    * keys and only STREAMS the corpus; past it, candidates anti-join
+    * and then calls `graft.util.DeferredCleanup.drain()`. Under the
+    * candidate-count gate ([[graft.util.Gates.broadcasts]]) the confirm
+    * path broadcasts the candidate keys and only STREAMS the corpus;
+    * past it (a duplicate-heavy batch — a re-delivered Kafka partition,
+    * a re-crawl — makes candidates ≈ batch-sized), candidates anti-join
     * the corpus keys through a regular exchange — the corpus IS
     * shuffled there, the exactness price of a batch that mostly already
     * exists. Both paths equal the plain anti-join (spec-pinned on both
     * sides of the gate).
     */
   def newRows(batch: DataFrame, corpus: DataFrame, keyCol: String,
-      bloom: Array[Byte],
-      maxBroadcastCandidates: Long = DefaultMaxBroadcastCandidates)
-      : DataFrame = {
+      bloom: Array[Byte]): DataFrame = {
     val might = BloomShim.mightContain(bloom, xxhash64(col(keyCol)))
     val definitelyNew = batch.filter(!might)
     val candidates = Frames.deferred(batch.filter(might))
     val newFromCandidates =
-      if (candidates.count() <= maxBroadcastCandidates) {
+      if (Gates.broadcasts(candidates.count())) {
         // corpus keys that really collide with a candidate: broadcast
         // the small candidate keys, stream the corpus — corpus-side
         // shuffle: none

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.util.Frames
+import graft.util.{Frames, Gates}
 
 /** Incremental batch-vs-corpus NEAR-dup dedup — the composition of
   * [[Dedup]]'s MinHash-LSH banding (X2) with [[IncrementalDedup]]'s
@@ -31,7 +31,7 @@ import graft.util.Frames
   *      bounded buckets — both frames candidate-sized;
   *   4. exact-Jaccard verify: candidates broadcast against the corpus
   *      set table (streamed once, map-side) under the
-  *      [[IncrementalDedup.DefaultMaxBroadcastCandidates]] count gate —
+  *      [[graft.util.Gates.broadcasts]] count gate —
   *      a duplicate-heavy batch falls back to a shuffle join of the
   *      candidate-sized frames, never of the corpus.
   *
@@ -100,9 +100,7 @@ object IncrementalNearDup {
     */
   def matches(index: Index, batchSets: DataFrame,
       batchBands: DataFrame, idCol: String, threshold: Double,
-      maxBucket: Int = 64,
-      maxBroadcastCandidates: Long =
-        IncrementalDedup.DefaultMaxBroadcastCandidates): DataFrame = {
+      maxBucket: Int = 64): DataFrame = {
     val qb = Frames.deferred(batchBands.select(col(idCol).as("batch_id"),
       col("band_idx"), col("band_hash")))
     // 1. bucket-key semi-join: the corpus band index streams ONCE
@@ -132,11 +130,8 @@ object IncrementalNearDup {
     val cs = index.sets.select(col(idCol).as("dup_of"),
       col("__set").as("__set_b"))
     val withBatch = cand.join(broadcast(bs), Seq("batch_id"))
-    val scoredSide =
-      if (cand.count() <= maxBroadcastCandidates)
-        broadcast(withBatch)
-      else withBatch
-    scoredSide.join(cs, Seq("dup_of"))
+    Gates.side(Gates.broadcasts(cand.count()), withBatch)
+      .join(cs, Seq("dup_of"))
       .select(col("batch_id"), col("dup_of"),
         (size(array_intersect(col("__set_a"), col("__set_b")))
           .cast("double") /

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Gates
+
 /** Transitive ancestor closure with depths — the recursive-CTE
   * capability Spark SQL lacks natively (org charts, bill-of-materials
   * explosions, category trees), done scale-first by PATH DOUBLING:
@@ -24,7 +26,7 @@ import org.apache.spark.sql.functions._
   * Dataflow contract as [[PageRank]]/[[Components]]: the depth-1 frame
   * is checkpointed once, each round's result re-materializes
   * (node-pair-sized), joins broadcast under the conservative
-  * [[PageRank.MaxBroadcastNodes]] edge-count gate.
+  * [[graft.util.Gates.broadcasts]] pair-count gate.
   */
 object Closure {
 
@@ -50,8 +52,8 @@ object Closure {
     // are node-bounded, this frame GROWS (keys·log depth, nodes² on
     // dense DAGs) — a once-at-entry decision on the depth-1 count
     // would keep broadcasting long after the frame outgrew the driver
-    var small = p.count() <= PageRank.MaxBroadcastNodes
-    def side(df: DataFrame) = if (small) broadcast(df) else df
+    var small = Gates.broadcasts(p.count())
+    def side(df: DataFrame) = Gates.side(small, df)
     var k = 0
     while (k < rounds) {
       val hops = p
@@ -72,7 +74,7 @@ object Closure {
       // concurrent scan stages would otherwise each recompute the full
       // un-checkpointed lineage, compounding per remaining round)
       val pairs = p.count()
-      small = small && pairs <= PageRank.MaxBroadcastNodes
+      small = small && Gates.broadcasts(pairs)
       k += 1
     }
     p

@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.util.Frames
+import graft.util.{Frames, Gates}
 
 /** Distributed connected components via min-label propagation with
   * POINTER JUMPING: each round (a) relaxes — every node takes the
@@ -21,7 +21,7 @@ import graft.util.Frames
   * Same dataflow contract as [[PageRank]]: edges mirrored/deduped and
   * persisted once, the relaxed label frame re-materialized per round
   * (`localCheckpoint`, node-sized) so lineage stays bounded, label
-  * sides of joins broadcast under the [[PageRank.MaxBroadcastNodes]]
+  * sides of joins broadcast under the [[graft.util.Gates.broadcasts]]
   * gate (checkpointed frames carry no size statistics — Catalyst
   * would SMJ-re-sort the cached edge frame every round), everything
   * persisted released before returning. All operations are integer /
@@ -97,8 +97,8 @@ object Components {
       // mirrored-edge count ≥ node count, so edges ≤ threshold is a
       // CONSERVATIVE broadcast decision (no separate node-count job)
       val m = dir.count()
-      val small = m <= PageRank.MaxBroadcastNodes
-      def side(df: DataFrame) = if (small) broadcast(df) else df
+      val small = Gates.broadcasts(m)
+      def side(df: DataFrame) = Gates.side(small, df)
       def afterJump(relaxed: DataFrame): DataFrame = {
         var j = relaxed
         var k = 0

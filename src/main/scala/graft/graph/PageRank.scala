@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.util.Frames
+import graft.util.{Frames, Gates}
 
 /** Distributed PageRank in exact fixed-point integer arithmetic — the
   * graph-centrality ranking a curation pipeline runs over similarity /
@@ -51,18 +51,8 @@ object PageRank {
     * construction shuffle and per-iteration join keys on them, and
     * packed longs measured ~2× cheaper than concatenated strings on
     * the gate graph.
-    */
-  /** Above this node count the per-iteration rank joins fall back to
-    * shuffle joins; below it the rank frame broadcasts. The gate exists
-    * because a `localCheckpoint`ed frame carries NO size statistics —
-    * Catalyst assumes worst-case and plans SortMergeJoin, re-sorting
-    * the cached edge frame EVERY iteration (measured 2× the whole
-    * lane's cost at sf0.1). Same decision shape as
-    * `IncrementalDedup`'s candidate-count gate.
-    */
-  val MaxBroadcastNodes: Long = 4000000L
-
-  /** Caller contracts that trim construction work the operator cannot
+    *
+    * Caller contracts that trim construction work the operator cannot
     * infer — both default OFF (the generic directed-graph path):
     *
     * @param assumeDistinct the caller guarantees `edges` carries no
@@ -137,8 +127,8 @@ object PageRank {
     lazy val danglingNodes = nodes
       .join(outdeg, nodes("node") === outdeg("src"), "left_anti")
       .localCheckpoint(true)
-    val small = n <= MaxBroadcastNodes
-    def ranksSide(df: DataFrame) = if (small) broadcast(df) else df
+    val small = Gates.broadcasts(n)
+    def ranksSide(df: DataFrame) = Gates.side(small, df)
     // Rank-frame checkpoints are LAZY on the broadcast path: the next
     // iteration's `ranksSide(r)` broadcast build is the first action
     // to scan r and materializes the checkpoint inside a job that

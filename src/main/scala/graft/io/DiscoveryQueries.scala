@@ -26,44 +26,13 @@ object DiscoveryQueries extends QueryPack {
         s"$o AS ordinal_position"
     }.mkString(" UNION ALL ") + " ORDER BY ordinal_position"
 
-  /** Per-process staging path: `name.ext` → `name_<pid>.ext` under
-    * java.io.tmpdir. Two gate JVMs on one host (bench + verify, or
-    * parallel CI lanes) must never interleave a write and a read on the
-    * SAME staged file — with a shared fixed name that shows up as a
-    * ZipException or a wrong-rows hash mismatch in an otherwise green
-    * run. One file per (process, name), overwritten per run, so /tmp
-    * growth stays bounded.
+  /** Per-process staging path `name_<pid>.ext` under java.io.tmpdir
+    * ([[graft.util.Staging.tmpPath]]): with a shared fixed name a
+    * concurrent gate JVM shows up as a ZipException or a wrong-rows hash
+    * mismatch in an otherwise green run.
     */
-  private def stagePath(name: String, ext: String): String = {
-    reapStaleStaging()
-    s"${System.getProperty("java.io.tmpdir")}/${name}_" +
-      s"${ProcessHandle.current().pid()}.$ext"
-  }
-
-  /** Per-pid staging is bounded per PROCESS but would accumulate across
-    * dead pids (one csv/json/xml/xlsx/orc set per JVM ever run). Reap
-    * sibling stagings from other pids untouched for an hour — a live
-    * concurrent gate rewrites its files every run, so it is never that
-    * stale. Runs once per JVM, on the first staging request; recursive
-    * because the csv/json/xml/orc writers stage DIRECTORIES.
-    */
-  @volatile private var reaped = false
-  private def reapStaleStaging(): Unit = {
-    if (reaped) return
-    reaped = true
-    try {
-      val pid = ProcessHandle.current().pid()
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-      val cutoff = System.currentTimeMillis() - 3600L * 1000
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter { f =>
-          f.getName
-            .matches("graft_[a-z]+_\\d+\\.(csv|json|xml|xlsx|xls|orc|avro)") &&
-            !f.getName.contains(s"_$pid.") && f.lastModified() < cutoff
-        }
-        .foreach(graft.util.Staging.deleteRecursively)
-    } catch { case _: Exception => () } // cleanup is best-effort
-  }
+  private def stagePath(name: String, ext: String): String =
+    graft.util.Staging.tmpPath(name, s".$ext")
 
   private def parquetQuery = QueryDef(
     "discovery_parquet_lineitem",

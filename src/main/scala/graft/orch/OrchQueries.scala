@@ -19,8 +19,10 @@ object OrchQueries extends QueryPack {
   private def ingestionQuery = QueryDef(
     "orch_ingestion_agg_events",
     (s, dir) => {
+      // the per-JVM part is the parent dir: the generated SQL names its
+      // table after the file
       val out =
-        s"${System.getProperty("java.io.tmpdir")}/graft_orch_events.csv"
+        s"${graft.util.Staging.tmpPath("graft_orch")}/graft_orch_events.csv"
       // No scan repartition: this is a straight column-sliced export, not
       // scan-fused compute. parallelize=true (added incidentally in r4)
       // shuffled the table 32 ways into a 32-part CSV that discovery then

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.util.Frames
+import graft.util.{Frames, Gates}
 
 /** Market-basket association rules over item CO-OCCURRENCE — "users
   * who did X in a session also did Y" — the unordered-set complement of
@@ -49,8 +49,7 @@ object AssociationRules {
     * returning (the [[graft.text.Vocab]] lifecycle).
     */
   def pairRules(df: DataFrame, basketCols: Seq[String], itemCol: String,
-      minSupport: Int = 2, maxBasket: Int = 256,
-      broadcastSupports: Boolean = true): DataFrame = {
+      minSupport: Int = 2, maxBasket: Int = 256): DataFrame = {
     require(basketCols.nonEmpty, "need at least one basket column")
     require(maxBasket >= 2, "maxBasket must allow at least a pair")
     // null items are dropped EXPLICITLY (not by collect_set's silent
@@ -64,7 +63,7 @@ object AssociationRules {
         .as("__items"))
       .filter(size(col("__items")) <= maxBasket)
     Frames.cached(baskets)(
-      pairRulesPlan(_, minSupport, broadcastSupports).localCheckpoint(true))
+      pairRulesPlan(_, minSupport).localCheckpoint(true))
   }
 
   /** The lazy plan over a materialized basket frame (`__items` sorted
@@ -72,7 +71,7 @@ object AssociationRules {
     * map-side pair expansion and broadcast joins.
     */
   private[pipeline] def pairRulesPlan(baskets: DataFrame,
-      minSupport: Int, broadcastSupports: Boolean = true): DataFrame = {
+      minSupport: Int): DataFrame = {
     val pairs = baskets
       .filter(size(col("__items")) >= 2)
       .select(explode(expr(
@@ -86,15 +85,12 @@ object AssociationRules {
     val itemN = baskets.select(explode(col("__items")).as("__i"))
       .groupBy("__i").agg(count(lit(1)).as("n"))
     val total = broadcast(baskets.agg(count(lit(1)).as("baskets")))
-    // item-cardinality frames: broadcast under the dial, never forced
-    // past it (the corpus-sized-broadcast lesson from the resample
-    // probe applies to any frame that grows with the data)
-    def maybe(f: DataFrame): DataFrame =
-      if (broadcastSupports) broadcast(f) else f
+    // item-cardinality frames: a fixed-hint side (it grows with the
+    // item catalog, which no count observes here)
     pairs
-      .join(maybe(itemN.select(col("__i").as("item_a"),
+      .join(Gates.hinted(itemN.select(col("__i").as("item_a"),
         col("n").as("a_n"))), "item_a")
-      .join(maybe(itemN.select(col("__i").as("item_b"),
+      .join(Gates.hinted(itemN.select(col("__i").as("item_b"),
         col("n").as("b_n"))), "item_b")
       .crossJoin(total)
       .select(col("item_a"), col("item_b"), col("pair_n"), col("a_n"),

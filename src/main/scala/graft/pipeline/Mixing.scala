@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Gates
+
 /** Domain mixing for training-corpus assembly: select documents per
   * source up to a per-source token budget, in deterministic md5(id)
   * order — the step that turns per-domain weights into an actual
@@ -17,9 +19,9 @@ import org.apache.spark.sql.functions._
   * Scale shape: one cumulative-sum window per source — parallelism =
   * source count. A mega-source whose corpus dwarfs its budget
   * (CommonCrawl ≫ budget is the NORMAL case in a training mix) would
-  * sort entirely in one window task, so above
-  * [[StratumPrefilter.AutoEngageBytes]] (or on request) the selection
-  * runs the [[StratumPrefilter]] engine — selection-identical by
+  * sort entirely in one window task, so past the
+  * [[graft.util.Gates.prefilters]] size gate (or on request) the
+  * selection runs the [[StratumPrefilter]] engine — selection-identical by
   * construction, pinned in `MixingSpec` along with survivor bounds and
   * the rescue path.
   */
@@ -30,19 +32,15 @@ object Mixing {
     * @param budgets       per-source token budgets
     * @param defaultBudget budget for sources absent from `budgets`
     * @param prefilter     force the hash-threshold prefilter on/off;
-    *                      default engages it when the optimizer's size
-    *                      estimate exceeds
-    *                      [[StratumPrefilter.AutoEngageBytes]].
+    *                      default engages it past the
+    *                      [[graft.util.Gates.prefilters]] size gate.
     */
   def byTokenBudget(df: DataFrame, sourceCol: String, idCol: String,
       tokenCol: String, budgets: Map[String, Long],
       defaultBudget: Long,
       prefilter: Option[Boolean] = None): DataFrame = {
-    val engage = prefilter.getOrElse(
-      df.queryExecution.optimizedPlan.stats.sizeInBytes >
-        StratumPrefilter.AutoEngageBytes)
-    if (!engage) exactMix(df, sourceCol, idCol, tokenCol, budgets,
-      defaultBudget)
+    if (!prefilter.getOrElse(Gates.prefilters(df)))
+      exactMix(df, sourceCol, idCol, tokenCol, budgets, defaultBudget)
     else prefilteredMix(df, sourceCol, idCol, tokenCol, budgets,
       defaultBudget, StratumPrefilter.Margin)
   }

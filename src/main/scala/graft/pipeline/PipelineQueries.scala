@@ -22,9 +22,6 @@ object PipelineQueries extends QueryPack {
     */
   val SplitTs = "2024-07-01 00:00:00"
 
-  private val outCols = Seq("event_id", "ts_us", "user_id", "event_type",
-    "value", "props")
-
   private val oracleProj =
     "event_id, epoch_us(ts) AS ts_us, user_id, event_type, value, props"
 

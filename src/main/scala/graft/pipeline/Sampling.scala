@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Gates
+
 /** Deterministic stratified sampling for corpus curation: keep up to
   * `quota` rows per stratum (e.g. per language / per source), chosen by a
   * stable hash order instead of `rand()` — the same rows are selected on
@@ -12,12 +14,13 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: one shuffle on the stratum key; output is bounded by
   * `quota × |strata|`. A stratum that dwarfs its quota would sort entirely
-  * inside one window task, so above [[StratumPrefilter.AutoEngageBytes]]
-  * (or on request) the selection runs the [[StratumPrefilter]] engine —
-  * selection-identical by construction, pinned in `SamplingSpec` along
-  * with survivor bounds and the rescue path. (Spark 4's WindowGroupLimit
-  * already partial-limits a `row_number ≤ quota` window map-side —
-  * visible in the spec's pinned plan — so even the plain path never
+  * inside one window task, so past the [[graft.util.Gates.prefilters]]
+  * size gate (or on request) the selection runs the [[StratumPrefilter]]
+  * engine — selection-identical by construction, pinned in
+  * `SamplingSpec` along with survivor bounds and the rescue path.
+  * (Spark 4's WindowGroupLimit already partial-limits a
+  * `row_number ≤ quota` window map-side — visible in the spec's pinned
+  * plan — so even the plain path never
   * shuffles more than `quota` rows per map partition; the prefilter
   * additionally bounds the per-task SORT input and the scan-to-shuffle
   * volume.)
@@ -31,18 +34,16 @@ object Sampling {
     * md5 because every engine computes the identical hex digest).
     *
     * @param prefilter force the hash-threshold prefilter on/off; default
-    *                  engages it when the optimizer's size estimate
-    *                  exceeds [[StratumPrefilter.AutoEngageBytes]] (so
-    *                  test-scale inputs keep the plain single-window plan).
+    *                  engages it past the [[graft.util.Gates.prefilters]]
+    *                  size gate (so test-scale inputs keep the plain
+    *                  single-window plan).
     */
   def stratifiedHead(df: DataFrame, stratumCols: Seq[String],
       idCol: String, quota: Int,
       prefilter: Option[Boolean] = None): DataFrame = {
     require(quota > 0, "quota must be positive")
-    val engage = prefilter.getOrElse(
-      df.queryExecution.optimizedPlan.stats.sizeInBytes >
-        StratumPrefilter.AutoEngageBytes)
-    if (!engage) exactHead(df, stratumCols, idCol, quota)
+    if (!prefilter.getOrElse(Gates.prefilters(df)))
+      exactHead(df, stratumCols, idCol, quota)
     else prefilteredHead(df, stratumCols, idCol, quota,
       StratumPrefilter.Margin)
   }

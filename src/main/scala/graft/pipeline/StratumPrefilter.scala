@@ -45,12 +45,6 @@ private[pipeline] object StratumPrefilter {
     */
   val Margin = 4.0
 
-  /** Default auto-engage bound on the optimizer's size estimate: below
-    * this the single-window plan is already fine (and skipping the extra
-    * counting pass keeps small-input plans unchanged).
-    */
-  val AutoEngageBytes: Long = 1L << 30
-
   /** Cap on thresholded strata (and so on the driver-side map and the
     * literal in the plan): the top-K by weight. Everything smaller
     * keeps every row — exact, and small enough to sort cheaply.

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.pipeline.Scd1
-import graft.util.{DeferredCleanup, DirSwap, Frames}
+import graft.util.{DeferredCleanup, DirSwap, Frames, Gates}
 
 /** Structured Streaming extensions (SURVEY §2i — post-parity; the
   * reference has no streaming surface, so nothing here claims reference
@@ -161,28 +161,20 @@ object StreamingPipelines {
     if (batch.rdd.getNumPartitions >= n) batch else batch.repartition(n)
   }
 
-  /** Micro-batches below this many input bytes keep their arrival
-    * partitioning on the byte-gated lanes: their heavy work fans out
-    * through their own aggregate exchanges, so at small batches the
-    * repartition is a pure tax (r16 A/B: +0.2-0.5s per lane at gate
-    * scale), while past the gate the pre-exchange single-task segment
-    * (tokenize/shingle/gram explode) dominates the batch (r17 A/B at
-    * 10× the gate corpus, below).
-    */
-  private val SpreadMinBytes = 1L * 1024 * 1024
-
   /** [[spread]] gated on the micro-batch's INPUT SIZE rather than its
-    * partition count (the r16 verdict's re-A/B directive): a
-    * FileStreamSource batch knows its file bytes exactly
-    * (logical-plan statistics — no extra job), so lanes whose map
-    * chain only dominates past a size threshold spread exactly when
-    * it pays. At cluster scale big batches arrive ≥ 32 partitions from
-    * file splits and this stays a no-op, like [[spread]] itself.
+    * partition count ([[graft.util.Gates.spreads]]): a FileStreamSource
+    * batch knows its file bytes exactly (logical-plan statistics — no
+    * extra job). Below the gate the repartition is a pure tax (r16 A/B:
+    * +0.2-0.5s per lane at gate scale); past it the pre-exchange
+    * single-task segment (tokenize/shingle/gram explode) dominates the
+    * batch (r17 A/B at 10× the gate corpus). At cluster scale big
+    * batches arrive ≥ 32 partitions from file splits and this stays a
+    * no-op, like [[spread]] itself.
     */
-  private def spreadByBytes(batch: DataFrame): DataFrame = {
-    val bytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes < SpreadMinBytes) batch else spread(batch)
-  }
+  private def spreadByBytes(batch: DataFrame): DataFrame =
+    if (Gates.spreads(batch.queryExecution.optimizedPlan.stats.sizeInBytes))
+      spread(batch)
+    else batch
 
   /** Write `merged` to `<targetPath>.tmp` and swap it in
     * ([[DirSwap.replace]]): the merged plan READS `targetPath`, so a

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Gates
+
 /** Per-source boilerplate-line removal — the C4/CCNet cleanup step that
   * precedes dedup in every web-scale pretraining pipeline: a line that
   * recurs across many documents of the SAME source (navigation chrome,
@@ -35,13 +37,12 @@ import org.apache.spark.sql.functions._
   * frequency is a distinct + map-side-combinable count whose output is
   * template-cardinality-sized; the boilerplate set (lines that CLEARED
   * the threshold — far smaller still) broadcasts onto the line stream
-  * under `broadcastCommon` (default true; at pathological template
-  * cardinality drop to false and the same plan shuffles); reassembly
-  * is ONE shuffle by document id. The corpus text itself is never
-  * joined against anything corpus-sized. At 100 TB the only sizing
-  * dial is the line-frequency frame: host-level grouping keeps it
-  * bounded by templates-per-host, the exact shape CCNet runs at crawl
-  * scale.
+  * as a fixed hint ([[graft.util.Gates.hinted]]; without the hint the
+  * same plan shuffles); reassembly is ONE shuffle by document id. The
+  * corpus text itself is never joined against anything corpus-sized.
+  * At 100 TB the only sizing dial is the line-frequency frame:
+  * host-level grouping keeps it bounded by templates-per-host, the
+  * exact shape CCNet runs at crawl scale.
   */
 object Boilerplate {
 
@@ -51,8 +52,8 @@ object Boilerplate {
     * template).
     */
   def removeCommonLines(docs: DataFrame, idCol: String, sourceCol: String,
-      textCol: String, minFrac: Double = 0.5, minDocs: Int = 2,
-      broadcastCommon: Boolean = true): DataFrame = {
+      textCol: String, minFrac: Double = 0.5,
+      minDocs: Int = 2): DataFrame = {
     require(minFrac > 0 && minFrac <= 1, "minFrac must be in (0, 1]")
     // null text → empty text BEFORE the explode: posexplode of a null
     // array emits no rows, which would silently DROP the document from
@@ -74,8 +75,7 @@ object Boilerplate {
       .filter(col("__docs") >= greatest(lit(minDocs.toLong),
         ceil(col("__src_docs") * minFrac)))
       .select(col(sourceCol), col("__line"), lit(true).as("__bp"))
-    val flagged = lines.join(
-      if (broadcastCommon) broadcast(common) else common,
+    val flagged = lines.join(Gates.hinted(common),
       Seq(sourceCol, "__line"), "left")
     flagged.groupBy(col(idCol), col(sourceCol))
       .agg(

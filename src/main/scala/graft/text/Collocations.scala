@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.util.Frames
+import graft.util.{Frames, Gates}
 
 /** Collocation (multi-word-expression) extraction: rank adjacent token
   * pairs by pointwise-mutual-information LIFT — how much more often the
@@ -29,9 +29,8 @@ import graft.util.Frames
   * until the count); unigram and bigram counts are map-side-combinable
   * hash aggregations; totals are single-row broadcast cross joins; the
   * unigram frame joins back onto the bigram frame twice — vocabulary-
-  * sized, broadcast under `broadcastUnigrams` (default true; drop to
-  * false past ~10M distinct tokens and the hint degrades to a shuffled
-  * hash join on the SAME plan). The final top-k is a deterministic
+  * sized, a fixed broadcast hint ([[graft.util.Gates.hinted]]; without
+  * the hint the same plan shuffles). The final top-k is a deterministic
   * total order + limit → TakeOrderedAndProject, never a global sort.
   */
 object Collocations {
@@ -49,11 +48,11 @@ object Collocations {
     * [[Vocab.coverage]] lifecycle).
     */
   def topBigrams(df: DataFrame, textCol: String, minCount: Int = 5,
-      k: Int = 100, broadcastUnigrams: Boolean = true): DataFrame = {
+      k: Int = 100): DataFrame = {
     // tokens materialized once per doc (the shingling lesson: an
     // inlined split() re-tokenizes per emitted element)
     Frames.cached(df.select(TextAnalysis.tokens(col(textCol)).as("__toks"))) {
-      topBigramsPlan(_, minCount, k, broadcastUnigrams).localCheckpoint(true)
+      topBigramsPlan(_, minCount, k).localCheckpoint(true)
     }
   }
 
@@ -62,7 +61,7 @@ object Collocations {
     * without the eager materialization hiding them behind an RDD scan.
     */
   private[graft] def topBigramsPlan(toks: DataFrame, minCount: Int,
-      k: Int, broadcastUnigrams: Boolean): DataFrame = {
+      k: Int): DataFrame = {
     val words = toks.select(explode(col("__toks")).as("w"))
     val uni = words.groupBy("w").agg(count(lit(1)).as("c"))
     val pairs = toks
@@ -79,7 +78,7 @@ object Collocations {
     val totals = broadcast(toks.agg(
       sum(size(col("__toks"))).as("t_tokens"),
       sum(greatest(size(col("__toks")) - 1, lit(0))).as("n_pairs")))
-    val uniJ = if (broadcastUnigrams) broadcast(uni) else uni
+    val uniJ = Gates.hinted(uni)
     val out = big
       .join(uniJ.select(col("w").as("w1"), col("c").as("w1_count")), "w1")
       .join(uniJ.select(col("w").as("w2"), col("c").as("w2_count")), "w2")

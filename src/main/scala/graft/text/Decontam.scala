@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
-import graft.util.Frames
+import graft.util.{Frames, Gates}
 
 /** Benchmark decontamination for training-data pipelines: flag corpus
   * documents that share word n-grams with a held-out evaluation set —
@@ -75,24 +75,22 @@ object Decontam {
     * through the explode as a carried column, so totals need no second
     * scan and no re-join against a second gram computation.
     *
-    * @param broadcastEval true (default) broadcasts the distinct eval
-    *   gram set — the right shape while eval suites are MBs against a TB
-    *   corpus (map-side probe, zero corpus-gram shuffle). Set false when
-    *   the eval set outgrows a broadcast (e.g. decontaminating against
-    *   another whole corpus): both sides then hash-partition on the gram
-    *   key — one shuffle of each side's distinct grams, still never an
-    *   all-pairs comparison.
+    * The distinct eval gram set is a fixed-hint broadcast
+    * ([[graft.util.Gates.hinted]]) — the right shape while eval suites
+    * are MBs against a TB corpus (map-side probe, zero corpus-gram
+    * shuffle). Without the hint both sides hash-partition on the gram
+    * key — one shuffle of each side's distinct grams, still never an
+    * all-pairs comparison.
     */
   def overlapReportFromArrays(corpusArrays: DataFrame,
-      evalArrays: DataFrame, idCol: String,
-      broadcastEval: Boolean = true): DataFrame = {
+      evalArrays: DataFrame, idCol: String): DataFrame = {
     val evalSet = evalArrays
       .select(explode(col("__grams")).as("gram")).distinct()
     corpusArrays
       .select(col(idCol),
         size(col("__grams")).cast("long").as("total_grams"),
         explode(col("__grams")).as("gram"))
-      .join(if (broadcastEval) broadcast(evalSet) else evalSet, "gram")
+      .join(Gates.hinted(evalSet), "gram")
       .groupBy(col(idCol), col("total_grams"))
       .agg(count(lit(1)).as("matched_grams"))
       .select(col(idCol), col("matched_grams"), col("total_grams"),
@@ -118,13 +116,12 @@ object Decontam {
     * included).
     */
   def exposureReportFromArrays(evalArrays: DataFrame,
-      corpusArrays: DataFrame, idCol: String,
-      broadcastEval: Boolean = true): DataFrame = {
+      corpusArrays: DataFrame, idCol: String): DataFrame = {
     val evalG = evalArrays
       .select(col(idCol), explode(col("__grams")).as("gram"))
     val corpusG = corpusArrays
       .select(col(idCol).as("__cid"), explode(col("__grams")).as("gram"))
-    val hits = (if (broadcastEval) broadcast(evalG) else evalG)
+    val hits = Gates.hinted(evalG)
       .join(corpusG, Seq("gram"))
       .groupBy(col(idCol)).agg(
         countDistinct(col("gram")).as("matched_grams"),
@@ -159,8 +156,7 @@ object Decontam {
     * starts first — the SpanDedup lesson).
     */
   def scrubSpans(corpus: DataFrame, eval: DataFrame, idCol: String,
-      textCol: String, n: Int = 5,
-      broadcastEval: Boolean = true): DataFrame = {
+      textCol: String, n: Int = 5): DataFrame = {
     // the eval ARRAY frame is cached per the docGramArrays contract (the
     // join above the explode otherwise re-derives the shingling per row);
     // released once the result is materialized
@@ -188,8 +184,7 @@ object Decontam {
             (col("i") - 1).cast("long").as("pos"),
             concat_ws(" ", slice(col("toks"), col("i"), lit(n))).as("__g"))
         val hits = spans
-          .join(if (broadcastEval) broadcast(evalSet) else evalSet,
-            col("__g") === col("__eg"))
+          .join(Gates.hinted(evalSet), col("__g") === col("__eg"))
           .select(col("doc_id"), col("pos"), col("n_tokens"))
         val covered = hits
           .select(col("doc_id"), explode(sequence(col("pos"),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Gates
+
 /** Per-document salient-term extraction — TF-IDF-shaped ranking kept in
   * EXACT integer arithmetic: terms rank by (term frequency DESC, document
   * frequency ASC, term ASC). The float idf = log(N/df) is a monotone
@@ -27,18 +29,9 @@ object TermSalience {
   /** `(doc_id, term, tf, df, rank)` for the top-`k` salient terms of
     * each doc; stopwords and terms shorter than [[MinTermLen]] are
     * excluded. Docs with no qualifying terms are absent.
-    *
-    * @param broadcastDf broadcast the vocabulary-sized df frame onto the
-    *        tf side (the default — the dictionary is sublinear in the
-    *        corpus). The vocabulary is still UNBOUNDED in corpus size
-    *        (typos, URLs, numbers grow it without limit), so callers
-    *        whose dictionary outgrows driver/broadcast memory pass
-    *        `false` and the join degrades to a co-partitioned shuffle —
-    *        same algorithm, one more exchange (the same fallback shape
-    *        as [[graft.dedup.IncrementalDedup.newRows]]'s gate).
     */
   def topTerms(docs: DataFrame, idCol: String, textCol: String,
-      k: Int = DefaultK, broadcastDf: Boolean = true): DataFrame = {
+      k: Int = DefaultK): DataFrame = {
     val stops = array(TextAnalysis.Stopwords.map(lit): _*)
     // materialize the token array before exploding (interpreted HOF +
     // explode re-derivation — the shared shingling lesson)
@@ -54,10 +47,10 @@ object TermSalience {
       .orderBy(col("tf").desc, col("df").asc, col("term").asc)
     // df is vocabulary-sized (sublinear in the corpus) — broadcast it so
     // the (doc, term)-sized tf side is never re-shuffled onto term; the
-    // only remaining exchange is the window's doc_id partition. With
-    // broadcastDf=false the hint drops and this degrades to a
-    // co-partitioned shuffle join, not a different algorithm.
-    tf.join(if (broadcastDf) broadcast(df) else df, "term")
+    // only remaining exchange is the window's doc_id partition. Without
+    // the hint this degrades to a co-partitioned shuffle join, not a
+    // different algorithm.
+    tf.join(Gates.hinted(df), "term")
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select("doc_id", "term", "tf", "df", "rank")

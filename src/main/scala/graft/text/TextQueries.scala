@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, QueryPack}
 import graft.io.Tables
-import graft.util.Frames
+import graft.util.{Frames, Gates}
 
 /** Registered text-analysis queries over `documents` with DuckDB oracles.
   *
@@ -1186,12 +1186,8 @@ object TextQueries extends QueryPack {
         // for checkpoint + count, the Closure idiom)
         .localCheckpoint(false)
       // checkpointed frames carry no size statistics, so gate the
-      // dictionary side's broadcast on its (already materialized)
-      // count — the PageRank/IncrementalDedup decision shape
-      val encSide =
-        if (enc.count() <= graft.graph.PageRank.MaxBroadcastNodes)
-          broadcast(enc)
-        else enc
+      // dictionary side's broadcast on its (already materialized) count
+      val encSide = Gates.side(Gates.broadcasts(enc.count()), enc)
       // token-id rank: the input is the FINAL SYMBOL SET (alphabet +
       // one symbol per rule — bounded by construction, never corpus-
       // sized), so the single-partition window is chosen knowingly; the

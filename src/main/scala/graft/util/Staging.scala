@@ -106,6 +106,30 @@ object Staging {
       }
     } catch { case _: Exception => () } // cleanup is best-effort
 
+  /** Per-JVM path `<java.io.tmpdir>/<name>_<pid><ext>` for a lane's
+    * fixture files. Two engine JVMs on one host (bench + verify, or
+    * parallel CI lanes) must never write and read the same fixture —
+    * with a shared fixed name one deletes the other's files mid-run.
+    * The first call per JVM reaps dead siblings ([[reapTmp]]), so
+    * per-pid naming stays bounded.
+    */
+  def tmpPath(name: String, ext: String = ""): String = {
+    reapTmpOnce
+    s"$tmpDir/${name}_${ProcessHandle.current().pid()}$ext"
+  }
+
+  private def tmpDir = new java.io.File(System.getProperty("java.io.tmpdir"))
+
+  private lazy val reapTmpOnce: Unit = reapTmp(tmpDir)
+
+  /** [[reapStale]] over the [[tmpPath]] family in `dir`: every
+    * `graft_<name>_<pid>` file or dir plus its extensions (the discovery
+    * stagings' `.csv`, a swapped dir's `.tmp`/`.bak` siblings).
+    */
+  private[graft] def reapTmp(dir: java.io.File): Unit =
+    reapStale(dir, "graft_[a-z_]+_(\\d+)(?:\\.[a-z]+)*".r,
+      ProcessHandle.current().pid())
+
   /** Fail loud when a FRESHLY staged dir carries no `_SUCCESS` marker.
     * Memo reuse (`intact`) requires the marker, so on a committer
     * configured with `mapreduce.fileoutputcommitter.marksuccessfuljobs

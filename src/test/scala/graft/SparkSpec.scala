@@ -39,4 +39,15 @@ object SparkSpec {
   // One session per JVM: sbt forks a single test JVM; per-suite sessions
   // would pay ~5s startup each.
   lazy val session: SparkSession = Sessions.local("graft-test")
+
+  /** The corpus directory of scale factor `sf` (e.g. "0.01"), as the
+    * table in the repo's TESTDATA.md lists it.
+    */
+  def corpusDir(sf: String): String = {
+    val src = scala.io.Source.fromFile("TESTDATA.md", "UTF-8")
+    try src.getLines().collectFirst {
+      case l if l.startsWith(s"| $sf |") => l.split('`')(1).stripSuffix("/")
+    }.getOrElse(sys.error(s"TESTDATA.md lists no sf $sf"))
+    finally src.close()
+  }
 }

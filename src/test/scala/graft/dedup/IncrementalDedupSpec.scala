@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.util.Gates
 
 /** Incremental bloom-prefiltered dedup: exact anti-join equivalence (the
   * no-false-negative invariant) even under a deliberately undersized
@@ -48,9 +49,9 @@ class IncrementalDedupSpec extends SparkSpec {
   test("past the broadcast gate the confirm path falls back to a " +
       "shuffle anti-join — same rows on both sides of the gate") {
     val bloom = IncrementalDedup.buildBloom(corpus, col("k"), 1000)
-    // force the fallback: every candidate set exceeds a zero gate
-    val out = IncrementalDedup.newRows(batch, corpus, "k", bloom,
-        maxBroadcastCandidates = 0)
+    // force the fallback: every decision takes its large-input branch
+    val out = Gates.pastGates(
+        IncrementalDedup.newRows(batch, corpus, "k", bloom))
       .select("id").as[Long].collect().toSet
     assert(out === expected)
     // and the shape really changed: with auto-broadcast off, the
@@ -58,8 +59,8 @@ class IncrementalDedupSpec extends SparkSpec {
     val thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val plan = IncrementalDedup.newRows(batch, corpus, "k", bloom,
-          maxBroadcastCandidates = 0)
+      val plan = Gates.pastGates(
+          IncrementalDedup.newRows(batch, corpus, "k", bloom))
         .queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastHashJoin"), plan)
       assert(plan.contains("SortMergeJoin") ||

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.util.Gates
 
 class AssociationRulesSpec extends SparkSpec {
   import spark.implicits._
@@ -104,16 +105,15 @@ class AssociationRulesSpec extends SparkSpec {
     val rows = Seq(("b1", "a"), ("b1", "b"), ("b2", "a"), ("b2", "b"),
       ("b3", "a"))
     val on = rules(rows, minSupport = 1)
-    val off = AssociationRules.pairRules(basketsOf(rows: _*),
-        Seq("basket"), "item", 1, broadcastSupports = false)
+    val off = Gates.pastGates(AssociationRules.pairRules(
+        basketsOf(rows: _*), Seq("basket"), "item", 1))
       .as[(String, String, Long, Long, Long, Long, Double, Double, Double)]
       .collect().toSeq
     assert(off === on, "the dial changes the plan, never the rules")
     // and the plan actually differs: no broadcast on the support joins
     val baskets = basketsOf(rows: _*).groupBy("basket")
       .agg(sort_array(collect_set(col("item"))).as("__items"))
-    val plan = AssociationRules
-      .pairRulesPlan(baskets, 1, broadcastSupports = false)
+    val plan = Gates.pastGates(AssociationRules.pairRulesPlan(baskets, 1))
       .queryExecution.analyzed.collect {
         case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
       }

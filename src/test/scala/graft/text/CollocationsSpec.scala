@@ -62,7 +62,7 @@ class CollocationsSpec extends SparkSpec {
   test("plan: TakeOrdered cut, broadcast unigram joins, no cartesian corpus join") {
     val toks = docsOf("a b c", "b c d")
       .select(TextAnalysis.tokens(col("text")).as("__toks"))
-    val plan = Collocations.topBigramsPlan(toks, 1, 5, broadcastUnigrams = true)
+    val plan = Collocations.topBigramsPlan(toks, 1, 5)
       .queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"),
       "top-k must be a TakeOrdered, not a global sort")

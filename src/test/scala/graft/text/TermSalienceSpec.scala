@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.SparkSpec
+import graft.util.Gates
 
 /** Salient-term ranking: tf dominates, df breaks ties (rarer wins),
   * lexicographic last; stopword/short-term exclusion; top-k cut.
@@ -33,8 +34,8 @@ class TermSalienceSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val hinted = TermSalience.topTerms(docs, "doc_id", "text", k = 3)
       .orderBy("doc_id", "rank").collect().toSeq
-    val fallback = TermSalience.topTerms(docs, "doc_id", "text", k = 3,
-        broadcastDf = false)
+    val fallback = Gates.pastGates(
+        TermSalience.topTerms(docs, "doc_id", "text", k = 3))
       .orderBy("doc_id", "rank").collect().toSeq
     assert(fallback === hinted)
     // the hint really is gone: with auto-broadcast off, no driver
@@ -42,8 +43,8 @@ class TermSalienceSpec extends SparkSpec {
     val thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val plan = TermSalience.topTerms(docs, "doc_id", "text", k = 3,
-          broadcastDf = false)
+      val plan = Gates.pastGates(
+          TermSalience.topTerms(docs, "doc_id", "text", k = 3))
         .queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastHashJoin"), plan)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
