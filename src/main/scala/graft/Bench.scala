@@ -16,6 +16,54 @@ object Bench {
       .filter(w => w.isDirectory && w.getPath != sfDir)
       .map(_.getPath)
 
+  private[graft] type Query = (SparkSession, String) => org.apache.spark.sql.DataFrame
+
+  /** Warm-up at the smallest scale factor: triggers codegen compilation
+    * + JIT for every query plan shape, so the timed loop measures
+    * execution rather than first-run compilation (which swung totals by
+    * ±40% between otherwise identical runs). Failures are ignored here —
+    * the timed loop reports them.
+    */
+  private[graft] def warmUp(spark: SparkSession, warmDir: String,
+      fns: Iterable[Query]): Unit = {
+    fns.foreach { fn =>
+      try fn(spark, warmDir).queryExecution.toRdd.count()
+      catch { case _: Throwable => () }
+    }
+    spark.catalog.clearCache()
+    graft.util.DeferredCleanup.drain()
+  }
+
+  /** One timed run of `fn` at `dir` in seconds. A failure goes to
+    * `onError` (default: rethrown) and the run still reports its time.
+    */
+  private[graft] def timedRun(spark: SparkSession, fn: Query, dir: String,
+      onError: Throwable => Unit = e => throw e): Double = {
+    // Stabilize: collect garbage left by the PREVIOUS query before
+    // starting the clock, so a heap full of dead shuffle/broadcast
+    // metadata from earlier suite entries doesn't tax this query's
+    // measured run with old-gen GC pauses (the r4 suite bench showed
+    // diffuse +0.4-1.1s drift on profile/dq queries that a clean
+    // foreground run did not reproduce).
+    System.gc()
+    val t0 = System.nanoTime()
+    // toRdd.count(), not count(): Dataset.count() rewrites to a
+    // count-aggregate that short-circuits statically-1-row branches
+    // (a union of ungrouped aggregates never executes its
+    // aggregations), silently under-measuring report queries.
+    // Iterating the physical plan's rows forces full evaluation.
+    try fn(spark, dir).queryExecution.toRdd.count()
+    catch { case e: Throwable => onError(e) }
+    // drop persisted sketch/index frames so cached blocks neither
+    // leak across the suite nor speed up the second run
+    spark.catalog.clearCache()
+    val dt = (System.nanoTime() - t0) / 1e9
+    // Post-timing teardown (e.g. streaming state-store unload):
+    // work that protects the NEXT query must not bill this one.
+    graft.util.DeferredCleanup.drain()
+    dt
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Optional comma-separated query-name filter for foreground isolation
@@ -23,23 +71,10 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val spark = Sessions.local()
-    // Warm-up at the smallest scale factor (if present): triggers codegen
-    // compilation + JIT for every query plan shape, so the timed loop
-    // measures execution rather than first-run compilation (which swung
-    // totals by ±40% between otherwise identical runs). Failures are
-    // ignored here — the timed loop reports them.
-    val warmDir = warmDirOf(sfDir)
     val selected = SparkEntry.queries.filter { case (n, _) =>
       only.forall(_.contains(n))
     }
-    warmDir.foreach { w =>
-      selected.foreach { case (_, fn) =>
-        try fn(spark, w).queryExecution.toRdd.count()
-        catch { case _: Throwable => () }
-      }
-      spark.catalog.clearCache()
-      graft.util.DeferredCleanup.drain()
-    }
+    warmDirOf(sfDir).foreach(warmUp(spark, _, selected.values))
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // Host-load self-labeling: /proc/loadavg sampled at suite start
     // (co-tenant baseline — our own executors aren't running yet), after
@@ -86,36 +121,10 @@ object Bench {
           .toMap
       }
     } catch { case _: Throwable => Map.empty }
-    def attemptOf(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Double = {
-          // Stabilize: collect garbage left by the PREVIOUS query before
-          // starting the clock, so a heap full of dead shuffle/broadcast
-          // metadata from earlier suite entries doesn't tax this query's
-          // measured run with old-gen GC pauses (the r4 driver bench showed
-          // diffuse +0.4-1.1s drift on profile/dq queries that a clean
-          // foreground run did not reproduce).
-          System.gc()
-          val t0 = System.nanoTime()
-          // toRdd.count(), not count(): Dataset.count() rewrites to a
-          // count-aggregate that short-circuits statically-1-row branches
-          // (a union of ungrouped aggregates never executes its
-          // aggregations), silently under-measuring report queries.
-          // Iterating the physical plan's rows forces full evaluation.
-          try { fn(spark, sfDir).queryExecution.toRdd.count() }
-          catch { case e: Throwable =>
-            errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-              .linesIterator.take(1).mkString.take(200)
-          }
-      // drop persisted sketch/index frames so cached blocks neither
-      // leak across the suite nor speed up the second run
-      spark.catalog.clearCache()
-      val dt = (System.nanoTime() - t0) / 1e9
-      // Post-timing teardown (e.g. streaming state-store unload):
-      // work that protects the NEXT query must not bill this one.
-      graft.util.DeferredCleanup.drain()
-      dt
-    }
+    def attemptOf(name: String, fn: Query): Double =
+      timedRun(spark, fn, sfDir, e =>
+        errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
+          .linesIterator.take(1).mkString.take(200))
     val firstPass = selected.toSeq.sortBy(_._1).map {
       case (name, fn) =>
         def attempt(): Double = attemptOf(name, fn)

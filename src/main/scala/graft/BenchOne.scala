@@ -49,13 +49,8 @@ object BenchOne {
         s"unknown query '$name'; known: " +
           SparkEntry.queries.keys.toSeq.sorted.mkString(", "))
     }
-    Bench.warmDirOf(sfDir).foreach { w =>
-      names.distinct.foreach { name =>
-        try SparkEntry.queries(name)(spark, w).queryExecution.toRdd.count()
-        catch { case _: Throwable => () }
-      }
-      spark.catalog.clearCache()
-    }
+    Bench.warmDirOf(sfDir).foreach(
+      Bench.warmUp(spark, _, names.distinct.map(SparkEntry.queries)))
     val counters = new Counters
     if (jobsDiag) spark.sparkContext.addSparkListener(counters)
     names.foreach { name =>
@@ -66,12 +61,7 @@ object BenchOne {
       // before they are read, so no run's events leak into another's
       val runs = (1 to 3).map { _ =>
         if (jobsDiag) { settle(); counters.reset() }
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).queryExecution.toRdd.count()
-        spark.catalog.clearCache()
-        val dt = (System.nanoTime() - t0) / 1e9
-        // post-timing teardown, same boundary as Bench
-        util.DeferredCleanup.drain()
+        val dt = Bench.timedRun(spark, fn, sfDir)
         if (jobsDiag) settle()
         (dt, counters.jobs, counters.stages, counters.tasks,
           counters.taskMs / 1e3)

@@ -9,12 +9,12 @@ import org.apache.spark.sql.functions.{array, col, concat, explode, lit, struct}
   * past the exact selection's crossover", "LSH candidates grow O(n) while
   * brute grows O(n^2)") are measured numbers, not assertions.
   *
-  * Protocol mirrors [[Bench]]: one warm-up pass per probe at sf0.001
-  * (codegen + JIT), then min-of-3 per (probe, scale) with a pre-run GC
-  * and a post-run clearCache. The quadratic brute-force kNN foil runs
-  * only up to x3 — its x10 cost (~100x the x1 time) is predictable from
-  * the fitted exponent and would dominate the probe's wall clock for no
-  * information.
+  * Protocol is [[Bench]]'s (`Bench.warmUp`, `Bench.timedRun`): one
+  * warm-up pass per probe at sf0.001 (codegen + JIT), then min-of-3 per
+  * (probe, scale) with a pre-run GC and a post-run clearCache. The
+  * quadratic brute-force kNN foil runs only up to x3 — its x10 cost
+  * (~100x the x1 time) is predictable from the fitted exponent and would
+  * dominate the probe's wall clock for no information.
   *
   * Usage:
   *   runMain graft.ScaleProbe x1=/root/testdata/sf0.1 \
@@ -658,23 +658,11 @@ object ScaleProbe {
     val selected = probes.filter { case (n, _, _) => only.forall(_.contains(n)) }
     val spark = Sessions.local()
     val warmDir = "/root/testdata/sf0.001"
-    selected.foreach { case (_, _, fn) =>
-      try fn(spark, warmDir).queryExecution.toRdd.count()
-      catch { case _: Throwable => () }
-    }
-    spark.catalog.clearCache()
+    Bench.warmUp(spark, warmDir, selected.map(_._3))
     selected.foreach { case (name, labelFilter, fn) =>
       scales.foreach { case (label, dir) =>
         if (labelFilter.forall(_.contains(label))) {
-          val times = (1 to 3).map { _ =>
-            System.gc()
-            val t0 = System.nanoTime()
-            fn(spark, dir).queryExecution.toRdd.count()
-            spark.catalog.clearCache()
-            val dt = (System.nanoTime() - t0) / 1e9
-            graft.util.DeferredCleanup.drain() // same boundary as Bench
-            dt
-          }
+          val times = (1 to 3).map(_ => Bench.timedRun(spark, fn, dir))
           println(f"""SCALEPROBE {"probe":"$name","scale":"$label",""" +
             f""""min":${times.min}%.3f,"runs":[""" +
             times.map(t => f"$t%.3f").mkString(",") + "]}")

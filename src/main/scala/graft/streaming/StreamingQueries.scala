@@ -44,6 +44,22 @@ object StreamingQueries extends QueryPack {
       .start()
       .awaitTermination()
 
+  /** The staged parquet dir `staged` as a file-stream source. The schema
+    * is read from the files once, here; each call of the returned reader
+    * starts one more source over them. `oneFilePerTrigger` makes every
+    * staged file its own micro-batch.
+    */
+  private def stagedStream(iso: org.apache.spark.sql.SparkSession,
+      staged: String, oneFilePerTrigger: Boolean = false)
+      : () => org.apache.spark.sql.DataFrame = {
+    val schema = iso.read.parquet(staged).schema
+    () => {
+      val r = iso.readStream.schema(schema)
+      (if (oneFilePerTrigger) r.option("maxFilesPerTrigger", 1) else r)
+        .parquet(staged)
+    }
+  }
+
   /** The staged ×2-redelivered events feed (every event twice — an
     * at-least-once redelivery), a [[StreamStage]] fixture shared by
     * `stream_dedup_events` and `stream_pipeline_events`.
@@ -118,8 +134,7 @@ object StreamingQueries extends QueryPack {
         graft.io.Tables.load(x, dir, "events", parallelize = false))
       withTempDirs("graft_stream_ckpt") {
       case Seq(ckpt) =>
-        val schema = iso.read.parquet(staged).schema
-        val conv = iso.readStream.schema(schema).parquet(staged)
+        val conv = stagedStream(iso, staged)()
           // decimal sum: result must not depend on accumulation order
           .withColumn("value", col("value").cast("decimal(18,4)"))
         val out = StreamingPipelines.windowedEventStats(conv, "ts",
@@ -188,8 +203,7 @@ object StreamingQueries extends QueryPack {
       val staged = doubledEvents(iso, dir)
       withTempDirs("graft_stream_dedup_out", "graft_stream_dedup_ckpt") {
       case Seq(out, ckpt) =>
-        val schema = iso.read.parquet(staged).schema
-        val src = iso.readStream.schema(schema).parquet(staged)
+        val src = stagedStream(iso, staged)()
         val deduped = StreamingPipelines.dedupStream(
           src, "ts", "2 days", Seq("event_id"))
         drainToParquet(deduped, out, ckpt)
@@ -226,12 +240,11 @@ object StreamingQueries extends QueryPack {
           .select("user_id", "ts", "event_type", "value"))
       withTempDirs("graft_stream_ij_out", "graft_stream_ij_ckpt") {
       case Seq(out, ckpt) =>
-        val schema = iso.read.parquet(staged).schema
-        def src = iso.readStream.schema(schema).parquet(staged)
-        val clicks = src.filter(col("event_type") === "click")
+        val src = stagedStream(iso, staged)
+        val clicks = src().filter(col("event_type") === "click")
           .select(col("user_id"), col("ts").as("click_ts"),
             col("value").cast("decimal(18,4)").as("click_value"))
-        val purchases = src.filter(col("event_type") === "purchase")
+        val purchases = src().filter(col("event_type") === "purchase")
           .select(col("user_id").as("p_user_id"),
             col("ts").as("purchase_ts"))
         val joined = StreamingPipelines.intervalJoin(
@@ -276,8 +289,7 @@ object StreamingQueries extends QueryPack {
       val staged = doubledEvents(iso, dir)
       withTempDirs("graft_stream_pipe_out", "graft_stream_pipe_ckpt") {
       case Seq(out, ckpt) =>
-        val schema = iso.read.parquet(staged).schema
-        val src = iso.readStream.schema(schema).parquet(staged)
+        val src = stagedStream(iso, staged)()
           .withColumn("value", col("value").cast("decimal(18,4)"))
         val composed = StreamingPipelines.windowedEventStatsWatermarked(
           StreamingPipelines.dedupStream(src, "ts", "2 days",
@@ -319,8 +331,7 @@ object StreamingQueries extends QueryPack {
         graft.io.Tables.load(x, dir, "events", parallelize = false))
       withTempDirs("graft_stream_prof_out", "graft_stream_prof_ckpt") {
       case Seq(out, ckpt) =>
-        val schema = iso.read.parquet(staged).schema
-        val src = iso.readStream.schema(schema).parquet(staged)
+        val src = stagedStream(iso, staged)()
         val q = StreamingPipelines.profileStream(src, out, ckpt,
           now = lit(graft.profile.ProfileQueries.FixedNow)
             .cast("timestamp"))
@@ -352,8 +363,7 @@ object StreamingQueries extends QueryPack {
       case Seq(ckpt) =>
         import iso.implicits._
         val stages = Seq("view", "click", "purchase")
-        val schema = iso.read.parquet(staged).schema
-        val src = iso.readStream.schema(schema).parquet(staged)
+        val src = stagedStream(iso, staged)()
           .as[graft.pipeline.Funnel.FunnelEvent]
         val reach = graft.pipeline.Funnel.statefulReach(src, stages)
         val name = "graft_stream_funnel"
@@ -409,9 +419,7 @@ object StreamingQueries extends QueryPack {
           graft.pipeline.IncrementalAgg.aggState(ev, Seq("event_type"),
             Seq("value")).localCheckpoint(true),
           Seq("event_type"), Seq("value"), opCol = "op")
-        val schema = iso.read.parquet(staged).schema
-        val q = iso.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(staged)
+        val q = stagedStream(iso, staged, oneFilePerTrigger = true)()
           .writeStream
           .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
             m.processBatch(b, id))
@@ -452,9 +460,7 @@ object StreamingQueries extends QueryPack {
       withTempDirs("graft_stream_act_state",
         "graft_stream_act_out", "graft_stream_act_ckpt") {
       case Seq(state, out, ckpt) =>
-        val schema = iso.read.parquet(staged).schema
-        val src = iso.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(staged)
+        val src = stagedStream(iso, staged, oneFilePerTrigger = true)()
         val q = StreamingPipelines.activesStream(src, "user_id", "ts",
           7, state, out, ckpt)
         q.awaitTermination()
@@ -489,9 +495,7 @@ object StreamingQueries extends QueryPack {
       withTempDirs("graft_stream_nd_state", "graft_stream_nd_out",
         "graft_stream_nd_ckpt") {
       case Seq(state, out, ckpt) =>
-        val schema = iso.read.parquet(staged).schema
-        val src = iso.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(staged)
+        val src = stagedStream(iso, staged, oneFilePerTrigger = true)()
         val q = StreamingPipelines.nearDupStream(src, "doc_id", "text",
           state, out, ckpt)
         q.awaitTermination()
@@ -525,9 +529,7 @@ object StreamingQueries extends QueryPack {
       withTempDirs("graft_stream_qual_state", "graft_stream_qual_out",
         "graft_stream_qual_ckpt") {
       case Seq(state, out, ckpt) =>
-        val schema = iso.read.parquet(staged).schema
-        val src = iso.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(staged)
+        val src = stagedStream(iso, staged, oneFilePerTrigger = true)()
         val q = StreamingPipelines.qualityStream(src, "doc_id", "text",
           "source", graft.text.QualityGatePinned.weights,
           graft.text.QualityGatePinned.bias, state, out, ckpt)
@@ -580,9 +582,7 @@ object StreamingQueries extends QueryPack {
       withTempDirs("graft_stream_cur_state", "graft_stream_cur_out",
         "graft_stream_cur_ckpt") {
       case Seq(state, out, ckpt) =>
-        val schema = iso.read.parquet(staged).schema
-        val src = iso.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(staged)
+        val src = stagedStream(iso, staged, oneFilePerTrigger = true)()
         val q = StreamingPipelines.curateStream(src, "doc_id", "html",
           "source", graft.text.QualityGatePinned.weights,
           graft.text.QualityGatePinned.bias,
@@ -628,9 +628,7 @@ object StreamingQueries extends QueryPack {
               parallelize = false)
             .filter(col("doc_id") % 100 < 5),
           "doc_id", "text", graft.text.TextQueries.decontamN)
-        val schema = iso.read.parquet(staged).schema
-        val src = iso.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(staged)
+        val src = stagedStream(iso, staged, oneFilePerTrigger = true)()
         val q = StreamingPipelines.decontamStream(src, "doc_id",
           "text", evalArrays, graft.text.TextQueries.decontamN,
           report, ledger, state, ckpt)
@@ -666,9 +664,7 @@ object StreamingQueries extends QueryPack {
       withTempDirs("graft_stream_ss_report", "graft_stream_ss_state",
         "graft_stream_ss_ckpt") {
       case Seq(report, state, ckpt) =>
-        val schema = iso.read.parquet(staged).schema
-        val src = iso.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(staged)
+        val src = stagedStream(iso, staged, oneFilePerTrigger = true)()
         val q = StreamingPipelines.substringScrubStream(src, "doc_id",
           "text", graft.dedup.DedupQueries.SubstrMinLen, report, state,
           ckpt)
@@ -701,9 +697,7 @@ object StreamingQueries extends QueryPack {
       withTempDirs("graft_stream_sh_report", "graft_stream_sh_state",
         "graft_stream_sh_ckpt") {
       case Seq(report, state, ckpt) =>
-        val schema = iso.read.parquet(staged).schema
-        val src = iso.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(staged)
+        val src = stagedStream(iso, staged, oneFilePerTrigger = true)()
         val q = StreamingPipelines.simhashStream(src, "doc_id", "text",
           t => graft.dedup.SimHash.fingerprint(graft.dedup.HashFamily.Md5,
             graft.dedup.Dedup.wordShingles(t, 3)), chunkBits = 15,

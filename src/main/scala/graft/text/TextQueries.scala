@@ -143,6 +143,22 @@ object TextQueries extends QueryPack {
       "FROM documents ORDER BY doc_id"
   }
 
+  /** [[statsOracle]] without its ORDER BY, for use as a subquery. */
+  private def statsBody: String = {
+    val full = statsOracle
+    full.substring(0, full.lastIndexOf(" ORDER BY"))
+  }
+
+  /** CTE `curated` (doc_id, text, n_tokens) of [[curatedDocs]]: the rows
+    * of stats relation `from` (aliased `s`) that pass the curation gates
+    * and `extra`, joined back to their text.
+    */
+  private def curatedCte(from: String, extra: String = ""): String =
+    "curated AS (SELECT s.doc_id, d.text, s.n_tokens " +
+      s"FROM $from JOIN documents d ON s.doc_id = d.doc_id " +
+      "WHERE s.quality_score >= 0.75 AND s.lang_id = 'en' " +
+      s"AND s.n_tokens BETWEEN 20 AND 2000$extra), "
+
   private def statsQuery = QueryDef(
     "text_stats_documents",
     (s, dir) => TextAnalysis
@@ -166,13 +182,10 @@ object TextQueries extends QueryPack {
       .filter(col("quality_score") >= 0.75 && col("lang_id") === "en" &&
         col("n_tokens").between(20, 2000))
       .orderBy("doc_id"),
-    Some {
-      val full = statsOracle
-      val body = full.substring(0, full.lastIndexOf(" ORDER BY"))
-      s"SELECT doc_id, n_tokens, quality_score, lang_id FROM ($body) " +
+    Some(
+      s"SELECT doc_id, n_tokens, quality_score, lang_id FROM ($statsBody) " +
         "WHERE quality_score >= 0.75 AND lang_id = 'en' " +
-        "AND n_tokens BETWEEN 20 AND 2000 ORDER BY doc_id"
-    })
+        "AND n_tokens BETWEEN 20 AND 2000 ORDER BY doc_id"))
 
   /** `documents` with [[TextAnalysis.withStats]] under the curation
     * gates: quality ≥ 0.75, English, 20 to 2000 tokens.
@@ -202,18 +215,12 @@ object TextQueries extends QueryPack {
         sum("n_tokens").as("kept_tokens"))
         .select(col("kept_docs"), col("kept_tokens"))
     },
-    Some {
-      val full = statsOracle
-      val body = full.substring(0, full.lastIndexOf(" ORDER BY"))
-      "WITH curated AS (SELECT s.doc_id, d.text, s.n_tokens " +
-        s"FROM ($body) s JOIN documents d ON s.doc_id = d.doc_id " +
-        "WHERE s.quality_score >= 0.75 AND s.lang_id = 'en' " +
-        "AND s.n_tokens BETWEEN 20 AND 2000), " +
+    Some(
+      "WITH " + curatedCte(s"($statsBody) s") +
         "deduped AS (SELECT text, MIN(doc_id) AS keep_id, " +
         "MIN(n_tokens) AS n_tokens FROM curated GROUP BY text) " +
         "SELECT COUNT(*) AS kept_docs, " +
-        "SUM(n_tokens)::BIGINT AS kept_tokens FROM deduped"
-    })
+        "SUM(n_tokens)::BIGINT AS kept_tokens FROM deduped"))
 
   /** The COMPLETE training-data pass, end-to-end and hash-verified:
     * curate (quality/language/token gates) → exact dedup (keep min id per
@@ -251,14 +258,8 @@ object TextQueries extends QueryPack {
         }
       }
     },
-    Some {
-      val full = statsOracle
-      val body = full.substring(0, full.lastIndexOf(" ORDER BY"))
-      s"WITH RECURSIVE s AS ($body), " +
-        "curated AS (SELECT s.doc_id, d.text, s.n_tokens " +
-        "FROM s JOIN documents d ON s.doc_id = d.doc_id " +
-        "WHERE s.quality_score >= 0.75 AND s.lang_id = 'en' " +
-        "AND s.n_tokens BETWEEN 20 AND 2000), " +
+    Some(
+      s"WITH RECURSIVE s AS ($statsBody), " + curatedCte("s") +
         "kept AS (SELECT MIN(doc_id) AS doc_id, text, " +
         "MIN(n_tokens) AS n_tokens FROM curated GROUP BY text), " +
         graft.dedup.DedupQueries.jaccardPairsCteFor("kept") + ", " +
@@ -267,8 +268,7 @@ object TextQueries extends QueryPack {
         "HAVING id <> MIN(r)) " +
         "SELECT COUNT(*) AS kept_docs, SUM(n_tokens)::BIGINT AS " +
         "kept_tokens FROM kept WHERE doc_id NOT IN " +
-        "(SELECT id FROM removed)"
-    })
+        "(SELECT id FROM removed)"))
 
   /** Deterministic stratified corpus sample: ≤ 40 documents per language,
     * selected by md5(doc_id) order so any engine picks the same rows
@@ -768,14 +768,9 @@ object TextQueries extends QueryPack {
         }
       }
     },
-    Some {
-      val full = statsOracle
-      val body = full.substring(0, full.lastIndexOf(" ORDER BY"))
-      s"WITH s AS ($body), " +
-        "curated AS (SELECT s.doc_id, d.text, s.n_tokens " +
-        "FROM s JOIN documents d ON s.doc_id = d.doc_id " +
-        "WHERE s.quality_score >= 0.75 AND s.lang_id = 'en' " +
-        "AND s.n_tokens BETWEEN 20 AND 2000 AND s.doc_id % 100 >= 5), " +
+    Some(
+      s"WITH s AS ($statsBody), " +
+        curatedCte("s", extra = " AND s.doc_id % 100 >= 5") +
         decontamGramCtes +
         "cg AS (SELECT g.doc_id, g.g FROM grams g " +
         "JOIN curated c ON g.doc_id = c.doc_id), " +
@@ -790,8 +785,7 @@ object TextQueries extends QueryPack {
         "deduped AS (SELECT text, MIN(doc_id) AS doc_id, " +
         "MIN(n_tokens) AS n_tokens FROM clean GROUP BY text) " +
         "SELECT COUNT(*) AS kept_docs, " +
-        "SUM(n_tokens)::BIGINT AS kept_tokens FROM deduped"
-    })
+        "SUM(n_tokens)::BIGINT AS kept_tokens FROM deduped"))
 
   /** Document chunking ([[Chunking]]): 32-token windows, 8-token overlap
     * (stride 24). Both engines compute chunk counts in exact integer

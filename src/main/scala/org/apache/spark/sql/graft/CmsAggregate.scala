@@ -30,7 +30,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * DuckDB's `('0x' || substr(md5(v), 1 + 8*d, 8))::BIGINT % width`, so
   * a SQL oracle can rebuild every counter and replay the estimates
   * hash-exactly. One digest per row serves all `depth` rows
-  * ([[GraftDigest]] thread-cached).
+  * ([[GraftKernels]] thread-cached).
   *
   * Reference seam: extends the frequency-profiling family
   * (`/root/reference/Data_Quality_File.sql` rare/frequent-value rules)
@@ -63,11 +63,11 @@ case class CmsSketch(
       input: InternalRow): Array[Long] = {
     val v = child.eval(input)
     if (v != null) {
-      val digest = GraftDigest.md5Full(v.asInstanceOf[UTF8String])
+      val digest = GraftKernels.md5Full(v.asInstanceOf[UTF8String])
       var d = 0
       while (d < depth) {
         buffer(d * width +
-          (GraftDigest.word32(digest, d) % width).toInt) += 1L
+          (GraftKernels.word32(digest, d) % width).toInt) += 1L
         d += 1
       }
     }

@@ -45,72 +45,46 @@ object GraftFunctions {
         s"$fn: $what must be an integer literal, got $other")
     }
 
-  private def binary(name: String, clazz: Class[_],
-      make: (Expression, Expression) => Expression)
+  private def entry(name: String, clazz: Class[_], arity: Int, usage: String)(
+      make: Seq[Expression] => Expression)
       : (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
     (FunctionIdentifier(name), new ExpressionInfo(clazz.getName, name),
       (args: Seq[Expression]) => {
-        require(args.length == 2, s"$name expects 2 arguments")
-        make(args(0), args(1))
+        require(args.length == arity, s"$name expects $usage")
+        make(args)
       })
+
+  private def unary(name: String, clazz: Class[_],
+      make: Expression => Expression) =
+    entry(name, clazz, 1, "1 argument")(a => make(a(0)))
+
+  private def binary(name: String, clazz: Class[_],
+      make: (Expression, Expression) => Expression) =
+    entry(name, clazz, 2, "2 arguments")(a => make(a(0), a(1)))
+
+  /** A sketch over `value` sized by two integer literals. */
+  private def sketch(name: String, clazz: Class[_], p1: String, p2: String,
+      make: (Expression, Int, Int) => Expression) =
+    entry(name, clazz, 3, s"(value, $p1, $p2)")(a =>
+      make(a(0), intLit(name, p1)(a(1)), intLit(name, p2)(a(2))))
 
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] =
     Seq(
       binary("graft_dot", classOf[ArrayDot], ArrayDot(_, _)),
       binary("graft_cosine", classOf[CosineSim], CosineSim(_, _)),
-      (FunctionIdentifier("graft_simhash64"),
-        new ExpressionInfo(classOf[SimHashFromBases].getName,
-          "graft_simhash64"),
-        (args: Seq[Expression]) => {
-          require(args.length == 1, "graft_simhash64 expects 1 argument")
-          SimHashFromBases(BaseHashes(args.head, md5 = false), 64)
-        }),
-      (FunctionIdentifier("graft_minhash_sig"),
-        new ExpressionInfo(classOf[MinHashSigFromBases].getName,
-          "graft_minhash_sig"),
-        (args: Seq[Expression]) => {
-          require(args.length == 2, "graft_minhash_sig expects 2 arguments")
-          MinHashSigFromBases(BaseHashes(args.head, md5 = false),
-            intLit("graft_minhash_sig", "numHashes")(args(1)))
-        }),
-      (FunctionIdentifier("graft_double_bits"),
-        new ExpressionInfo(classOf[SortableDoubleBits].getName,
-          "graft_double_bits"),
-        (args: Seq[Expression]) => {
-          require(args.length == 1, "graft_double_bits expects 1 argument")
-          SortableDoubleBits(args.head)
-        }),
-      (FunctionIdentifier("graft_topk"),
-        new ExpressionInfo(classOf[TopKSketch].getName, "graft_topk"),
-        (args: Seq[Expression]) => {
-          require(args.length == 3,
-            "graft_topk expects (value, capacity, k)")
-          TopKSketch(args.head,
-            intLit("graft_topk", "capacity")(args(1)),
-            intLit("graft_topk", "k")(args(2)))
-        }),
-      (FunctionIdentifier("graft_cms"),
-        new ExpressionInfo(classOf[CmsSketch].getName, "graft_cms"),
-        (args: Seq[Expression]) => {
-          require(args.length == 3,
-            "graft_cms expects (value, depth, width)")
-          CmsSketch(args.head,
-            intLit("graft_cms", "depth")(args(1)),
-            intLit("graft_cms", "width")(args(2)))
-        }),
-      (FunctionIdentifier("graft_nfc"),
-        new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-        (args: Seq[Expression]) => {
-          require(args.length == 1, "graft_nfc expects 1 argument")
-          NfcNormalize(args.head)
-        }),
-      (FunctionIdentifier("graft_nfkc_cf"),
-        new ExpressionInfo(classOf[NfkcCasefold].getName,
-          "graft_nfkc_cf"),
-        (args: Seq[Expression]) => {
-          require(args.length == 1, "graft_nfkc_cf expects 1 argument")
-          NfkcCasefold(args.head)
-        }))
+      unary("graft_simhash64", classOf[SimHashFromBases], s =>
+        SimHashFromBases(BaseHashes(s, md5 = false), 64)),
+      binary("graft_minhash_sig", classOf[MinHashSigFromBases], (s, n) =>
+        MinHashSigFromBases(BaseHashes(s, md5 = false),
+          intLit("graft_minhash_sig", "numHashes")(n))),
+      unary("graft_double_bits", classOf[SortableDoubleBits],
+        SortableDoubleBits(_)),
+      sketch("graft_topk", classOf[TopKSketch], "capacity", "k",
+        TopKSketch(_, _, _)),
+      sketch("graft_cms", classOf[CmsSketch], "depth", "width",
+        CmsSketch(_, _, _)),
+      unary("graft_nfc", classOf[NfcNormalize], NfcNormalize(_)),
+      unary("graft_nfkc_cf", classOf[NfkcCasefold], NfkcCasefold(_)))
 
   /** Idempotent registration on an existing session (temp-function scope,
     * overriding any previous registration of the same names).
