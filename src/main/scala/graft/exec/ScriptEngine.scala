@@ -8,11 +8,12 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.PersistedView
 import org.apache.spark.sql.catalyst.plans.logical.{Command, CommandResult,
-  ParsedStatement}
+  InsertIntoDir, ParsedStatement}
 import org.apache.spark.sql.classic.ClassicConversions
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.command.CreateViewCommand
 import org.apache.spark.sql.execution.datasources.CreateTempViewUsing
+import org.apache.spark.sql.graft.PathSchemas
 
 /** Multi-statement SQL script runner with per-statement audit, failure
   * isolation, table detection and bounded previews — the Spark-native
@@ -21,6 +22,15 @@ import org.apache.spark.sql.execution.datasources.CreateTempViewUsing
   *
   * Each statement goes through the full Catalyst pipeline via
   * `spark.sql`; the engine shell is driver-side control flow only.
+  *
+  * A run is one scope of [[PathSchemas]] on the calling thread: each
+  * ``fmt.`path` `` relation (in a statement, a preview, or view text
+  * analysed again) infers its schema once per run, and later references
+  * reuse it while still listing the files. A statement that may write
+  * (kind `Write` below) is a barrier: succeeded or failed, it empties
+  * the run's schemas, so a read after it infers again. The scope needs
+  * the session's parser from `GraftExtensions` (as `graft.Sessions`
+  * sets it); without it every reference infers, as Spark does.
   *
   * Documented deviations:
   *   - the reference `.collect()`s every statement result (`:66`) — a
@@ -106,12 +116,17 @@ object ScriptEngine {
   private case object TempView extends Kind
   private case object Write extends Kind
 
+  // parsed with the run's schemas set aside: sorting a statement must
+  // not infer a schema outside its own timing
   private def kindOf(spark: SparkSession, stmt: String): Kind =
-    try spark.sessionState.sqlParser.parsePlan(stmt) match {
+    try PathSchemas.suspended(
+        spark.sessionState.sqlParser.parsePlan(stmt)) match {
       case v: CreateViewCommand if v.viewType != PersistedView => TempView
       case _: CreateTempViewUsing => TempView
-      case p if !p.exists(n =>
-          n.isInstanceOf[Command] || n.isInstanceOf[ParsedStatement]) =>
+      // INSERT OVERWRITE DIRECTORY parses to neither a command nor a
+      // parsed statement, yet it rewrites the files under its path
+      case p if !p.exists(n => n.isInstanceOf[Command] ||
+          n.isInstanceOf[ParsedStatement] || n.isInstanceOf[InsertIntoDir]) =>
         Query
       case _ => Write
     } catch { case NonFatal(_) => Write }
@@ -130,7 +145,11 @@ object ScriptEngine {
     * and collected while it runs; every pending preview completes before
     * a write statement and before `run` returns.
     */
-  def run(spark: SparkSession, sqlCode: String): ScriptReport = {
+  def run(spark: SparkSession, sqlCode: String): ScriptReport =
+    PathSchemas.scoped(runScoped(spark, sqlCode))
+
+  private def runScoped(spark: SparkSession, sqlCode: String)
+      : ScriptReport = {
     val t0 = System.nanoTime()
     def secs(since: Long): Double =
       math.round((System.nanoTime() - since) / 1e7) / 100.0
@@ -179,23 +198,28 @@ object ScriptEngine {
         if (kind == Write) awaitPreviews()
         val early = if (kind == Query) bindPreviews(stmt) else Nil
         val s0 = System.nanoTime()
-        try {
+        val failure = try {
           val df = spark.sql(stmt)
           // a command has already run eagerly; drain only query results,
           // on the executors — never collect arbitrary results
           if (!df.queryExecution.commandExecuted.isInstanceOf[CommandResult])
             df.foreach(_ => ())
-          details += StepResult(i + 1, "SUCCESS", stmt, None, secs(s0))
-          ok += 1
-          if (kind != Query) bindPreviews(stmt)
-        } catch { case e: Exception =>
-          details += StepResult(i + 1, "FAILED", stmt,
-            Some(Option(e.getMessage).getOrElse(e.getClass.getName)),
-            secs(s0))
-          bad += 1
-          // a failed statement previews nothing; its tables stay
-          // previewable by later statements
-          early.foreach(t => previews.remove(t).foreach(_.join()))
+          None
+        } catch { case e: Exception => Some(e) }
+        finally if (kind == Write) PathSchemas.invalidate()
+        failure match {
+          case None =>
+            details += StepResult(i + 1, "SUCCESS", stmt, None, secs(s0))
+            ok += 1
+            if (kind != Query) bindPreviews(stmt)
+          case Some(e) =>
+            details += StepResult(i + 1, "FAILED", stmt,
+              Some(Option(e.getMessage).getOrElse(e.getClass.getName)),
+              secs(s0))
+            bad += 1
+            // a failed statement previews nothing; its tables stay
+            // previewable by later statements
+            early.foreach(t => previews.remove(t).foreach(_.join()))
         }
       }
       awaitPreviews()

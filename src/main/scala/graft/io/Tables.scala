@@ -51,6 +51,13 @@ object Tables {
     * tables stay resident while one-off paths age out individually — no
     * wholesale flush that would re-trigger inference jobs for every
     * live table at once.
+    *
+    * The key suits a single file only. A partitioned directory (a
+    * `PrunedMerge` target) keeps its root mtime when a merge rewrites a
+    * file inside one of its `__p=k` dirs, so a key on the root would
+    * serve a stale schema; the script engine reuses a directory's schema
+    * within one run instead, where a write statement empties it
+    * (`org.apache.spark.sql.graft.PathSchemas`).
     */
   private[io] val SchemaCacheMax = 256
   private[io] val schemaCache:

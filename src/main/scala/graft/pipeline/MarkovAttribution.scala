@@ -145,11 +145,14 @@ object MarkovAttribution {
       // stepped sides was tried and measured SLOWER at gate scale
       // (2.90 → 3.5 with both hints, 3.0 with p only): each broadcast
       // build is its own collect job, serializing the iteration
-      // pipeline that the lazy sort-merge form overlaps. The SMJ
-      // exchanges are tiny at this grain; leave the planner's choice.
+      // pipeline that the lazy sort-merge form overlaps. Both joins are
+      // pinned to sort-merge: left to the planner, AQE turned one or
+      // both into a broadcast of a finished shuffle depending on which
+      // stage ended first, so the lane ran 55-60 jobs from one run to
+      // the next; pinned, it runs 41 every time (BenchOne --jobs, sf0.01).
       val stepped = edges
         .join(p.select(col("variant"),
-          col("state").as("dst"), col("p").as("pt")),
+          col("state").as("dst"), col("p").as("pt")).hint("merge"),
           Seq("variant", "dst"))
         // the product runs in DECIMAL(38,0): cnt is a raw corpus-scale
         // transition count and pt ≤ 10¹², so a Long product overflows
@@ -161,7 +164,7 @@ object MarkovAttribution {
         .groupBy(col("variant"), col("state"))
         .agg(sum(col("c")).as("pc"))
       val next = states
-        .join(stepped, Seq("variant", "state"), "left")
+        .join(stepped.hint("merge"), Seq("variant", "state"), "left")
         .select(col("variant"), col("state"),
           when(col("state") === Conv, lit(TotalPico))
             .otherwise(coalesce(col("pc"), lit(0L))).as("p"))

@@ -28,8 +28,10 @@ import org.apache.spark.sql.types.IntegerType
   *
   * Two hook-up paths:
   *   - config `spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions`
-  *     (the canonical cluster deployment — set by `graft.Sessions`)
-  *   - [[GraftFunctions.register]] on an already-created session.
+  *     (the canonical cluster deployment — set by `graft.Sessions`); it
+  *     also installs the script engine's path-schema parser
+  *   - [[GraftFunctions.register]] on an already-created session
+  *     (functions only).
   */
 object GraftFunctions {
 
@@ -87,7 +89,9 @@ object GraftFunctions {
       unary("graft_nfkc_cf", classOf[NfkcCasefold], NfkcCasefold(_)))
 
   /** Idempotent registration on an existing session (temp-function scope,
-    * overriding any previous registration of the same names).
+    * overriding any previous registration of the same names). Functions
+    * only: a built session's parser cannot change, so a script run on
+    * such a session infers each path relation's schema per reference.
     */
   def register(spark: SparkSession): Unit =
     functions.foreach { case (ident, info, builder) =>
@@ -96,10 +100,16 @@ object GraftFunctions {
     }
 }
 
-/** `spark.sql.extensions` entry point injecting the graft functions at
-  * session build time (works with plain `spark-submit --conf`).
+/** `spark.sql.extensions` entry point, applied at session build time
+  * (works with plain `spark-submit --conf`). It injects the graft
+  * functions and the parser that reuses path-relation schemas inside a
+  * script run ([[PathSchemas]]); the parser can only be installed here,
+  * so [[GraftFunctions.register]] on a built session adds the functions
+  * alone.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.functions.foreach(ext.injectFunction)
+    ext.injectParser((spark, parser) => new PathSchemas.Parser(spark, parser))
+  }
 }

@@ -1,10 +1,20 @@
 package graft.exec
 
+import java.nio.file.Files
+
+import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan,
+  UnresolvedDataSource, UnresolvedWith}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PathSchemas
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.SparkSpec
+import graft.{JobCounts, SparkSpec}
+import graft.interp.{Objective, TemplateGenerator}
+import graft.pipeline.PrunedMerge
 
 /** Pure splitter/stripper properties — no Spark session needed. The
   * scalatest↔scalacheck bridge isn't in the offline cache, so generators
@@ -202,5 +212,122 @@ class ScriptEngineSpec extends SparkSpec {
     val r2 = ScriptEngine.run(spark, "SELECT 1 AS a -- from nothing")
     assert(r2.successCount === 1)
     assert(report.failedCount === 1)
+  }
+
+  /** Rows `[from, to)` with the SCD1 columns: key, order, measure. */
+  private def events(from: Long, to: Long, day: Int): DataFrame =
+    spark.range(from, to).select(col("id").as("event_id"),
+      to_timestamp(lit(s"2024-01-0$day 00:00:00")).as("created_at"),
+      (col("id") % 97 / 4.0).as("value"))
+
+  /** The five statements `ingest_merge` sends per batch: the batch as a
+    * `USING parquet` view, the target as a `parquet.` path view, the
+    * generated SCD1 SQL (two views) and the merged row count.
+    */
+  private def scd1Script(batch: String, target: String): String = {
+    val meta = Map("batch_001.parquet" -> Seq("event_id" -> "NUMBER",
+      "created_at" -> "TIMESTAMP", "value" -> "FLOAT"))
+    "CREATE OR REPLACE TEMPORARY VIEW batch_001_source USING parquet " +
+      s"OPTIONS (path '$batch');\n" +
+      "CREATE OR REPLACE TEMPORARY VIEW batch_001_target AS SELECT " +
+      s"event_id, created_at, value FROM parquet.`$target`;\n" +
+      Objective.generateCode("an incremental SCD1 load of events", meta,
+        TemplateGenerator).sqlCode + "\n" +
+      "SELECT count(*) AS n FROM batch_001_merged;"
+  }
+
+  test("the SCD1 script infers each file source once per run") {
+    val dir = Files.createTempDirectory("se_scd1").toString
+    val (target, batch) = (s"$dir/events", s"$dir/batch_001.parquet")
+    PrunedMerge.stage(events(0, 2000, 1), target, Seq("event_id"), 16)
+    events(1980, 2020, 2).coalesce(1).write.parquet(batch)
+    val script = scd1Script(batch, target)
+    val counts = (1 to 5).map { i =>
+      var report: ScriptEngine.ScriptReport = null
+      val c = JobCounts.of(spark, s"graft-script-scd1-$i") {
+        report = ScriptEngine.run(spark, script)
+      }
+      assert(report.details.map(_.status) === Seq.fill(5)("SUCCESS"))
+      assert(report.tablePreviews.values.forall(_.isRight))
+      c
+    }
+    // one schema inference each for the batch file and the target dir
+    assert(counts.map(_.fanOutJobs) === Seq.fill(5)(2))
+    assert(counts.map(_.jobs) === Seq.fill(5)(15))
+    assert(spark.table("batch_001_merged").count() === 2020)
+  }
+
+  test("a write in a run makes the next read of its path infer again") {
+    val p = Files.createTempDirectory("se_barrier").toString + "/p"
+    spark.range(3).write.parquet(p)
+    val report = ScriptEngine.run(spark,
+      s"""SELECT id FROM parquet.`$p`;
+         |INSERT OVERWRITE DIRECTORY '$p' USING parquet SELECT 'x' AS other;
+         |SELECT other FROM parquet.`$p`""".stripMargin)
+    assert(report.details.map(_.status) === Seq.fill(3)("SUCCESS"),
+      report.details.flatMap(_.error))
+  }
+
+  test("a view a run defined over a path reads the files of each " +
+      "later read") {
+    val t = Files.createTempDirectory("se_live").toString + "/events"
+    PrunedMerge.stage(events(0, 100, 1), t, Seq("event_id"), 16)
+    val report = ScriptEngine.run(spark,
+      s"CREATE OR REPLACE TEMPORARY VIEW se_live AS SELECT * FROM parquet.`$t`")
+    assert(report.successCount === 1)
+    PrunedMerge.mergeInto(spark, t, events(90, 140, 2), Seq("event_id"),
+      "created_at", nParts = 16)
+    val live = spark.table("se_live")
+    assert(live.count() === 140)
+    assert(live.filter(col("created_at") ===
+      to_timestamp(lit("2024-01-02 00:00:00"))).count() === 50)
+  }
+
+  /** The error `stmt` fails with outside a run (Spark's own resolution)
+    * and inside one.
+    */
+  private def errorsOf(stmt: String): (String, Option[String]) =
+    (intercept[AnalysisException](spark.sql(stmt)).getMessage,
+      ScriptEngine.run(spark, stmt).details.head.error)
+
+  test("with SQL on files off a path relation fails as Spark reports it") {
+    val p = Files.createTempDirectory("se_nofiles").toString + "/p"
+    spark.range(1).write.parquet(p)
+    spark.conf.set("spark.sql.runSQLOnFiles", "false")
+    try {
+      val (outside, inRun) = errorsOf(s"SELECT * FROM parquet.`$p`")
+      assert(outside.contains("TABLE_OR_VIEW_NOT_FOUND"), outside)
+      assert(inRun === Some(outside))
+    } finally spark.conf.unset("spark.sql.runSQLOnFiles")
+  }
+
+  test("a missing path fails as Spark reports it") {
+    val p = Files.createTempDirectory("se_missing").toString + "/absent"
+    val (outside, inRun) = errorsOf(s"SELECT * FROM parquet.`$p`")
+    assert(outside.contains("PATH_NOT_FOUND"), outside)
+    assert(inRun === Some(outside))
+  }
+
+  test("only option-less batch path relations take the run's schema") {
+    val p = Files.createTempDirectory("se_opts").toString + "/p"
+    spark.range(1).write.parquet(p)
+    val parser = spark.sessionState.sqlParser
+    def rewritten(plan: LogicalPlan): Boolean =
+      plan.collectWithSubqueries {
+        case _: UnresolvedDataSource => true
+        case w: UnresolvedWith => w.cteRelations.exists(r => rewritten(r._2))
+      }.contains(true)
+    PathSchemas.scoped {
+      assert(rewritten(parser.parsePlan(s"SELECT * FROM parquet.`$p`")))
+      assert(rewritten(parser.parsePlan(
+        s"WITH c AS (SELECT * FROM parquet.`$p`) SELECT * FROM c")))
+      assert(rewritten(parser.parsePlan(
+        s"SELECT 1 WHERE EXISTS (SELECT 1 FROM parquet.`$p`)")))
+      assert(!rewritten(parser.parsePlan(
+        s"SELECT * FROM parquet.`$p` WITH ('mergeSchema' = 'true')")))
+      assert(!rewritten(PathSchemas.rewrite(spark,
+        UnresolvedRelation(Seq("parquet", p), isStreaming = true))))
+    }
+    assert(!rewritten(parser.parsePlan(s"SELECT * FROM parquet.`$p`")))
   }
 }

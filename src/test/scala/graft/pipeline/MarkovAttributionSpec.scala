@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{JobCounts, SparkEntry, SparkSpec}
 
 class MarkovAttributionSpec extends SparkSpec {
   import spark.implicits._
@@ -94,5 +94,16 @@ class MarkovAttributionSpec extends SparkSpec {
       .orderBy("channel")
       .as[(String, Long, Long, Long, Double)].collect().toSeq
     assert(run(1) === run(7))
+  }
+
+  test("the gate lane's plan runs the same jobs, stages and tasks " +
+      "every time") {
+    val dir = SparkSpec.corpusDir("0.01")
+    def lane(): Unit =
+      SparkEntry.queries("events_markov_attribution")(spark, dir).collect()
+    lane() // infers the corpus schema once (Tables.schemaCache)
+    val counts = (1 to 5).map(i =>
+      JobCounts.of(spark, s"graft-markov-$i")(lane()))
+    assert(counts.distinct.size === 1, counts)
   }
 }
