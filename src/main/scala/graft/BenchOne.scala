@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.graft.ListenerBusShim
-
 /** Dev helper: time the named queries (min-of-3 with an sf0.001 warm-up
   * pass over the SAME queries — the [[Bench]] protocol scoped down)
   * without running the whole suite; `--explain` also prints each query's
@@ -12,36 +10,12 @@ import org.apache.spark.sql.graft.ListenerBusShim
   */
 object BenchOne {
 
-  /** `--jobs` diagnostic: per-query Spark job/stage/task counters (job
-    * count ≈ fixed scheduling overhead at gate scale; task time vs wall
-    * separates compute-bound from overhead-bound lanes).
-    */
-  private class Counters extends org.apache.spark.scheduler.SparkListener {
-    @volatile var jobs = 0
-    @volatile var stages = 0
-    @volatile var tasks = 0
-    @volatile var taskMs = 0L
-    override def onJobStart(
-        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      jobs += 1
-    override def onStageCompleted(
-        s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      stages += 1
-      tasks += s.stageInfo.numTasks
-    }
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      if (t.taskInfo != null) taskMs += t.taskInfo.duration
-    def reset(): Unit = { jobs = 0; stages = 0; tasks = 0; taskMs = 0L }
-  }
-
   def main(args: Array[String]): Unit = {
     val explain = args.contains("--explain")
     val jobsDiag = args.contains("--jobs")
     val named = args.toSeq.filterNot(a => a == "--explain" || a == "--jobs")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local()
-    def settle(): Unit = ListenerBusShim.waitUntilEmpty(spark.sparkContext)
     val names =
       if (named.nonEmpty) named else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
@@ -51,28 +25,27 @@ object BenchOne {
     }
     Bench.warmDirOf(sfDir).foreach(
       Bench.warmUp(spark, _, names.distinct.map(SparkEntry.queries)))
-    val counters = new Counters
-    if (jobsDiag) spark.sparkContext.addSparkListener(counters)
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       if (explain) fn(spark, sfDir).explain("formatted")
-      // per run: (seconds, jobs, stages, tasks, task seconds); the
-      // listener bus settles before each run's counters reset and again
-      // before they are read, so no run's events leak into another's
-      val runs = (1 to 3).map { _ =>
-        if (jobsDiag) { settle(); counters.reset() }
-        val dt = Bench.timedRun(spark, fn, sfDir)
-        if (jobsDiag) settle()
-        (dt, counters.jobs, counters.stages, counters.tasks,
-          counters.taskMs / 1e3)
+      // with --jobs each run also reports the Spark jobs, stages, tasks
+      // and task seconds it posted under its own job group (job count ≈
+      // fixed scheduling overhead at gate scale; task time vs wall
+      // separates compute-bound from overhead-bound lanes)
+      def timed(): Double = Bench.timedRun(spark, fn, sfDir)
+      val runs = (1 to 3).map { i =>
+        if (!jobsDiag) (timed(), None)
+        else JobCounts.of(spark, s"benchone-$name-$i")(timed()) match {
+          case (t, c) => (t, Some(c))
+        }
       }
       val times = runs.map(_._1)
       if (jobsDiag) {
-        def each(f: ((Double, Int, Int, Int, Double)) => Any) =
-          runs.map(f).mkString(",")
-        println(s"BENCHJOBS $name runs=${each(r => f"${r._1}%.3f")} " +
-          s"jobs=${each(_._2)} stages=${each(_._3)} tasks=${each(_._4)} " +
-          s"taskSec=${each(r => f"${r._5}%.2f")}")
+        def each(f: JobCounts => Any) = runs.flatMap(_._2).map(f).mkString(",")
+        println(s"BENCHJOBS $name " +
+          s"runs=${times.map(t => f"$t%.3f").mkString(",")} " +
+          s"jobs=${each(_.jobs)} stages=${each(_.stages)} " +
+          s"tasks=${each(_.tasks)} taskSec=${each(c => f"${c.taskSec}%.2f")}")
       }
       println(f"BENCHONE $name min=${times.min}%.3f runs=" +
         times.map(t => f"$t%.3f").mkString(","))

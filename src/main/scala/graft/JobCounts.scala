@@ -1,33 +1,34 @@
 package graft
 
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.ListenerBusShim
 
-/** Spark jobs, stages and tasks one block posted. `fanOutJobs` counts the
-  * jobs whose stages read a driver-side collection (`sc.parallelize`):
-  * a block of SQL over files posts such a job only when Spark infers a
+/** Spark jobs, stages, tasks and task seconds one block posted.
+  * `fanOutJobs` counts the jobs that read a driver-side collection
+  * (`sc.parallelize`): SQL over files posts one only when Spark infers a
   * file schema (or lists more paths than its parallel-listing threshold).
   */
 final case class JobCounts(jobs: Int, stages: Int, tasks: Int,
-    fanOutJobs: Int)
+    fanOutJobs: Int, taskSec: Double)
 
 object JobCounts {
 
-  /** Counts what `body` posts under the job group `group` (set on this
-    * thread for the call; threads that capture its local properties,
-    * like the script engine's preview pool, post into it too), read
-    * after the listener bus drains.
+  /** `body`'s result and what it posted under the job group `group`,
+    * set on this thread for the call (threads that capture its local
+    * properties, like the script engine's preview pool, post into it
+    * too; a stream's micro-batches run under the stream's own group),
+    * read after the listener bus drains.
     */
-  def of(spark: SparkSession, group: String)(body: => Unit): JobCounts = {
+  def of[A](spark: SparkSession, group: String)(body: => A)
+      : (A, JobCounts) = {
     val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val fanOut = new AtomicInteger
-    val tasks = new AtomicInteger
+    val jobs, fanOut, tasks = new AtomicInteger
+    val taskMs = new AtomicLong
     val stages = ConcurrentHashMap.newKeySet[Int]()
     def mine(p: java.util.Properties) =
       p != null && p.getProperty("spark.jobGroup.id") == group
@@ -42,17 +43,21 @@ object JobCounts {
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         if (mine(e.properties)) stages.add(e.stageInfo.stageId)
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stages.contains(e.stageId)) tasks.incrementAndGet()
+        if (stages.contains(e.stageId)) {
+          tasks.incrementAndGet()
+          if (e.taskInfo != null) taskMs.addAndGet(e.taskInfo.duration)
+        }
     }
     ListenerBusShim.waitUntilEmpty(sc)
     sc.addSparkListener(listener)
     sc.setJobGroup(group, group)
-    try body
+    val result = try body
     finally {
       sc.clearJobGroup()
       ListenerBusShim.waitUntilEmpty(sc)
       sc.removeSparkListener(listener)
     }
-    JobCounts(jobs.get, stages.size, tasks.get, fanOut.get)
+    (result, JobCounts(jobs.get, stages.size, tasks.get, fanOut.get,
+      taskMs.get / 1e3))
   }
 }

@@ -24,22 +24,23 @@ import org.apache.spark.sql.functions.{array, col, concat, explode, lit, struct}
   */
 object ScaleProbe {
 
-  /** The registered mix selection with the [[graft.pipeline.StratumPrefilter]]
-    * forced on/off — the auto-engage bound (1 GiB optimizer estimate) is
-    * sized for real corpora, so probe scales exercise both paths
-    * explicitly through the public override.
+  /** The registered mix selection; with `prefilter` it runs past every
+    * gate ([[graft.util.Gates.pastGates]]) and so takes the
+    * [[graft.pipeline.StratumPrefilter]] below the 1 GiB auto-engage
+    * bound, which is sized for real corpora.
     */
   private def mixProbe(prefilter: Boolean)(
-      s: SparkSession, dir: String): DataFrame =
-    graft.pipeline.Mixing.byTokenBudget(
+      s: SparkSession, dir: String): DataFrame = {
+    def mix = graft.pipeline.Mixing.byTokenBudget(
         graft.io.Tables.load(s, dir, "documents", parallelize = true)
           .select(col("doc_id"), col("source"),
             graft.text.TextAnalysis.tokenCount(col("text")).cast("long")
               .as("n_tokens")),
         "source", "doc_id", "n_tokens",
-        budgets = Map.empty, defaultBudget = 600L,
-        prefilter = Some(prefilter))
+        budgets = Map.empty, defaultBudget = 600L)
       .select("source", "doc_id", "n_tokens")
+    if (prefilter) graft.util.Gates.pastGates(mix) else mix
+  }
 
   /** (name, scale-label filter — None = every scale, fn). */
   private def probes: Seq[(String, Option[Set[String]],

@@ -10,10 +10,9 @@ import org.apache.spark.sql.catalyst.analysis.PersistedView
 import org.apache.spark.sql.catalyst.plans.logical.{Command, CommandResult,
   InsertIntoDir, ParsedStatement}
 import org.apache.spark.sql.classic.ClassicConversions
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{SQLExecution, SparkSqlParser}
 import org.apache.spark.sql.execution.command.CreateViewCommand
 import org.apache.spark.sql.execution.datasources.CreateTempViewUsing
-import org.apache.spark.sql.graft.PathSchemas
 
 /** Multi-statement SQL script runner with per-statement audit, failure
   * isolation, table detection and bounded previews — the Spark-native
@@ -23,14 +22,14 @@ import org.apache.spark.sql.graft.PathSchemas
   * Each statement goes through the full Catalyst pipeline via
   * `spark.sql`; the engine shell is driver-side control flow only.
   *
-  * A run is one scope of [[PathSchemas]] on the calling thread: each
-  * ``fmt.`path` `` relation (in a statement, a preview, or view text
-  * analysed again) infers its schema once per run, and later references
-  * reuse it while still listing the files. A statement that may write
-  * (kind `Write` below) is a barrier: succeeded or failed, it empties
-  * the run's schemas, so a read after it infers again. The scope needs
-  * the session's parser from `GraftExtensions` (as `graft.Sessions`
-  * sets it); without it every reference infers, as Spark does.
+  * Each ``fmt.`path` `` relation (in a statement, a preview, or view
+  * text analysed again) takes its schema from the session's file-source
+  * memo (`org.apache.spark.sql.graft.PathSchemas`, the parser that
+  * `GraftExtensions` installs, as `graft.Sessions` sets it): a path
+  * infers once while its files are unchanged, within a run and across
+  * runs, and each reference still lists the files. A write that changes
+  * a path's files changes its listing, so the next read infers again.
+  * Without the extension every reference infers, as Spark does.
   *
   * Documented deviations:
   *   - the reference `.collect()`s every statement result (`:66`) — a
@@ -111,16 +110,17 @@ object ScriptEngine {
     * including an unparseable statement or one of unknown kind — may
     * rewrite files a preview lists, so it counts as a write.
     */
-  private sealed trait Kind
-  private case object Query extends Kind
-  private case object TempView extends Kind
-  private case object Write extends Kind
+  private[exec] sealed trait Kind
+  private[exec] case object Query extends Kind
+  private[exec] case object TempView extends Kind
+  private[exec] case object Write extends Kind
 
-  // parsed with the run's schemas set aside: sorting a statement must
-  // not infer a schema outside its own timing
-  private def kindOf(spark: SparkSession, stmt: String): Kind =
-    try PathSchemas.suspended(
-        spark.sessionState.sqlParser.parsePlan(stmt)) match {
+  // Spark's own parser, without the session's path rewrite: sorting a
+  // statement must not list or infer a file source outside its timing
+  private val plainParser = new SparkSqlParser
+
+  private[exec] def kindOf(stmt: String): Kind =
+    try plainParser.parsePlan(stmt) match {
       case v: CreateViewCommand if v.viewType != PersistedView => TempView
       case _: CreateTempViewUsing => TempView
       // INSERT OVERWRITE DIRECTORY parses to neither a command nor a
@@ -145,11 +145,7 @@ object ScriptEngine {
     * and collected while it runs; every pending preview completes before
     * a write statement and before `run` returns.
     */
-  def run(spark: SparkSession, sqlCode: String): ScriptReport =
-    PathSchemas.scoped(runScoped(spark, sqlCode))
-
-  private def runScoped(spark: SparkSession, sqlCode: String)
-      : ScriptReport = {
+  def run(spark: SparkSession, sqlCode: String): ScriptReport = {
     val t0 = System.nanoTime()
     def secs(since: Long): Double =
       math.round((System.nanoTime() - since) / 1e7) / 100.0
@@ -194,7 +190,7 @@ object ScriptEngine {
 
     try {
       statements.zipWithIndex.foreach { case (stmt, i) =>
-        val kind = kindOf(spark, stmt)
+        val kind = kindOf(stmt)
         if (kind == Write) awaitPreviews()
         val early = if (kind == Query) bindPreviews(stmt) else Nil
         val s0 = System.nanoTime()
@@ -206,7 +202,6 @@ object ScriptEngine {
             df.foreach(_ => ())
           None
         } catch { case e: Exception => Some(e) }
-        finally if (kind == Write) PathSchemas.invalidate()
         failure match {
           case None =>
             details += StepResult(i + 1, "SUCCESS", stmt, None, secs(s0))

@@ -1,6 +1,7 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.PathSchemas
 
 import graft.types.TypeMapper
 
@@ -88,22 +89,15 @@ object Discovery {
   /** `file_definition` metadata (`Data_Discovery_File.sql:73-93`). */
   def fileDefinition(spark: SparkSession, path: String): FileDefinition = {
     val (df, fileType) = load(spark, path)
-    val size = sizeOf(path)
+    // the data files Spark reads, listed through the path's FileSystem
+    // (java.io.File reads a `file:` URI as 0 bytes)
+    val size = PathSchemas.listing(spark, path).map(_.bytes).getOrElse(0L)
     FileDefinition(
       fileName = path.split('/').last,
       fileType = fileType,
       fileSize = formatSize(size),
       columns = df.schema.fields.toSeq.map(f =>
         ColumnDef(f.name, TypeMapper.toEngineType(f.dataType))))
-  }
-
-  private def sizeOf(path: String): Long = {
-    val f = new java.io.File(path)
-    if (f.isDirectory)
-      // parquet "files" are often directories of part files
-      Option(f.listFiles()).map(_.filter(_.isFile).map(_.length).sum)
-        .getOrElse(0L)
-    else f.length
   }
 
   /** Schema rows as a DataFrame — the discovery result as a queryable
@@ -115,16 +109,5 @@ object Discovery {
     fd.columns.zipWithIndex
       .map { case (c, i) => (c.columnName, c.`type`, i + 1) }
       .toDF("column_name", "data_type", "ordinal_position")
-  }
-
-  /** S14 (DDL + COPY INTO, generated at `CODE_GENERATOR.sql:89-106`):
-    * on Spark, schema inference + a distributed write replace hand-written
-    * DDL and COPY — one call ingests a file into a managed table.
-    */
-  def ingest(spark: SparkSession, path: String, table: String,
-      overwrite: Boolean = true): Unit = {
-    val (df, _) = load(spark, path)
-    df.write.mode(if (overwrite) "overwrite" else "append")
-      .saveAsTable(table)
   }
 }

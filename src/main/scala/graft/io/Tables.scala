@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PathSchemas
 import org.apache.spark.sql.types.LongType
 
 /** Parquet-backed table resolution for the test corpus.
@@ -13,10 +14,6 @@ import org.apache.spark.sql.types.LongType
   * API is backed by the session catalog.
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Files at or above this size get their scan parallelized when the
     * caller opts in (see load).
     */
@@ -31,10 +28,29 @@ object Tables {
     */
   val ScanParallelism = 32
 
+  /** Digest of a corpus source's listing — the shared memo-key
+    * ingredient for the staging layers ([[graft.pipeline.BucketedStage]],
+    * [[PartitionedStage]]): a memo must never serve artifacts staged
+    * from a rewritten corpus, and an unlistable source must never
+    * memoize (the nanoTime fallback makes every call a fresh key).
+    */
+  def sourceStamp(spark: SparkSession, dir: String, name: String): String =
+    PathSchemas.listing(spark, s"$dir/$name.parquet").map(_.digest)
+      .getOrElse(s"nostat:${System.nanoTime()}")
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     load(spark, dir, name, parallelize = false)
 
-  /** @param parallelize restore split-equivalent parallelism for
+  /** The table's frame, with the schema the one file-source memo
+    * ([[PathSchemas]]) holds for its current files: a parquet read with a
+    * given schema skips the footer-inference job, so repeat loads of an
+    * unchanged table (every query loads at least one) build their plans
+    * with no job, and a table whose files changed infers again. The
+    * listing goes through the path's Hadoop `FileSystem` (on s3a:// or
+    * hdfs:// `java.io.File` reads 0 for every path); an unlistable path
+    * reads as Spark reads it.
+    *
+    * @param parallelize restore split-equivalent parallelism for
     *   data-sized single-file tables (see below). Opt-IN, for pipelines
     *   whose heavy compute is fused with the scan (profiling aggregates,
     *   shingling/sketching, text stats) — measured 3-5x there. Leave it
@@ -43,71 +59,12 @@ object Tables {
     *   extra round-robin shuffle is a pure tax (measured +0.4-1.0s per
     *   query at sf0.1), worst on small index-like tables (embeddings).
     */
-  /** Inferred-schema cache keyed by path + mtime + size: a parquet read
-    * with a user-supplied schema skips the footer-inference Spark job, so
-    * repeat loads of the immutable corpus tables (every query loads ≥ 1)
-    * build their plans with ZERO jobs. A rewritten file changes the key.
-    * Access-ordered LRU capped at [[SchemaCacheMax]]: the hot corpus
-    * tables stay resident while one-off paths age out individually — no
-    * wholesale flush that would re-trigger inference jobs for every
-    * live table at once.
-    *
-    * The key suits a single file only. A partitioned directory (a
-    * `PrunedMerge` target) keeps its root mtime when a merge rewrites a
-    * file inside one of its `__p=k` dirs, so a key on the root would
-    * serve a stale schema; the script engine reuses a directory's schema
-    * within one run instead, where a write statement empties it
-    * (`org.apache.spark.sql.graft.PathSchemas`).
-    */
-  private[io] val SchemaCacheMax = 256
-  private[io] val schemaCache:
-      java.util.Map[String, org.apache.spark.sql.types.StructType] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String,
-          org.apache.spark.sql.types.StructType](64, 0.75f, true) {
-        override def removeEldestEntry(e: java.util.Map.Entry[String,
-            org.apache.spark.sql.types.StructType]): Boolean =
-          size() > SchemaCacheMax
-      })
-
-  /** mtime+size stamp of a corpus source parquet — the shared memo-key
-    * ingredient for the staging layers ([[graft.pipeline.BucketedStage]],
-    * [[PartitionedStage]]): a memo must never serve artifacts staged
-    * from a rewritten corpus, and an unstat-able source must never
-    * memoize (the nanoTime fallback makes every call a fresh key).
-    */
-  def sourceStamp(spark: SparkSession, dir: String, name: String): String =
-    try {
-      val hp = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-      val st = hp.getFileSystem(spark.sessionState.newHadoopConf())
-        .getFileStatus(hp)
-      s"${st.getModificationTime}:${st.getLen}"
-    } catch {
-      case _: java.io.IOException => s"nostat:${System.nanoTime()}"
-    }
-
   def load(spark: SparkSession, dir: String, name: String,
       parallelize: Boolean): DataFrame = {
     val path = s"$dir/$name.parquet"
-    // Hadoop FileSystem status, NOT java.io.File: on a non-local store
-    // (s3a://, hdfs://) File.lastModified/length are 0 for every path —
-    // the key would collapse to path-only and a table rewrite would keep
-    // serving the stale cached schema. An unstat-able path skips the
-    // cache entirely. Bounded: the corpus is a fixed table set; clear()
-    // guards the pathological many-distinct-paths caller.
-    val stat: Option[org.apache.hadoop.fs.FileStatus] = try {
-      val hp = new org.apache.hadoop.fs.Path(path)
-      Some(hp.getFileSystem(spark.sessionState.newHadoopConf())
-        .getFileStatus(hp))
-    } catch { case _: java.io.IOException => None }
-    val key = stat.map(st => s"$path:${st.getModificationTime}:${st.getLen}")
-    val raw = key.flatMap(k => Option(schemaCache.get(k))) match {
-      case None =>
-        val df = spark.read.parquet(path)
-        key.foreach(schemaCache.put(_, df.schema))
-        df
-      case Some(known) => spark.read.schema(known).parquet(path)
-    }
+    val files = PathSchemas.listing(spark, path)
+    val raw = files.flatMap(PathSchemas.schema(spark, "parquet", _))
+      .fold(spark.read)(spark.read.schema(_)).parquet(path)
     // Normalize every declared temporal column to TIMESTAMP (with local
     // time zone) regardless of how the corpus writer encoded it:
     //  - TIMESTAMP(NANOS) arrives as LongType under
@@ -140,13 +97,13 @@ object Tables {
     // round-robin repartition; at cluster scale the loader's splits make
     // this a no-op, and dimension-sized files stay single-partition
     // (they broadcast). Measured 3-5x on every scan-fused pipeline.
-    // The size gate reuses the Hadoop FileStatus fetched for the cache
-    // key — java.io.File.length() is 0 for every non-local path (s3a://,
+    // The size gate reuses the memo key's Hadoop listing —
+    // java.io.File.length() is 0 for every non-local path (s3a://,
     // hdfs://, even file:// URIs), which would silently disable the gate
     // off-localhost. Directory tables (multi-part) skip the repartition:
     // their file splits already parallelize the scan.
-    if (parallelize &&
-        stat.exists(st => st.isFile && st.getLen >= ParallelizeBytes))
+    if (parallelize && files.exists(f =>
+        f.root.isFile && f.root.getLen >= ParallelizeBytes))
       typed.repartition(ScanParallelism)
     else typed
   }
@@ -174,13 +131,10 @@ object Tables {
   private[io] def rowCount(spark: SparkSession, dir: String, name: String,
       driverBound: Int): Long = {
     val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val fs = root.getFileSystem(conf)
-    val files =
-      if (fs.getFileStatus(root).isDirectory)
-        fs.listStatus(root).map(_.getPath)
-          .filter(p => p.getName.endsWith(".parquet"))
-      else Array(root)
+    val path = s"$dir/$name.parquet"
+    val files = PathSchemas.listing(spark, path)
+      .getOrElse(throw new java.io.FileNotFoundException(path))
+      .files.map(_.getPath).filter(_.getName.endsWith(".parquet")).toArray
     def footerCount(p: org.apache.hadoop.fs.Path,
         c: org.apache.hadoop.conf.Configuration): Long = {
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(

@@ -20,7 +20,7 @@ import graft.util.Gates
   * source count. A mega-source whose corpus dwarfs its budget
   * (CommonCrawl ≫ budget is the NORMAL case in a training mix) would
   * sort entirely in one window task, so past the
-  * [[graft.util.Gates.prefilters]] size gate (or on request) the
+  * [[graft.util.Gates.prefilters]] size gate the
   * selection runs the [[StratumPrefilter]] engine — selection-identical by
   * construction, pinned in `MixingSpec` along with survivor bounds and
   * the rescue path.
@@ -31,15 +31,11 @@ object Mixing {
     *
     * @param budgets       per-source token budgets
     * @param defaultBudget budget for sources absent from `budgets`
-    * @param prefilter     force the hash-threshold prefilter on/off;
-    *                      default engages it past the
-    *                      [[graft.util.Gates.prefilters]] size gate.
     */
   def byTokenBudget(df: DataFrame, sourceCol: String, idCol: String,
       tokenCol: String, budgets: Map[String, Long],
-      defaultBudget: Long,
-      prefilter: Option[Boolean] = None): DataFrame = {
-    if (!prefilter.getOrElse(Gates.prefilters(df)))
+      defaultBudget: Long): DataFrame = {
+    if (!Gates.prefilters(df))
       exactMix(df, sourceCol, idCol, tokenCol, budgets, defaultBudget)
     else prefilteredMix(df, sourceCol, idCol, tokenCol, budgets,
       defaultBudget, StratumPrefilter.Margin)
@@ -54,8 +50,8 @@ object Mixing {
     * guarantees carry over unchanged.
     */
   def byWeights(df: DataFrame, sourceCol: String, idCol: String,
-      tokenCol: String, weights: Map[String, Double], totalTokens: Long,
-      prefilter: Option[Boolean] = None): DataFrame = {
+      tokenCol: String, weights: Map[String, Double], totalTokens: Long)
+      : DataFrame = {
     require(weights.nonEmpty, "weights must name at least one source")
     require(weights.values.forall(_ >= 0) && weights.values.sum > 0,
       "weights must be non-negative and not all zero")
@@ -65,7 +61,7 @@ object Mixing {
       src -> math.round(totalTokens * (w / norm))
     }
     byTokenBudget(df, sourceCol, idCol, tokenCol, budgets,
-      defaultBudget = 0L, prefilter = prefilter)
+      defaultBudget = 0L)
   }
 
   /** Temperature-scaled mixing — the multilingual/multi-domain

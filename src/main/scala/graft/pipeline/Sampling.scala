@@ -15,7 +15,7 @@ import graft.util.Gates
   * Scale shape: one shuffle on the stratum key; output is bounded by
   * `quota × |strata|`. A stratum that dwarfs its quota would sort entirely
   * inside one window task, so past the [[graft.util.Gates.prefilters]]
-  * size gate (or on request) the selection runs the [[StratumPrefilter]]
+  * size gate the selection runs the [[StratumPrefilter]]
   * engine — selection-identical by construction, pinned in
   * `SamplingSpec` along with survivor bounds and the rescue path.
   * (Spark 4's WindowGroupLimit already partial-limits a
@@ -31,18 +31,15 @@ import graft.util.Gates
 object Sampling {
 
   /** Up to `quota` rows per stratum, by md5(id) order (ties broken by id;
-    * md5 because every engine computes the identical hex digest).
-    *
-    * @param prefilter force the hash-threshold prefilter on/off; default
-    *                  engages it past the [[graft.util.Gates.prefilters]]
-    *                  size gate (so test-scale inputs keep the plain
-    *                  single-window plan).
+    * md5 because every engine computes the identical hex digest). Past
+    * the [[graft.util.Gates.prefilters]] size gate the selection runs the
+    * hash-threshold prefilter, so test-scale inputs keep the plain
+    * single-window plan.
     */
   def stratifiedHead(df: DataFrame, stratumCols: Seq[String],
-      idCol: String, quota: Int,
-      prefilter: Option[Boolean] = None): DataFrame = {
+      idCol: String, quota: Int): DataFrame = {
     require(quota > 0, "quota must be positive")
-    if (!prefilter.getOrElse(Gates.prefilters(df)))
+    if (!Gates.prefilters(df))
       exactHead(df, stratumCols, idCol, quota)
     else prefilteredHead(df, stratumCols, idCol, quota,
       StratumPrefilter.Margin)

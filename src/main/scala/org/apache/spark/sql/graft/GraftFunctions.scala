@@ -29,7 +29,7 @@ import org.apache.spark.sql.types.IntegerType
   * Two hook-up paths:
   *   - config `spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions`
   *     (the canonical cluster deployment — set by `graft.Sessions`); it
-  *     also installs the script engine's path-schema parser
+  *     also installs the parser that reuses file-source schemas
   *   - [[GraftFunctions.register]] on an already-created session
   *     (functions only).
   */
@@ -102,10 +102,10 @@ object GraftFunctions {
 
 /** `spark.sql.extensions` entry point, applied at session build time
   * (works with plain `spark-submit --conf`). It injects the graft
-  * functions and the parser that reuses path-relation schemas inside a
-  * script run ([[PathSchemas]]); the parser can only be installed here,
-  * so [[GraftFunctions.register]] on a built session adds the functions
-  * alone.
+  * functions and the parser that reuses a path relation's schema while
+  * its files are unchanged ([[PathSchemas]]); the parser can only be
+  * installed here, so [[GraftFunctions.register]] on a built session
+  * adds the functions alone.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

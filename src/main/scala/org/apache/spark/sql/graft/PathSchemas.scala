@@ -1,9 +1,12 @@
 package org.apache.spark.sql.graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
 import java.util.Locale
 
-import scala.collection.mutable
 import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
@@ -15,91 +18,113 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias,
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.execution.datasources.{DataSource, FileFormat}
 import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.util.HadoopFSUtils
 
-/** Run-scoped schemas of path relations (``fmt.`path` ``).
+/** The one schema memo for file sources.
   *
-  * Spark stores a temporary view's SQL text and analyses it again on
-  * every reference, and each analysis of a path relation infers the
-  * files' schema with a Spark job. A script that reads one directory
-  * through several views and previews pays that job once per reference.
+  * Inferring a file source's schema costs a Spark job, and the engine
+  * reads the same files many times: a corpus table on every load, a
+  * script's source path in each statement, preview and re-analysed view
+  * text. Every reader lists the path's leaf files ([[listing]]) and takes
+  * the schema inferred for exactly those files ([[schema]]), keyed by
+  * (format, path, a digest of every leaf file's path, length and
+  * modification time). A write that adds, removes or rewrites a file
+  * changes the key, also inside a partition dir, where the root dir's
+  * own status stays as it was. Each reference still lists the files, so
+  * rows stay fresh. The memo is an access-ordered LRU of at most
+  * [[SchemaCacheMax]] entries, so superseded listings age out one by one.
   *
-  * While a scope is open on the calling thread ([[scoped]]), the parser
-  * installed by [[GraftExtensions]] rewrites each option-less,
-  * non-streaming path relation into a data-source relation with the
-  * schema the scope's first reference inferred. Only the schema is
-  * reused: each reference still lists the files, so rows stay fresh.
-  * [[invalidate]] forgets every schema (a statement that may rewrite
-  * files calls it). A relation whose inference fails, with
-  * `spark.sql.runSQLOnFiles` off or outside a scope, is left as parsed,
-  * so Spark resolves it (or reports its error) as it always does.
-  *
-  * A directory needs this scope rather than a key on its modification
-  * time (as `graft.io.Tables.schemaCache` keys single files): rewriting a
-  * file inside a partition dir does not change the root dir's mtime.
+  * The parser that [[GraftExtensions]] installs gives each option-less,
+  * non-streaming path relation (``fmt.`path` ``) of every statement the
+  * memo's schema. A relation whose first part names no file format (an
+  * ordinary `db.t`, which costs no listing), whose path cannot be listed
+  * or whose inference fails, or any relation with
+  * `spark.sql.runSQLOnFiles` off, is left as parsed, so Spark resolves
+  * it (or reports its error) as it always does.
   */
 object PathSchemas {
 
-  /** The open scope: each (format, path) read so far and its schema,
-    * None where the relation stays as parsed (a failed inference, or a
-    * two-part table name that names no file format).
-    */
-  private val current =
-    new ThreadLocal[mutable.Map[(String, String), Option[StructType]]]
+  val SchemaCacheMax = 256
 
-  /** Runs `body` with a scope open on this thread; inside an open scope
-    * it joins that scope.
+  /** The leaf files under `path` as Spark's file index lists them
+    * (hidden and `_`-prefixed names skipped), sorted; `root` is the
+    * path's own status.
     */
-  def scoped[A](body: => A): A =
-    if (current.get != null) body
-    else {
-      current.set(mutable.HashMap.empty)
-      try body finally current.remove()
-    }
+  final case class Listing(path: String, root: FileStatus,
+      files: Seq[FileStatus]) {
+    def bytes: Long = files.map(_.getLen).sum
 
-  /** Runs `body` with this thread's scope, if any, set aside. */
-  def suspended[A](body: => A): A = {
-    val open = current.get
-    current.remove()
-    try body finally if (open != null) current.set(open)
+    lazy val digest: String = MessageDigest.getInstance("SHA-256")
+      .digest(files.map(f => s"${f.getPath}\u0000${f.getLen}\u0000" +
+        s"${f.getModificationTime}\n").mkString.getBytes(UTF_8))
+      .map(b => f"$b%02x").mkString
   }
 
-  /** Forgets everything the open scope holds (no-op outside one). */
-  def invalidate(): Unit = Option(current.get).foreach(_.clear())
-
-  /** The relation's file schema, as Spark's SQL-on-file rule would infer
-    * it; None when that rule would not produce a file relation from it.
-    */
-  private def infer(spark: SparkSession, fmt: String, path: String)
-      : Option[StructType] =
+  /** `path` listed through its Hadoop `FileSystem`; None if unlistable. */
+  def listing(spark: SparkSession, path: String): Option[Listing] =
     try {
-      val ds = DataSource(spark, className = fmt, paths = Seq(path))
-      if (!classOf[FileFormat].isAssignableFrom(ds.providingClass) ||
-          DataSource.lookupDataSourceV2(fmt, spark.sessionState.conf)
-            .isDefined) None
-      else Some(ds.resolveRelation().schema)
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+      def leaves(st: FileStatus): Seq[FileStatus] =
+        if (!st.isDirectory) Seq(st)
+        else fs.listStatus(st.getPath).toSeq
+          .filterNot(s => HadoopFSUtils.shouldFilterOutPathName(
+            s.getPath.getName))
+          .flatMap(leaves)
+      val root = fs.getFileStatus(p)
+      Some(Listing(path, root, leaves(root).sortBy(_.getPath.toString)))
     } catch { case NonFatal(_) => None }
 
-  /** `plan` with every eligible path relation (in subqueries and CTE
-    * definitions too) carrying the open scope's schema.
+  private type Key = (String, String, String)
+  private[graft] val memo: java.util.Map[Key, Option[StructType]] =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[Key, Option[StructType]](64, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[Key, Option[StructType]]): Boolean =
+          size() > SchemaCacheMax
+      })
+
+  /** Whether Spark's SQL-on-file rule reads `fmt` as a V1 file format. */
+  private def isFileFormat(spark: SparkSession, fmt: String): Boolean =
+    try classOf[FileFormat].isAssignableFrom(
+        DataSource(spark, className = fmt).providingClass) &&
+      DataSource.lookupDataSourceV2(fmt, spark.sessionState.conf).isEmpty
+    catch { case NonFatal(_) => false }
+
+  /** The schema Spark infers for `fmt` files as `files` lists them,
+    * inferred once per listing; None when inference fails.
     */
-  def rewrite(spark: SparkSession, plan: LogicalPlan): LogicalPlan = {
-    val known = current.get
-    if (known == null || !spark.sessionState.conf.runSQLonFile) plan
+  def schema(spark: SparkSession, fmt: String, files: Listing)
+      : Option[StructType] = {
+    val key = (fmt.toLowerCase(Locale.ROOT), files.path, files.digest)
+    Option(memo.get(key)).getOrElse {
+      val inferred =
+        try Some(DataSource(spark, className = fmt, paths = Seq(files.path))
+          .resolveRelation().schema)
+        catch { case NonFatal(_) => None }
+      memo.put(key, inferred)
+      inferred
+    }
+  }
+
+  /** `plan` with every eligible path relation (in subqueries and CTE
+    * definitions too) carrying the memo's schema.
+    */
+  def rewrite(spark: SparkSession, plan: LogicalPlan): LogicalPlan =
+    if (!spark.sessionState.conf.runSQLonFile) plan
     else plan.transformDownWithSubqueries {
       case w: UnresolvedWith =>
         w.copy(cteRelations = w.cteRelations.map { case (n, q, d) =>
           (n, rewrite(spark, q).asInstanceOf[SubqueryAlias], d)
         })
       case u @ UnresolvedRelation(Seq(fmt, path), opts, false)
-          if opts.isEmpty =>
-        known.getOrElseUpdate((fmt.toLowerCase(Locale.ROOT), path),
-            infer(spark, fmt, path))
+          if opts.isEmpty && isFileFormat(spark, fmt) =>
+        listing(spark, path).flatMap(schema(spark, fmt, _))
           .map(s => UnresolvedDataSource(fmt, Some(s),
             CaseInsensitiveMap[String](Map.empty), isStreaming = false,
             Seq(path)))
           .getOrElse(u)
     }
-  }
 
   /** The session parser with [[rewrite]] applied to every parsed plan
     * and view text.

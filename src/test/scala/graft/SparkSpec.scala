@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,6 +25,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       Thread.sleep(50)
     assert(leaked.isEmpty, s"persisted RDDs leaked by body: $leaked")
     out
+  }
+
+  /** Replaces the one data file under `dir` with `df`'s rows, written
+    * under the same file name through the Hadoop `FileSystem`: the
+    * status of `dir`'s parent (a partitioned table's root) stays as it
+    * was.
+    */
+  def rewriteInPlace(dir: String, df: DataFrame): Unit = {
+    val staged = java.nio.file.Files.createTempDirectory("graft_rewrite")
+      .toString + "/staged"
+    df.coalesce(1).write.parquet(staged)
+    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    def dataFile(d: String) = fs.listStatus(new Path(d)).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).toSeq match {
+        case Seq(f) => f
+        case found => sys.error(s"$d holds ${found.size} data files")
+      }
+    val target = dataFile(dir)
+    assert(fs.delete(target, false))
+    assert(fs.rename(dataFile(staged), target))
+    fs.delete(new Path(staged), true): Unit
   }
 
   override def afterAll(): Unit = {

@@ -1,6 +1,6 @@
 package graft.catalog
 
-import graft.SparkSpec
+import graft.{JobCounts, SparkSpec}
 
 class GlossarySpec extends SparkSpec {
 
@@ -95,7 +95,6 @@ class GlossarySpec extends SparkSpec {
     // The batch path builds the whole definitions frame locally and
     // appends once: the Spark job count must be IDENTICAL for a 4-column
     // and a 100-column regenerate (any per-column job would scale)
-    val tracker = spark.sparkContext.statusTracker
     def jobsFor(cols: Int): Int = {
       val p = s"${System.getProperty("java.io.tmpdir")}/graft_gw_$cols"
       Glossary.deleteForTest(p)
@@ -105,13 +104,9 @@ class GlossarySpec extends SparkSpec {
       // streaming-state cleanup, context-cleaner work) when the whole
       // suite runs — this thread's regenerate jobs inherit the group,
       // nothing else lands in it
-      val group = s"graft-glossary-width-$cols"
-      spark.sparkContext.setJobGroup(group, "width probe")
-      val n = try {
+      val n = JobCounts.of(spark, s"graft-glossary-width-$cols") {
         Glossary.regenerate(spark, p, meta, None)
-        Thread.sleep(500) // status store is listener-fed (async)
-        tracker.getJobIdsForGroup(group).length
-      } finally spark.sparkContext.clearJobGroup()
+      }._2.jobs
       Glossary.deleteForTest(p)
       n
     }

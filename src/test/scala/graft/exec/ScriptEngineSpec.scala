@@ -140,31 +140,28 @@ class ScriptEngineSpec extends SparkSpec {
   }
 
   test("a DDL-only script posts no Spark job") {
-    val sc = spark.sparkContext
-    val group = "graft-script-ddl-jobs"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group)) seen.add(e.jobId)
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "ddl probe")
-    try {
-      val report = ScriptEngine.run(spark,
+    val (report, c) = JobCounts.of(spark, "graft-script-ddl-jobs") {
+      ScriptEngine.run(spark,
         """CREATE OR REPLACE TEMPORARY VIEW se_ddl AS SELECT 1 AS x;
           |DROP VIEW IF EXISTS se_ddl_absent""".stripMargin)
-      assert(report.successCount === 2)
-      // a marker job: its start arrives after every earlier job's
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 10000000000L
-      while (seen.size < 1 && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(seen.size === 1, s"script posted ${seen.size - 1} jobs")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
+    assert(report.successCount === 2)
+    assert(c.jobs === 0, s"script posted ${c.jobs} jobs")
+  }
+
+  test("classifying a statement over a cold path posts no job") {
+    val p = Files.createTempDirectory("se_kind").toString + "/p"
+    spark.range(3).write.parquet(p)
+    val stmt = s"SELECT id FROM parquet.`$p`"
+    val (kind, sorting) =
+      JobCounts.of(spark, "graft-script-kind")(ScriptEngine.kindOf(stmt))
+    assert(kind === ScriptEngine.Query)
+    assert(sorting.jobs === 0)
+    // the path stayed cold: its first read infers its schema
+    val (_, read) = JobCounts.of(spark, "graft-script-kind-read") {
+      spark.sql(stmt).collect()
+    }
+    assert(read.fanOutJobs === 1)
   }
 
   test("a preview bound before a write shows the rows from before it") {
@@ -242,19 +239,42 @@ class ScriptEngineSpec extends SparkSpec {
     PrunedMerge.stage(events(0, 2000, 1), target, Seq("event_id"), 16)
     events(1980, 2020, 2).coalesce(1).write.parquet(batch)
     val script = scd1Script(batch, target)
-    val counts = (1 to 5).map { i =>
-      var report: ScriptEngine.ScriptReport = null
-      val c = JobCounts.of(spark, s"graft-script-scd1-$i") {
-        report = ScriptEngine.run(spark, script)
+    def counted(i: Int): JobCounts = {
+      val (report, c) = JobCounts.of(spark, s"graft-script-scd1-$i") {
+        ScriptEngine.run(spark, script)
       }
       assert(report.details.map(_.status) === Seq.fill(5)("SUCCESS"))
       assert(report.tablePreviews.values.forall(_.isRight))
       c
     }
-    // one schema inference each for the batch file and the target dir
-    assert(counts.map(_.fanOutJobs) === Seq.fill(5)(2))
-    assert(counts.map(_.jobs) === Seq.fill(5)(15))
+    // as in `ingest_merge`, each run reads a target merged since the
+    // last one: one schema inference each for the batch file and the
+    // target dir
+    val merged = (1 to 5).map { i =>
+      PrunedMerge.mergeInto(spark, target, events(i * 100, i * 100 + 10, 3),
+        Seq("event_id"), "created_at", nParts = 16)
+      counted(i)
+    }
+    assert(merged.map(_.fanOutJobs) === Seq.fill(5)(2))
+    assert(merged.map(_.jobs) === Seq.fill(5)(15))
+    // over an unchanged target a rerun reuses the target's schema; the
+    // batch's `USING parquet` view infers once per definition
+    val reruns = (6 to 8).map(counted)
+    assert(reruns.map(_.fanOutJobs) === Seq.fill(3)(1))
+    assert(reruns.map(_.jobs) === Seq.fill(3)(14))
     assert(spark.table("batch_001_merged").count() === 2020)
+  }
+
+  test("a partition file rewritten in place between runs is read with " +
+      "its new schema") {
+    val t = Files.createTempDirectory("se_inplace").toString + "/t"
+    spark.range(5).withColumn("k", lit(1)).coalesce(1)
+      .write.partitionBy("k").parquet(t)
+    val stmt = s"SELECT * FROM parquet.`$t`"
+    assert(ScriptEngine.run(spark, stmt).successCount === 1)
+    rewriteInPlace(s"$t/k=1",
+      spark.range(5).withColumn("extra", lit("x")))
+    assert(spark.sql(stmt).columns.toSet === Set("id", "extra", "k"))
   }
 
   test("a write in a run makes the next read of its path infer again") {
@@ -308,7 +328,7 @@ class ScriptEngineSpec extends SparkSpec {
     assert(inRun === Some(outside))
   }
 
-  test("only option-less batch path relations take the run's schema") {
+  test("only option-less batch path relations take the memo's schema") {
     val p = Files.createTempDirectory("se_opts").toString + "/p"
     spark.range(1).write.parquet(p)
     val parser = spark.sessionState.sqlParser
@@ -317,17 +337,16 @@ class ScriptEngineSpec extends SparkSpec {
         case _: UnresolvedDataSource => true
         case w: UnresolvedWith => w.cteRelations.exists(r => rewritten(r._2))
       }.contains(true)
-    PathSchemas.scoped {
-      assert(rewritten(parser.parsePlan(s"SELECT * FROM parquet.`$p`")))
-      assert(rewritten(parser.parsePlan(
-        s"WITH c AS (SELECT * FROM parquet.`$p`) SELECT * FROM c")))
-      assert(rewritten(parser.parsePlan(
-        s"SELECT 1 WHERE EXISTS (SELECT 1 FROM parquet.`$p`)")))
-      assert(!rewritten(parser.parsePlan(
-        s"SELECT * FROM parquet.`$p` WITH ('mergeSchema' = 'true')")))
-      assert(!rewritten(PathSchemas.rewrite(spark,
-        UnresolvedRelation(Seq("parquet", p), isStreaming = true))))
-    }
-    assert(!rewritten(parser.parsePlan(s"SELECT * FROM parquet.`$p`")))
+    assert(rewritten(parser.parsePlan(s"SELECT * FROM parquet.`$p`")))
+    assert(rewritten(parser.parsePlan(
+      s"WITH c AS (SELECT * FROM parquet.`$p`) SELECT * FROM c")))
+    assert(rewritten(parser.parsePlan(
+      s"SELECT 1 WHERE EXISTS (SELECT 1 FROM parquet.`$p`)")))
+    assert(!rewritten(parser.parsePlan(
+      s"SELECT * FROM parquet.`$p` WITH ('mergeSchema' = 'true')")))
+    assert(!rewritten(PathSchemas.rewrite(spark,
+      UnresolvedRelation(Seq("parquet", p), isStreaming = true))))
+    // a first part that names no file format is a table name
+    assert(!rewritten(parser.parsePlan(s"SELECT * FROM default.`$p`")))
   }
 }

@@ -1,5 +1,7 @@
 package graft.io
 
+import org.apache.spark.sql.graft.PathSchemas
+
 import graft.SparkSpec
 
 class DiscoverySpec extends SparkSpec {
@@ -14,8 +16,39 @@ class DiscoverySpec extends SparkSpec {
       Schemas.lineitem.map(_.name))
     assert(fd.columns.map(_.`type`) ===
       Schemas.lineitem.map(_.engineType))
-    assert(fd.fileSize.endsWith("KB") || fd.fileSize.endsWith("MB") ||
-      fd.fileSize.endsWith("B"))
+    assert(fd.fileSize === Discovery.formatSize(
+      new java.io.File(s"$sf/lineitem.parquet").length))
+  }
+
+  test("file size counts the data files of a plain path, its file: URI " +
+      "and a partitioned dir") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_disc_size")
+    // under 1 KB each, so the formatted size is the exact byte count
+    val plain = dir.resolve("one.parquet")
+    Seq((1L, "a")).toDF("id", "v").coalesce(1).write.parquet(s"$dir/staged")
+    java.nio.file.Files.move(java.nio.file.Files.list(dir.resolve("staged"))
+      .filter(_.toString.endsWith(".parquet")).findFirst().get, plain)
+    val bytes = java.nio.file.Files.size(plain)
+    assert(bytes < 1024)
+    assert(Discovery.fileDefinition(spark, plain.toString).fileSize ===
+      s"$bytes B")
+    assert(Discovery.fileDefinition(spark, s"file:$plain").fileSize ===
+      s"$bytes B")
+    // a writer's output dir: part files under k=1/ and k=2/, beside
+    // `.crc` and `_SUCCESS` files that are not data
+    val parted = dir.resolve("parted.parquet")
+    Seq((1L, 1), (2L, 2)).toDF("id", "k").write.partitionBy("k")
+      .parquet(parted.toString)
+    val parts = java.nio.file.Files.walk(parted).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(p => p.getFileName.toString.startsWith("part-"))
+    assert(parts.size === 2)
+    val total = parts.map(java.nio.file.Files.size).sum
+    assert(Discovery.fileDefinition(spark, parted.toString).fileSize ===
+      Discovery.formatSize(total))
+    assert(PathSchemas.listing(spark, parted.toString).map(_.bytes) ===
+      Some(total))
   }
 
   test("file size formatting follows the reference's units") {

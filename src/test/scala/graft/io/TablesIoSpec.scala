@@ -1,10 +1,12 @@
 package graft.io
 
+import org.apache.spark.sql.graft.{PathSchemas, PathSchemasMemo}
+
 import graft.SparkSpec
 
 /** Parquet-backed Tables behaviors: footer row counts and the
-  * inferred-schema cache (keyed by path+mtime+size — a rewritten table
-  * must never be served a stale schema).
+  * file-source schema memo (keyed by the listing of every leaf file — a
+  * rewritten table must never be served a stale schema).
   */
 class TablesIoSpec extends SparkSpec {
 
@@ -36,21 +38,23 @@ class TablesIoSpec extends SparkSpec {
 
   test("schema cache is a capped LRU: eldest untouched entry ages out, " +
       "a touched entry survives, no wholesale flush") {
-    val st = new org.apache.spark.sql.types.StructType()
-    val keys = (0 until Tables.SchemaCacheMax + 10).map(i => s"lru_k$i")
-    Tables.schemaCache.clear()
-    keys.foreach(Tables.schemaCache.put(_, st))
+    val memo = PathSchemasMemo()
+    val max = PathSchemas.SchemaCacheMax
+    val st = Some(new org.apache.spark.sql.types.StructType())
+    val keys = (0 until max + 10).map(i => ("parquet", s"lru_k$i", "d"))
+    memo.clear()
+    keys.foreach(memo.put(_, st))
     // Touch the eldest survivor so access order (not insert order) rules.
     val touched = keys(10)
-    assert(Tables.schemaCache.get(touched) ne null)
-    Tables.schemaCache.put("lru_extra", st)
-    assert(Tables.schemaCache.size() === Tables.SchemaCacheMax,
+    assert(memo.get(touched) ne null)
+    memo.put(("parquet", "lru_extra", "d"), st)
+    assert(memo.size() === max,
       "cache must stay at its cap, not flush to zero")
-    assert(Tables.schemaCache.get(touched) ne null,
+    assert(memo.get(touched) ne null,
       "recently-accessed entry must survive the next eviction")
-    assert(Tables.schemaCache.get(keys(11)) eq null,
+    assert(memo.get(keys(11)) eq null,
       "the eldest untouched entry is the one evicted")
-    Tables.schemaCache.clear()
+    memo.clear()
   }
 
   test("parallelize gate engages through a Hadoop FS path " +
@@ -98,5 +102,21 @@ class TablesIoSpec extends SparkSpec {
     val second = Tables.load(spark, dir, "t").schema.fieldNames.toSet
     assert(second === Set("id", "v", "extra"),
       "a rewritten table must never be served the stale cached schema")
+  }
+
+  test("a partition file rewritten in place is loaded with its new " +
+      "schema") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_tables_part").toString
+    import spark.implicits._
+    Seq((1L, "a", 1)).toDF("id", "v", "k")
+      .write.partitionBy("k").parquet(s"$dir/t.parquet")
+    assert(Tables.load(spark, dir, "t").columns.toSet ===
+      Set("id", "v", "k"))
+    // the root dir's own status stays as it was: only k=1/ changes
+    rewriteInPlace(s"$dir/t.parquet/k=1",
+      Seq((1L, "a", 2.0)).toDF("id", "v", "extra"))
+    assert(Tables.load(spark, dir, "t").columns.toSet ===
+      Set("id", "v", "extra", "k"))
   }
 }

@@ -101,9 +101,11 @@ class MarkovAttributionSpec extends SparkSpec {
     val dir = SparkSpec.corpusDir("0.01")
     def lane(): Unit =
       SparkEntry.queries("events_markov_attribution")(spark, dir).collect()
-    lane() // infers the corpus schema once (Tables.schemaCache)
-    val counts = (1 to 5).map(i =>
-      JobCounts.of(spark, s"graft-markov-$i")(lane()))
+    lane() // infers the corpus schema once (the PathSchemas memo)
+    val counts = (1 to 5).map { i =>
+      val (_, c) = JobCounts.of(spark, s"graft-markov-$i")(lane())
+      (c.jobs, c.stages, c.tasks, c.fanOutJobs)
+    }
     assert(counts.distinct.size === 1, counts)
   }
 }

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.util.Gates
 
 class MixingSpec extends SparkSpec {
   import spark.implicits._
@@ -82,10 +83,10 @@ class MixingSpec extends SparkSpec {
       .toDF("doc_id", "source", "n_tokens")
     val budgets = Map("commoncrawl" -> 2000L, "wiki" -> 1500L)
     val exact = Mixing.byTokenBudget(df, "source", "doc_id", "n_tokens",
-        budgets, 800L, prefilter = Some(false))
+        budgets, 800L)
       .select("source", "doc_id").as[(String, Long)].collect().toSet
-    val fast = Mixing.byTokenBudget(df, "source", "doc_id", "n_tokens",
-        budgets, 800L, prefilter = Some(true))
+    val fast = Gates.pastGates(Mixing.byTokenBudget(df, "source",
+        "doc_id", "n_tokens", budgets, 800L))
       .select("source", "doc_id").as[(String, Long)].collect().toSet
     assert(fast === exact)
     assert(fast.count(_._1 == "commoncrawl") > 0)
@@ -111,8 +112,8 @@ class MixingSpec extends SparkSpec {
       s"prefilter must cover the budget ($survivors < $expectedDocs)")
     assert(survivors <= 8 * StratumPrefilter.Margin * expectedDocs,
       s"window input not bounded: $survivors of 20000 rows survived")
-    val plan = Mixing.byTokenBudget(df, "source", "doc_id", "n_tokens",
-        Map.empty, budget, prefilter = Some(true))
+    val plan = Gates.pastGates(Mixing.byTokenBudget(df, "source",
+        "doc_id", "n_tokens", Map.empty, budget))
       .queryExecution.executedPlan.toString
     assert(plan.contains("substring(md5"),
       "threshold filter missing from the engaged physical plan")
@@ -127,7 +128,7 @@ class MixingSpec extends SparkSpec {
     val df = (1 to 5000).map(i => (i.toLong, "cc", 10L))
       .toDF("doc_id", "source", "n_tokens")
     val exact = Mixing.byTokenBudget(df, "source", "doc_id", "n_tokens",
-        Map.empty, 900L, prefilter = Some(false))
+        Map.empty, 900L)
       .select("doc_id").as[Long].collect().toSet
     // margin 0 -> zero survivors -> the source is unsafe -> full rescue
     val viaRescue = Mixing.prefilteredMix(df, "source", "doc_id",

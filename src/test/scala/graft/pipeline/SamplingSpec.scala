@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.io.Tables
+import graft.util.Gates
 
 class SamplingSpec extends SparkSpec {
   import spark.implicits._
@@ -75,10 +76,10 @@ class SamplingSpec extends SparkSpec {
       (30001L to 30020L).map(i => (i, "tiny")) ++
       (40001L to 40300L).map(i => (i, "mid"))).toDF("id", "grp")
     val exact = Sampling
-      .stratifiedHead(df, Seq("grp"), "id", 25, prefilter = Some(false))
+      .stratifiedHead(df, Seq("grp"), "id", 25)
       .select("grp", "id").as[(String, Long)].collect().toSet
-    val fast = Sampling
-      .stratifiedHead(df, Seq("grp"), "id", 25, prefilter = Some(true))
+    val fast = Gates.pastGates(
+        Sampling.stratifiedHead(df, Seq("grp"), "id", 25))
       .select("grp", "id").as[(String, Long)].collect().toSet
     assert(fast === exact)
     assert(fast.count(_._1 == "mega") === 25)
@@ -105,8 +106,8 @@ class SamplingSpec extends SparkSpec {
     assert(survivors <= 8 * StratumPrefilter.Margin * quota,
       s"window input not bounded: $survivors of $n rows survived")
     // and the engaged plan actually carries the threshold filter
-    val plan = Sampling
-      .stratifiedHead(df, Seq("grp"), "id", quota, prefilter = Some(true))
+    val plan = Gates.pastGates(
+        Sampling.stratifiedHead(df, Seq("grp"), "id", quota))
       .queryExecution.executedPlan.toString
     assert(plan.contains("substring(md5"),
       "threshold filter missing from the engaged physical plan")
@@ -121,7 +122,7 @@ class SamplingSpec extends SparkSpec {
     val df = ((1L to 5000L).map(i => (i, "mega")) ++
       (9001L to 9010L).map(i => (i, "tiny"))).toDF("id", "grp")
     val exact = Sampling
-      .stratifiedHead(df, Seq("grp"), "id", 25, prefilter = Some(false))
+      .stratifiedHead(df, Seq("grp"), "id", 25)
       .select("grp", "id").as[(String, Long)].collect().toSet
     // margin 0 -> zero survivors for the filtered stratum -> rescue MUST
     // re-run it unfiltered (deterministic worst case)
@@ -155,7 +156,7 @@ class SamplingSpec extends SparkSpec {
       val quota = 1 + rnd.nextInt(40)
       val margin = Seq(0.0, 0.5, 2.0, 4.0)(rnd.nextInt(4))
       val exactS = Sampling
-        .stratifiedHead(df, Seq("grp"), "id", quota, Some(false))
+        .stratifiedHead(df, Seq("grp"), "id", quota)
         .select("id").as[Long].collect().toSet
       val fastS = Sampling
         .prefilteredHead(df, Seq("grp"), "id", quota, margin)
@@ -164,7 +165,7 @@ class SamplingSpec extends SparkSpec {
         s"case $case_: sampling mismatch (quota=$quota margin=$margin)")
       val budget = 50L + rnd.nextInt(2000)
       val exactM = Mixing.byTokenBudget(df, "grp", "id", "tok",
-          Map.empty, budget, Some(false))
+          Map.empty, budget)
         .select("id").as[Long].collect().toSet
       val fastM = Mixing.prefilteredMix(df, "grp", "id", "tok",
           Map.empty, budget, margin)

@@ -319,16 +319,13 @@ class SimilaritySpec extends SparkSpec {
       spark.read.parquet(s"$sf/embeddings.parquet").count())
     // building the registered LSH top-k plan must trigger ZERO jobs —
     // the round-4 verdict flagged one sizing count() per ANN query, and
-    // Tables.load's schema cache removes the footer-inference job too
+    // Tables.load's schema memo removes the footer-inference job too
     // (warm it with one load first)
     graft.io.Tables.load(spark, sf, "embeddings")
-    val tracker = spark.sparkContext.statusTracker
-    def jobCount: Int = tracker.getJobIdsForGroup(null).length
-    Thread.sleep(1000) // status store is listener-fed (async)
-    val before = jobCount
-    graft.SparkEntry.queries("sim_topk_lsh")(spark, sf)
-    Thread.sleep(1000)
-    assert(jobCount === before,
+    val (_, built) = graft.JobCounts.of(spark, "graft-lsh-build") {
+      graft.SparkEntry.queries("sim_topk_lsh")(spark, sf)
+    }
+    assert(built.jobs === 0,
       "building sim_topk_lsh ran a Spark job (sizing count leaked back?)")
   }
 }
